@@ -238,13 +238,6 @@ def ivf_search_batch(
     only its probing queries. No pair materialization: a join would ship
     every point duplicated per probing query. Exact per-query top-k window
     finishes, so full probe == exact batch scan."""
-    from pyspark.sql import Window
-    from pyspark.sql import types as T
-
-    from qdrant_spark.operators.knn import (
-        larger_is_better, score_block, score_order,
-    )
-
     # plain collect (see knn._matmul_knn): coalesce(1) serializes every
     # python partition through one worker, ~2.6s fixed overhead
     q_rows = queries.select(qid_col, qvec_col).collect()
@@ -257,78 +250,46 @@ def ivf_search_batch(
     cluster_q = {
         int(c): np.where((probes == c).any(axis=1))[0] for c in used
     }
-
-    sc = queries.sparkSession.sparkContext
-    bq = sc.broadcast((np.asarray(qids), Qm, cluster_q))
-    bigger_better = larger_is_better(metric)
-
     pruned = index.assigned.filter(F.col("__cluster").isin(used))
-    sel = pruned.select(index.id_col, index.vec_col, "__cluster")
-    out_schema = T.StructType(
-        [
-            T.StructField(qid_col, queries.schema[qid_col].dataType),
-            T.StructField(index.id_col, sel.schema[index.id_col].dataType),
-            T.StructField("score", T.DoubleType()),
-        ]
+    return cluster_masked_topk(
+        pruned, vec_col=index.vec_col, id_col=index.id_col, qids=qids, Q=Qm,
+        cluster_q=cluster_q, k=k, metric=metric, qid_col=qid_col,
+        qid_type=queries.schema[qid_col].dataType,
     )
-    id_col = index.id_col
 
-    def score_batches(batches):
-        import pyarrow as pa
 
-        qid_arr, Qm_, cq = bq.value
-        acc = []
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            ids = batch.column(0).to_numpy(zero_copy_only=False)
-            vec = batch.column(1)
-            if isinstance(vec, pa.ChunkedArray):
-                vec = vec.combine_chunks()
-            V = vec.flatten().to_numpy(zero_copy_only=False) \
-                .reshape(n, -1).astype(np.float64, copy=False)
-            cl = batch.column(2).to_numpy(zero_copy_only=False)
-            for c in np.unique(cl):
-                qidx = cq.get(int(c))
-                if qidx is None or len(qidx) == 0:
-                    continue
-                mask = cl == c
-                S = score_block(V[mask], Qm_[qidx], metric)
-                nb = S.shape[0]
-                kk = min(k, nb)
-                if kk < nb:
-                    part = np.argpartition(
-                        -S if bigger_better else S, kk - 1, axis=0
-                    )[:kk]
-                else:
-                    part = np.tile(np.arange(nb)[:, None], (1, len(qidx)))
-                rows = part.ravel(order="F")
-                qrep = np.repeat(qidx, part.shape[0])
-                acc.append((qrep, ids[mask][rows],
-                            S[rows, np.repeat(np.arange(len(qidx)), part.shape[0])]))
-        if not acc:
-            return
-        qi = np.concatenate([a[0] for a in acc])
-        ii = np.concatenate([a[1] for a in acc])
-        ss = np.concatenate([a[2] for a in acc])
-        key_s = -ss if bigger_better else ss
-        order = np.lexsort((ii, key_s, qi))
-        qi, ii, ss = qi[order], ii[order], ss[order]
-        uq, starts = np.unique(qi, return_index=True)
-        rank = np.arange(len(qi)) - starts[np.searchsorted(uq, qi)]
-        keep = rank < k
-        yield pa.RecordBatch.from_arrays(
-            [pa.array(qid_arr[qi[keep]]), pa.array(ii[keep]),
-             pa.array(ss[keep], type=pa.float64())],
-            names=[qid_col, id_col, "score"],
-        )
+def cluster_masked_topk(frame: DataFrame, *, vec_col: str, id_col: str,
+                        qids, Q, cluster_q, k: int, metric: str,
+                        qid_col: str = "__qid", qid_type=None,
+                        vec_decode=None) -> DataFrame:
+    """Cluster-masked batched scan: ONE pass over the (already
+    probe-union-pruned) frame in which each cluster block scores against
+    ONLY the queries that probed it (``cluster_q``: cluster -> query
+    indices), through :func:`~qdrant_spark.operators.knn.arrow_topk`.
+    ``vec_decode(arrow_col, n)`` decodes packed code columns to the
+    (n, dim) float64 matrix; without it ``vec_col`` is a float array."""
+    from pyspark.sql import types as T
 
-    scored = sel.mapInArrow(score_batches, out_schema)
-    w = Window.partitionBy(qid_col).orderBy(*score_order(metric, id_col=id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+    from qdrant_spark.operators.knn import arrow_matrix, arrow_topk, score_block
+
+    bq = frame.sparkSession.sparkContext.broadcast((Q, cluster_q))
+
+    def blocks(batch):
+        Qm, cq = bq.value
+        n = batch.num_rows
+        ids = batch.column(0).to_numpy(zero_copy_only=False)
+        if vec_decode is not None:
+            V = vec_decode(batch.column(1), n)
+        else:
+            V = arrow_matrix(batch.column(1), n).astype(np.float64, copy=False)
+        cl = batch.column(2).to_numpy(zero_copy_only=False)
+        for _, qidx, mask in _probed_blocks(cl, cq):
+            yield qidx, ids[mask], score_block(V[mask], Qm[qidx], metric)
+
+    return arrow_topk(
+        frame.select(id_col, vec_col, "__cluster"), blocks, metric=metric,
+        k=k, qids=qids, qid_type=qid_type or T.LongType(), qid_col=qid_col,
+        id_col=id_col,
     )
 
 
@@ -576,14 +537,14 @@ def ivf_pq_search(
         n_coarse = max(k, int(np.ceil(k * oversampling)))
         sc = index.assigned.sparkSession.sparkContext
         b = sc.broadcast((
-            np.array([0]), {int(c): np.array([0]) for c in probes},
-            lut[None, :, :], qc[None, :], cnorm2, rnorm2, cross,
+            {int(c): np.array([0]) for c in probes}, lut[None, :, :],
+            qc[None, :], cnorm2, 2.0 * cross + rnorm2[None, :, :],
             np.array([l2_q]), q[None, :],
         ))
         pruned = index.assigned.filter(F.col("__cluster").isin(probes))
         out = _ivf_pq_fused_batch(
-            index, T.LongType(), pruned, b, k=k, n_coarse=n_coarse,
-            metric=metric, bigger=larger_is_better(metric), qid_col="__qid",
+            index, [0], T.LongType(), pruned, b, k=k, n_coarse=n_coarse,
+            metric=metric, qid_col="__qid",
         )
         return (out.select(F.col(index.id_col), F.col("score"))
                    .orderBy(*score_order(metric, id_col=index.id_col)))
@@ -806,11 +767,7 @@ def ivf_pq_search_batch(
     ``rescore_with`` implies the caller runs the storage-tier layout, so
     auto picks coarse. Full probe + ample oversampling equals the exact
     batch scan in either mode."""
-    import pandas as pd  # noqa: F401  (Arrow path dependency)
-    from pyspark.sql import Window
-    from pyspark.sql import types as T
-
-    from qdrant_spark.operators.knn import _plan_size_bytes, larger_is_better
+    from qdrant_spark.operators.knn import _plan_size_bytes, arrow_topk
 
     if metric not in ("cosine", "dot", "euclid"):
         raise ValueError(f"batched IVF-PQ supports cosine/dot/euclid, got {metric!r}")
@@ -832,15 +789,16 @@ def ivf_pq_search_batch(
     lut = np.einsum("qmd,mkd->qmk", Qm.reshape(nq, M, dsub), cb)   # (Q, M, K)
     qc = Qm @ cents.T                                               # (Q, C)
     cnorm2 = (cents * cents).sum(axis=1)
-    rnorm2 = (cb * cb).sum(axis=2)
+    # norm term tables combined once: ||x̂||² = ||c||² + Σ_m (2·cross[c,m,
+    # code] + rnorm2[m,code]) — one (C, M, K) table, so the per-row norm
+    # work is a single gather per subspace
     cross = np.einsum("cmd,mkd->cmk", cents.reshape(-1, M, dsub), cb)
+    nt_all = 2.0 * cross + (cb * cb).sum(axis=2)[None, :, :]
     l2q = np.linalg.norm(Qm, axis=1)
 
     sc = queries.sparkSession.sparkContext
-    b = sc.broadcast((qids, cluster_q, lut, qc, cnorm2, rnorm2, cross, l2q, Qm))
-    bigger = larger_is_better(metric)
+    b = sc.broadcast((cluster_q, lut, qc, cnorm2, nt_all, l2q, Qm))
     n_coarse = max(k, int(np.ceil(k * oversampling)))
-    marange = np.arange(M)
 
     pruned = index.assigned.filter(F.col("__cluster").isin(used))
     can_fuse = index.vec_col in index.assigned.columns and rescore_with is None
@@ -857,115 +815,29 @@ def ivf_pq_search_batch(
         use_fused = can_fuse and 0 < sz < cutoff
     else:
         use_fused = False
+    qid_type = queries.schema[qid_col].dataType
     if use_fused:
         return _ivf_pq_fused_batch(
-            index, queries.schema[qid_col].dataType, pruned, b, k=k,
-            n_coarse=n_coarse, metric=metric, bigger=bigger, qid_col=qid_col,
+            index, qids, qid_type, pruned, b, k=k, n_coarse=n_coarse,
+            metric=metric, qid_col=qid_col,
         )
-    sel = pruned.select(index.id_col, "__pq", "__cluster")
-    out_schema = T.StructType([
-        T.StructField(qid_col, queries.schema[qid_col].dataType),
-        T.StructField(index.id_col, sel.schema[index.id_col].dataType),
-        T.StructField("__coarse", T.DoubleType()),
-    ])
     id_col = index.id_col
+    lut_t_cache: dict = {}
 
-    def adc_batches(batches):
-        import pyarrow as pa
+    def adc_blocks(batch):
+        st = b.value
+        ids = batch.column(0).to_numpy(zero_copy_only=False)
+        codes = _pq_codes(batch.column(1), batch.num_rows)
+        cl = batch.column(2).to_numpy(zero_copy_only=False)
+        for c, qidx, mask in _probed_blocks(cl, st[0]):
+            yield qidx, ids[mask], _adc_block(
+                st, lut_t_cache, c, qidx, codes[mask], metric)
 
-        qid_arr, cq, lut_, qc_, cn2, rn2, cross_, l2q_, _Qm = b.value
-        # norm term tables combined once per task: ||x̂||² = ||c||² +
-        # Σ_m (2·cross[c,m,code] + rnorm2[m,code]) — fold the 2·cross+rn2
-        # into one (C, M, K) table so the per-row work is a single gather
-        nt_all = 2.0 * cross_ + rn2[None, :, :]
-        # per-cluster transposed dot-LUTs (M, K, q), built lazily: the
-        # contiguous last axis makes each code gather a q-float row copy
-        # instead of q strided scalar loads — ~4x over the (q, M, K) layout
-        lut_t_cache: dict = {}
-        acc = []
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            ids = batch.column(0).to_numpy(zero_copy_only=False)
-            codes_col = batch.column(1)
-            if isinstance(codes_col, pa.ChunkedArray):
-                codes_col = codes_col.combine_chunks()
-            codes = (
-                codes_col.flatten().to_numpy(zero_copy_only=False)
-                .reshape(n, M).astype(np.int64) + 128
-            )
-            cl = batch.column(2).to_numpy(zero_copy_only=False)
-            for c in np.unique(cl):
-                qidx = cq.get(int(c))
-                if qidx is None or len(qidx) == 0:
-                    continue
-                mask = cl == c
-                cc = codes[mask]                      # (n_c, M)
-                nc = cc.shape[0]
-                lut_t = lut_t_cache.get(int(c))
-                if lut_t is None:
-                    lut_t = np.ascontiguousarray(
-                        lut_[qidx].transpose(1, 2, 0))   # (M, K, q)
-                    lut_t_cache[int(c)] = lut_t
-                g = lut_t[0][cc[:, 0]]                   # (n_c, q)
-                for m in range(1, M):
-                    g += lut_t[m][cc[:, m]]
-                dots = g.T + qc_[qidx, int(c)][:, None]  # (q, n_c)
-                if metric == "dot":
-                    S = dots
-                else:
-                    nt = nt_all[int(c)]                  # (M, K)
-                    norm2 = np.full(nc, cn2[int(c)])
-                    for m in range(M):
-                        norm2 += nt[m, cc[:, m]]
-                    norm2 = np.maximum(norm2, 1e-24)
-                    if metric == "cosine":
-                        S = dots / (np.sqrt(norm2)[None, :]
-                                    * np.maximum(l2q_[qidx], 1e-12)[:, None])
-                    else:  # euclid
-                        d2 = norm2[None, :] + (l2q_[qidx] ** 2)[:, None] - 2.0 * dots
-                        S = np.sqrt(np.maximum(d2, 0.0))
-                kk = min(n_coarse, nc)
-                if kk < nc:
-                    part = np.argpartition(
-                        -S if bigger else S, kk - 1, axis=1
-                    )[:, :kk]
-                else:
-                    part = np.tile(np.arange(nc)[None, :], (len(qidx), 1))
-                rows = part.ravel()
-                qrep = np.repeat(qidx, part.shape[1])
-                acc.append((qrep, ids[mask][rows], S[np.repeat(
-                    np.arange(len(qidx)), part.shape[1]), rows]))
-        if not acc:
-            return
-        import pyarrow as pa
-
-        qi = np.concatenate([a[0] for a in acc])
-        ii = np.concatenate([a[1] for a in acc])
-        ss = np.concatenate([a[2] for a in acc])
-        # per-partition trim to per-query top-n_coarse before the shuffle —
-        # map-side combine of the shortlist window
-        key_s = -ss if bigger else ss
-        order = np.lexsort((ii, key_s, qi))
-        qi, ii, ss = qi[order], ii[order], ss[order]
-        uq, starts = np.unique(qi, return_index=True)
-        rank = np.arange(len(qi)) - starts[np.searchsorted(uq, qi)]
-        keep = rank < n_coarse
-        yield pa.RecordBatch.from_arrays(
-            [pa.array(qid_arr[qi[keep]]), pa.array(ii[keep]),
-             pa.array(ss[keep], type=pa.float64())],
-            names=[qid_col, id_col, "__coarse"],
-        )
-
-    scored = sel.mapInArrow(adc_batches, out_schema)
-    worder = (F.col("__coarse").desc() if bigger else F.col("__coarse").asc())
-    w = Window.partitionBy(qid_col).orderBy(worder, F.col(id_col))
-    shortlist = (
-        scored.withColumn("__crank", F.row_number().over(w))
-        .filter(F.col("__crank") <= n_coarse)
-        .select(qid_col, id_col)
-    )
+    shortlist = arrow_topk(
+        pruned.select(id_col, "__pq", "__cluster"), adc_blocks,
+        metric=metric, k=n_coarse, qids=qids, qid_type=qid_type,
+        qid_col=qid_col, id_col=id_col,
+    ).select(qid_col, id_col)
     # exact rescore: shortlist is tiny (Q * n_coarse rows) — broadcast it
     # onto the probed partitions, then score each (query, candidate) pair
     # with the Arrow rowwise scorer (interpreted aggregate(zip_with) Column
@@ -984,16 +856,63 @@ def ivf_pq_search_batch(
     )
 
 
+def _probed_blocks(cl, cq):
+    """(cluster, probing query indices, row mask) for every cluster of an
+    Arrow batch's ``__cluster`` column that some query probes."""
+    for c in np.unique(cl):
+        qidx = cq.get(int(c))
+        if qidx is not None and len(qidx):
+            yield int(c), qidx, cl == c
+
+
+def _pq_codes(col, n: int):
+    """(n, M) int64 PQ code matrix from an Arrow ``__pq`` list column."""
+    from qdrant_spark.operators.knn import arrow_matrix
+
+    return arrow_matrix(col, n).astype(np.int64) + 128
+
+
+def _adc_block(st, lut_t_cache: dict, c: int, qidx, cc, metric: str):
+    """(q, n_c) ADC scores of one cluster block's codes ``cc`` (n_c, M)
+    against its probing queries ``qidx`` — LUT gathers, no matmul.
+    ``st`` is the broadcast (cluster_q, lut, qc, cnorm2, nt_all, l2q, Qm)."""
+    _, lut, qc, cn2, nt_all, l2q, _ = st
+    M = lut.shape[1]
+    # per-cluster transposed dot-LUTs (M, K, q), built lazily: the
+    # contiguous last axis makes each code gather a q-float row copy
+    # instead of q strided scalar loads — ~4x over the (q, M, K) layout
+    lut_t = lut_t_cache.get(c)
+    if lut_t is None:
+        lut_t = lut_t_cache[c] = np.ascontiguousarray(
+            lut[qidx].transpose(1, 2, 0))
+    g = lut_t[0][cc[:, 0]]                          # (n_c, q)
+    for m in range(1, M):
+        g += lut_t[m][cc[:, m]]
+    dots = g.T + qc[qidx, c][:, None]               # (q, n_c)
+    if metric == "dot":
+        return dots
+    nt = nt_all[c]                                  # (M, K)
+    norm2 = np.full(cc.shape[0], cn2[c])
+    for m in range(M):
+        norm2 += nt[m, cc[:, m]]
+    norm2 = np.maximum(norm2, 1e-24)
+    if metric == "cosine":
+        return dots / (np.sqrt(norm2)[None, :]
+                       * np.maximum(l2q[qidx], 1e-12)[:, None])
+    d2 = norm2[None, :] + (l2q[qidx] ** 2)[:, None] - 2.0 * dots
+    return np.sqrt(np.maximum(d2, 0.0))
+
+
 def _ivf_pq_fused_batch(
     index: IvfPqIndex,
+    qids,
     qid_dtype,  # Spark DataType of the qid column in the output
     pruned: DataFrame,
-    b,  # broadcast: (qids, cluster_q, lut, qc, cnorm2, rnorm2, cross, l2q, Qm)
+    b,  # broadcast: (cluster_q, lut, qc, cnorm2, nt_all, l2q, Qm)
     *,
     k: int,
     n_coarse: int,
     metric: str,
-    bigger: bool,
     qid_col: str,
 ) -> DataFrame:
     """Fused ADC-shortlist + in-worker exact rescore (see
@@ -1001,131 +920,50 @@ def _ivf_pq_fused_batch(
     cluster block computes ADC scores for all its rows (LUT gathers, no
     matmul), takes per-query top-n_coarse, exact-scores ONLY those rows
     against the broadcast query matrix (a (q, n_coarse, d) einsum), and
-    emits per-partition per-query top-k exact scores into the final
-    window."""
-    from pyspark.sql import Window
-    from pyspark.sql import types as T
+    hands the exact scores to the shared top-k kernel."""
+    from qdrant_spark.operators.knn import (
+        arrow_matrix, arrow_topk, larger_is_better, topk_cut,
+    )
 
-    from qdrant_spark.operators.knn import score_order
-
-    M = index.codebooks.shape[0]
-    sel = pruned.select(index.id_col, index.vec_col, "__pq", "__cluster")
-    out_schema = T.StructType([
-        T.StructField(qid_col, qid_dtype),
-        T.StructField(index.id_col, sel.schema[index.id_col].dataType),
-        T.StructField("score", T.DoubleType()),
-    ])
     id_col = index.id_col
+    bigger = larger_is_better(metric)
+    lut_t_cache: dict = {}
 
-    def fused_batches(batches):
-        import pyarrow as pa
+    def fused_blocks(batch):
+        st = b.value
+        l2q, Qm = st[5], st[6]
+        n = batch.num_rows
+        ids = batch.column(0).to_numpy(zero_copy_only=False)
+        # keep float32 here — only the gathered shortlist rows are
+        # upcast for the exact rescore, not the whole block
+        V = arrow_matrix(batch.column(1), n)
+        codes = _pq_codes(batch.column(2), n)
+        cl = batch.column(3).to_numpy(zero_copy_only=False)
+        for c, qidx, mask in _probed_blocks(cl, st[0]):
+            ids_c = ids[mask]
+            S = _adc_block(st, lut_t_cache, c, qidx, codes[mask], metric)
+            _, cols, _ = topk_cut(-S if bigger else S, ids_c, n_coarse)
+            part = cols.reshape(len(qidx), -1)       # (q, kk) shortlist rows
+            # exact rescore of the shortlist only: (q, kk, d) gather +
+            # one small einsum per cluster block
+            X = V[mask][part].astype(np.float64)
+            edot = np.einsum("qkd,qd->qk", X, Qm[qidx])
+            if metric == "dot":
+                Se = edot
+            elif metric == "cosine":
+                xn = np.linalg.norm(X, axis=2)
+                Se = edot / (np.maximum(xn, 1e-12)
+                             * np.maximum(l2q[qidx], 1e-12)[:, None])
+            else:  # euclid
+                xn2 = (X * X).sum(axis=2)
+                d2 = xn2 + (l2q[qidx] ** 2)[:, None] - 2.0 * edot
+                Se = np.sqrt(np.maximum(d2, 0.0))
+            yield qidx, ids_c[part], Se
 
-        qid_arr, cq, lut_, qc_, cn2, rn2, cross_, l2q_, Qm_ = b.value
-        nt_all = 2.0 * cross_ + rn2[None, :, :]
-        lut_t_cache: dict = {}
-        acc = []
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            ids = batch.column(0).to_numpy(zero_copy_only=False)
-            vcol = batch.column(1)
-            if isinstance(vcol, pa.ChunkedArray):
-                vcol = vcol.combine_chunks()
-            # keep float32 here — only the gathered shortlist rows are
-            # upcast for the exact rescore, not the whole block
-            V = vcol.flatten().to_numpy(zero_copy_only=False).reshape(n, -1)
-            codes_col = batch.column(2)
-            if isinstance(codes_col, pa.ChunkedArray):
-                codes_col = codes_col.combine_chunks()
-            codes = (
-                codes_col.flatten().to_numpy(zero_copy_only=False)
-                .reshape(n, M).astype(np.int64) + 128
-            )
-            cl = batch.column(3).to_numpy(zero_copy_only=False)
-            for c in np.unique(cl):
-                qidx = cq.get(int(c))
-                if qidx is None or len(qidx) == 0:
-                    continue
-                mask = cl == c
-                cc = codes[mask]
-                nc = cc.shape[0]
-                lut_t = lut_t_cache.get(int(c))
-                if lut_t is None:
-                    lut_t = np.ascontiguousarray(
-                        lut_[qidx].transpose(1, 2, 0))   # (M, K, q)
-                    lut_t_cache[int(c)] = lut_t
-                g = lut_t[0][cc[:, 0]]
-                for m in range(1, M):
-                    g += lut_t[m][cc[:, m]]
-                dots = g.T + qc_[qidx, int(c)][:, None]  # (q, n_c)
-                if metric == "dot":
-                    S = dots
-                else:
-                    nt = nt_all[int(c)]
-                    norm2 = np.full(nc, cn2[int(c)])
-                    for m in range(M):
-                        norm2 += nt[m, cc[:, m]]
-                    norm2 = np.maximum(norm2, 1e-24)
-                    if metric == "cosine":
-                        S = dots / (np.sqrt(norm2)[None, :]
-                                    * np.maximum(l2q_[qidx], 1e-12)[:, None])
-                    else:  # euclid
-                        d2 = (norm2[None, :] + (l2q_[qidx] ** 2)[:, None]
-                              - 2.0 * dots)
-                        S = np.sqrt(np.maximum(d2, 0.0))
-                kk = min(n_coarse, nc)
-                if kk < nc:
-                    part = np.argpartition(
-                        -S if bigger else S, kk - 1, axis=1
-                    )[:, :kk]
-                else:
-                    part = np.tile(np.arange(nc)[None, :], (len(qidx), 1))
-                # exact rescore of the shortlist only: (q, kk, d) gather +
-                # one small einsum per cluster block
-                Vc = V[mask]
-                X = Vc[part].astype(np.float64)           # (q, kk, d)
-                Qsub = Qm_[qidx]                          # (q, d)
-                edot = np.einsum("qkd,qd->qk", X, Qsub)
-                if metric == "dot":
-                    Se = edot
-                elif metric == "cosine":
-                    xn = np.linalg.norm(X, axis=2)
-                    Se = edot / (np.maximum(xn, 1e-12)
-                                 * np.maximum(l2q_[qidx], 1e-12)[:, None])
-                else:  # euclid
-                    xn2 = (X * X).sum(axis=2)
-                    d2 = xn2 + (l2q_[qidx] ** 2)[:, None] - 2.0 * edot
-                    Se = np.sqrt(np.maximum(d2, 0.0))
-                rows = part.ravel()
-                acc.append((np.repeat(qidx, part.shape[1]),
-                            ids[mask][rows], Se.ravel()))
-        if not acc:
-            return
-        import pyarrow as pa
-
-        qi = np.concatenate([a[0] for a in acc])
-        ii = np.concatenate([a[1] for a in acc])
-        ss = np.concatenate([a[2] for a in acc])
-        # per-partition trim to per-query top-k on the EXACT score —
-        # map-side combine of the final window
-        key_s = -ss if bigger else ss
-        order = np.lexsort((ii, key_s, qi))
-        qi, ii, ss = qi[order], ii[order], ss[order]
-        uq, starts = np.unique(qi, return_index=True)
-        rank = np.arange(len(qi)) - starts[np.searchsorted(uq, qi)]
-        keep = rank < k
-        yield pa.RecordBatch.from_arrays(
-            [pa.array(qid_arr[qi[keep]]), pa.array(ii[keep]),
-             pa.array(ss[keep], type=pa.float64())],
-            names=[qid_col, id_col, "score"],
-        )
-
-    scored = sel.mapInArrow(fused_batches, out_schema)
-    w = Window.partitionBy(qid_col).orderBy(*score_order(metric, id_col=id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+    return arrow_topk(
+        pruned.select(id_col, index.vec_col, "__pq", "__cluster"),
+        fused_blocks, metric=metric, k=k, qids=qids, qid_type=qid_dtype,
+        qid_col=qid_col, id_col=id_col,
     )
 
 

@@ -14,20 +14,26 @@ Spark shapes:
   ``TakeOrderedAndProject`` — per-partition partial top-k, then a driver
   merge. No shuffle of the scored set. This is already the optimal
   distributed plan at 100 TB.
-- batch queries -> three physical strategies:
+- batch queries -> two physical strategies:
 
-  * ``matmul`` (default) — block matrix multiply: mapInPandas over the
-    points, scoring every query against each Arrow batch with one BLAS
-    matmul (NumPy, float64), keeping a running per-query top-k per
-    partition. Only <= partitions*Q*k candidate rows are shuffled into the
-    final exact window. Spark's array higher-order functions are
-    interpreted (no whole-stage codegen), so this beats the pure-Column
-    plan ~50x on the N*Q hot path — this is the 100-TB plan.
-  * ``window``  — broadcast crossJoin + ``row_number() over (partition by
-    qid order by score)``; pure Column math, oracle-exact formula shape;
-    one shuffle of N*Q scored rows.
-  * ``partial`` — like window but with an Arrow-batched running top-k
-    before the shuffle (map-side combine of top-k).
+  * ``matmul`` (default) — block matrix multiply through the one Arrow
+    score-and-top-k kernel, :func:`arrow_topk`: ``mapInArrow`` over the
+    points scores every query against each Arrow batch with one BLAS
+    matmul (NumPy, float64), cuts each query's top k per batch, finishes
+    once per partition, and shuffles only <= partitions*Q*k candidate
+    rows into the final exact window. Spark's array higher-order
+    functions are interpreted (no whole-stage codegen), so this beats the
+    pure-Column plan ~50x on the N*Q hot path — this is the 100-TB plan.
+  * ``window`` — broadcast crossJoin + ``row_number() over (partition by
+    qid order by score)``; pure Column math, oracle-exact formula shape,
+    with a map-side top-k combine before the shuffle. ``partial`` is an
+    alias of ``window``.
+
+The same kernel serves every batch scorer (IVF cluster blocks, IVF-PQ
+ADC shortlists, batch MaxSim, quantized coarse scans). Its local cut is
+tie-exact: it keeps each query's k best rows under the final window's
+order — score direction, then id ascending — so the local-top-k-then-
+merge plan returns exactly what one global sort would, ties included.
 """
 
 from __future__ import annotations
@@ -231,37 +237,175 @@ def knn_batch(
     # accepted alias of 'window'.)
     scored = _partial_topk(scored, metric, k, qid_col=qid_col, id_col=id_col)
 
-    w = Window.partitionBy(qid_col).orderBy(*score_order(metric, id_col=id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return ranked(scored, metric, k, qid_col=qid_col, id_col=id_col)
 
 
 def score_block(M, Qm, metric: str, qnorm=None):
-    """(n, d) points × (q, d) queries -> (n, q) float64 scores, one BLAS
+    """(n, d) points × (q, d) queries -> (q, n) float64 scores, one BLAS
     call (dot/cosine) or memory-bounded chunks (euclid/manhattan). The
-    shared kernel of every batch scorer (block matmul, IVF cluster blocks)."""
+    shared kernel of every batch scorer (block matmul, IVF cluster blocks).
+    Query-major, so each query's scores are one contiguous row for the
+    top-k cut (:func:`arrow_topk`)."""
     import numpy as np
 
     n, dim = M.shape
     nq = Qm.shape[0]
     if metric in ("dot", "cosine"):
-        S = M @ Qm.T
+        S = Qm @ M.T
         if metric == "cosine":
             if qnorm is None:
                 qnorm = np.linalg.norm(Qm, axis=1)
-            S = S / (np.linalg.norm(M, axis=1)[:, None] * qnorm[None, :])
+            S = S / (qnorm[:, None] * np.linalg.norm(M, axis=1)[None, :])
         return S
     cq = max(1, 4_000_000 // max(1, n * dim))
-    S = np.empty((n, nq))
+    S = np.empty((nq, n))
     for lo in range(0, nq, cq):
-        d = M[:, None, :] - Qm[None, lo:lo + cq, :]
+        d = Qm[lo:lo + cq, None, :] - M[None, :, :]
         if metric == "euclid":
-            S[:, lo:lo + cq] = np.sqrt((d * d).sum(axis=2))
+            S[lo:lo + cq] = np.sqrt((d * d).sum(axis=2))
         else:
-            S[:, lo:lo + cq] = np.abs(d).sum(axis=2)
+            S[lo:lo + cq] = np.abs(d).sum(axis=2)
     return S
+
+
+def arrow_matrix(col, n: int):
+    """(n, d) NumPy view of the flat values of an Arrow list column with
+    ``n`` rows of ``d`` values each — no per-row object conversion."""
+    import pyarrow as pa
+
+    if isinstance(col, pa.ChunkedArray):
+        col = col.combine_chunks()
+    return col.flatten().to_numpy(zero_copy_only=False).reshape(n, -1)
+
+
+def first_k(qi, key, ids, k: int):
+    """Positions of the first ``k`` entries per query under the final
+    window's order — query index, then ``key`` (smaller is better), then
+    id ascending — returned in that order. The finish of every top-k
+    kernel: one lexsort over a small candidate set."""
+    import numpy as np
+
+    order = np.lexsort((ids, key, qi))
+    if len(order) == 0:
+        return order
+    qs = qi[order]
+    pos = np.arange(len(qs))
+    start = np.maximum.accumulate(np.where(np.r_[True, qs[1:] != qs[:-1]], pos, 0))
+    return order[pos - start < k]
+
+
+def topk_cut(key, ids, k: int):
+    """Tie-exact per-query cut of a (q, n) key matrix (smaller is better):
+    each query row keeps its ``min(k, n)`` best columns under (key, id
+    asc) — the final window's order, so a local cut never drops a tied
+    row the merge would rank first. One ``np.partition`` finds each
+    row's k-th key; every column at or under it (ties included, and every
+    column of a row whose k-th key is NaN) is a candidate; ``first_k``
+    orders that small superset. ``ids`` is (n,) shared by all rows or
+    (q, n) per row. Returns (row, column, id) arrays, query-major."""
+    import numpy as np
+
+    kk = min(k, key.shape[1])
+    if kk < key.shape[1]:
+        thr = np.partition(key, kk - 1, axis=1)[:, kk - 1:kk]
+        qi, cols = np.nonzero((key <= thr) | np.isnan(thr))
+    else:
+        qi, cols = np.indices(key.shape).reshape(2, -1)
+    cid = ids[cols] if ids.ndim == 1 else ids[qi, cols]
+    keep = first_k(qi, key[qi, cols], cid, kk)
+    return qi[keep], cols[keep], cid[keep]
+
+
+def ranked(scored: DataFrame, metric: str, k: int, *, qid_col: str,
+           id_col: str) -> DataFrame:
+    """The shared exact final window: (score direction, id asc) per query,
+    ``rank`` 1..k."""
+    w = Window.partitionBy(qid_col).orderBy(*score_order(metric, id_col=id_col))
+    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+
+
+def topk_kernel(blocks, *, k: int, bigger_better: bool, qids, qid_col: str,
+                id_col: str, dedup_ids: bool = False):
+    """The ``mapInArrow`` function of the one Arrow score-and-top-k kernel.
+
+    ``blocks(batch)`` yields ``(query indices, ids, (q, n) scores)``
+    blocks for one Arrow batch — one for the whole batch (block matmul)
+    or one per cluster (IVF). Each block goes through :func:`topk_cut`;
+    the candidates are finished once per partition (:func:`first_k`), so
+    a partition emits at most Q × k (qid, id, score) rows. ``qids[i]`` is
+    the output qid of query index ``i``. ``dedup_ids``: the scan holds
+    identical-scoring copies of a row (an invlist layout); one copy per
+    (query, id) survives inside a block before the cut (two copies must
+    not take two of a query's k slots) and across batches before the
+    finish."""
+    import numpy as np
+
+    qid_arr = np.asarray(qids)
+
+    def run(batches: Iterator) -> Iterator:
+        import pyarrow as pa
+
+        acc_q, acc_i, acc_s = [], [], []
+        for batch in batches:
+            if batch.num_rows == 0:
+                continue
+            for qidx, ids, S in blocks(batch):
+                if dedup_ids:
+                    _, first = np.unique(ids, return_index=True)
+                    ids, S = ids[first], S[:, first]
+                qi, cols, cid = topk_cut(-S if bigger_better else S, ids, k)
+                acc_q.append(qidx[qi])
+                acc_i.append(cid)
+                acc_s.append(S[qi, cols])
+        if not acc_q:
+            return
+        qi, ids, scores = (np.concatenate(a) for a in (acc_q, acc_i, acc_s))
+        if dedup_ids:
+            o = np.lexsort((ids, qi))
+            qi, ids, scores = qi[o], ids[o], scores[o]
+            first = np.r_[True, (qi[1:] != qi[:-1]) | (ids[1:] != ids[:-1])]
+            qi, ids, scores = qi[first], ids[first], scores[first]
+        keep = first_k(qi, -scores if bigger_better else scores, ids, k)
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(qid_arr[qi[keep]]), pa.array(ids[keep]),
+             pa.array(scores[keep], type=pa.float64())],
+            names=[qid_col, id_col, "score"],
+        )
+
+    return run
+
+
+def arrow_topk(
+    sel: DataFrame,
+    blocks,
+    *,
+    metric: str,
+    k: int,
+    qids,
+    qid_type: T.DataType,
+    qid_col: str,
+    id_col: str,
+    score_threshold: float | None = None,
+    dedup_ids: bool = False,
+) -> DataFrame:
+    """Batch top-k over ``sel`` (id first) through :func:`topk_kernel`:
+    at most partitions × Q × k candidate rows reach :func:`ranked`, which
+    returns (qid, id, score, rank <= k). With ``dedup_ids``, copies from
+    different partitions meet and collapse before the window."""
+    out_schema = T.StructType([
+        T.StructField(qid_col, qid_type),
+        T.StructField(id_col, sel.schema[id_col].dataType),
+        T.StructField("score", T.DoubleType()),
+    ])
+    scored = sel.mapInArrow(topk_kernel(
+        blocks, k=k, bigger_better=larger_is_better(metric), qids=qids,
+        qid_col=qid_col, id_col=id_col, dedup_ids=dedup_ids,
+    ), out_schema)
+    if dedup_ids:
+        scored = scored.dropDuplicates([qid_col, id_col])
+    if score_threshold is not None:
+        scored = scored.filter(_threshold_cond(metric, score_threshold))
+    return ranked(scored, metric, k, qid_col=qid_col, id_col=id_col)
 
 
 def _matmul_knn(
@@ -279,11 +423,9 @@ def _matmul_knn(
     vec_decode: "Any" = None,
 ) -> DataFrame:
     """Block-matmul batch KNN: per Arrow batch, score all queries at once
-    with NumPy (float64 BLAS), keep per-batch top-k per query, emit at most
-    ~batches*Q*k candidates per partition. Arrow-native (``mapInArrow``):
-    the vector column's flat value buffer reshapes straight into the (P, D)
-    matrix — no per-row object conversion. The final window re-ranks
-    exactly (score direction, then id asc) so ties match the Column path.
+    with NumPy (float64 BLAS) through :func:`arrow_topk`. Arrow-native:
+    the vector column's flat value buffer reshapes straight into the
+    (P, D) matrix — no per-row object conversion.
 
     ``q_data=(qids, Q)`` supplies the query set directly (single-query
     dispatch, pre-collected batches) instead of collecting ``queries``."""
@@ -302,89 +444,27 @@ def _matmul_knn(
         qids = [r[qid_col] for r in q_rows]
         Q = np.array([list(r[qvec_col]) for r in q_rows], dtype=np.float64)
         qid_type = queries.schema[qid_col].dataType
-    bigger_better = larger_is_better(metric)
-    sc = pts.sparkSession.sparkContext
-    bq = sc.broadcast((qids, Q))
+    bq = pts.sparkSession.sparkContext.broadcast(Q)
+    qnorm = np.linalg.norm(Q, axis=1) if metric == "cosine" else None
+    qall = np.arange(len(qids))
 
-    id_field = pts.schema[id_col]
-    out_schema = T.StructType(
-        [
-            T.StructField(qid_col, qid_type),
-            T.StructField(id_col, id_field.dataType),
-            T.StructField("score", T.DoubleType()),
-        ]
-    )
-
-    def score_batches(batches: Iterator) -> Iterator:
-        import pyarrow as pa
-
-        qids_l, Qm = bq.value
-        nq, dim = Qm.shape
-        qnorm = np.linalg.norm(Qm, axis=1) if metric == "cosine" else None
-        qid_arr = np.asarray(qids_l)
-        acc_q: list[np.ndarray] = []   # query INDEX per candidate row
-        acc_i: list[np.ndarray] = []
-        acc_s: list[np.ndarray] = []
-
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            ids = batch.column(0).to_numpy(zero_copy_only=False)
-            vec = batch.column(1)
-            if isinstance(vec, pa.ChunkedArray):
-                vec = vec.combine_chunks()
-            if vec_decode is not None:
-                # packed storage (binary f16/u8 columns): decode hook
-                # yields the (n, dim) float64 matrix
-                M = vec_decode(vec, n)
-            else:
-                flat = vec.flatten().to_numpy(zero_copy_only=False)
-                M = flat.reshape(n, dim).astype(np.float64, copy=False)
-            S = score_block(M, Qm, metric, qnorm=qnorm)
-            kk = min(k, n)
-            if kk < n:
-                # top-kk by score per query (columnwise argpartition, one call)
-                part = np.argpartition(-S if bigger_better else S, kk - 1, axis=0)[:kk]
-            else:
-                part = np.tile(np.arange(n)[:, None], (1, nq))
-            rows = part.ravel(order="F")                 # kk rows per query
-            qidx = np.repeat(np.arange(nq), part.shape[0])
-            acc_q.append(qidx)
-            acc_i.append(ids[rows])
-            acc_s.append(S[rows, qidx])
-
-        if not acc_q:
-            return
-        qidx = np.concatenate(acc_q)
-        ids = np.concatenate(acc_i)
-        scores = np.concatenate(acc_s)
-        # exact per-query top-k incl. id tie-break, one lexsort over candidates
-        key_s = -scores if bigger_better else scores
-        order = np.lexsort((ids, key_s, qidx))  # qidx major, then score, id
-        qidx, ids, scores = qidx[order], ids[order], scores[order]
-        # rank within query = position - first position of that query
-        starts = np.searchsorted(qidx, np.arange(len(qids_l)))
-        rank = np.arange(len(qidx)) - starts[qidx]
-        keep = rank < k
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(qid_arr[qidx[keep]]),
-                pa.array(ids[keep]),
-                pa.array(scores[keep], type=pa.float64()),
-            ],
-            names=[qid_col, id_col, "score"],
-        )
+    def blocks(batch):
+        n = batch.num_rows
+        if vec_decode is not None:
+            # packed storage (binary f16/u8 columns): decode hook
+            # yields the (n, dim) float64 matrix
+            M = vec_decode(batch.column(1), n)
+        else:
+            M = arrow_matrix(batch.column(1), n).astype(np.float64, copy=False)
+        ids = batch.column(0).to_numpy(zero_copy_only=False)
+        yield qall, ids, score_block(M, bq.value, metric, qnorm=qnorm)
 
     sel = pts.select(id_col, vec_col)
     if vec_decode is None:
         sel = sel.filter(F.size(vec_col) == len(Q[0]))
-    scored = sel.mapInArrow(score_batches, out_schema)
-    if score_threshold is not None:
-        scored = scored.filter(_threshold_cond(metric, score_threshold))
-    w = Window.partitionBy(qid_col).orderBy(*score_order(metric, id_col=id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return arrow_topk(
+        sel, blocks, metric=metric, k=k, qids=qids, qid_type=qid_type,
+        qid_col=qid_col, id_col=id_col, score_threshold=score_threshold,
     )
 
 
@@ -432,17 +512,10 @@ def rowwise_score_topk(
             n = batch.num_rows
             if n == 0:
                 continue
-
-            def mat(col) -> "np.ndarray":
-                if isinstance(col, pa.ChunkedArray):
-                    col = col.combine_chunks()
-                flat = col.flatten().to_numpy(zero_copy_only=False)
-                return flat.reshape(n, -1).astype(np.float64, copy=False)
-
             qids = batch.column(0).to_numpy(zero_copy_only=False)
             ids = batch.column(1).to_numpy(zero_copy_only=False)
-            V = mat(batch.column(2))
-            Qm = mat(batch.column(3))
+            V = arrow_matrix(batch.column(2), n).astype(np.float64, copy=False)
+            Qm = arrow_matrix(batch.column(3), n).astype(np.float64, copy=False)
             if metric == "dot":
                 s = np.einsum("ij,ij->i", V, Qm)
             elif metric == "cosine":
@@ -463,13 +536,8 @@ def rowwise_score_topk(
                     continue
             if k is not None:
                 # per-batch per-query top-k prune (exactness restored by
-                # the final window); lexsort: qid major, then score, id
-                key_s = -s if bigger_better else s
-                order = np.lexsort((ids, key_s, qids))
-                qids, ids, s = qids[order], ids[order], s[order]
-                uq, starts = np.unique(qids, return_index=True)
-                rank = np.arange(len(qids)) - starts[np.searchsorted(uq, qids)]
-                keep = rank < k
+                # the final window)
+                keep = first_k(qids, -s if bigger_better else s, ids, k)
                 qids, ids, s = qids[keep], ids[keep], s[keep]
             yield pa.RecordBatch.from_arrays(
                 [pa.array(qids), pa.array(ids),
@@ -480,10 +548,7 @@ def rowwise_score_topk(
     scored = sel.mapInArrow(score_batches, out_schema)
     if k is None:
         return scored
-    w = Window.partitionBy(qid_col).orderBy(*score_order(metric, id_col=id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-    )
+    return ranked(scored, metric, k, qid_col=qid_col, id_col=id_col)
 
 
 def _partial_topk(

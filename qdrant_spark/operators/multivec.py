@@ -1503,121 +1503,69 @@ def maxsim_quant_coarse_batch(index, queries: Sequence[Sequence[Sequence[float]]
     (lib/segment/src/vector_storage/quantized/).
 
     ``dedup_ids``: the codes frame is an INVLIST layout holding one
-    identical-scoring copy per (doc, cluster) — dedup ids INSIDE each
-    Arrow batch before the per-batch cut (copies from different
-    partitions can coalesce into one batch; two copies of one doc must
-    not occupy two of its kk slots and push a distinct doc out) and
-    once more across batches on the narrow (qid, id) frame."""
-    from pyspark.sql.window import Window
+    identical-scoring copy per (doc, cluster) — the kernel keeps one copy
+    per (query, doc) (see :func:`~qdrant_spark.operators.knn.arrow_topk`)."""
+    from qdrant_spark.operators.knn import arrow_topk
 
     code_cols, Qtoks, decode, offsets, scales = _mv_quant_prep(
         index, queries, metric)
     Qall = np.concatenate(Qtoks, axis=0)
     # per-query token column offsets for the reduceat over columns
     qstarts = np.cumsum([0] + [len(t) for t in Qtoks[:-1]])
-    nq = len(Qtoks)
+    qall = np.arange(len(Qtoks))
 
     sc = index.codes.sparkSession.sparkContext
     # broadcast only the plain arrays (sc.broadcast pickles with the
     # stock pickler, which can't take the per-kind decode closure); the
     # decode fn + its encoder state ride the cloudpickled task closure
     bq = sc.broadcast((Qall, qstarts, offsets, scales))
-    sel = index.codes.select(index.id_col, *code_cols)
     id_col = index.id_col
-    out_schema = T.StructType([
-        T.StructField("__qid", T.LongType()),
-        T.StructField(id_col, sel.schema[id_col].dataType),
-        T.StructField("score", T.DoubleType()),
-    ])
     ncols = len(code_cols)
 
-    def score_batches(batches: Iterator) -> Iterator:
+    def blocks(batch):
         import pyarrow as pa
 
         Qm, qs, offs, scl = bq.value
-        dec = decode
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            ids = batch.column(0).to_numpy(zero_copy_only=False)
-            flats = []
-            outer_off = None
-            for ci in range(1, 1 + ncols):
-                col = batch.column(ci)
-                if isinstance(col, pa.ChunkedArray):
-                    col = col.combine_chunks()
-                if outer_off is None:
-                    outer_off = col.offsets.to_numpy(zero_copy_only=False)
-                flats.append(col.flatten())
-            tok_counts = np.diff(outer_off)
-            Tm = dec(flats)
-            starts = outer_off[:-1] - outer_off[0]
-            assert (tok_counts > 0).all()  # empties filtered at build
-            # chunk the query-token columns: the full (batch_tokens x
-            # all_qtokens) score matrix would be ~100s of MB per worker
-            # at 64 queries (first-rep GC thrash measured 40s); per-doc
-            # segment max reduces each chunk to (docs, chunk) before the
-            # next chunk's BLAS call
-            CHUNK = 128
-            blocks = []
-            for c0 in range(0, Qm.shape[0], CHUNK):
-                S = Tm @ Qm[c0:c0 + CHUNK].T    # (tokens, <=CHUNK)
-                blocks.append(np.maximum.reduceat(S, starts, axis=0))
-            M = blocks[0] if len(blocks) == 1 \
-                else np.concatenate(blocks, axis=1)     # (docs, qtokens)
-            scores = np.add.reduceat(M, qs, axis=1)     # (docs, queries)
-            # per-query affine part + final scale (identity except asym
-            # BQ, where it is the single 1/ranges division of the
-            # integer-exact pipeline — see _mv_quant_prep)
-            scores = (scores + offs) * scl
-            if dedup_ids:
-                # invlist copies score identically — keep one per doc
-                # BEFORE the cut so copies can't crowd out distinct docs
-                _, keep = np.unique(ids, return_index=True)
-                if len(keep) < n:
-                    ids = ids[keep]
-                    scores = scores[keep]
-                    n = len(keep)
-            kk = min(k, n)  # dedup'd batch size
-            if kk < n:
-                # per-batch top-k must follow the SAME total order as
-                # the final window — (score desc, id asc) — or tied
-                # boundary docs (endemic for integer-valued binary
-                # coarse scores) get dropped by argpartition's arbitrary
-                # tie choice before the window ever sees them
-                sel_rows, sel_q = [], []
-                for j in range(nq):
-                    s = scores[:, j]
-                    part = np.argpartition(-s, kk - 1)[:kk]
-                    kth = s[part].min()
-                    strict = np.where(s > kth)[0]
-                    tied = np.where(s == kth)[0]
-                    need = kk - len(strict)
-                    tied = tied[np.argsort(ids[tied], kind="stable")][:need]
-                    rows_j = np.concatenate([strict, tied])
-                    sel_rows.append(rows_j)
-                    sel_q.append(np.full(len(rows_j), j, dtype=np.int64))
-                rows = np.concatenate(sel_rows)
-                qid = np.concatenate(sel_q)
-            else:
-                rows = np.tile(np.arange(n), nq)
-                qid = np.repeat(np.arange(nq, dtype=np.int64), n)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(qid), pa.array(ids[rows]),
-                 pa.array(scores[rows, qid], type=pa.float64())],
-                names=["__qid", id_col, "score"],
-            )
+        ids = batch.column(0).to_numpy(zero_copy_only=False)
+        flats = []
+        outer_off = None
+        for ci in range(1, 1 + ncols):
+            col = batch.column(ci)
+            if isinstance(col, pa.ChunkedArray):
+                col = col.combine_chunks()
+            if outer_off is None:
+                outer_off = col.offsets.to_numpy(zero_copy_only=False)
+            flats.append(col.flatten())
+        assert (np.diff(outer_off) > 0).all()  # empties filtered at build
+        scores = _batch_maxsim(decode(flats), outer_off[:-1] - outer_off[0],
+                               Qm, qs)
+        # per-query affine part + final scale (identity except asym
+        # BQ, where it is the single 1/ranges division of the
+        # integer-exact pipeline — see _mv_quant_prep)
+        yield qall, ids, ((scores + offs) * scl).T
 
-    scored = sel.mapInArrow(score_batches, out_schema)
-    if dedup_ids:
-        # copies in DIFFERENT batches survive the kernel dedup; scores
-        # are identical, so dedup the narrow (qid, id, score) frame
-        scored = scored.dropDuplicates(["__qid", id_col])
-    w = Window.partitionBy("__qid").orderBy(
-        F.col("score").desc(), F.col(id_col).asc())
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k))
+    return arrow_topk(
+        index.codes.select(id_col, *code_cols), blocks, metric="dot", k=k,
+        qids=qall, qid_type=T.LongType(), qid_col="__qid", id_col=id_col,
+        dedup_ids=dedup_ids,
+    )
+
+
+def _batch_maxsim(Tm, starts, Qm, qstarts):
+    """(docs, queries) MaxSim of a batch's token matrix ``Tm`` (doc
+    segments start at ``starts``) against all query tokens ``Qm`` (query
+    segments start at ``qstarts``): per-doc segment max, then per-query
+    token sum."""
+    # chunk the query-token columns: the full (batch_tokens x
+    # all_qtokens) score matrix would be ~100s of MB per worker at 64
+    # queries (first-rep GC thrash measured 40s); per-doc segment max
+    # reduces each chunk to (docs, chunk) before the next chunk's BLAS
+    # call
+    CHUNK = 128
+    blocks = [np.maximum.reduceat(Tm @ Qm[c0:c0 + CHUNK].T, starts, axis=0)
+              for c0 in range(0, Qm.shape[0], CHUNK)]
+    M = blocks[0] if len(blocks) == 1 else np.concatenate(blocks, axis=1)
+    return np.add.reduceat(M, qstarts, axis=1)
 
 
 def maxsim_quant_pair_topk(qidx, pairs: DataFrame,
@@ -1919,7 +1867,7 @@ def maxsim_knn_batch(points: DataFrame,
     (__qid, id, score, rank<=k); scores are EXACT MaxSim (no rescore
     stage). 64 sequential maxsim_knn calls read the corpus 64 times;
     this reads it once."""
-    from pyspark.sql.window import Window
+    from qdrant_spark.operators.knn import arrow_topk
 
     if metric not in ("dot", "cosine"):
         raise ValueError("maxsim supports dot/cosine")
@@ -1933,65 +1881,32 @@ def maxsim_knn_batch(points: DataFrame,
         Qtoks.append(Qm)
     Qall = np.concatenate(Qtoks, axis=0)
     qstarts = np.cumsum([0] + [len(t) for t in Qtoks[:-1]])
-    nq = len(Qtoks)
+    qall = np.arange(len(Qtoks))
     dim = Qall.shape[1]
-    sc = points.sparkSession.sparkContext
-    bq = sc.broadcast((Qall, qstarts))
-
-    base = points.filter(
-        F.col(mv_col).isNotNull() & (F.size(mv_col) > 0))
-    sel = base.select(id_col, mv_col)
-    out_schema = T.StructType([
-        T.StructField("__qid", T.LongType()),
-        T.StructField(id_col, sel.schema[id_col].dataType),
-        T.StructField("score", T.DoubleType()),
-    ])
+    bq = points.sparkSession.sparkContext.broadcast((Qall, qstarts))
     cosine = metric == "cosine"
 
-    def score_batches(batches: Iterator) -> Iterator:
+    def blocks(batch):
         import pyarrow as pa
 
         Qm, qs = bq.value
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            ids = batch.column(0).to_numpy(zero_copy_only=False)
-            mv = batch.column(1)
-            if isinstance(mv, pa.ChunkedArray):
-                mv = mv.combine_chunks()
-            inner = mv.flatten()
-            outer_off = mv.offsets.to_numpy(zero_copy_only=False)
-            flat = inner.flatten().to_numpy(zero_copy_only=False)
-            Tm = flat.reshape(-1, dim).astype(np.float64, copy=False)
-            if cosine:
-                norms = np.linalg.norm(Tm, axis=1, keepdims=True)
-                norms[norms == 0] = 1.0
-                Tm = Tm / norms
-            starts = outer_off[:-1] - outer_off[0]
-            CHUNK = 128
-            blocks = []
-            for c0 in range(0, Qm.shape[0], CHUNK):
-                S = Tm @ Qm[c0:c0 + CHUNK].T
-                blocks.append(np.maximum.reduceat(S, starts, axis=0))
-            M = blocks[0] if len(blocks) == 1 \
-                else np.concatenate(blocks, axis=1)
-            scores = np.add.reduceat(M, qs, axis=1)
-            kk = min(k, n)
-            if kk < n:
-                part = np.argpartition(-scores, kk - 1, axis=0)[:kk]
-            else:
-                part = np.tile(np.arange(n)[:, None], (1, nq))
-            rows = part.ravel(order="F")
-            qid = np.repeat(np.arange(nq, dtype=np.int64), part.shape[0])
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(qid), pa.array(ids[rows]),
-                 pa.array(scores[rows, qid], type=pa.float64())],
-                names=["__qid", id_col, "score"],
-            )
+        ids = batch.column(0).to_numpy(zero_copy_only=False)
+        mv = batch.column(1)
+        if isinstance(mv, pa.ChunkedArray):
+            mv = mv.combine_chunks()
+        outer_off = mv.offsets.to_numpy(zero_copy_only=False)
+        flat = mv.flatten().flatten().to_numpy(zero_copy_only=False)
+        Tm = flat.reshape(-1, dim).astype(np.float64, copy=False)
+        if cosine:
+            norms = np.linalg.norm(Tm, axis=1, keepdims=True)
+            norms[norms == 0] = 1.0
+            Tm = Tm / norms
+        scores = _batch_maxsim(Tm, outer_off[:-1] - outer_off[0], Qm, qs)
+        yield qall, ids, scores.T
 
-    scored = sel.mapInArrow(score_batches, out_schema)
-    w = Window.partitionBy("__qid").orderBy(
-        F.col("score").desc(), F.col(id_col).asc())
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k))
+    base = points.filter(
+        F.col(mv_col).isNotNull() & (F.size(mv_col) > 0))
+    return arrow_topk(
+        base.select(id_col, mv_col), blocks, metric="dot", k=k, qids=qall,
+        qid_type=T.LongType(), qid_col="__qid", id_col=id_col,
+    )

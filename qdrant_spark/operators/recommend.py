@@ -94,55 +94,32 @@ def _arrow_compose_topk(df: DataFrame, vectors, compose, *, metric: str,
         return None
     from pyspark.sql import types as T
 
+    from qdrant_spark.operators.knn import arrow_matrix, score_block, topk_kernel
+
     Vm = np.asarray(vectors, dtype=np.float64)
-    dim = Vm.shape[1]
     bV = df.sparkSession.sparkContext.broadcast(Vm)
-    src = df.select(id_col, vec_col)
+    vnorm = np.linalg.norm(Vm, axis=1) if metric == "cosine" else None
+    q0 = np.zeros(1, dtype=np.int64)
     out_schema = T.StructType([
+        T.StructField("__q", T.LongType()),
         T.StructField(id_col, df.schema[id_col].dataType),
         T.StructField("score", T.DoubleType()),
     ])
 
-    def run(batches):
-        import pyarrow as pa
+    def blocks(batch):
+        ids = batch.column(0).to_numpy(zero_copy_only=False)
+        M = arrow_matrix(batch.column(1), batch.num_rows).astype(np.float64, copy=False)
+        S = score_block(M, bV.value, metric, qnorm=vnorm)
+        # composed scores tie heavily (context clamps to 0.0 for most
+        # points): the kernel's tie-exact cut keeps the low-id ones
+        yield q0, ids, compose(S.T)[None, :]
 
-        from qdrant_spark.operators.knn import score_block
-
-        V = bV.value
-        vnorm = np.linalg.norm(V, axis=1) if metric == "cosine" else None
-        acc_i, acc_s = [], []
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            ids = batch.column(0).to_numpy(zero_copy_only=False)
-            vec = batch.column(1)
-            if isinstance(vec, pa.ChunkedArray):
-                vec = vec.combine_chunks()
-            flat = vec.flatten().to_numpy(zero_copy_only=False)
-            M = flat.reshape(n, dim).astype(np.float64, copy=False)
-            scores = compose(score_block(M, V, metric, qnorm=vnorm))
-            # tie-AWARE per-batch top-k: composed scores tie heavily
-            # (context clamps to 0.0 for most points), so an argpartition
-            # cut would drop tied low-id candidates before the final
-            # (score desc, id asc) ranking ever sees them
-            part = np.lexsort((ids, -scores))[:min(k, n)]
-            acc_i.append(ids[part])
-            acc_s.append(scores[part])
-        if not acc_i:
-            return
-        ids = np.concatenate(acc_i)
-        scores = np.concatenate(acc_s)
-        order = np.lexsort((ids, -scores))[:k]  # per-partition exact top-k
-        yield pa.RecordBatch.from_arrays(
-            [pa.array(ids[order]), pa.array(scores[order],
-                                            type=pa.float64())],
-            names=[id_col, "score"],
-        )
-
-    cand = src.mapInArrow(run, out_schema)
+    cand = df.select(id_col, vec_col).mapInArrow(topk_kernel(
+        blocks, k=k, bigger_better=True, qids=q0, qid_col="__q",
+        id_col=id_col), out_schema)
     # global re-rank over <= partitions*k candidates only
-    return cand.orderBy(F.col("score").desc(), F.col(id_col).asc()).limit(k)
+    return (cand.select(id_col, "score")
+            .orderBy(F.col("score").desc(), F.col(id_col).asc()).limit(k))
 
 
 def _topk(df: DataFrame, metric_like_larger_better: bool, k: int, id_col: str,

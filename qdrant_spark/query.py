@@ -2252,84 +2252,6 @@ def _batch_quant_indexed(planner: "QueryPlanner",
                             ks, rescores, by_req)
 
 
-def _masked_code_topk(frame, *, code_col, id_col, qids, Q, cluster_q,
-                      k, metric, vec_decode):
-    """Cluster-masked batched coarse scan: ONE pass over the (already
-    probe-union-pruned) coded frame in which each cluster block scores
-    against ONLY the queries that probed it (the ann.ivf_search_batch
-    kernel, generalized with the per-kind decode hook). Exact per-query
-    (score direction, id) ranking via the final window, so candidates
-    match the single-request composed plan bit-for-bit."""
-    import numpy as np
-
-    from pyspark.sql import types as T
-    from pyspark.sql.window import Window
-
-    from qdrant_spark.operators.knn import (
-        larger_is_better, score_block, score_order,
-    )
-
-    sc = frame.sparkSession.sparkContext
-    bq = sc.broadcast((np.asarray(qids), Q, cluster_q))
-    bigger = larger_is_better(metric)
-    sel = frame.select(id_col, code_col, "__cluster")
-    out_schema = T.StructType([
-        T.StructField("__qid", T.LongType()),
-        T.StructField(id_col, sel.schema[id_col].dataType),
-        T.StructField("score", T.DoubleType()),
-    ])
-
-    def score_batches(batches):
-        import pyarrow as pa
-
-        qid_arr, Qm, cq = bq.value
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            ids = batch.column(0).to_numpy(zero_copy_only=False)
-            vec = batch.column(1)
-            if isinstance(vec, pa.ChunkedArray):
-                vec = vec.combine_chunks()
-            M = vec_decode(vec, n)
-            cl = batch.column(2).to_numpy(zero_copy_only=False)
-            acc_q, acc_i, acc_s = [], [], []
-            for c in np.unique(cl):
-                qidx = cq.get(int(c))
-                if qidx is None or len(qidx) == 0:
-                    continue
-                mask = cl == c
-                S = score_block(M[mask], Qm[qidx], metric)
-                nb = S.shape[0]
-                kk = min(k, nb)
-                if kk < nb:
-                    part = np.argpartition(
-                        -S if bigger else S, kk - 1, axis=0)[:kk]
-                else:
-                    part = np.tile(np.arange(nb)[:, None],
-                                   (1, len(qidx)))
-                rows = part.ravel(order="F")
-                acc_q.append(np.repeat(qidx, part.shape[0]))
-                acc_i.append(ids[mask][rows])
-                acc_s.append(S[rows, np.repeat(np.arange(len(qidx)),
-                                               part.shape[0])])
-            if not acc_q:
-                continue
-            qi = np.concatenate(acc_q)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(qid_arr[qi]),
-                 pa.array(np.concatenate(acc_i)),
-                 pa.array(np.concatenate(acc_s), type=pa.float64())],
-                names=["__qid", id_col, "score"],
-            )
-
-    scored = sel.mapInArrow(score_batches, out_schema)
-    w = Window.partitionBy("__qid").orderBy(
-        *score_order(metric, id_col=id_col))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k))
-
-
 def _batch_quant_ivf_indexed(planner: "QueryPlanner",
                              requests: list[dict[str, Any]],
                              outs: list) -> None:
@@ -2379,8 +2301,10 @@ def _batch_quant_ivf_indexed(planner: "QueryPlanner",
         cluster_q = {int(c): np.where((probes == c).any(axis=1))[0]
                      for c in used}
         pruned = prep(qih.coded.filter(F.col("__cluster").isin(used)))
-        coarse = _masked_code_topk(
-            pruned, code_col=code_col, id_col=qih.id_col, qids=idxs,
+        from qdrant_spark.operators import ann
+
+        coarse = ann.cluster_masked_topk(
+            pruned, vec_col=code_col, id_col=qih.id_col, qids=idxs,
             Q=Q, cluster_q=cluster_q, k=max(cs.values()),
             metric=scan_metric, vec_decode=dec,
         ).collect()

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import numpy as np
 import pytest
 
 from qdrant_spark.session import get_spark
@@ -64,3 +65,19 @@ def points_basic(spark):
         ("10", 0, None, ([1, 2, 3], [0.1, 0.2, 0.3]), [], [], None, False, False),
     ]
     return spark.createDataFrame(rows, schema)
+
+
+TIED_VEC = [0.5, 1.0, 0.25, 2.0]
+
+
+@pytest.fixture(scope="session")
+def tied_points(spark):
+    """3000 rows in ONE partition that all carry the same vector (``vec``)
+    and multivector (``mv``), stored in shuffled id order: every query
+    scores every row the same, so any exact top-k is ids 1..k (ties break
+    by id ascending)."""
+    ids = np.random.default_rng(7).permutation(np.arange(1, 3001))
+    rows = [(int(i), TIED_VEC, [TIED_VEC, TIED_VEC]) for i in ids]
+    return spark.createDataFrame(
+        rows, "id long, vec array<float>, mv array<array<float>>"
+    ).coalesce(1)

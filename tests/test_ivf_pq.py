@@ -393,3 +393,19 @@ def test_build_ivf_fit_dispatch(embeddings):
     got_ml = [(r[0], round(r[1], 9)) for r in ann.ivf_search(
         ml, q, k=10, nprobe=8, metric="cosine").collect()]
     assert got_a == got_ml
+
+
+@pytest.mark.parametrize("mode", ["coarse", "fused"])
+def test_batch_modes_tie_exact(spark, tied_points, mode):
+    # every row ADC-scores and exact-scores the same: both the ADC
+    # shortlist cut and the exact cut must keep ids by ascending id, as
+    # the exact window does
+    from qdrant_spark.operators.ann import ivf_pq_search_batch
+
+    idx = build_ivf_pq(tied_points, n_clusters=1, n_subspaces=2,
+                       n_centroids=2, vec_col="vec", id_col="id")
+    queries = spark.createDataFrame([(0, [1.0, 0.0, 0.5, 0.0])],
+                                    "qid long, qvec array<double>")
+    got = ivf_pq_search_batch(idx, queries, k=5, nprobe=1, oversampling=2.0,
+                              metric="cosine", mode=mode)
+    assert [r["id"] for r in got.orderBy("rank").collect()] == [1, 2, 3, 4, 5]

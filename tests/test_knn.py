@@ -63,7 +63,7 @@ def test_knn_filter_and_threshold(embeddings, emb_np):
     assert all(r["score"] > 0.0 for r in got)
 
 
-@pytest.mark.parametrize("strategy", ["window", "partial"])
+@pytest.mark.parametrize("strategy", ["window", "partial", "matmul"])
 def test_knn_batch(embeddings, emb_np, strategy, spark):
     ids, mat = emb_np
     queries = spark.createDataFrame(
@@ -86,6 +86,35 @@ def test_knn_batch(embeddings, emb_np, strategy, spark):
         exp = oracle_topk(ids, mat, mat[i], "cosine", 5)
         rows = sorted(by_q[int(ids[i])])
         assert [(v, pytest.approx(s, rel=1e-8)) for _, v, s in rows] == exp
+
+
+@pytest.mark.parametrize("path", ["matmul", "single_arrow", "ivf", "maxsim"])
+def test_tied_scores_rank_by_id_on_arrow_paths(spark, tied_points, path):
+    """Every row of ``tied_points`` scores the same, so the exact top k is
+    ids 1..k, as the window strategy returns. Each Arrow scorer cuts a
+    local top k before the final window; a cut that keeps arbitrary tied
+    rows loses the low ids before the window sees them."""
+    from qdrant_spark.operators.ann import IvfIndex, ivf_search_batch
+    from qdrant_spark.operators.multivec import maxsim_knn_batch
+
+    k = 5
+    q = [1.0, 0.0, 0.5, 0.0]
+    queries = spark.createDataFrame([(0, q)], "qid long, qvec array<double>")
+    window = knn_batch(tied_points, queries, k=k, strategy="window")
+    assert [r["id"] for r in window.orderBy("rank").collect()] == list(range(1, k + 1))
+    if path == "matmul":
+        got = knn_batch(tied_points, queries, k=k, strategy="matmul").orderBy("rank")
+    elif path == "single_arrow":
+        got = knn(tied_points, q, k=k, select=["id", "score"], arrow_dispatch_bytes=0)
+    elif path == "ivf":
+        idx = IvfIndex(
+            assigned=tied_points.withColumn("__cluster", F.lit(0)),
+            centroids=np.asarray([q]), vec_col="vec", id_col="id",
+        )
+        got = ivf_search_batch(idx, queries, k=k, nprobe=1).orderBy("rank")
+    else:
+        got = maxsim_knn_batch(tied_points, [[q, q]], k=k).orderBy("rank")
+    assert [r["id"] for r in got.collect()] == list(range(1, k + 1))
 
 
 def test_knn_offset(embeddings, emb_np):

@@ -327,7 +327,7 @@ def test_query_batch_composed_quant_ivf(embeddings, ivf8, monkeypatch):
     coarse scan (each query scored only inside ITS probed clusters) +
     ONE pair rescore — value-identical per request to the per-request
     composed plans, including offset / rescore=False / threshold."""
-    from qdrant_spark import query as QM
+    from qdrant_spark.operators import ann
     from qdrant_spark.query import query_batch
 
     h = build_quant(embeddings, {"scalar": {"full_scan_threshold": 0}},
@@ -349,9 +349,9 @@ def test_query_batch_composed_quant_ivf(embeddings, ivf8, monkeypatch):
     want = [query_batch(embeddings, [dict(r)], **kw).collect()
             for r in reqs]
     calls = []
-    orig = QM._masked_code_topk
+    orig = ann.cluster_masked_topk
     monkeypatch.setattr(
-        QM, "_masked_code_topk",
+        ann, "cluster_masked_topk",
         lambda *a, **k: calls.append(1) or orig(*a, **k))
     got = query_batch(embeddings, [dict(r) for r in reqs],
                       **kw).collect()
