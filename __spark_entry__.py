@@ -1425,8 +1425,7 @@ def _q_sparse_knn_planned(spark: SparkSession, sf: str) -> DataFrame:
     idx = persist_sparse_index(
         build_sparse_index(sv, id_col="doc_id"),
         tempfile.mkdtemp(prefix="sparse_idx_pl_"), buckets=64)
-    planner = QueryPlanner(sv, id_col="doc_id",
-                           sparse_indexes={"vec": idx})
+    planner = QueryPlanner(sv, id_col="doc_id", indexes={"vec": [idx]})
     out = planner.plan({
         "query": {"nearest": {"indices": list(q_row["sparse_indices"]),
                               "values": list(q_row["sparse_values"])}},
@@ -2346,7 +2345,7 @@ def _q_universal_groups_indexed(spark: SparkSession, sf: str) -> DataFrame:
                               (F.col("vec_id") % 11).cast("double") + 1.0)))
     idx = build_sparse_index(df, id_col="vec_id")
     planner = QueryPlanner(df, id_col="vec_id", metric="dot",
-                           sparse_indexes={"vec": idx})
+                           indexes={"vec": [idx]})
     out = planner.plan_groups(
         {"query": {"nearest": {"indices": [2, 50], "values": [1.0, 0.5]}}},
         group_by_field="label", groups=5, group_size=3, oversample=4,
@@ -4571,8 +4570,7 @@ def _q_maxsim_degrade(spark: SparkSession, sf: str) -> DataFrame:
     route = MaxSimRoute(index=idx, nprobe=8, full_scan_threshold=0,
                         degrade_membership=0.95)
     planner = QueryPlanner(pts, id_col="vec_id", default_vec_col="mv",
-                           metric="dot", maxsim_indexes={"mv": route},
-                           maxsim_sq_indexes={"mv": sqidx})
+                           metric="dot", indexes={"mv": [route, sqidx]})
     out = planner.plan({
         "query": {"nearest": q_mv}, "limit": 10,
         "params": {"quantization": {"oversampling": n / 10.0}}})
@@ -4619,8 +4617,7 @@ def _q_maxsim_degrade_routed(spark: SparkSession, sf: str) -> DataFrame:
     route = MaxSimRoute(index=idx, nprobe=1, full_scan_threshold=0,
                         degrade_membership=0.9)
     planner = QueryPlanner(pts, id_col="vec_id", default_vec_col="mv",
-                           metric="dot", maxsim_indexes={"mv": route},
-                           maxsim_sq_indexes={"mv": sqidx})
+                           metric="dot", indexes={"mv": [route, sqidx]})
     q_mv = [[1.0, 0.5, 0.5, 0.25], [1.0, 0.9, 0.125, 0.0625]]
     out = planner.plan({
         "query": {"nearest": q_mv}, "limit": 10,

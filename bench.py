@@ -859,7 +859,7 @@ def main() -> None:
         f"{work}/quant_sq_xxl")
     quant_planner = QueryPlanner(xxl_disk, id_col="vec_id",
                                  default_vec_col="embedding",
-                                 quant_indexes={"embedding": quant_xxl})
+                                 indexes={"embedding": [quant_xxl]})
 
     def q_sq_planned_xxl_disk():
         out = quant_planner.plan(
@@ -885,9 +885,8 @@ def main() -> None:
         f"{work}/quant_ivf_sq_xxl")
     qivf_planner = QueryPlanner(xxl_disk, id_col="vec_id",
                                 default_vec_col="embedding",
-                                ivf_indexes={"embedding": ivf_xxl},
-                                quant_indexes={"embedding": quant_xxl},
-                                quant_ivf_indexes={"embedding": qivf_xxl})
+                                indexes={"embedding": [
+                                    ivf_xxl, quant_xxl, qivf_xxl]})
 
     def q_sq_ivf_planned_xxl_disk():
         # oversampling matches PQ_OS: the jittered corpus puts ~256
@@ -917,8 +916,7 @@ def main() -> None:
                  "params": {"quantization": {"oversampling": PQ_OS}}}
                 for i in range(64)]
         return _qb(xxl_disk, reqs, id_col="vec_id", vec_col="embedding",
-                   quant_indexes={"embedding": quant_xxl},
-                   quant_ivf_indexes={"embedding": qivf_xxl}).count()
+                   indexes={"embedding": [quant_xxl, qivf_xxl]}).count()
 
     measure("sq_ivf_batch64_xxl_disk", q_sq_ivf_batch64_xxl_disk,
             strict=True, forced=True)
@@ -939,8 +937,8 @@ def main() -> None:
                  "params": {"quantization": {"oversampling": PQ_OS}}}
                 for i in range(64)]
         return _qb(xxl_disk, reqs, id_col="vec_id", vec_col="embedding",
-                   quant_indexes={"embedding": quant_xxl_default},
-                   quant_ivf_indexes={"embedding": qivf_xxl_default}).count()
+                   indexes={"embedding": [quant_xxl_default,
+                                          qivf_xxl_default]}).count()
 
     measure("sq_ivf_batch64_xxl_default_disk",
             q_sq_ivf_batch64_xxl_default_disk, strict=True)
@@ -1012,7 +1010,7 @@ def main() -> None:
     ms_route = MaxSimRoute(index=msivf_xxl, nprobe=4, candidates=4096)
     ms_planner = QueryPlanner(mv_xxl, id_col="vec_id",
                               default_vec_col="mv", metric="dot",
-                              maxsim_indexes={"mv": ms_route})
+                              indexes={"mv": [ms_route]})
 
     def q_maxsim_planned_xxl_disk():
         out = ms_planner.plan(
@@ -1066,7 +1064,7 @@ def main() -> None:
                  "params": {"quantization": {"oversampling": PQ_OS}}}
                 for i in range(16)]
         return _qb2(mv_xxl, reqs, id_col="vec_id", vec_col="mv",
-                    metric="dot", maxsim_sq_indexes={"mv": idx}).count()
+                    metric="dot", indexes={"mv": [idx]}).count()
 
     measure("maxsim_sq_xxl_disk", q_maxsim_sq_xxl_disk, forced=True)
     measure("maxsim_sq_batch16_xxl_disk", q_maxsim_sq_batch16_xxl_disk,
@@ -1114,8 +1112,8 @@ def main() -> None:
                  "params": {"quantization": {"oversampling": PQ_OS}}}
                 for i in range(16)]
         return _qb2(mv_xxl, reqs, id_col="vec_id", vec_col="mv",
-                    metric="dot", maxsim_sq_indexes={"mv": sq_forced},
-                    maxsim_indexes={"mv": route_forced}).count()
+                    metric="dot",
+                    indexes={"mv": [sq_forced, route_forced]}).count()
 
     measure("maxsim_sq_ivf_batch16_xxl_disk",
             q_maxsim_sq_ivf_batch16_xxl_disk, strict=True, forced=True)
@@ -1401,8 +1399,8 @@ def main() -> None:
         qivf_xxxl_forced = _dcr2(qivf_xxxl_sq, handle=quant_xxxl_forced)
         run_app("sq_ivf_batch64_xxxl_disk", lambda: _qb(
             xxxl_disk, reqs64_sq, id_col="vec_id", vec_col="embedding",
-            quant_indexes={"embedding": quant_xxxl_forced},
-            quant_ivf_indexes={"embedding": qivf_xxxl_forced}).count())
+            indexes={"embedding": [quant_xxxl_forced,
+                                   qivf_xxxl_forced]}).count())
         # the SINGLE-query composed plan at 2M (default dispatch routes
         # it here): coarse reads nprobe/32 of the FILES x 1/4 bytes/row
         # — contrast knn_single_xxxl_disk (exact floats, all files).
@@ -1410,8 +1408,7 @@ def main() -> None:
         # the single-leaf line is where the compound pruning is visible.
         xxxl_qp = QueryPlanner(
             xxxl_disk, id_col="vec_id", default_vec_col="embedding",
-            quant_indexes={"embedding": quant_xxxl},
-            quant_ivf_indexes={"embedding": qivf_xxxl_sq})
+            indexes={"embedding": [quant_xxxl, qivf_xxxl_sq]})
         run_app("sq_ivf_single_xxxl_disk", lambda: xxxl_qp.plan(
             {"query": {"nearest": q0}, "limit": 10,
              "params": {"quantization": {"oversampling": PQ_OS}}}).collect())
@@ -1529,7 +1526,7 @@ def main() -> None:
         # --------------------------------------------------------------
         # sparse through the PLANNER at 500k docs (r9 VERDICT item 1):
         # the same postings re-keyed as (doc_id, dim, v) pairs, persisted
-        # dim-bucket-partitioned; QueryPlanner(sparse_indexes=...) routes
+        # dim-bucket-partitioned; QueryPlanner(indexes=...) routes
         # the sparse nearest leaf through the index so the query's dims
         # become PartitionFilters. Contrast vs the SAME planner routed at
         # an unbucketed view of the pairs (query = full pairs scan).
@@ -1557,7 +1554,7 @@ def main() -> None:
             "values": [1.0] * len(sp_qdims)}}, "limit": 10}
 
         def _sp_500k(idx):
-            pl = _QP(docs_xxl, id_col="doc_id", sparse_indexes={"vec": idx})
+            pl = _QP(docs_xxl, id_col="doc_id", indexes={"vec": [idx]})
             out = pl.plan(sp_req).collect()
             assert pl.last_plan_info.get("sparse_index_leaves") == 1
             return out

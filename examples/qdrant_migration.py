@@ -63,7 +63,7 @@ def run(sf_dir: str = "/root/testdata/sf0.001", cpus: int = 8) -> dict:
     # by the selectivity dispatcher when an IVF index exists
     idx = build_ivf(points, n_clusters=4, vec_col="embedding", id_col="id")
     planner = QueryPlanner(points, id_col="id", default_vec_col="embedding",
-                           metric="cosine", ivf_index=idx)
+                           metric="cosine", indexes={"embedding": [idx]})
     fused = planner.plan({
         "prefetch": [
             {"query": {"nearest": q0}, "limit": 20},

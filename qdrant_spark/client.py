@@ -313,6 +313,16 @@ class _Collection:
         out.update({self.vec_col(n): "dot" for n in self.sparse})
         return out
 
+    def indexes_map(self) -> dict[str, list]:
+        """vec COLUMN -> the index handles built over it, for
+        QueryPlanner(indexes=...)."""
+        out: dict[str, list] = {}
+        for reg in (self.ivf, self.sparse_idx, self.quant, self.quant_ivf,
+                    self.mv_idx, self.mv_sq):
+            for n, h in reg.items():
+                out.setdefault(self.vec_col(n), []).append(h)
+        return out
+
 
 class QdrantSparkClient:
     """Drop-in facade: the qdrant-client method surface over Spark.
@@ -1862,20 +1872,8 @@ class QdrantSparkClient:
             metric=col.metric_for(using),
             collections=registry,
             text_params=col.text_params or None,
-            ivf_index=col.ivf.get(using or ""),
-            ivf_indexes={col.vec_col(n): idx
-                         for n, idx in col.ivf.items()},
             metrics=col.metrics_map(),
-            sparse_indexes={col.vec_col(n): idx
-                            for n, idx in col.sparse_idx.items()},
-            quant_indexes={col.vec_col(n): h
-                           for n, h in col.quant.items()},
-            maxsim_indexes={col.vec_col(n): rt
-                            for n, rt in col.mv_idx.items()},
-            quant_ivf_indexes={col.vec_col(n): qih
-                               for n, qih in col.quant_ivf.items()},
-            maxsim_sq_indexes={col.vec_col(n): h
-                               for n, h in col.mv_sq.items()},
+            indexes=col.indexes_map(),
         )
 
     def _hydrate(self, col: _Collection, scored: DataFrame, *,
@@ -1994,13 +1992,7 @@ class QdrantSparkClient:
             # a registered IVF index covers the WHOLE corpus; routing
             # through it would leak other shards' points — shard-scoped
             # requests stay exact over the routed partition directories
-            planner.ivf_index = None
-            planner.ivf_indexes = {}
-            planner.sparse_indexes = {}
-            planner.quant_indexes = {}
-            planner.maxsim_indexes = {}
-            planner.quant_ivf_indexes = {}
-            planner.maxsim_sq_indexes = {}
+            planner.indexes = {}
         scored = planner.plan(req)
         out = self._hydrate(col, scored, with_payload=with_payload,
                             with_vectors=with_vectors,
@@ -2047,13 +2039,7 @@ class QdrantSparkClient:
         planner = self._planner(col, using)
         if shard_key_selector is not None:
             planner.points = self._route(col, col.df, shard_key_selector)
-            planner.ivf_index = None
-            planner.ivf_indexes = {}
-            planner.sparse_indexes = {}
-            planner.quant_indexes = {}
-            planner.maxsim_indexes = {}
-            planner.quant_ivf_indexes = {}
-            planner.maxsim_sq_indexes = {}
+            planner.indexes = {}
         lookup = lookup_cols = None
         if with_lookup is not None:
             if isinstance(with_lookup, str):
@@ -2123,22 +2109,7 @@ class QdrantSparkClient:
                              metric=col.metric_for(None),
                              collections=registry,
                              metrics=col.metrics_map(),
-                             sparse_indexes={col.vec_col(n): idx
-                                             for n, idx
-                                             in col.sparse_idx.items()},
-                             ivf_index=col.ivf.get(""),
-                             ivf_indexes={col.vec_col(n): idx
-                                          for n, idx in col.ivf.items()},
-                             quant_indexes={col.vec_col(n): h
-                                            for n, h in col.quant.items()},
-                             maxsim_indexes={col.vec_col(n): rt
-                                             for n, rt in col.mv_idx.items()},
-                             quant_ivf_indexes={col.vec_col(n): qih
-                                                for n, qih
-                                                in col.quant_ivf.items()},
-                             maxsim_sq_indexes={col.vec_col(n): h
-                                                for n, h
-                                                in col.mv_sq.items()})
+                             indexes=col.indexes_map())
         by_idx: dict[int, list] = {}
         for r in tagged.collect():
             by_idx.setdefault(r["request_idx"], []).append(r)

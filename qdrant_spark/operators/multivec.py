@@ -188,7 +188,7 @@ MAXSIM_FULL_SCAN_THRESHOLD = 2_000_000
 @dataclass
 class MaxSimRoute:
     """A registered multivector coarse index plus its routing knobs, as
-    passed to ``QueryPlanner(maxsim_indexes={vec_col: route})`` — the
+    passed to ``QueryPlanner(indexes={vec_col: [route]})`` — the
     declared-index analogue the reference gets from building HNSW over
     multivector storage (multivector_hnsw_test.rs). ``nprobe ==
     n_clusters`` with ``candidates=None`` reproduces the exact scan.

@@ -1252,7 +1252,7 @@ QUANT_BATCH_FULL_SCAN_THRESHOLD = 8_000_000
 @dataclass
 class QuantHandle:
     """A built quantized index tagged with its config kind, as registered
-    on ``QueryPlanner(quant_indexes=...)`` — the engine-side analogue of a
+    on ``QueryPlanner(indexes=...)`` — the engine-side analogue of a
     collection's declared ``quantization_config`` (QuantizationConfig,
     types.rs:1123-1129: Scalar | Product | Binary | Turbo)."""
 

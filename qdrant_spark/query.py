@@ -77,30 +77,75 @@ def merge_filters(a: dict | None, b: dict | None) -> dict | None:
     return {"must": [a, b]}
 
 
+class _Route(NamedTuple):
+    """A ``nearest`` leaf's route (see :meth:`QueryPlanner._route`):
+    the kind, the vector column, the index handles the kind runs on and
+    the target with point-id references resolved."""
+
+    kind: str
+    vec_col: str
+    handles: tuple
+    target: Any
+
+
+def _crossover_ok(handle, default: int, corpus: DataFrame) -> bool:
+    """Exact-vs-indexed corpus-size dispatch of a declared route: the
+    coarse / pruned plans pay a second candidate scan that only wins past
+    the page-cache scale, so below the handle's ``full_scan_threshold``
+    (None = ``default``) the planner takes the exact scan; 0 pins the
+    indexed route. ``n_docs`` caches ``corpus.count()`` on the handle (a
+    metadata-only parquet count), so each handle counts at most once."""
+    thr = default if handle.full_scan_threshold is None \
+        else handle.full_scan_threshold
+    if not thr:
+        return True
+    if handle.n_docs is None:
+        handle.n_docs = corpus.count()
+    return handle.n_docs >= thr
+
+
 class QueryPlanner:
     """Compiles a universal-query request against a points DataFrame.
 
     ``collections`` is an optional name -> DataFrame registry so
     ``lookup_from`` can reference another collection by name
-    (LookupLocation {collection, vector}, collection_query.rs:147-152)."""
+    (LookupLocation {collection, vector}, collection_query.rs:147-152).
+
+    ``indexes`` maps a vector COLUMN to the list of index handles built
+    over it — the declared indexes every ``nearest`` leaf on that column
+    routes through (see :meth:`_route`):
+
+    - ``ann.IvfIndex``: dense leaves run the selectivity-aware dispatcher
+      (operators/dispatch.auto_search — the reference runs EVERY search
+      through its query_estimator the same way); ``full_scan_threshold``
+      overrides its plain-vs-index crossover;
+    - ``sparse.SparseIndex``: sparse leaves search its posting lists
+      (dim-bucket PartitionFilters on a persisted index) instead of
+      re-exploding the corpus's sparse columns — the reference ALWAYS
+      searches sparse through its inverted index
+      (lib/sparse/src/index/search_context.rs:37-91);
+    - ``quantize.QuantHandle``: dense leaves run the coarse+rescore plan,
+      per-request tunable via SearchParams.quantization {ignore, rescore,
+      oversampling} (types.rs:573-628);
+    - ``quantize.QuantIvfHandle``: persisted cluster-partitioned codes;
+      dense leaves probe clusters -> score codes -> exact-rescore, the
+      reference's quantized-HNSW shape. A column with both an IVF and a
+      quantized handle but no composed one composes lazily on first use;
+    - ``multivec.MaxSimRoute``: MaxSim leaves run the token-level-IVF
+      pruned plan (multivector_hnsw_test.rs);
+    - ``multivec.MaxSimSq`` / ``MaxSimBq`` / ``MaxSimPq`` / ``MaxSimTq``:
+      MaxSim leaves run coarse-over-token-codes + exact rescore."""
 
     def __init__(self, points: DataFrame, *, id_col: str = "id",
                  default_vec_col: str = "vec", metric: str = "cosine",
                  collections: dict[str, DataFrame] | None = None,
-                 ivf_index=None, index_stats=None,
+                 indexes: dict[str, list] | None = None,
                  full_scan_threshold: int | None = None,
-                 cluster_stats=None,
                  fuse_min_bytes: int | None = None,
                  fused_collect_max: int | None = None,
                  driver_lazy_fusion: bool = True,
                  text_params: dict[str, dict[str, Any]] | None = None,
-                 metrics: dict[str, str] | None = None,
-                 sparse_indexes: dict[str, Any] | None = None,
-                 ivf_indexes: dict[str, Any] | None = None,
-                 quant_indexes: dict[str, Any] | None = None,
-                 maxsim_indexes: dict[str, Any] | None = None,
-                 quant_ivf_indexes: dict[str, Any] | None = None,
-                 maxsim_sq_indexes: dict[str, Any] | None = None):
+                 metrics: dict[str, str] | None = None):
         self.points = points
         self.id_col = id_col
         self.default_vec_col = default_vec_col
@@ -112,16 +157,12 @@ class QueryPlanner:
         # without this a prefetch/batch leg on a Euclid named vector would
         # silently rank by the default metric's direction
         self.metrics = metrics or {}
-        # persisted sparse inverted indexes (vec column name ->
-        # SparseIndex): a sparse `nearest` leaf on a column with a
-        # registered index routes through its dim-bucketed search instead
-        # of re-exploding the corpus's sparse columns per query — the
-        # reference ALWAYS searches sparse through its inverted index
-        # (lib/sparse/src/index/search_context.rs:37-91). BM25 text
-        # search has no universal-query leaf (qdrant models it as
-        # client-side sparse vectors), so Bm25Index stays operator-level
-        # (sparse.bm25_search_index).
-        self.sparse_indexes = sparse_indexes or {}
+        #: vec column -> {route kind: handle}, sorted from ``indexes``.
+        #: BM25 text search has no universal-query leaf (qdrant models
+        #: it as client-side sparse vectors), so Bm25Index stays
+        #: operator-level (sparse.bm25_search_index).
+        self.indexes = {vc: self._sort_handles(vc, hs)
+                        for vc, hs in (indexes or {}).items()}
         self.collections = collections or {}
         self._self_refs: set = set()
         # per-field TextIndexParams honored by full-text filter conditions
@@ -131,68 +172,6 @@ class QueryPlanner:
         # shared-scan fusion (both key on the raw filter dict).
         self.text_params = text_params or {}
         self._vec_cache: dict[tuple, list] = {}
-        # optional ANN acceleration: when an IvfIndex is registered, dense
-        # `nearest` leaves route through the selectivity-aware dispatcher
-        # (operators/dispatch.auto_search — the reference runs EVERY search
-        # through its query_estimator the same way). index_stats is the
-        # dispatch.stats_from_index mapping; full_scan_threshold overrides
-        # the plain-vs-index crossover.
-        if ivf_index is not None and ivf_index.id_col != id_col:
-            raise ValueError("ivf_index.id_col must match the planner id_col")
-        self.ivf_index = ivf_index
-        # additional per-vector-column IVF indexes (named vectors); the
-        # primary `ivf_index` keeps its index_stats/cluster_stats tuning,
-        # the dict entries dispatch with defaults
-        self.ivf_indexes = ivf_indexes or {}
-        for vc, ix in self.ivf_indexes.items():
-            if ix.id_col != id_col:
-                raise ValueError(
-                    f"ivf_indexes[{vc!r}].id_col must match the planner "
-                    f"id_col")
-        # declared quantization (vec column name -> quantize.QuantHandle):
-        # dense `nearest` leaves on a column with a registered quantized
-        # index run the two-stage coarse+rescore plan — the reference
-        # searches through quantized storage transparently once a
-        # collection declares quantization_config (quantized_vectors.rs),
-        # per-request tunable via SearchParams.quantization {ignore,
-        # rescore, oversampling} (types.rs:573-628). A registered IVF
-        # index for the same column wins (cluster pruning subsumes the
-        # coarse scan; the combined form is operators/ann.py IVF-PQ).
-        self.quant_indexes = quant_indexes or {}
-        for vc, qh in self.quant_indexes.items():
-            if qh.id_col != id_col:
-                raise ValueError(
-                    f"quant_indexes[{vc!r}].id_col must match the planner "
-                    f"id_col")
-        # multivector coarse indexes (vec column name ->
-        # multivec.MaxSimRoute): MaxSim leaves on a registered column run
-        # the token-level-IVF pruned plan instead of the full Arrow scan
-        # — the reference builds HNSW over multivector storage for the
-        # same purpose (multivector_hnsw_test.rs). Filtered / params.exact
-        # leaves keep the exact scan.
-        self.maxsim_indexes = maxsim_indexes or {}
-        for vc, rt in self.maxsim_indexes.items():
-            if rt.id_col != id_col:
-                raise ValueError(
-                    f"maxsim_indexes[{vc!r}].id_col must match the planner "
-                    f"id_col")
-        # composed quantization x IVF handles (vec column name ->
-        # quantize.QuantIvfHandle): persisted cluster-partitioned codes
-        # (plans/maintenance.ensure_quant_ivf_index). When a column has
-        # BOTH an IVF and a quant registration but no composed entry,
-        # the planner composes lazily on first use (one cached join) —
-        # either way dense `nearest` runs probe-clusters -> score-codes
-        # -> exact-rescore, the reference's quantized-HNSW shape.
-        self.quant_ivf_indexes = quant_ivf_indexes or {}
-        # quantized multivector storage (vec column name ->
-        # multivec.MaxSimSq): MaxSim leaves run coarse-over-int8-codes +
-        # exact rescore (quantized_vectors.rs treats multivectors like
-        # any other kind); per-request SearchParams.quantization applies.
-        self.maxsim_sq_indexes = maxsim_sq_indexes or {}
-        self.index_stats = index_stats or {}
-        # optional dispatch.ClusterFieldStats: per-cluster filter
-        # histograms for the ACORN-analogue filtered probe selection
-        self.cluster_stats = cluster_stats
         self.full_scan_threshold = full_scan_threshold
         self._index_totals: dict[str, int] = {}
         #: diagnostics from the last plan(): how many sibling prefetch
@@ -233,26 +212,52 @@ class QueryPlanner:
 
     # -- public ------------------------------------------------------------
 
-    def _ivf_for(self, vec_col: str):
-        """The IVF index covering a vector COLUMN: the primary
-        ``ivf_index`` when its vec_col matches, else the ``ivf_indexes``
-        registry entry."""
-        if self.ivf_index is not None and vec_col == self.ivf_index.vec_col:
-            return self.ivf_index
-        return self.ivf_indexes.get(vec_col)
+    def _sort_handles(self, vec_col: str, handles: list) -> dict[str, Any]:
+        """One column's index handles keyed by the route kind each one
+        serves. Raises ValueError on an unknown handle type, on two
+        handles of one kind, and on a handle keyed by another id column
+        than the planner's."""
+        from qdrant_spark.operators.ann import IvfIndex
+        from qdrant_spark.operators.multivec import (
+            MaxSimBq, MaxSimPq, MaxSimRoute, MaxSimSq, MaxSimTq,
+        )
+        from qdrant_spark.operators.quantize import QuantHandle, QuantIvfHandle
+        from qdrant_spark.operators.sparse import SparseIndex
 
-    def _quant_ivf_for(self, vec_col: str, qh, ivf):
-        """The composed quant x IVF handle for a column: the registered
-        entry when one was ensured/persisted, else a lazily composed (and
-        cached) join of the two registrations — so planner users who
-        registered both indexes separately still get both prunings."""
-        qih = self.quant_ivf_indexes.get(vec_col)
-        if qih is None:
-            from qdrant_spark.operators.quantize import compose_quant_ivf
+        kinds = ((IvfIndex, "ivf"), (SparseIndex, "sparse"),
+                 (QuantHandle, "quant"), (QuantIvfHandle, "quant_ivf"),
+                 (MaxSimRoute, "maxsim"),
+                 ((MaxSimSq, MaxSimBq, MaxSimPq, MaxSimTq), "maxsim_sq"))
+        out: dict[str, Any] = {}
+        for h in handles:
+            kind = next((k for t, k in kinds if isinstance(h, t)), None)
+            name = type(h).__name__
+            if kind is None:
+                raise ValueError(
+                    f"indexes[{vec_col!r}]: unsupported index handle {name}")
+            if kind in out:
+                raise ValueError(f"indexes[{vec_col!r}]: two {name} handles")
+            if kind in ("ivf", "quant", "maxsim") \
+                    and h.id_col != self.id_col:
+                raise ValueError(
+                    f"indexes[{vec_col!r}]: {name}.id_col must match the "
+                    f"planner id_col")
+            out[kind] = h
+        return out
 
-            qih = compose_quant_ivf(qh, ivf)
-            self.quant_ivf_indexes[vec_col] = qih
-        return qih
+    def _bump(self, key: str, n: int = 1) -> None:
+        """Add ``n`` to a ``last_plan_info`` counter."""
+        self.last_plan_info[key] = self.last_plan_info.get(key, 0) + n
+
+    def _hit_schema(self):
+        """(id, score) schema of a driver-side result frame."""
+        from pyspark.sql import types as T
+
+        return T.StructType([
+            T.StructField(self.id_col,
+                          self.points.schema[self.id_col].dataType),
+            T.StructField("score", T.DoubleType()),
+        ])
 
     def metric_for(self, vec_col: str | None) -> str:
         """Distance for a given vector COLUMN (not qdrant vector name):
@@ -449,80 +454,174 @@ class QueryPlanner:
         return bool((req.get("params") or {}).get("exact")
                     or req.get("exact"))
 
-    def _quant_crossover_ok(self, vec_col: str, *,
-                            batch: bool = False) -> bool:
-        """Exact-vs-quantized corpus-size dispatch for the dense quant
-        routes, mirroring the MaxSim guard: the coarse+rescore plan reads
-        4-32x fewer bytes but pays a second candidate-float scan, which
-        only wins past the page-cache scale. Below the threshold the
-        planner takes the exact scan — a declared threshold of 0 pins
-        the quantized route. ``batch=True`` (fused multi-request
-        contexts: query_batch groups and prefetch sibling fusion) uses
-        the HIGHER batch default — the fused exact matmul amortizes one
-        scan across every request, so the quant batch's crossover sits
-        far beyond the single leaf's (r12 measurements in quantize.py).
-        n_docs caches on the handle, a metadata-only parquet count."""
+    def _leaf_target(self, req: dict[str, Any]) -> Any:
+        """The ``nearest`` target with point-id references resolved: a
+        sparse ``{indices, values}`` dict, a dense vector or a
+        multivector."""
+        target = req["query"]["nearest"]
+        if isinstance(target, dict) and "id" in target:
+            from pyspark.sql import types as T
+
+            _, src_df, lookup_vc = self._node_lookup(req)
+            dt = src_df.schema[lookup_vc].dataType \
+                if lookup_vc in src_df.columns else None
+            if isinstance(dt, T.StructType) and \
+                    {"indices", "values"} <= {f.name for f in dt.fields}:
+                # id-referenced SPARSE query: resolve the stored sparse
+                # vector and continue as an explicit sparse target
+                # (VectorInputInternal::Id resolution, fetch_vectors.rs —
+                # without this the [indices, values] pair fell into the
+                # multivector branch)
+                resolved = self._resolve_vector_input(target, req)
+                return {"indices": [int(d) for d in resolved[0]],
+                        "values": [float(v) for v in resolved[1]]}
+        if isinstance(target, dict) and "indices" in target:
+            return target
+        return self._resolve_vector_input(target, req)
+
+    def _route(self, req: dict[str, Any], batch: bool = False) -> _Route:
+        """The route of a ``nearest`` leaf — the ONE decision both
+        :meth:`_leaf` and the query_batch grouper act on (the reference
+        picks each search's plan once: query_estimator + threshold
+        dispatch, then ``PlannedQuery`` runs it).
+
+        ``params.exact`` opts out of every index and
+        ``quantization.ignore`` out of the quantized ones. Each declared
+        route stands down below its corpus-size crossover
+        (:func:`_crossover_ok`). ``batch=True`` (fused multi-request
+        contexts: query_batch groups and prefetch sibling fusion) takes
+        the HIGHER dense-quant default — the fused exact matmul
+        amortizes one scan across every request, so the quant batch's
+        crossover sits far beyond the single leaf's (r12 measurements in
+        quantize.py). Leaves whose filter is pre-applied with text
+        params skip the quantized and IVF routes."""
+        from qdrant_spark.operators.multivec import MAXSIM_FULL_SCAN_THRESHOLD
         from qdrant_spark.operators.quantize import (
             QUANT_BATCH_FULL_SCAN_THRESHOLD, QUANT_FULL_SCAN_THRESHOLD,
         )
 
-        qh = self.quant_indexes.get(vec_col)
-        qih = self.quant_ivf_indexes.get(vec_col)
-        if qh is None and qih is not None:
-            qh = qih.handle
-        if qh is None:
-            return False
-        thr = qh.full_scan_threshold
-        if thr is None:
-            thr = (QUANT_BATCH_FULL_SCAN_THRESHOLD if batch
-                   else QUANT_FULL_SCAN_THRESHOLD)
-        if not thr:
-            return True
-        if qh.n_docs is None:
-            qh.n_docs = qh.codes_frame().count()
-        return qh.n_docs >= thr
+        vec_col = req.get("using", self.default_vec_col)
+        ix = self.indexes.get(vec_col, {})
+        target = self._leaf_target(req)
+        exact = self._leaf_exact(req)
+        unfiltered = req.get("filter") is None
+        pre_filtered = bool(req.get("filter")) and bool(self.text_params)
+        ignore = ((req.get("params") or {}).get("quantization")
+                  or {}).get("ignore")
+        if isinstance(target, dict):  # sparse vector
+            sp = ix.get("sparse")
+            if sp is not None and not exact:
+                return _Route("sparse_index", vec_col, (sp,), target)
+            return _Route("sparse", vec_col, (), target)
+        if target and isinstance(target[0], (list, tuple)):
+            # multivector MaxSim. Filtered requests keep the quantized
+            # route (r12): the payload filter reaches the narrow code
+            # scan as an id semi-join; the token-IVF route needs an
+            # unfiltered request
+            sqh, rt = ix.get("maxsim_sq"), ix.get("maxsim")
+            use_sq = (sqh is not None and not pre_filtered and not ignore
+                      and not exact
+                      and _crossover_ok(sqh, MAXSIM_FULL_SCAN_THRESHOLD,
+                                        sqh.points))
+            use_pruned = (rt is not None and unfiltered and not exact
+                          and _crossover_ok(rt, MAXSIM_FULL_SCAN_THRESHOLD,
+                                            rt.index.points))
+            # pruned-vs-pruned preference (r14): a route carrying the
+            # INVLIST layout beats both quantized ladders — reading the
+            # probed partitions' floats directly outran the
+            # coarse-over-codes plans at every measured size (r13
+            # verdict: invlist 0.53 s vs composed 1.83 s vs exact 0.95 s
+            # at 2M docs, recall@10 = 1.0; codes only plausibly pay in
+            # the cold-IO regime, declarable via
+            # MaxSimRoute.prefer_composed)
+            if use_sq and use_pruned and (rt.index.clustered_points is None
+                                          or rt.prefer_composed):
+                # membership degrade (r15, opt-in): when the estimated
+                # probe-union membership is ~1 the composed candidate
+                # stage prunes nothing — take the quant-only
+                # coarse+rescore instead (MaxSimRoute.degrade_membership)
+                if rt.degrade_membership is not None:
+                    from qdrant_spark.operators.multivec import (
+                        maxsim_membership_fraction,
+                    )
 
-    def _fusable_leaf(self, req: dict[str, Any]) -> tuple | None:
-        """Group key when this child is a dense-nearest leaf eligible for
-        the shared-scan batch, else None. Leaves that would route through
-        the ANN dispatcher keep their own plan (fusing them would silently
-        upgrade approximate legs to exact ones)."""
-        if req.get("prefetch"):
+                    if maxsim_membership_fraction(
+                            rt, target, metric=self.metric_for(vec_col)) \
+                            >= rt.degrade_membership:
+                        return _Route("maxsim_degraded", vec_col, (sqh,),
+                                      target)
+                return _Route("maxsim_quant_ivf", vec_col, (rt, sqh), target)
+            if use_pruned:
+                return _Route("maxsim_ivf", vec_col, (rt,), target)
+            if use_sq:
+                return _Route("maxsim_quant", vec_col, (sqh,), target)
+            return _Route("maxsim", vec_col, (), target)
+        ivf, qih = ix.get("ivf"), ix.get("quant_ivf")
+        # a composed-only registration still carries the coarse handle
+        qh = ix.get("quant", qih.handle if qih is not None else None)
+        quant_ok = (qh is not None and not ignore and not pre_filtered
+                    and not exact
+                    and _crossover_ok(qh, QUANT_BATCH_FULL_SCAN_THRESHOLD
+                                      if batch else QUANT_FULL_SCAN_THRESHOLD,
+                                      qh.codes_frame()))
+        if quant_ok and (qih is not None or ivf is not None) and unfiltered:
+            # BOTH a cluster structure and quantized codes are declared:
+            # compose them — probe clusters, score codes, exact-rescore
+            # floats (hnsw.rs quantized scorer). Filtered requests keep
+            # the IVF dispatcher below (its selectivity/ACORN logic
+            # preserves recall under filters; cluster pruning alone would
+            # not). Two separate registrations compose lazily, once.
+            if qih is None:
+                from qdrant_spark.operators.quantize import compose_quant_ivf
+
+                qih = ix["quant_ivf"] = compose_quant_ivf(qh, ivf)
+            return _Route("quant_ivf", vec_col, (qih,), target)
+        if (ivf is not None and not pre_filtered and not exact
+                and int(req.get("offset", 0)) == 0
+                and req.get("score_threshold") is None):
+            return _Route("ivf", vec_col, (ivf,), target)
+        if quant_ok and ivf is None:
+            return _Route("quant", vec_col, (qh,), target)
+        return _Route("dense", vec_col, (), target)
+
+    def _batch_route(self, req: dict[str, Any]) -> _Route | None:
+        """The route of a request a fused batch group can answer: a
+        single ``nearest`` leaf with a literal target and no shard
+        routing or text-param filter. Only exact dense legs group per
+        filter; every other kind needs an unfiltered request, and MaxSim
+        kinds a dot/cosine column."""
+        if req.get("prefetch") or req.get("shard_key") is not None:
             return None
-        if req.get("shard_key") is not None:
-            return None  # shard-routed request: scans its own partitions
         if self.text_params and req.get("filter"):
             return None  # leaf pre-applies the filter with text_params
         query = req.get("query")
         if not isinstance(query, dict) or "nearest" not in query:
             return None
-        target = query["nearest"]
-        if isinstance(target, dict) and ("indices" in target  # sparse
-                                         or "id" in target):  # id target:
-            # plan() handles its referenced-id exclusion; keep it unfused
+        if isinstance(query["nearest"], dict) and "id" in query["nearest"]:
+            return None  # plan() handles its referenced-id exclusion
+        rt = self._route(req, batch=True)
+        if rt.kind == "dense":
+            return rt
+        if rt.kind not in _BATCH_GROUPS or req.get("filter") is not None:
             return None
-        if isinstance(target, (list, tuple)) and target \
-                and isinstance(target[0], (list, tuple)):
-            return None  # multivector MaxSim leg: own Arrow scan
-        vec_col = req.get("using", self.default_vec_col)
-        if self._ivf_for(vec_col) is not None and not self._leaf_exact(req):
+        if rt.kind.startswith("maxsim") \
+                and self.metric_for(rt.vec_col) not in ("dot", "cosine"):
             return None
-        qp = (req.get("params") or {}).get("quantization") or {}
-        if (self.quant_indexes.get(vec_col) is not None
-                or self.quant_ivf_indexes.get(vec_col) is not None) \
-                and not qp.get("ignore") and not self._leaf_exact(req) \
-                and self._quant_crossover_ok(vec_col, batch=True):
-            # quant-routed leaf (plain or composed): fusing would bypass
-            # the declared coarse+rescore plan (and change VALUES for
-            # rescore=false requests, which return coarse scores). Below
-            # the corpus-size crossover the quant route stands down
-            # everywhere (single-leaf too), so the leaf IS fusable into
-            # the exact shared matmul — the r11-verdict batch fix.
+        return rt
+
+    def _fusable_leaf(self, req: dict[str, Any]) -> tuple | None:
+        """(vec_col, filter key) when this request's route is the exact
+        dense scan, so it can share one scan with its siblings, else
+        None. Index-routed leaves keep their own plan: fusing would
+        silently upgrade approximate legs to exact ones, and change
+        VALUES for rescore=false quantized requests."""
+        rt = self._batch_route(req)
+        if rt is None or rt.kind != "dense":
             return None
         import json
 
-        flt_key = json.dumps(req.get("filter"), sort_keys=True, default=str)
-        return (vec_col, flt_key)
+        return (rt.vec_col,
+                json.dumps(req.get("filter"), sort_keys=True, default=str))
 
     def _fusion_worthwhile(self) -> bool:
         """Size-dispatch: fusing only pays once one saved corpus scan
@@ -559,8 +658,6 @@ class QueryPlanner:
 
     def _fused_leaves(self, reqs: list[dict], vec_col: str,
                       as_rows: bool = False) -> list:
-        from pyspark.sql import types as T
-
         from qdrant_spark.filters import apply_filter
         from qdrant_spark.functions.distances import larger_is_better
         from qdrant_spark.operators.knn import knn_batch
@@ -622,8 +719,7 @@ class QueryPlanner:
             # deliberately NOT registered in _fused_hits_by_df).
             from pyspark.sql import Window
 
-            self.last_plan_info["fused_df_fallback"] = \
-                self.last_plan_info.get("fused_df_fallback", 0) + 1
+            self._bump("fused_df_fallback")
             res = res.persist()
             self._fused_persisted.append(res)
             order = ((F.col("score").desc() if lb else F.col("score").asc()),
@@ -645,11 +741,7 @@ class QueryPlanner:
                 out.append(leg)
             return out
         rows = res.collect()  # bounded: <= legs * max(offset+limit)
-        id_type = self.points.schema[self.id_col].dataType
-        schema = T.StructType([
-            T.StructField(self.id_col, id_type),
-            T.StructField("score", T.DoubleType()),
-        ])
+        schema = self._hit_schema()
         out = []
         for i, r in enumerate(reqs):
             hits = sorted(
@@ -847,58 +939,39 @@ class QueryPlanner:
                         else avg_pos + avg_pos - neg.mean(axis=0)
                     query = {"nearest": [float(x) for x in merged]}
         if "nearest" in query:
-            target = query["nearest"]
-            if isinstance(target, dict) and "id" in target:
-                from pyspark.sql import types as T
+            kind, _, handles, target = self._route(dict(req, query=query))
+            if kind == "sparse_index":
+                # registered inverted index: posting lists of the query's
+                # dims only (dim-bucket PartitionFilters on a persisted
+                # index) instead of re-exploding the corpus's sparse
+                # columns (lib/sparse/src/index/search_context.rs:37-91)
+                from qdrant_spark.filters import apply_filter as _af
+                from qdrant_spark.operators.sparse import sparse_knn_index
 
-                _, src_df, lookup_vc = self._node_lookup(req)
-                dt = src_df.schema[lookup_vc].dataType \
-                    if lookup_vc in src_df.columns else None
-                if isinstance(dt, T.StructType) and \
-                        {"indices", "values"} <= {f.name for f in dt.fields}:
-                    # id-referenced SPARSE query: resolve the stored
-                    # sparse vector and continue as an explicit sparse
-                    # target (VectorInputInternal::Id resolution,
-                    # fetch_vectors.rs — without this the [indices,
-                    # values] pair fell into the multivector branch)
-                    resolved = self._resolve_vector_input(target, req)
-                    target = {"indices": [int(d) for d in resolved[0]],
-                              "values": [float(v) for v in resolved[1]]}
-            if isinstance(target, dict) and "indices" in target:  # sparse vector
-                sp_idx = self.sparse_indexes.get(vec_col)
-                if sp_idx is not None and not self._leaf_exact(req):
-                    # registered inverted index: posting lists of the
-                    # query's dims only (dim-bucket PartitionFilters on a
-                    # persisted index) instead of re-exploding the
-                    # corpus's sparse columns — the reference always
-                    # searches sparse through its inverted index
-                    # (lib/sparse/src/index/search_context.rs:37-91)
-                    from qdrant_spark.filters import apply_filter as _af
-                    from qdrant_spark.operators.sparse import sparse_knn_index
-
-                    cand = None
-                    if flt is not None or pre_filtered:
-                        src = _af(pts, flt, id_col=self.id_col) \
-                            if flt is not None else pts
-                        cand = src.select(
-                            F.col(self.id_col).alias(sp_idx.id_col))
-                    self.last_plan_info["sparse_index_leaves"] = \
-                        self.last_plan_info.get("sparse_index_leaves", 0) + 1
-                    out = sparse_knn_index(
-                        sp_idx, target["indices"], target["values"],
-                        k=limit + offset, cand=cand,
-                    ).select(F.col(sp_idx.id_col).alias(self.id_col),
-                             "score")
-                    if threshold is not None:
-                        # score_threshold applies to sparse search like any
-                        # other, with the reference's STRICT direction-aware
-                        # check (check_threshold, types.rs:364-369; sparse is
-                        # always larger-better dot). Filtering AFTER the
-                        # top-(limit+offset) cut is value-identical to
-                        # filtering before it because the cut keeps the
-                        # highest scores.
-                        out = out.filter(F.col("score") > float(threshold))
-                    return out.offset(offset) if offset else out
+                (sp_idx,) = handles
+                cand = None
+                if flt is not None or pre_filtered:
+                    src = _af(pts, flt, id_col=self.id_col) \
+                        if flt is not None else pts
+                    cand = src.select(
+                        F.col(self.id_col).alias(sp_idx.id_col))
+                self._bump("sparse_index_leaves")
+                out = sparse_knn_index(
+                    sp_idx, target["indices"], target["values"],
+                    k=limit + offset, cand=cand,
+                ).select(F.col(sp_idx.id_col).alias(self.id_col),
+                         "score")
+                if threshold is not None:
+                    # score_threshold applies to sparse search like any
+                    # other, with the reference's STRICT direction-aware
+                    # check (check_threshold, types.rs:364-369; sparse is
+                    # always larger-better dot). Filtering AFTER the
+                    # top-(limit+offset) cut is value-identical to
+                    # filtering before it because the cut keeps the
+                    # highest scores.
+                    out = out.filter(F.col("score") > float(threshold))
+                return out.offset(offset) if offset else out
+            if kind == "sparse":
                 from qdrant_spark.operators.sparse import sparse_knn
 
                 skw = {}
@@ -915,8 +988,7 @@ class QueryPlanner:
                 if threshold is not None:
                     out = out.filter(F.col("score") > float(threshold))
                 return out.offset(offset) if offset else out
-            target = self._resolve_vector_input(target, req)
-            if target and isinstance(target[0], (list, tuple)):
+            if kind.startswith("maxsim"):
                 # multivector query -> MaxSim over an array<array<float>>
                 # column (multivector config, types.rs MultiVectorConfig;
                 # scoring operators/multivec.py). dot/cosine only, like
@@ -924,155 +996,53 @@ class QueryPlanner:
                 from pyspark.sql.window import Window
 
                 from qdrant_spark.filters import apply_filter as _af
-                from qdrant_spark.operators.multivec import (
-                    maxsim_knn, maxsim_knn_ivf,
-                )
+                from qdrant_spark.operators import multivec as MV
 
-                mvq = (req.get("params") or {}).get("quantization") or {}
-                sqh = self.maxsim_sq_indexes.get(vec_col)
-                # filtered requests keep the quantized route (r12): the
-                # payload filter evaluates on the float frame and reaches
-                # the narrow code scan as an id semi-join, the dense
-                # _coarse_src posture
-                use_sq = (sqh is not None
-                          and not pre_filtered and not mvq.get("ignore")
-                          and not self._leaf_exact(req))
-                if use_sq:
-                    # same exact-vs-routed crossover as the token-IVF
-                    # route: the rescore's second (float-token) scan
-                    # only pays once the corpus outgrows page cache
-                    from qdrant_spark.operators.multivec import (
-                        MAXSIM_FULL_SCAN_THRESHOLD,
-                    )
-
-                    sq_thr = (MAXSIM_FULL_SCAN_THRESHOLD
-                              if sqh.full_scan_threshold is None
-                              else sqh.full_scan_threshold)
-                    if sq_thr:
-                        if sqh.n_docs is None:
-                            sqh.n_docs = sqh.points.count()
-                        use_sq = sqh.n_docs >= sq_thr
-                route = self.maxsim_indexes.get(vec_col)
-                use_pruned = (route is not None
-                              and flt is None and not pre_filtered
-                              and not self._leaf_exact(req))
-                if use_pruned:
-                    # exact-vs-pruned crossover (the MaxSim analogue of
-                    # the dense full_scan_threshold dispatch): below the
-                    # calibrated doc count the exact one-pass BLAS scan
-                    # beats the candidate stage it would avoid — the
-                    # bench measured pruned 3.4x SLOWER at 512k docs
-                    # (multivec.MAXSIM_FULL_SCAN_THRESHOLD)
-                    from qdrant_spark.operators.multivec import (
-                        MAXSIM_FULL_SCAN_THRESHOLD,
-                    )
-
-                    ms_thr = (MAXSIM_FULL_SCAN_THRESHOLD
-                              if route.full_scan_threshold is None
-                              else route.full_scan_threshold)
-                    if ms_thr:
-                        if route.n_docs is None:
-                            route.n_docs = route.index.points.count()
-                        use_pruned = route.n_docs >= ms_thr
-                # pruned-vs-pruned preference (r14): a route carrying
-                # the INVLIST layout beats both quantized ladders —
-                # reading the probed partitions' floats directly
-                # outran the coarse-over-codes plans at every measured
-                # size (r13 verdict: invlist 0.53 s vs composed 1.83 s
-                # vs exact 0.95 s at 2M docs, recall@10 = 1.0; codes
-                # only plausibly pay in the cold-IO regime, declarable
-                # via MaxSimRoute.prefer_composed)
-                invlist_pref = (use_pruned
-                                and route.index.clustered_points
-                                is not None
-                                and not route.prefer_composed)
-                # membership degrade (r15, opt-in): when the estimated
-                # probe-union membership is ~1 the composed candidate
-                # stage prunes nothing — take the quant-only
-                # coarse+rescore leaf instead (see
-                # MaxSimRoute.degrade_membership)
-                degraded = False
-                if (use_sq and use_pruned and flt is None
-                        and not invlist_pref
-                        and route.degrade_membership is not None):
-                    from qdrant_spark.operators.multivec import (
-                        maxsim_membership_fraction,
-                    )
-
-                    degraded = (maxsim_membership_fraction(
-                        route, target, metric=metric)
-                        >= route.degrade_membership)
-                    if degraded:
-                        self.last_plan_info["maxsim_degraded_leaves"] = \
-                            self.last_plan_info.get(
-                                "maxsim_degraded_leaves", 0) + 1
-                if use_sq and use_pruned and flt is None \
-                        and not invlist_pref and not degraded:
+                if kind == "maxsim_quant_ivf":
                     # BOTH token clusters and token codes are declared:
-                    # compose them — probe clusters for candidates,
-                    # coarse-MaxSim the candidates' token CODES, exact-
-                    # rescore the survivors' float tokens (r12; the
-                    # multivector twin of the dense quant x IVF leaf and
-                    # the reference's HNSW-over-quantized-multivector
-                    # posture, hnsw.rs quantized scorer +
-                    # quantized_vectors.rs; PLAID's full ladder).
-                    # EXCEPT when the route carries the invlist layout:
-                    # reading the probed partitions' floats directly
-                    # beats the coarse-over-codes ladder at every
-                    # measured size (r13 verdict: 0.53 s invlist vs
-                    # 1.83 s composed vs 0.95 s exact at 2M docs) — the
-                    # invlist route below wins unless
-                    # MaxSimRoute.prefer_composed declares the cold-IO
-                    # regime where code width could pay.
-                    from qdrant_spark.operators.multivec import (
-                        maxsim_knn_quant_ivf,
-                    )
-
-                    self.last_plan_info["maxsim_quant_ivf_leaves"] = \
-                        self.last_plan_info.get(
-                            "maxsim_quant_ivf_leaves", 0) + 1
-                    out = maxsim_knn_quant_ivf(
-                        route.index, sqh, target, k=limit + offset,
-                        nprobe=route.nprobe, metric=metric,
-                        candidates=route.candidates,
-                        oversampling=float(mvq.get("oversampling")
-                                           or sqh.oversampling),
-                        rescore=mvq.get("rescore") is not False)
-                elif use_sq and not invlist_pref:
+                    # probe clusters for candidates, coarse-MaxSim the
+                    # candidates' token CODES, exact-rescore the
+                    # survivors' float tokens (r12; the multivector twin
+                    # of the dense quant x IVF leaf, PLAID's full ladder)
+                    rt, sqh = handles
+                    rescore, over = _quant_params(req, sqh.oversampling)
+                    self._bump("maxsim_quant_ivf_leaves")
+                    out = MV.maxsim_knn_quant_ivf(
+                        rt.index, sqh, target, k=limit + offset,
+                        nprobe=rt.nprobe, metric=metric,
+                        candidates=rt.candidates,
+                        oversampling=over, rescore=rescore)
+                elif kind in ("maxsim_quant", "maxsim_degraded"):
                     # declared multivector quantization: the coarse
                     # MaxSim scan reads the declared kind's token codes
                     # — int8 (scalar), packed bits (binary), codebook
                     # indices (product) or rotated Lloyd-Max codes
                     # (turbo) — and the exact rescore touches only the
                     # oversampled candidates' float tokens
-                    # (quantized_vectors.rs is vector-kind-agnostic;
-                    # SearchParams.quantization semantics as for dense)
-                    from qdrant_spark.operators.multivec import (
-                        maxsim_knn_quant,
-                    )
-
-                    self.last_plan_info["maxsim_sq_leaves"] = \
-                        self.last_plan_info.get("maxsim_sq_leaves", 0) + 1
-                    out = maxsim_knn_quant(
-                        sqh, target, k=limit + offset, metric=metric,
-                        oversampling=float(mvq.get("oversampling")
-                                           or sqh.oversampling),
-                        rescore=mvq.get("rescore") is not False,
+                    # (quantized_vectors.rs is vector-kind-agnostic)
+                    (sqh,) = handles
+                    rescore, over = _quant_params(req, sqh.oversampling)
+                    if kind == "maxsim_degraded":
+                        self._bump("maxsim_degraded_leaves")
+                    self._bump("maxsim_sq_leaves")
+                    out = MV.maxsim_knn_quant(
+                        sqh, target, k=limit + offset,
+                        metric=metric, oversampling=over, rescore=rescore,
                         flt=flt)
-                elif use_pruned:
+                elif kind == "maxsim_ivf":
                     # registered token-level coarse index: probe per
                     # query token, exact MaxSim over candidates only
-                    self.last_plan_info["maxsim_index_leaves"] = \
-                        self.last_plan_info.get("maxsim_index_leaves", 0) + 1
-                    out = maxsim_knn_ivf(
-                        route.index, target, k=limit + offset,
-                        nprobe=route.nprobe, metric=metric,
-                        candidates=route.candidates)
+                    (rt,) = handles
+                    self._bump("maxsim_index_leaves")
+                    out = MV.maxsim_knn_ivf(
+                        rt.index, target, k=limit + offset,
+                        nprobe=rt.nprobe, metric=metric,
+                        candidates=rt.candidates)
                 else:
                     src = _af(pts, flt, id_col=self.id_col) if flt else pts
-                    out = maxsim_knn(src, target, k=limit + offset,
-                                     metric=metric, mv_col=vec_col,
-                                     id_col=self.id_col)
+                    out = MV.maxsim_knn(src, target, k=limit + offset,
+                                        metric=metric, mv_col=vec_col,
+                                        id_col=self.id_col)
                 if threshold is not None:
                     # strict check like dense knn (check_threshold,
                     # types.rs:364-369; maxsim is larger-better dot/cosine)
@@ -1083,99 +1053,60 @@ class QueryPlanner:
                     out = (out.withColumn("__rn", F.row_number().over(w))
                            .filter(F.col("__rn") > offset).drop("__rn"))
                 return out.select(self.id_col, "score")
-            ivf = self._ivf_for(vec_col)
-            qih_reg = self.quant_ivf_indexes.get(vec_col)
-            qh = self.quant_indexes.get(vec_col)
-            if qh is None and qih_reg is not None:
-                # composed-only registration still carries the coarse
-                # handle — ignore/exact fallbacks work the same
-                qh = qih_reg.handle
-            qp = (req.get("params") or {}).get("quantization") or {}
-            quant_ok = (qh is not None and not qp.get("ignore")
-                        and not pre_filtered and not self._leaf_exact(req)
-                        and self._quant_crossover_ok(vec_col))
-            if quant_ok and (qih_reg is not None or ivf is not None) \
-                    and flt is None:
-                # BOTH a cluster structure and quantized codes are
-                # declared for this column: compose them — probe
-                # clusters, score codes, exact-rescore floats — the
-                # reference's quantized-HNSW posture (hnsw.rs quantized
-                # scorer; hnsw_quantized_search_test.rs). Previously the
-                # IVF-wins rule silently dropped the code-width pruning.
-                # Filtered requests keep the IVF dispatcher below (its
-                # selectivity/ACORN logic preserves recall under
-                # filters; cluster pruning alone would not).
-                from qdrant_spark.operators.knn import _threshold_cond
-                from qdrant_spark.operators.quantize import quant_ivf_search
-
-                qih = (qih_reg if qih_reg is not None
-                       else self._quant_ivf_for(vec_col, qh, ivf))
-                self.last_plan_info["quant_ivf_leaves"] = \
-                    self.last_plan_info.get("quant_ivf_leaves", 0) + 1
-                out = quant_ivf_search(
-                    qih, target, k=limit + offset, metric=metric,
-                    rescore=qp.get("rescore"),
-                    oversampling=qp.get("oversampling"),
-                ).select(F.col(qih.id_col).alias(self.id_col), "score")
-                if threshold is not None:
-                    cond_metric = ("dot" if qp.get("rescore") is False
-                                   and qh.kind == "binary" else metric)
-                    out = out.filter(
-                        _threshold_cond(cond_metric, float(threshold)))
-                return out.offset(offset) if offset else out
-            if (ivf is not None and offset == 0
-                    and threshold is None and not pre_filtered
-                    and not self._leaf_exact(req)):
+            if kind == "ivf":
                 from qdrant_spark.operators.dispatch import (
                     FULL_SCAN_THRESHOLD, auto_search,
                 )
 
-                primary = ivf is self.ivf_index
+                (ivf,) = handles
                 if vec_col not in self._index_totals:
                     self._index_totals[vec_col] = ivf.assigned.count()
                 return auto_search(
-                    ivf, target, k=limit, flt=flt,
-                    metric=metric,
-                    stats=self.index_stats if primary else {},
+                    ivf, target, k=limit, flt=flt, metric=metric,
                     total=self._index_totals[vec_col],
                     full_scan_threshold=(self.full_scan_threshold
-                                         or FULL_SCAN_THRESHOLD),
-                    cluster_stats=(self.cluster_stats if primary
-                                   else None),
-                )
-            if quant_ok and ivf is None:
+                                         or FULL_SCAN_THRESHOLD))
+            if kind in ("quant_ivf", "quant"):
                 # declared quantization: coarse scan over the code column
-                # + oversampled exact rescore (QuantizationSearchParams
-                # semantics, types.rs:573-628). `ignore: true` and
-                # params.exact fall through to the exact scan below, like
-                # the reference's raw-scorer fallback.
+                # (cluster-pruned when composed) + oversampled exact
+                # rescore (QuantizationSearchParams semantics,
+                # types.rs:573-628). `ignore: true` and params.exact
+                # route to the exact scan, like the reference's
+                # raw-scorer fallback.
                 from qdrant_spark.operators.knn import _threshold_cond
-                from qdrant_spark.operators.quantize import quant_search
+                from qdrant_spark.operators.quantize import (
+                    quant_ivf_search, quant_search,
+                )
 
-                self.last_plan_info["quant_leaves"] = \
-                    self.last_plan_info.get("quant_leaves", 0) + 1
-                out = quant_search(
-                    qh, target, k=limit + offset, metric=metric, flt=flt,
-                    rescore=qp.get("rescore"),
-                    oversampling=qp.get("oversampling"),
-                ).select(F.col(qh.id_col).alias(self.id_col), "score")
+                qh = handles[0].handle if kind == "quant_ivf" else handles[0]
+                rescore, over = _quant_params(req, qh.oversampling)
+                self._bump("quant_ivf_leaves" if kind == "quant_ivf"
+                           else "quant_leaves")
+                if kind == "quant_ivf":
+                    out = quant_ivf_search(
+                        handles[0], target, k=limit + offset, metric=metric,
+                        rescore=rescore, oversampling=over)
+                else:
+                    out = quant_search(
+                        qh, target, k=limit + offset, metric=metric,
+                        flt=flt, rescore=rescore, oversampling=over)
+                out = out.select(F.col(qh.id_col).alias(self.id_col),
+                                 "score")
                 if threshold is not None:
                     # with rescore=false this thresholds the returned
                     # QUANTIZED scores — the reference accepts the
                     # combination and applies check_threshold to the
-                    # scores it returns (types.rs:364-369; r10 ADVICE —
-                    # previously raised). Binary coarse scores are the
-                    # ±1-dot estimate (larger-better whatever the
-                    # metric), so they threshold in that direction.
-                    cond_metric = ("dot" if qp.get("rescore") is False
-                                   and qh.kind == "binary" else metric)
-                    out = out.filter(
-                        _threshold_cond(cond_metric, float(threshold)))
+                    # scores it returns (types.rs:364-369). Binary coarse
+                    # scores are the ±1-dot estimate (larger-better
+                    # whatever the metric), so they threshold in that
+                    # direction.
+                    out = out.filter(_threshold_cond(
+                        "dot" if not rescore and qh.kind == "binary"
+                        else metric, float(threshold)))
                 return out.offset(offset) if offset else out
-            out = knn(pts, target, metric=metric,
-                      score_threshold=threshold, offset=offset,
-                      select=[self.id_col, "score"], **kw)
-            return out
+            return knn(pts, target, metric=metric,
+                       score_threshold=threshold, offset=offset,
+                       select=[self.id_col, "score"], **kw)
         rv = lambda t: self._resolve_vector_input(t, req)  # noqa: E731
         if "recommend" in query:
             r = query["recommend"]
@@ -1255,15 +1186,8 @@ class QueryPlanner:
                 self.last_plan_info["driver_fused_root"] = 1
                 fused = {"rrf": rrf_hits, "dbsf": dbsf_hits}[query["fusion"]](
                     hits, limit=limit)
-                from pyspark.sql import types as T
-
-                id_type = self.points.schema[self.id_col].dataType
-                schema = T.StructType([
-                    T.StructField(self.id_col, id_type),
-                    T.StructField("score", T.DoubleType()),
-                ])
                 return _local_result_df(
-                    self.points.sparkSession, fused, schema)
+                    self.points.sparkSession, fused, self._hit_schema())
             if self.driver_lazy_fusion:
                 # r14: lazy legs are bounded top-k frames too — collect
                 # them (jobs overlapped from a small thread pool, guide
@@ -1293,19 +1217,11 @@ class QueryPlanner:
                                              enumerate(children)))
                 else:
                     hits = [_leg_hits((0, children[0]))]
-                self.last_plan_info["driver_lazy_fusion"] = \
-                    self.last_plan_info.get("driver_lazy_fusion", 0) + 1
+                self._bump("driver_lazy_fusion")
                 fused = {"rrf": rrf_hits, "dbsf": dbsf_hits}[
                     query["fusion"]](hits, limit=limit)
-                from pyspark.sql import types as T
-
-                id_type = self.points.schema[self.id_col].dataType
-                schema = T.StructType([
-                    T.StructField(self.id_col, id_type),
-                    T.StructField("score", T.DoubleType()),
-                ])
                 return _local_result_df(
-                    self.points.sparkSession, fused, schema)
+                    self.points.sparkSession, fused, self._hit_schema())
             fn = {"rrf": rrf, "dbsf": dbsf}[query["fusion"]]
             return fn(children, id_col=self.id_col, limit=limit)
         # merge children candidate ids (dedup), then re-score
@@ -1419,160 +1335,97 @@ def _release_one_shot(planner: "QueryPlanner", out: DataFrame) -> DataFrame:
     return out
 
 
-def _batch_sparse_indexed(planner: "QueryPlanner",
-                          requests: list[dict[str, Any]],
-                          outs: list) -> None:
-    """Batch-side sparse grouping: unfiltered single-leaf sparse nearest
-    requests whose vector column has a registered inverted index are
-    answered by ONE :func:`~qdrant_spark.operators.sparse.
-    sparse_knn_index_batch` scan over the union of their dim buckets (the
-    reference walks its posting lists once for the whole batch), then
-    split into per-request local frames — value-identical per request to
-    planning each alone (offset and score_threshold are applied per
-    request after the shared scan, mirroring the single-request leaf's
-    k=limit+offset / threshold-filter / offset order). Requests with
-    filters / exact / shard routing keep their own plan."""
-    sparse_groups: dict[str, list[int]] = {}
-    for i, req in enumerate(requests):
-        if outs[i] is not None or req.get("prefetch") \
-                or req.get("shard_key") is not None \
-                or req.get("filter") is not None:
-            continue
-        q = req.get("query")
-        if not (isinstance(q, dict) and isinstance(q.get("nearest"), dict)
-                and "indices" in q["nearest"]):
-            continue
-        vc = req.get("using", planner.default_vec_col)
-        if planner.sparse_indexes.get(vc) is None \
-                or planner._leaf_exact(req):
-            continue
-        sparse_groups.setdefault(vc, []).append(i)
-    from pyspark.sql import types as T
-
-    for vc, idxs in sparse_groups.items():
-        if len(idxs) < 2:
-            continue
-        limits = {i: int(requests[i].get("limit", DEFAULT_LIMIT))
-                  for i in idxs}
-        offsets = {i: int(requests[i].get("offset", 0)) for i in idxs}
-        ks = {i: limits[i] + offsets[i] for i in idxs}
-        if len(idxs) * max(ks.values()) > planner.fused_collect_max:
-            continue  # keep per-request plans; nothing funnels the driver
-        from qdrant_spark.operators.sparse import sparse_knn_index_batch
-
-        idx = planner.sparse_indexes[vc]
-        qs = [(i, [int(d) for d in requests[i]["query"]["nearest"]["indices"]],
-               [float(v) for v in requests[i]["query"]["nearest"]["values"]])
-              for i in idxs]
-        rows = sparse_knn_index_batch(
-            idx, qs, k=max(ks.values())).collect()
-        id_type = planner.points.schema[planner.id_col].dataType
-        schema = T.StructType([
-            T.StructField(planner.id_col, id_type),
-            T.StructField("score", T.DoubleType()),
-        ])
-        spark = planner.points.sparkSession
-        for i in idxs:
-            thr = requests[i].get("score_threshold")
-            hits = sorted(
-                ((r[idx.id_col], float(r["score"]))
-                 for r in rows if r["qid"] == i
-                 and (thr is None or float(r["score"]) > float(thr))),
-                key=lambda h: (-h[1], h[0]),
-            )[offsets[i]: offsets[i] + limits[i]]
-            outs[i] = _local_result_df(spark, hits, schema)
+def _leg_k(req: dict[str, Any]) -> int:
+    """A leaf's top-k depth, limit + offset."""
+    return int(req.get("limit", DEFAULT_LIMIT)) + int(req.get("offset", 0))
 
 
-def _batch_maxsim_quant(planner: "QueryPlanner",
-                        requests: list[dict[str, Any]],
-                        outs: list) -> None:
-    """Batched quantized-MULTIVECTOR grouping (late r11): unfiltered
-    single-leaf MaxSim requests on a column with quantized token storage
-    are answered by ONE coarse scan over the codes (all query
-    multivectors concatenated into one token matrix,
-    multivec.maxsim_quant_coarse_batch) plus ONE pair-scored exact
-    MaxSim rescore over the union of candidates — value-identical per
-    request to planning each alone. The same exact-vs-quantized
-    crossover as the single-request leaf applies to the whole group."""
-    import numpy as np
+def _best_first(hits: dict[int, list]) -> dict[int, list]:
+    """Each request's (id, score) hits sorted score desc, id asc —
+    collect order is not the window order."""
+    return {i: sorted(h, key=lambda x: (-x[1], x[0])) for i, h in hits.items()}
 
-    from pyspark.sql import types as T
 
-    from qdrant_spark.operators.multivec import (
-        MAXSIM_FULL_SCAN_THRESHOLD, maxsim_pair_topk,
-        maxsim_quant_coarse_batch,
-    )
+def _emit_legs(planner: "QueryPlanner", requests: list[dict[str, Any]],
+               hits: dict[int, list], outs: list,
+               larger: dict[int, bool] | None = None) -> None:
+    """Per-request finish of a fused batch group, value-identical to the
+    single-request leaf's post-processing: cut each request's best-first
+    hits to k = limit+offset, apply score_threshold with the reference's
+    strict check (check_threshold, types.rs:364-369) in the direction of
+    the returned scores (``larger[i]``; default larger-better, as for
+    sparse dot and MaxSim), then slice offset/limit into a local frame."""
+    spark = planner.points.sparkSession
+    schema = planner._hit_schema()
+    for i, h in hits.items():
+        req = requests[i]
+        off = int(req.get("offset", 0))
+        lim = int(req.get("limit", DEFAULT_LIMIT))
+        h = h[:off + lim]
+        t = req.get("score_threshold")
+        if t is not None:
+            lg = True if larger is None else larger[i]
+            h = [x for x in h if (x[1] > float(t) if lg else x[1] < float(t))]
+        outs[i] = _local_result_df(spark, h[off:off + lim], schema)
 
-    groups: dict[str, list[int]] = {}
-    for i, req in enumerate(requests):
-        if outs[i] is not None or req.get("prefetch") \
-                or req.get("shard_key") is not None \
-                or req.get("filter") is not None:
-            continue
-        q = req.get("query")
-        if not (isinstance(q, dict) and isinstance(q.get("nearest"),
-                                                   (list, tuple))):
-            continue
-        t = q["nearest"]
-        if not (t and isinstance(t[0], (list, tuple))):
-            continue  # dense / sparse keep their own groups
-        vc = req.get("using", planner.default_vec_col)
-        if planner.maxsim_sq_indexes.get(vc) is None:
-            continue
-        if planner.metric_for(vc) not in ("dot", "cosine"):
-            continue
-        qp = (req.get("params") or {}).get("quantization") or {}
-        if qp.get("ignore") or planner._leaf_exact(req):
-            continue
-        groups.setdefault(vc, []).append(i)
 
-    for vc, idxs in groups.items():
-        if len(idxs) < 2:
-            continue
-        sqh = planner.maxsim_sq_indexes[vc]
-        thr = (MAXSIM_FULL_SCAN_THRESHOLD
-               if sqh.full_scan_threshold is None
-               else sqh.full_scan_threshold)
-        if thr:
-            if sqh.n_docs is None:
-                sqh.n_docs = sqh.points.count()
-            if sqh.n_docs < thr:
-                continue  # per-request plans take the exact scan
-        route = planner.maxsim_indexes.get(vc)
-        if route is not None:
-            # a registered token-IVF route above its crossover owns the
-            # single-request plan as the COMPOSED leaf (r12) — keep the
-            # batch value-identical by letting those requests plan
-            # per-request (a fused composed multivector batch would need
-            # a per-query candidate mask, like _batch_quant_ivf_indexed)
-            r_thr = (MAXSIM_FULL_SCAN_THRESHOLD
-                     if route.full_scan_threshold is None
-                     else route.full_scan_threshold)
-            if not r_thr:
-                continue
-            if route.n_docs is None:
-                route.n_docs = route.index.points.count()
-            if route.n_docs >= r_thr:
-                continue
-        metric = planner.metric_for(vc)
-        ks, cs, rescores = {}, {}, {}
-        for i in idxs:
-            req = requests[i]
-            qp = (req.get("params") or {}).get("quantization") or {}
-            ks[i] = int(req.get("limit", DEFAULT_LIMIT)) \
-                + int(req.get("offset", 0))
-            over = float(qp.get("oversampling") or sqh.oversampling)
-            cs[i] = max(ks[i], int(np.ceil(ks[i] * over)))
-            rescores[i] = qp.get("rescore") is not False
-        if len(idxs) * max(cs.values()) > planner.fused_collect_max:
-            continue
-        queries = [requests[i]["query"]["nearest"] for i in idxs]
-        coarse = maxsim_quant_coarse_batch(
-            sqh, queries, max(cs.values()), metric=metric).collect()
-        planner.last_plan_info["maxsim_quant_batch_groups"] = \
-            planner.last_plan_info.get("maxsim_quant_batch_groups", 0) + 1
-        _finish_maxsim_group(planner, requests, idxs, outs, sqh,
-                             metric, ks, cs, rescores, queries, coarse)
+def _fuse_dense(planner: "QueryPlanner", requests: list[dict[str, Any]],
+                idxs: list[int], vc: str, handles: tuple,
+                outs: list) -> bool:
+    """Exact dense legs sharing (vector column, filter): ONE knn_batch
+    corpus scan (the reference's batch dispatch special-cases exactly
+    this, dispatch.rs batch path / the PlannedQuery leaf merge)."""
+    legs = planner._fused_leaves([requests[i] for i in idxs], vc,
+                                 as_rows=True)
+    for i, leg in zip(idxs, legs):
+        outs[i] = leg
+    return True
+
+
+def _fuse_sparse_index(planner: "QueryPlanner",
+                       requests: list[dict[str, Any]], idxs: list[int],
+                       vc: str, handles: tuple, outs: list) -> bool:
+    """Sparse legs on an indexed column: ONE :func:`~qdrant_spark.
+    operators.sparse.sparse_knn_index_batch` scan over the union of their
+    dim buckets (the reference walks its posting lists once for the whole
+    batch)."""
+    from qdrant_spark.operators.sparse import sparse_knn_index_batch
+
+    (idx,) = handles
+    k = max(_leg_k(requests[i]) for i in idxs)
+    if len(idxs) * k > planner.fused_collect_max:
+        return False  # keep per-request plans; nothing funnels the driver
+    qs = [(i, [int(d) for d in requests[i]["query"]["nearest"]["indices"]],
+           [float(v) for v in requests[i]["query"]["nearest"]["values"]])
+          for i in idxs]
+    hits: dict[int, list] = {i: [] for i in idxs}
+    for r in sparse_knn_index_batch(idx, qs, k=k).collect():
+        hits[r["qid"]].append((r[idx.id_col], float(r["score"])))
+    _emit_legs(planner, requests, _best_first(hits), outs)
+    return True
+
+
+def _fuse_maxsim_codes(planner: "QueryPlanner",
+                        requests: list[dict[str, Any]], idxs: list[int],
+                        vc: str, handles: tuple, outs: list) -> bool:
+    """Quantized-MULTIVECTOR legs (late r11), and composed legs the
+    membership degrade sent to the quant-only plan (r15): ONE coarse scan
+    over the token codes (all query multivectors concatenated into one
+    token matrix, multivec.maxsim_quant_coarse_batch) plus ONE
+    pair-scored exact MaxSim rescore over the union of candidates."""
+    from qdrant_spark.operators.multivec import maxsim_quant_coarse_batch
+
+    (sqh,) = handles
+    ks, cs, rescores = _quant_widths(requests, idxs, sqh)
+    if len(idxs) * max(cs.values()) > planner.fused_collect_max:
+        return False
+    metric = planner.metric_for(vc)
+    queries = [requests[i]["query"]["nearest"] for i in idxs]
+    coarse = maxsim_quant_coarse_batch(
+        sqh, queries, max(cs.values()), metric=metric).collect()
+    _finish_maxsim_group(planner, requests, idxs, outs, sqh, metric, ks, cs,
+                         rescores, queries, coarse)
+    return True
 
 
 def _finish_maxsim_group(planner, requests, idxs, outs, sqh, metric,
@@ -1580,8 +1433,7 @@ def _finish_maxsim_group(planner, requests, idxs, outs, sqh, metric,
     """Shared tail of the batched quantized / composed MaxSim groups:
     bucket the collected coarse rows per request, exact-rescore the
     rescore=True requests' survivors over ONE float-token pair scan, and
-    emit per-request local results with threshold/offset/limit applied
-    — value-identical per request to planning each alone."""
+    finish each request (:func:`_emit_legs`)."""
     from pyspark.sql import types as T
 
     from qdrant_spark.operators.multivec import maxsim_pair_topk
@@ -1591,21 +1443,14 @@ def _finish_maxsim_group(planner, requests, idxs, outs, sqh, metric,
         gi = idxs[r["__qid"]]
         if r["rank"] <= cs[gi]:
             by_req[gi].append((r[sqh.id_col], float(r["score"])))
-    for i in idxs:  # collect order is not the window order
-        by_req[i].sort(key=lambda h: (-h[1], h[0]))
-
-    spark = planner.points.sparkSession
-    id_type = planner.points.schema[planner.id_col].dataType
-    schema = T.StructType([
-        T.StructField(planner.id_col, id_type),
-        T.StructField("score", T.DoubleType()),
-    ])
+    by_req = _best_first(by_req)
     need_rescore = [i for i in idxs if rescores[i]]
     if need_rescore:
         from qdrant_spark.session import local_df
 
+        id_type = planner.points.schema[planner.id_col].dataType
         pairs = local_df(
-            spark,
+            planner.points.sparkSession,
             [(int(idxs.index(i)), h[0]) for i in need_rescore
              for h in by_req[i]],
             T.StructType([T.StructField("__qid", T.LongType()),
@@ -1619,268 +1464,72 @@ def _finish_maxsim_group(planner, requests, idxs, outs, sqh, metric,
             gi = idxs[r["__qid"]]
             if gi in re_by:
                 re_by[gi].append((r[sqh.id_col], float(r["score"])))
-        for i in need_rescore:
-            by_req[i] = sorted(re_by[i], key=lambda h: (-h[1], h[0]))
-
-    for i in idxs:
-        req = requests[i]
-        hits = by_req[i][:ks[i]]
-        t = req.get("score_threshold")
-        if t is not None:
-            # maxsim is larger-better (dot/cosine; binary coarse
-            # scores are the ±1-dot estimate — also larger-better)
-            hits = [h for h in hits if h[1] > float(t)]
-        off = int(req.get("offset", 0))
-        lim = int(req.get("limit", DEFAULT_LIMIT))
-        outs[i] = _local_result_df(spark, hits[off:off + lim], schema)
+        by_req.update(_best_first(re_by))
+    # maxsim is larger-better (dot/cosine; binary coarse scores are the
+    # ±1-dot estimate — also larger-better)
+    _emit_legs(planner, requests, by_req, outs)
 
 
-def _batch_maxsim_quant_ivf(planner: "QueryPlanner",
-                            requests: list[dict[str, Any]],
-                            outs: list) -> None:
-    """Batched COMPOSED multivector search (r12): >=2 unfiltered MaxSim
-    requests on a column with BOTH a token-IVF route and quantized token
-    storage (both above their crossovers) fuse into ONE candidate scan
-    of the id-only cluster-partitioned token table (each matched token
-    row fans out to exactly the queries that probed its cluster) + ONE
-    coarse pair scan over the candidates' token CODES (per-kind decode,
-    each candidate scored only against ITS query) + ONE float-token pair
-    rescore — value-identical per request to the per-request composed
-    plans. Routes with a PLAID candidate cap rank every query's
-    centroid-resolution candidates in the same fused scan
-    (maxsim_ivf_capped_pairs)."""
-    import numpy as np
-
+def _fuse_maxsim_composed(planner: "QueryPlanner",
+                          requests: list[dict[str, Any]],
+                          idxs: list[int], vc: str, handles: tuple,
+                          outs: list) -> bool:
+    """COMPOSED multivector legs (r12), on a column with both a token-IVF
+    route and quantized token storage: ONE candidate scan of the id-only
+    cluster-partitioned token table (each matched token row fans out to
+    exactly the queries that probed its cluster) + ONE coarse pair scan
+    over the candidates' token CODES (per-kind decode, each candidate
+    scored only against ITS query) + ONE float-token pair rescore. Routes
+    with a PLAID candidate cap rank every query's centroid-resolution
+    candidates in the same fused scan (maxsim_ivf_capped_pairs)."""
     from qdrant_spark.operators.multivec import (
-        MAXSIM_FULL_SCAN_THRESHOLD, maxsim_ivf_candidate_pairs,
+        maxsim_ivf_candidate_pairs, maxsim_ivf_capped_pairs,
         maxsim_quant_pair_topk,
     )
 
-    groups: dict[str, list[int]] = {}
-    for i, req in enumerate(requests):
-        if outs[i] is not None or req.get("prefetch") \
-                or req.get("shard_key") is not None \
-                or req.get("filter") is not None:
-            continue
-        q = req.get("query")
-        if not (isinstance(q, dict) and isinstance(q.get("nearest"),
-                                                   (list, tuple))):
-            continue
-        t = q["nearest"]
-        if not (t and isinstance(t[0], (list, tuple))):
-            continue
-        vc = req.get("using", planner.default_vec_col)
-        if planner.maxsim_sq_indexes.get(vc) is None \
-                or planner.maxsim_indexes.get(vc) is None:
-            continue
-        if planner.metric_for(vc) not in ("dot", "cosine"):
-            continue
-        qp = (req.get("params") or {}).get("quantization") or {}
-        if qp.get("ignore") or planner._leaf_exact(req):
-            continue
-        groups.setdefault(vc, []).append(i)
-
-    for vc, idxs in groups.items():
-        if len(idxs) < 2:
-            continue
-        sqh = planner.maxsim_sq_indexes[vc]
-        route = planner.maxsim_indexes[vc]
-        if route.index.clustered_points is not None \
-                and not route.prefer_composed:
-            # mirror the leaf dispatch (r14): with the invlist layout the
-            # plain partition-pruned float route beats the composed
-            # ladder at every measured size — these requests plan
-            # per-request through maxsim_knn_ivf's invlist scan
-            continue
-        ok = True
-        for handle, n_src in ((sqh, sqh.points),
-                              (route, route.index.points)):
-            thr = (MAXSIM_FULL_SCAN_THRESHOLD
-                   if handle.full_scan_threshold is None
-                   else handle.full_scan_threshold)
-            if thr:
-                if handle.n_docs is None:
-                    handle.n_docs = n_src.count()
-                if handle.n_docs < thr:
-                    ok = False  # the leaf would not take the composed plan
-        if not ok:
-            continue
-        metric = planner.metric_for(vc)
-        if route.degrade_membership is not None:
-            # membership degrade (r15, opt-in): requests whose probe
-            # union covers ~the whole corpus gain nothing from the
-            # fused candidate stage — they split off into the
-            # quant-only fused group (maxsim_quant_coarse_batch), the
-            # same plan _batch_maxsim_quant builds; the rest keep the
-            # composed fuse. Singles fall through to the per-request
-            # leaf, which applies the same degrade rule.
-            from qdrant_spark.operators.multivec import (
-                maxsim_membership_fraction, maxsim_quant_coarse_batch,
-            )
-
-            deg = [i for i in idxs if maxsim_membership_fraction(
-                route, requests[i]["query"]["nearest"], metric=metric)
-                >= route.degrade_membership]
-            if deg:
-                idxs = [i for i in idxs if i not in set(deg)]
-                if len(deg) >= 2:
-                    ks, cs, rescores = {}, {}, {}
-                    for i in deg:
-                        req = requests[i]
-                        qp = (req.get("params") or {}) \
-                            .get("quantization") or {}
-                        ks[i] = int(req.get("limit", DEFAULT_LIMIT)) \
-                            + int(req.get("offset", 0))
-                        over = float(qp.get("oversampling")
-                                     or sqh.oversampling)
-                        cs[i] = max(ks[i], int(np.ceil(ks[i] * over)))
-                        rescores[i] = qp.get("rescore") is not False
-                    if len(deg) * max(cs.values()) \
-                            <= planner.fused_collect_max:
-                        queries = [requests[i]["query"]["nearest"]
-                                   for i in deg]
-                        coarse = maxsim_quant_coarse_batch(
-                            sqh, queries, max(cs.values()),
-                            metric=metric).collect()
-                        planner.last_plan_info[
-                            "maxsim_degraded_batch_requests"] = \
-                            planner.last_plan_info.get(
-                                "maxsim_degraded_batch_requests", 0) \
-                            + len(deg)
-                        _finish_maxsim_group(planner, requests, deg,
-                                             outs, sqh, metric, ks, cs,
-                                             rescores, queries, coarse)
-        if len(idxs) < 2:
-            continue
-        ks, cs, rescores = {}, {}, {}
-        for i in idxs:
-            req = requests[i]
-            qp = (req.get("params") or {}).get("quantization") or {}
-            ks[i] = int(req.get("limit", DEFAULT_LIMIT)) \
-                + int(req.get("offset", 0))
-            over = float(qp.get("oversampling") or sqh.oversampling)
-            cs[i] = max(ks[i], int(np.ceil(ks[i] * over)))
-            rescores[i] = qp.get("rescore") is not False
-        if len(idxs) * max(cs.values()) > planner.fused_collect_max:
-            continue
-        queries = [requests[i]["query"]["nearest"] for i in idxs]
-        if route.candidates is not None:
-            # fused PLAID stage-2 cap: one scan + one groupBy ranks every
-            # query's centroid-resolution candidates at once
-            from qdrant_spark.operators.multivec import (
-                maxsim_ivf_capped_pairs,
-            )
-
-            pairs = maxsim_ivf_capped_pairs(
-                route.index, queries, nprobe=route.nprobe,
-                candidates=route.candidates, metric=metric)
-        else:
-            pairs = maxsim_ivf_candidate_pairs(
-                route.index, queries, nprobe=route.nprobe, metric=metric)
-        coarse = maxsim_quant_pair_topk(
-            sqh, pairs, queries, k=max(cs.values()),
-            metric=metric).collect()
-        planner.last_plan_info["maxsim_quant_ivf_batch_groups"] = \
-            planner.last_plan_info.get(
-                "maxsim_quant_ivf_batch_groups", 0) + 1
-        _finish_maxsim_group(planner, requests, idxs, outs, sqh,
-                             metric, ks, cs, rescores, queries, coarse)
+    rt, sqh = handles
+    ks, cs, rescores = _quant_widths(requests, idxs, sqh)
+    if len(idxs) * max(cs.values()) > planner.fused_collect_max:
+        return False
+    metric = planner.metric_for(vc)
+    queries = [requests[i]["query"]["nearest"] for i in idxs]
+    if rt.candidates is not None:
+        pairs = maxsim_ivf_capped_pairs(
+            rt.index, queries, nprobe=rt.nprobe,
+            candidates=rt.candidates, metric=metric)
+    else:
+        pairs = maxsim_ivf_candidate_pairs(
+            rt.index, queries, nprobe=rt.nprobe, metric=metric)
+    coarse = maxsim_quant_pair_topk(
+        sqh, pairs, queries, k=max(cs.values()), metric=metric).collect()
+    _finish_maxsim_group(planner, requests, idxs, outs, sqh, metric, ks, cs,
+                         rescores, queries, coarse)
+    return True
 
 
-def _batch_maxsim_exact(planner: "QueryPlanner",
-                        requests: list[dict[str, Any]],
-                        outs: list) -> None:
-    """Batched EXACT MaxSim grouping (late r11): unfiltered single-leaf
-    multivector requests that the quantized / token-IVF routes do NOT
-    own (no index registered, below its crossover, or per-request
-    ignore/exact) previously scanned the float-token corpus once PER
-    REQUEST — now >=2 of them share ONE scan
-    (multivec.maxsim_knn_batch; scores are exact, no rescore stage).
-    The dense analogue is the _fused_leaves knn_batch grouping."""
-    from qdrant_spark.operators.multivec import (
-        MAXSIM_FULL_SCAN_THRESHOLD, maxsim_knn_batch,
-    )
+def _fuse_maxsim(planner: "QueryPlanner", requests: list[dict[str, Any]],
+                 idxs: list[int], vc: str, handles: tuple,
+                 outs: list) -> bool:
+    """Exact MaxSim legs (late r11): ONE scan of the float-token corpus
+    (multivec.maxsim_knn_batch; scores are exact, no rescore stage) — the
+    multivector analogue of the dense knn_batch group."""
+    from qdrant_spark.operators.multivec import maxsim_knn_batch
 
-    groups: dict[str, list[int]] = {}
-    for i, req in enumerate(requests):
-        if outs[i] is not None or req.get("prefetch") \
-                or req.get("shard_key") is not None \
-                or req.get("filter") is not None:
-            continue
-        q = req.get("query")
-        if not (isinstance(q, dict) and isinstance(q.get("nearest"),
-                                                   (list, tuple))):
-            continue
-        t = q["nearest"]
-        if not (t and isinstance(t[0], (list, tuple))):
-            continue
-        vc = req.get("using", planner.default_vec_col)
-        if planner.metric_for(vc) not in ("dot", "cosine"):
-            continue
-        # mirror the leaf's routing: fuse only requests that would take
-        # the exact scan there
-        exact = planner._leaf_exact(req)
-        qp = (req.get("params") or {}).get("quantization") or {}
-        sqh = planner.maxsim_sq_indexes.get(vc)
-        use_sq = sqh is not None and not qp.get("ignore") and not exact
-        if use_sq:
-            thr = (MAXSIM_FULL_SCAN_THRESHOLD
-                   if sqh.full_scan_threshold is None
-                   else sqh.full_scan_threshold)
-            if thr:
-                if sqh.n_docs is None:
-                    sqh.n_docs = sqh.points.count()
-                use_sq = sqh.n_docs >= thr
-        route = planner.maxsim_indexes.get(vc)
-        use_pruned = not use_sq and route is not None and not exact
-        if use_pruned:
-            thr = (MAXSIM_FULL_SCAN_THRESHOLD
-                   if route.full_scan_threshold is None
-                   else route.full_scan_threshold)
-            if thr:
-                if route.n_docs is None:
-                    route.n_docs = route.index.points.count()
-                use_pruned = route.n_docs >= thr
-        if use_sq or use_pruned:
-            continue
-        groups.setdefault(vc, []).append(i)
-
-    from pyspark.sql import types as T
-
-    for vc, idxs in groups.items():
-        if len(idxs) < 2:
-            continue
-        metric = planner.metric_for(vc)
-        ks = {i: int(requests[i].get("limit", DEFAULT_LIMIT))
-              + int(requests[i].get("offset", 0)) for i in idxs}
-        if len(idxs) * max(ks.values()) > planner.fused_collect_max:
-            continue
-        queries = [requests[i]["query"]["nearest"] for i in idxs]
-        rows = maxsim_knn_batch(
-            planner.points, queries, k=max(ks.values()), metric=metric,
-            mv_col=vc, id_col=planner.id_col).collect()
-        planner.last_plan_info["maxsim_batch_groups"] = \
-            planner.last_plan_info.get("maxsim_batch_groups", 0) + 1
-        by_req: dict[int, list] = {i: [] for i in idxs}
-        for r in rows:
-            gi = idxs[r["__qid"]]
-            if r["rank"] <= ks[gi]:
-                by_req[gi].append((r[planner.id_col], float(r["score"])))
-        spark = planner.points.sparkSession
-        id_type = planner.points.schema[planner.id_col].dataType
-        schema = T.StructType([
-            T.StructField(planner.id_col, id_type),
-            T.StructField("score", T.DoubleType()),
-        ])
-        for i in idxs:
-            req = requests[i]
-            hits = sorted(by_req[i], key=lambda h: (-h[1], h[0]))[:ks[i]]
-            t = req.get("score_threshold")
-            if t is not None:
-                hits = [h for h in hits if h[1] > float(t)]
-            off = int(req.get("offset", 0))
-            lim = int(req.get("limit", DEFAULT_LIMIT))
-            outs[i] = _local_result_df(spark, hits[off:off + lim], schema)
+    ks = {i: _leg_k(requests[i]) for i in idxs}
+    if len(idxs) * max(ks.values()) > planner.fused_collect_max:
+        return False
+    queries = [requests[i]["query"]["nearest"] for i in idxs]
+    rows = maxsim_knn_batch(
+        planner.points, queries, k=max(ks.values()),
+        metric=planner.metric_for(vc), mv_col=vc,
+        id_col=planner.id_col).collect()
+    hits: dict[int, list] = {i: [] for i in idxs}
+    for r in rows:
+        gi = idxs[r["__qid"]]
+        if r["rank"] <= ks[gi]:
+            hits[gi].append((r[planner.id_col], float(r["score"])))
+    _emit_legs(planner, requests, _best_first(hits), outs)
+    return True
 
 
 class _RowsLeg(NamedTuple):
@@ -2040,30 +1689,40 @@ def _quant_scan_setup(qh, metric: str, Qraw):
     return prep, code_col, dec, Q, scan_metric
 
 
-def _quant_batch_params(planner, requests, idxs, qh):
-    """Per-request (k, coarse width, rescore?) for a quantized batch
-    group — the same arithmetic as the single-request leaf."""
+def _quant_params(req: dict[str, Any],
+                  default_oversampling: float) -> tuple[bool, float]:
+    """(rescore, oversampling) of a quantized leaf from its
+    SearchParams.quantization (types.rs:573-628), resolved as
+    :func:`~qdrant_spark.operators.quantize.quant_search` resolves them:
+    rescore unless set false, oversampling None -> the handle's default.
+    The single-request leaves and the batch groups both resolve here."""
+    qp = (req.get("params") or {}).get("quantization") or {}
+    rescore, over = qp.get("rescore"), qp.get("oversampling")
+    return (True if rescore is None else bool(rescore),
+            default_oversampling if over is None else float(over))
+
+
+def _quant_widths(requests: list[dict[str, Any]], idxs: list[int], handle):
+    """Per-request k = limit+offset, coarse width ceil(k * oversampling)
+    and rescore flag of a quantized batch group."""
     import numpy as np
 
     ks, cs, rescores = {}, {}, {}
     for i in idxs:
-        req = requests[i]
-        qp = (req.get("params") or {}).get("quantization") or {}
-        ks[i] = int(req.get("limit", DEFAULT_LIMIT)) \
-            + int(req.get("offset", 0))
-        over = float(qp.get("oversampling", qh.oversampling))
+        rescores[i], over = _quant_params(requests[i], handle.oversampling)
+        ks[i] = _leg_k(requests[i])
         cs[i] = max(ks[i], int(np.ceil(ks[i] * over)))
-        rescores[i] = qp.get("rescore") is not False
     return ks, cs, rescores
 
 
 def _finish_quant_group(planner, requests, idxs, outs, qh, metric,
-                        ks, rescores, by_req) -> None:
-    """Shared tail of the batched quantized paths: per-request cut to
-    k = limit+offset, rescore the union of candidates with ONE
-    pair-scored job, apply score_threshold in the direction of the
-    returned score scale, slice offset/limit — value-identical to the
-    single-request leaf's post-processing."""
+                        ks, cs, rescores, coarse) -> None:
+    """Shared tail of the batched dense quantized groups: keep each
+    request's top coarse-width candidates, rescore the rescore=True
+    requests' candidates with ONE pair-scored job, and finish each
+    request (:func:`_emit_legs`) in the direction of its returned scores
+    — binary coarse scores (rescore=False) are the ±1-dot estimate,
+    larger-better whatever the metric, the single-request leaf's rule."""
     from pyspark.sql import types as T
 
     from qdrant_spark.operators.knn import (
@@ -2071,37 +1730,16 @@ def _finish_quant_group(planner, requests, idxs, outs, qh, metric,
     )
 
     idx = qh.index
-    spark = planner.points.sparkSession
-    id_type = planner.points.schema[planner.id_col].dataType
-    schema = T.StructType([
-        T.StructField(planner.id_col, id_type),
-        T.StructField("score", T.DoubleType()),
-    ])
-    larger = larger_is_better(metric)
-
-    def finish(i: int, hits: list) -> None:
-        req = requests[i]
-        # the single-request plan cuts to k = limit+offset BEFORE the
-        # threshold filter (quant_search(k=...) then the leaf filter)
-        hits = hits[:ks[i]]
-        thr = req.get("score_threshold")
-        if thr is not None:
-            # binary coarse scores (rescore=False) are the ±1-dot
-            # estimate — larger-better whatever the metric, same
-            # direction rule as the single-request leaf
-            lg = (True if not rescores[i] and qh.kind == "binary"
-                  else larger)
-            keep = (lambda s: s > float(thr)) if lg \
-                else (lambda s: s < float(thr))
-            hits = [h for h in hits if keep(h[1])]
-        off = int(req.get("offset", 0))
-        lim = int(req.get("limit", DEFAULT_LIMIT))
-        outs[i] = _local_result_df(spark, hits[off:off + lim], schema)
-
+    by_req: dict[int, list] = {i: [] for i in idxs}
+    for r in sorted(coarse, key=lambda r: (r["__qid"], r["rank"])):
+        if r["rank"] <= cs[r["__qid"]]:
+            by_req[r["__qid"]].append((r[idx.id_col], float(r["score"])))
     need_rescore = [i for i in idxs if rescores[i]]
     if need_rescore:
         from qdrant_spark.session import local_df
 
+        spark = planner.points.sparkSession
+        id_type = planner.points.schema[planner.id_col].dataType
         pairs = local_df(
             spark,
             [(int(i), h[0]) for i in need_rescore
@@ -2121,15 +1759,15 @@ def _finish_quant_group(planner, requests, idxs, outs, qh, metric,
             joined, metric=metric, k=max(ks[i] for i in need_rescore),
             qid_col="__qid", id_col=idx.id_col, vec_col=idx.vec_col,
             qvec_col="__qvec")
-        rows = scored.collect()
-        exact: dict[int, list] = {i: [] for i in need_rescore}
-        for r in sorted(rows, key=lambda r: (r["__qid"], r["rank"])):
-            exact[r["__qid"]].append((r[idx.id_col], float(r["score"])))
         for i in need_rescore:
-            finish(i, exact[i])
-    for i in idxs:
-        if not rescores[i]:
-            finish(i, by_req[i])
+            by_req[i] = []
+        for r in sorted(scored.collect(),
+                        key=lambda r: (r["__qid"], r["rank"])):
+            by_req[r["__qid"]].append((r[idx.id_col], float(r["score"])))
+    larger = larger_is_better(metric)
+    _emit_legs(planner, requests, by_req, outs, larger={
+        i: larger or (not rescores[i] and qh.kind == "binary")
+        for i in idxs})
 
 
 def _avg_recommend_merged(r: dict[str, Any]) -> list[float] | None:
@@ -2162,161 +1800,125 @@ def _avg_recommend_merged(r: dict[str, Any]) -> list[float] | None:
     return [float(x) for x in merged]
 
 
-def _quant_batch_eligible(planner, requests, outs):
-    """(request index, vec_col) pairs of unfiltered single-leaf dense
-    nearest requests on a quantized column — the shared eligibility test
-    of both batched quantized paths."""
+def _fuse_quant(planner: "QueryPlanner", requests: list[dict[str, Any]],
+                idxs: list[int], vc: str, handles: tuple,
+                outs: list) -> bool:
+    """Dense legs on a quantized column — ALL FOUR kinds since r11: ONE
+    coarse Arrow scan over the codes (all queries score per batch via the
+    block matmul, per-kind decode in :func:`_quant_scan_setup`) plus ONE
+    pair-scored rescore over the union of candidate floats. The
+    reference's batch dispatch walks quantized storage once for the whole
+    batch the same way (lib/segment/src/vector_storage/quantized/)."""
+    import numpy as np
+
+    from qdrant_spark.operators.knn import _matmul_knn
+
+    (qh,) = handles
+    ks, cs, rescores = _quant_widths(requests, idxs, qh)
+    if len(idxs) * max(cs.values()) > planner.fused_collect_max:
+        return False
+    metric = planner.metric_for(vc)
+    Qraw = np.asarray(
+        [[float(x) for x in requests[i]["query"]["nearest"]] for i in idxs])
+    prep, code_col, dec, Q, scan_metric = _quant_scan_setup(qh, metric, Qraw)
+    coarse = _matmul_knn(
+        prep(qh.codes_frame()), None, metric=scan_metric,
+        k=max(cs.values()),
+        vec_col=code_col, id_col=qh.index.id_col, qid_col="__qid",
+        qvec_col="__qvec", score_threshold=None,
+        q_data=(idxs, Q), vec_decode=dec,
+    ).collect()
+    _finish_quant_group(planner, requests, idxs, outs, qh, metric, ks, cs,
+                        rescores, coarse)
+    return True
+
+
+def _fuse_quant_ivf(planner: "QueryPlanner", requests: list[dict[str, Any]],
+                    idxs: list[int], vc: str, handles: tuple,
+                    outs: list) -> bool:
+    """COMPOSED quantized dense legs (r11): ONE cluster-masked coarse scan
+    over the probed union of the (id, __cluster, code) frame — each query
+    scored only inside ITS probed clusters, so candidates equal the
+    per-request composed plan — plus the shared pair-scored rescore. The
+    reference batches quantized search through one storage walk with the
+    graph doing the pruning; here partition pruning covers the probe
+    union and the mask keeps per-query semantics exact."""
+    import numpy as np
+
+    from qdrant_spark.operators import ann
+
+    (qih,) = handles
+    qh = qih.handle
+    ks, cs, rescores = _quant_widths(requests, idxs, qh)
+    if len(idxs) * max(cs.values()) > planner.fused_collect_max:
+        return False
+    metric = planner.metric_for(vc)
+    Qraw = np.asarray(
+        [[float(x) for x in requests[i]["query"]["nearest"]] for i in idxs])
+    prep, code_col, dec, Q, scan_metric = _quant_scan_setup(qh, metric, Qraw)
+    # per-query probes in RAW vector space (same argsort as the
+    # single-request quant_ivf_search), masks keyed by cluster
+    d = ((Qraw[:, None, :] - qih.centroids[None, :, :]) ** 2).sum(axis=2)
+    probes = np.argsort(d, axis=1)[:, :qih.nprobe]
+    used = sorted({int(c) for row in probes for c in row})
+    cluster_q = {int(c): np.where((probes == c).any(axis=1))[0]
+                 for c in used}
+    pruned = prep(qih.coded.filter(F.col("__cluster").isin(used)))
+    coarse = ann.cluster_masked_topk(
+        pruned, vec_col=code_col, id_col=qih.id_col, qids=idxs,
+        Q=Q, cluster_q=cluster_q, k=max(cs.values()),
+        metric=scan_metric, vec_decode=dec,
+    ).collect()
+    _finish_quant_group(planner, requests, idxs, outs, qh, metric, ks, cs,
+                        rescores, coarse)
+    return True
+
+
+#: route kind -> (its fused batch function, the last_plan_info counters
+#: each answered group adds to: +1, or + the group size for ``_legs`` /
+#: ``_requests`` counters). Kinds not listed (sparse, ivf, maxsim_ivf)
+#: always plan per request.
+_BATCH_GROUPS = {
+    "dense": (_fuse_dense, ("fused_groups", "fused_legs")),
+    "sparse_index": (_fuse_sparse_index, ()),
+    "quant": (_fuse_quant, ("quant_batch_groups",)),
+    "quant_ivf": (_fuse_quant_ivf, ("quant_ivf_batch_groups",)),
+    "maxsim_quant": (_fuse_maxsim_codes, ("maxsim_quant_batch_groups",)),
+    "maxsim_degraded": (_fuse_maxsim_codes,
+                        ("maxsim_degraded_batch_requests",)),
+    "maxsim_quant_ivf": (_fuse_maxsim_composed,
+                         ("maxsim_quant_ivf_batch_groups",)),
+    "maxsim": (_fuse_maxsim, ("maxsim_batch_groups",)),
+}
+
+
+def _fuse_batch(planner: "QueryPlanner", requests: list[dict[str, Any]],
+                outs: list) -> None:
+    """Fill ``outs`` for every group of >=2 requests that share a
+    batchable route (:meth:`QueryPlanner._batch_route`) and vector column
+    — exact dense legs also share a filter, and group only when fusion
+    pays (:meth:`QueryPlanner._fusion_worthwhile`) — through the kind's
+    fused batch function, value-identical per request to planning each
+    alone. A function that declines (its collect would exceed
+    ``fused_collect_max``) leaves its requests to per-request plans."""
+    import json
+
+    groups: dict[tuple, tuple] = {}
     for i, req in enumerate(requests):
-        if outs[i] is not None or req.get("prefetch") \
-                or req.get("shard_key") is not None \
-                or req.get("filter") is not None:
+        rt = planner._batch_route(req)
+        if rt is None or (rt.kind == "dense"
+                          and not planner._fusion_worthwhile()):
             continue
-        q = req.get("query")
-        if not (isinstance(q, dict) and isinstance(q.get("nearest"),
-                                                   (list, tuple))):
-            continue
-        t = q["nearest"]
-        if not t or isinstance(t[0], (list, tuple)):
-            continue  # multivector
-        vc = req.get("using", planner.default_vec_col)
-        qp = (req.get("params") or {}).get("quantization") or {}
-        if qp.get("ignore") or planner._leaf_exact(req):
-            continue
-        if not planner._quant_crossover_ok(vc, batch=True):
-            # below the exact-vs-quantized corpus crossover the whole
-            # quant family stands down; these requests joined the exact
-            # fused matmul group in _fusable_leaf (or plan exact alone),
-            # mirroring _batch_maxsim_quant's full_scan_threshold guard
-            continue
-        yield i, vc
-
-
-def _batch_quant_indexed(planner: "QueryPlanner",
-                         requests: list[dict[str, Any]],
-                         outs: list) -> None:
-    """Batch-side quantized grouping: unfiltered single-leaf dense
-    nearest requests on a quantized column — ALL FOUR kinds since r11 —
-    are answered by ONE coarse Arrow scan over the codes (all queries
-    score per batch via the block matmul, per-kind decode in
-    :func:`_quant_scan_setup`) plus ONE pair-scored rescore over the
-    union of candidate floats — value-identical per request to planning
-    each alone (per-request oversampling, rescore, score_threshold,
-    offset and limit applied after the shared scans). The quantized twin
-    of :func:`_batch_sparse_indexed`; the reference's batch dispatch
-    walks quantized storage once for the whole batch the same way
-    (lib/segment/src/vector_storage/quantized/). Requests with filters /
-    exact / shard routing / ignore keep their own plan; columns with a
-    cluster structure batch through :func:`_batch_quant_ivf_indexed`
-    instead."""
-    import numpy as np
-
-    groups: dict[str, list[int]] = {}
-    for i, vc in _quant_batch_eligible(planner, requests, outs):
-        if planner.quant_indexes.get(vc) is None \
-                or planner._ivf_for(vc) is not None \
-                or planner.quant_ivf_indexes.get(vc) is not None:
-            continue
-        groups.setdefault(vc, []).append(i)
-
-    for vc, idxs in groups.items():
-        if len(idxs) < 2:
-            continue
-        qh = planner.quant_indexes[vc]
-        metric = planner.metric_for(vc)
-        ks, cs, rescores = _quant_batch_params(planner, requests, idxs, qh)
-        if len(idxs) * max(cs.values()) > planner.fused_collect_max:
-            continue
-        from qdrant_spark.operators.knn import _matmul_knn
-
-        idx = qh.index
-        Qraw = np.asarray(
-            [[float(x) for x in requests[i]["query"]["nearest"]]
-             for i in idxs])
-        prep, code_col, dec, Q, scan_metric = _quant_scan_setup(
-            qh, metric, Qraw)
-        coarse = _matmul_knn(
-            prep(qh.codes_frame()), None, metric=scan_metric,
-            k=max(cs.values()),
-            vec_col=code_col, id_col=idx.id_col, qid_col="__qid",
-            qvec_col="__qvec", score_threshold=None,
-            q_data=(idxs, Q), vec_decode=dec,
-        ).collect()
-        planner.last_plan_info["quant_batch_groups"] = \
-            planner.last_plan_info.get("quant_batch_groups", 0) + 1
-        by_req: dict[int, list] = {i: [] for i in idxs}
-        for r in coarse:  # already ranked (score dir, id) per query
-            if r["rank"] <= cs[r["__qid"]]:
-                by_req[r["__qid"]].append((r[idx.id_col],
-                                           float(r["score"])))
-        _finish_quant_group(planner, requests, idxs, outs, qh, metric,
-                            ks, rescores, by_req)
-
-
-def _batch_quant_ivf_indexed(planner: "QueryPlanner",
-                             requests: list[dict[str, Any]],
-                             outs: list) -> None:
-    """Batched COMPOSED quantized search (r11): unfiltered dense nearest
-    requests on a column with both cluster and code structure are
-    answered by ONE cluster-masked coarse scan over the probed union of
-    the (id, __cluster, code) frame — each query scored only inside ITS
-    probed clusters, so candidates equal the per-request composed plan —
-    plus the shared pair-scored rescore. The reference batches quantized
-    search through one storage walk with the graph doing the pruning;
-    here partition pruning covers the probe union and the mask keeps
-    per-query semantics exact."""
-    import numpy as np
-
-    groups: dict[str, list[int]] = {}
-    for i, vc in _quant_batch_eligible(planner, requests, outs):
-        qih = planner.quant_ivf_indexes.get(vc)
-        qh = planner.quant_indexes.get(vc)
-        ivf = planner._ivf_for(vc)
-        if qih is None and (qh is None or ivf is None):
-            continue
-        groups.setdefault(vc, []).append(i)
-
-    for vc, idxs in groups.items():
-        if len(idxs) < 2:
-            continue
-        qh = planner.quant_indexes.get(vc)
-        qih = planner.quant_ivf_indexes.get(vc)
-        if qih is None:
-            qih = planner._quant_ivf_for(vc, qh, planner._ivf_for(vc))
-        if qh is None:
-            qh = qih.handle
-        metric = planner.metric_for(vc)
-        ks, cs, rescores = _quant_batch_params(planner, requests, idxs, qh)
-        if len(idxs) * max(cs.values()) > planner.fused_collect_max:
-            continue
-        Qraw = np.asarray(
-            [[float(x) for x in requests[i]["query"]["nearest"]]
-             for i in idxs])
-        prep, code_col, dec, Q, scan_metric = _quant_scan_setup(
-            qh, metric, Qraw)
-        # per-query probes in RAW vector space (same argsort as the
-        # single-request quant_ivf_search), masks keyed by cluster
-        d = ((Qraw[:, None, :] - qih.centroids[None, :, :]) ** 2).sum(axis=2)
-        probes = np.argsort(d, axis=1)[:, :qih.nprobe]
-        used = sorted({int(c) for row in probes for c in row})
-        cluster_q = {int(c): np.where((probes == c).any(axis=1))[0]
-                     for c in used}
-        pruned = prep(qih.coded.filter(F.col("__cluster").isin(used)))
-        from qdrant_spark.operators import ann
-
-        coarse = ann.cluster_masked_topk(
-            pruned, vec_col=code_col, id_col=qih.id_col, qids=idxs,
-            Q=Q, cluster_q=cluster_q, k=max(cs.values()),
-            metric=scan_metric, vec_decode=dec,
-        ).collect()
-        planner.last_plan_info["quant_ivf_batch_groups"] = \
-            planner.last_plan_info.get("quant_ivf_batch_groups", 0) + 1
-        by_req: dict[int, list] = {i: [] for i in idxs}
-        for r in coarse:
-            if r["rank"] <= cs[r["__qid"]]:
-                by_req[r["__qid"]].append((r[qih.id_col],
-                                           float(r["score"])))
-        _finish_quant_group(planner, requests, idxs, outs, qh, metric,
-                            ks, rescores, by_req)
+        flt_key = (json.dumps(req.get("filter"), sort_keys=True, default=str)
+                   if rt.kind == "dense" else None)
+        groups.setdefault((rt.kind, rt.vec_col, flt_key),
+                          (rt.handles, []))[1].append(i)
+    for (kind, vc, _), (handles, idxs) in groups.items():
+        fn, counters = _BATCH_GROUPS[kind]
+        if len(idxs) >= 2 and fn(planner, requests, idxs, vc, handles, outs):
+            for c in counters:
+                planner._bump(c, len(idxs) if c.endswith(
+                    ("_legs", "_requests")) else 1)
 
 
 def query_batch(
@@ -2329,13 +1931,8 @@ def query_batch(
     collections: dict[str, DataFrame] | None = None,
     fuse_min_bytes: int | None = None,
     metrics: dict[str, str] | None = None,
-    sparse_indexes: dict[str, Any] | None = None,
+    indexes: dict[str, list] | None = None,
     ivf_index=None,
-    ivf_indexes: dict[str, Any] | None = None,
-    quant_indexes: dict[str, Any] | None = None,
-    maxsim_indexes: dict[str, Any] | None = None,
-    quant_ivf_indexes: dict[str, Any] | None = None,
-    maxsim_sq_indexes: dict[str, Any] | None = None,
 ) -> DataFrame:
     """Batch universal query (``POST /collections/{c}/points/query/batch``,
     reference src/actix/api/query_api.rs; per-request independence as in
@@ -2343,19 +1940,20 @@ def query_batch(
     and union the results tagged with ``request_idx``.
 
     Requests may differ arbitrarily (prefetch trees, filters, fusion), so
-    each compiles to its own sub-plan — EXCEPT homogeneous dense-nearest
-    requests sharing (filter, vector column), which are auto-batched into
-    ONE ``knn_batch`` corpus scan (the reference's batch dispatch
-    special-cases exactly this, dispatch.rs batch path / the PlannedQuery
-    leaf merge), and unfiltered sparse-nearest requests on an indexed
-    column, which are answered by ONE inverted-index scan
-    (:func:`_batch_sparse_indexed`), and unfiltered dense requests on a
-    scalar-quantized column, answered by ONE coarse code scan + ONE pair
-    rescore (:func:`_batch_quant_indexed`). Requests carrying a ``shard_key``
-    selector route to their shard's partition directories before
-    planning. Per-request limit/offset/score_threshold are preserved;
-    the batched leg results are value-identical to planning each request
-    alone.
+    each compiles to its own sub-plan — EXCEPT single-leaf nearest
+    requests that share a route and vector column (:func:`_fuse_batch`):
+    exact dense legs sharing a filter run ONE ``knn_batch`` corpus scan
+    (the reference's batch dispatch special-cases exactly this,
+    dispatch.rs batch path / the PlannedQuery leaf merge); unfiltered
+    legs on an indexed sparse column, a quantized or composed dense
+    column, or a multivector column share one scan per route kind.
+    Requests carrying a ``shard_key`` selector route to their shard's
+    partition directories before planning. Per-request
+    limit/offset/score_threshold are preserved; the batched leg results
+    are value-identical to planning each request alone.
+
+    ``indexes`` is the :class:`QueryPlanner` mapping; ``ivf_index``
+    registers one more IVF index on its own vector column.
 
     Like :func:`universal_query`, if any request engages the fused
     DataFrame fallback the whole batch result is materialized eagerly
@@ -2364,14 +1962,13 @@ def query_batch(
     mutations); otherwise the result is lazy as usual."""
     from functools import reduce
 
+    if ivf_index is not None:
+        indexes = {**(indexes or {}), ivf_index.vec_col: [
+            ivf_index, *(indexes or {}).get(ivf_index.vec_col, [])]}
     planner = QueryPlanner(
         points, id_col=id_col, default_vec_col=vec_col, metric=metric,
         collections=collections, fuse_min_bytes=fuse_min_bytes,
-        metrics=metrics, sparse_indexes=sparse_indexes,
-        ivf_index=ivf_index, ivf_indexes=ivf_indexes,
-        quant_indexes=quant_indexes, maxsim_indexes=maxsim_indexes,
-        quant_ivf_indexes=quant_ivf_indexes,
-        maxsim_sq_indexes=maxsim_sq_indexes,
+        metrics=metrics, indexes=indexes,
     )
     if not requests:
         raise ValueError("empty request batch")
@@ -2390,31 +1987,9 @@ def query_batch(
             if merged is not None:
                 requests[i] = {**req, "query": {"nearest": merged}}
 
-    # group fusable single-leaf nearest requests by (vec_col, filter) —
-    # same size dispatch as prefetch fusion (small corpora plan lazily)
     planner._vec_cache = planner._batch_resolve_ids({"prefetch": list(requests)})
-    groups: dict[tuple, list[int]] = {}
-    if planner._fusion_worthwhile():
-        for i, req in enumerate(requests):
-            key = planner._fusable_leaf(req)
-            if key is not None:
-                groups.setdefault(key, []).append(i)
     outs: list = [None] * len(requests)
-    for key, idxs in groups.items():
-        if len(idxs) < 2:
-            continue
-        legs = planner._fused_leaves([requests[i] for i in idxs], key[0],
-                                     as_rows=True)
-        for i, df in zip(idxs, legs):
-            outs[i] = df
-        planner.last_plan_info["fused_groups"] += 1
-        planner.last_plan_info["fused_legs"] += len(idxs)
-    _batch_sparse_indexed(planner, requests, outs)
-    _batch_quant_indexed(planner, requests, outs)
-    _batch_quant_ivf_indexed(planner, requests, outs)
-    _batch_maxsim_quant_ivf(planner, requests, outs)
-    _batch_maxsim_quant(planner, requests, outs)
-    _batch_maxsim_exact(planner, requests, outs)
+    _fuse_batch(planner, requests, outs)
     # stash fallback persists from the fused legs: the per-request plan()
     # calls below free planner._fused_persisted at entry, which would
     # evict the shared scan before the batch union materializes
@@ -2431,30 +2006,14 @@ def query_batch(
                 from qdrant_spark.operators.sharding import select_shards
 
                 sub = {k: v for k, v in req.items() if k != "shard_key"}
-                saved = (planner.points, planner.ivf_index,
-                         planner.ivf_indexes, planner.sparse_indexes,
-                         planner.quant_indexes, planner.maxsim_indexes,
-                         planner.quant_ivf_indexes,
-                         planner.maxsim_sq_indexes)
+                saved = (planner.points, planner.indexes)
                 planner.points = select_shards(
                     points, req["shard_key"], col="shard_key")
-                planner.ivf_index = None
-                planner.ivf_indexes = {}
-                planner.sparse_indexes = {}
-                # whole-corpus quant/maxsim/composed indexes would leak
-                # other shards' points the same way IVF would
-                planner.quant_indexes = {}
-                planner.maxsim_indexes = {}
-                planner.quant_ivf_indexes = {}
-                planner.maxsim_sq_indexes = {}
+                planner.indexes = {}
                 try:
                     outs[i] = planner.plan(sub)
                 finally:
-                    (planner.points, planner.ivf_index,
-                     planner.ivf_indexes, planner.sparse_indexes,
-                     planner.quant_indexes, planner.maxsim_indexes,
-                     planner.quant_ivf_indexes,
-                     planner.maxsim_sq_indexes) = saved
+                    planner.points, planner.indexes = saved
             else:
                 outs[i] = planner.plan(req)
             # a per-request plan() can itself hit the fused DataFrame

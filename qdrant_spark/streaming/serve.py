@@ -171,7 +171,7 @@ def start_sparse_index_stream(
     map-only ingest-time cost the reference pays in its sparse indexer)
     and replaces those ids' posting sets in the pairs snapshot.
     ``live_sparse_index(pairs_sink)`` is then always searchable with
-    ``sparse_knn_index`` / registrable as ``QueryPlanner(sparse_indexes=)``
+    ``sparse_knn_index`` / registrable as ``QueryPlanner(indexes=)``
     — the streaming twin of ``start_ivf_upsert_stream``. Returns the
     StreamingQuery."""
     from qdrant_spark.operators.sparse import _explode_pairs
@@ -390,7 +390,7 @@ def live_maxsim_ivf_index(
     and the PLAID centroid-resolution cap, which scores the max over a
     doc's probed CLUSTERS (duplicate token rows in one cluster
     contribute the same max). Pair with maxsim_knn_ivf or register as
-    ``QueryPlanner(maxsim_indexes=...)`` — the planner then prefers the
+    ``QueryPlanner(indexes=...)`` — the planner then prefers the
     invlist route (r14)."""
     from qdrant_spark.operators.multivec import MaxSimIvf
 

@@ -1236,11 +1236,48 @@ def test_batch_per_request_shard_key(spark, tmp_path):
         [(p.id, p.score) for p in single.points]
 
 
+def test_batch_shard_key_bypasses_quant_index(spark):
+    """Per-request shard_key in query_batch_points on a collection with a
+    built quantized index: each shard-scoped request returns only its
+    shard's points, with the ids and scores of the single-request
+    shard-routed path — routing it through the whole-corpus codes would
+    leak the other shard's points. The unscoped pair still shares one
+    quantized batch group."""
+    c = QdrantSparkClient(spark)
+    c.create_collection(
+        "qshb", vectors_config={"size": 4, "distance": "Dot"},
+        sharding_method="custom", quantization_config={"scalar": {}})
+    for key, base in (("a", 0), ("b", 100)):
+        c.create_shard_key("qshb", key)
+        c.upsert("qshb",
+                 [{"id": base + i, "vector": [float(base + i), 1.0, 0.0, 0.0]}
+                  for i in range(20)],
+                 shard_key_selector=key)
+    assert c.ensure_vector_index("qshb", indexing_threshold=0) == "built"
+    q = [1.0, 0.0, 0.0, 0.0]
+    res = c.query_batch_points("qshb", [
+        {"query": q, "limit": 5, "shard_key": "a"},
+        {"query": q, "limit": 5},
+        {"query": q, "limit": 5, "shard_key": "b"},
+        {"query": q, "limit": 5, "shard_key": "a"},
+        {"query": q, "limit": 5},
+    ])
+    for i, key in ((0, "a"), (2, "b"), (3, "a")):
+        single = c.query_points("qshb", query=q, limit=5,
+                                shard_key_selector=key)
+        assert [(p.id, p.score) for p in res[i].points] == \
+            [(p.id, p.score) for p in single.points], i
+    assert [p.id for p in res[0].points] == [19, 18, 17, 16, 15]
+    assert [p.id for p in res[2].points] == [119, 118, 117, 116, 115]
+    assert [p.id for p in res[1].points] == [p.id for p in res[4].points] \
+        == [119, 118, 117, 116, 115]
+
+
 def test_named_vector_ivf_routes_in_batch_and_prefetch(spark, tmp_path,
                                                        monkeypatch):
     """Every named vector's own IVF index routes its leaves — in batch
     requests and prefetch legs, not just the top-level `using` of
-    query_points (planner ivf_indexes registry)."""
+    query_points (the planner's per-column indexes)."""
     import numpy as np
 
     from qdrant_spark.operators import dispatch as DSP

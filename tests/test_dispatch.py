@@ -329,7 +329,8 @@ def test_planner_routes_nearest_through_dispatcher(spark, embeddings):
     exact = QueryPlanner(embeddings, id_col="vec_id",
                          default_vec_col="embedding")
     accel = QueryPlanner(embeddings, id_col="vec_id",
-                         default_vec_col="embedding", ivf_index=idx)
+                         default_vec_col="embedding",
+                         indexes={"embedding": [idx]})
     a = [(r["vec_id"], round(r["score"], 6)) for r in exact.plan(req).collect()]
     b = [(r["vec_id"], round(r["score"], 6)) for r in accel.plan(req).collect()]
     assert a == b
@@ -338,7 +339,8 @@ def test_planner_routes_nearest_through_dispatcher(spark, embeddings):
     # is a full probe, so it still equals exact
     req2 = {"query": {"nearest": q0}, "using": "embedding", "limit": 5}
     forced = QueryPlanner(embeddings, id_col="vec_id",
-                          default_vec_col="embedding", ivf_index=idx,
+                          default_vec_col="embedding",
+                          indexes={"embedding": [idx]},
                           full_scan_threshold=1)
     c = [(r["vec_id"], round(r["score"], 6)) for r in exact.plan(req2).collect()]
     d = [(r["vec_id"], round(r["score"], 6)) for r in forced.plan(req2).collect()]
@@ -349,12 +351,12 @@ def test_planner_routes_nearest_through_dispatcher(spark, embeddings):
     e = [(r["vec_id"], round(r["score"], 6)) for r in exact.plan(req3).collect()]
     f = [(r["vec_id"], round(r["score"], 6)) for r in
          QueryPlanner(embeddings, id_col="vec_id", default_vec_col="embedding",
-                      ivf_index=idx).plan(req3).collect()]
+                      indexes={"embedding": [idx]}).plan(req3).collect()]
     assert e == f
 
     # mismatched id_col is rejected up front
     with pytest.raises(ValueError):
-        QueryPlanner(embeddings, id_col="other", ivf_index=idx)
+        QueryPlanner(embeddings, id_col="other", indexes={"embedding": [idx]})
 
 
 def test_cluster_stats_probe_geometry_correlated_filter(spark):

@@ -324,7 +324,7 @@ def test_planner_routes_maxsim_index(mv_points, q_mv):
     # sits far below the exact-vs-pruned crossover)
     route = MaxSimRoute(index=idx, nprobe=8, full_scan_threshold=0)
     pl = QueryPlanner(mv_points, id_col="vec_id", default_vec_col="mv",
-                      metric="dot", maxsim_indexes={"mv": route})
+                      metric="dot", indexes={"mv": [route]})
     exact = [(r["vec_id"], round(r["score"], 9)) for r in maxsim_knn(
         mv_points, q_mv, k=10, metric="dot",
         mv_col="mv", id_col="vec_id").collect()]
@@ -385,7 +385,7 @@ def test_client_ensure_multivector_index(spark, embeddings):
 
 
 def test_query_batch_routes_maxsim_index(mv_points, q_mv, monkeypatch):
-    """query_batch plumbs maxsim_indexes like quant_indexes (r10 ADVICE):
+    """query_batch plumbs MaxSim routes like quantized handles (r10 ADVICE):
     batched MaxSim requests on a registered multivector column route
     through the token-IVF pruned plan, value-identical at full probe."""
     from qdrant_spark.operators import multivec as MV
@@ -406,7 +406,7 @@ def test_query_batch_routes_maxsim_index(mv_points, q_mv, monkeypatch):
         mv_points, [{"query": {"nearest": [list(t) for t in q_mv]},
                      "limit": 5}] * 2,
         id_col="vec_id", vec_col="mv", metric="dot",
-        maxsim_indexes={"mv": route}).collect()
+        indexes={"mv": [route]}).collect()
     assert len(calls) == 2
     for i in (0, 1):
         assert [(r["vec_id"], round(r["score"], 9))
@@ -435,7 +435,7 @@ def test_maxsim_route_crossover(mv_points, q_mv):
     # default threshold: ~1k docs -> exact scan despite the route
     route = MaxSimRoute(index=idx, nprobe=8)
     pl = QueryPlanner(mv_points, id_col="vec_id", default_vec_col="mv",
-                      metric="dot", maxsim_indexes={"mv": route})
+                      metric="dot", indexes={"mv": [route]})
     got = [(r["vec_id"], round(r["score"], 9))
            for r in pl.plan(req).collect()]
     assert got == exact
@@ -445,7 +445,7 @@ def test_maxsim_route_crossover(mv_points, q_mv):
     # explicit low threshold -> pruned path
     route2 = MaxSimRoute(index=idx, nprobe=8, full_scan_threshold=100)
     pl2 = QueryPlanner(mv_points, id_col="vec_id", default_vec_col="mv",
-                       metric="dot", maxsim_indexes={"mv": route2})
+                       metric="dot", indexes={"mv": [route2]})
     got2 = [(r["vec_id"], round(r["score"], 9))
             for r in pl2.plan(req).collect()]
     assert got2 == exact  # full probe
@@ -958,7 +958,7 @@ def test_query_batch_fuses_quantized_maxsim(mv_points, embeddings, kind,
         {"query": {"nearest": qs[0]}, "limit": 8, "score_threshold": 0.0},
     ]
     kw = dict(id_col="vec_id", vec_col="mv", metric=metric,
-              maxsim_sq_indexes={"mv": idx})
+              indexes={"mv": [idx]})
     want = [query_batch(mv_points, [dict(r)], **kw).collect()
             for r in reqs]
     calls = []
@@ -1051,7 +1051,7 @@ def test_query_batch_maxsim_routing_split(mv_points, embeddings):
          "params": {"exact": True}},
     ]
     kw = dict(id_col="vec_id", vec_col="mv", metric="dot",
-              maxsim_sq_indexes={"mv": idx})
+              indexes={"mv": [idx]})
     want = [query_batch(mv_points, [dict(r)], **kw).collect()
             for r in reqs]
     got = query_batch(mv_points, [dict(r) for r in reqs], **kw).collect()
@@ -1261,7 +1261,7 @@ def test_planner_composes_maxsim_quant_ivf(mv_points, embeddings):
     r0 = embeddings.limit(1).collect()[0]
     q = [list(r0["embedding"])[i * 8:(i + 1) * 8] for i in range(8)]
     kw = dict(id_col="vec_id", default_vec_col="mv", metric="dot",
-              maxsim_indexes={"mv": route}, maxsim_sq_indexes={"mv": sqh})
+              indexes={"mv": [route, sqh]})
     pl = QueryPlanner(mv_points, **kw)
     got = [(r["vec_id"], round(r["score"], 9)) for r in pl.plan(
         {"query": {"nearest": q}, "limit": 10,
@@ -1286,7 +1286,7 @@ def test_planner_composes_maxsim_quant_ivf(mv_points, embeddings):
 
     # batch == single on the composed column: >=2 requests fuse into ONE
     # candidate scan + ONE coarse code pair scan + ONE float pair
-    # rescore (r12, _batch_maxsim_quant_ivf) — value-identical to the
+    # rescore (r12, query._fuse_maxsim_composed) — value-identical to the
     # per-request composed plans (incl. rescore=False + offset)
     from qdrant_spark import query as QM
 
@@ -1300,18 +1300,18 @@ def test_planner_composes_maxsim_quant_ivf(mv_points, embeddings):
             {"query": {"nearest": q}, "limit": 6,
              "params": {"quantization": {"rescore": False}}}]
     seen = {}
-    orig = QM._batch_maxsim_quant_ivf
+    orig = QM._fuse_batch
 
     def spy(planner, requests, outs):
         orig(planner, requests, outs)
         seen["planner"] = planner
 
-    QM._batch_maxsim_quant_ivf = spy
+    QM._fuse_batch = spy
     try:
         got_b = query_batch(mv_points, reqs, vec_col="mv", **{
             k: v for k, v in kw.items() if k != "default_vec_col"}).collect()
     finally:
-        QM._batch_maxsim_quant_ivf = orig
+        QM._fuse_batch = orig
     assert seen["planner"].last_plan_info.get(
         "maxsim_quant_ivf_batch_groups") == 1
     assert not seen["planner"].last_plan_info.get(
@@ -1441,7 +1441,7 @@ def test_maxsim_quant_filtered(mv_points, embeddings, kind):
     assert got == exact and len(got) == 10
 
     pl = QueryPlanner(pts, id_col="vec_id", default_vec_col="mv",
-                      metric="dot", maxsim_sq_indexes={"mv": idx})
+                      metric="dot", indexes={"mv": [idx]})
     got_pl = [(r["vec_id"], round(r["score"], 9)) for r in pl.plan(
         {"query": {"nearest": q}, "limit": 10, "filter": flt,
          "params": {"quantization": {"oversampling": n / 10.0}}}).collect()]
@@ -1481,24 +1481,24 @@ def test_maxsim_capped_pairs_fused_equals_per_request(mv_points,
     sqh = replace(build_maxsim_sq(mv_points, mv_col="mv", id_col="vec_id"),
                   full_scan_threshold=0)
     kw = dict(id_col="vec_id", vec_col="mv", metric="dot",
-              maxsim_indexes={"mv": route}, maxsim_sq_indexes={"mv": sqh})
+              indexes={"mv": [route, sqh]})
     reqs = [{"query": {"nearest": q}, "limit": 5,
              "params": {"quantization": {"oversampling": 6.0}}}
             for q in qs]
     want = [query_batch(mv_points, [dict(r)], **kw).collect()
             for r in reqs]
     seen = {}
-    orig = QM._batch_maxsim_quant_ivf
+    orig = QM._fuse_batch
 
     def spy(p, r, o):
         orig(p, r, o)
         seen["p"] = p
 
-    QM._batch_maxsim_quant_ivf = spy
+    QM._fuse_batch = spy
     try:
         got = query_batch(mv_points, reqs, **kw).collect()
     finally:
-        QM._batch_maxsim_quant_ivf = orig
+        QM._fuse_batch = orig
     assert seen["p"].last_plan_info.get(
         "maxsim_quant_ivf_batch_groups") == 1
     by: dict = {}
@@ -1575,7 +1575,7 @@ def test_planner_prefers_invlist_over_composed(mv_points, embeddings,
     r0 = embeddings.limit(1).collect()[0]
     q = [list(r0["embedding"])[i * 8:(i + 1) * 8] for i in range(8)]
     kw = dict(id_col="vec_id", default_vec_col="mv", metric="dot",
-              maxsim_indexes={"mv": route}, maxsim_sq_indexes={"mv": sqh})
+              indexes={"mv": [route, sqh]})
 
     pl = QueryPlanner(mv_points, **kw)
     got = [(r["vec_id"], round(r["score"], 9)) for r in pl.plan(
@@ -1588,7 +1588,7 @@ def test_planner_prefers_invlist_over_composed(mv_points, embeddings,
 
     # the declared override requests the composed ladder anyway
     pl2 = QueryPlanner(mv_points, **dict(
-        kw, maxsim_indexes={"mv": replace(route, prefer_composed=True)}))
+        kw, indexes={"mv": [replace(route, prefer_composed=True), sqh]}))
     pl2.plan({"query": {"nearest": q}, "limit": 10,
               "params": {"quantization": {"oversampling": 8.0}}}).collect()
     assert pl2.last_plan_info.get("maxsim_quant_ivf_leaves") == 1
@@ -1610,8 +1610,7 @@ def test_planner_prefers_invlist_over_composed(mv_points, embeddings,
                 {"query": {"nearest": q2}, "limit": 5}]
         got_b = query_batch(
             mv_points, reqs, id_col="vec_id", vec_col="mv", metric="dot",
-            maxsim_indexes={"mv": route},
-            maxsim_sq_indexes={"mv": sqh}).collect()
+            indexes={"mv": [route, sqh]}).collect()
     finally:
         MV.maxsim_knn_quant_ivf = orig
     assert not calls
@@ -1993,8 +1992,7 @@ def test_batch_degrade_splits_group(spark):
     route = MaxSimRoute(index=idx, nprobe=1, full_scan_threshold=0,
                         degrade_membership=0.9)
     planner = QueryPlanner(pts, id_col="vec_id", default_vec_col="mv",
-                           metric="dot", maxsim_indexes={"mv": route},
-                           maxsim_sq_indexes={"mv": sqh})
+                           metric="dot", indexes={"mv": [route, sqh]})
     keep_q = [[1.0, 0.5, 0.5, 0.25], [1.0, 0.9, 0.125, 0.0625]]
     keep_q2 = [[1.0, 0.4, 0.5, 0.25], [1.0, 0.8, 0.125, 0.0625]]
     deg_q = [[1.0, 0.5, 0.5, 0.25], [0.0, 0.5, 0.5, 0.25]]
@@ -2003,8 +2001,8 @@ def test_batch_degrade_splits_group(spark):
              "params": {"quantization": {"oversampling": 30.0}}}
             for q in (keep_q, deg_q, keep_q2, deg_q2)]
     outs = [None] * 4
-    from qdrant_spark.query import _batch_maxsim_quant_ivf
-    _batch_maxsim_quant_ivf(planner, reqs, outs)
+    from qdrant_spark.query import _fuse_batch
+    _fuse_batch(planner, reqs, outs)
     pi = planner.last_plan_info
     assert pi.get("maxsim_degraded_batch_requests") == 2, pi
     assert pi.get("maxsim_quant_ivf_batch_groups") == 1, pi
@@ -2046,8 +2044,7 @@ def test_leaf_degrade_matches_quant_only(spark):
         route = MaxSimRoute(index=idx, nprobe=1, full_scan_threshold=0,
                             degrade_membership=dm)
         p = QueryPlanner(pts, id_col="vec_id", default_vec_col="mv",
-                         metric="dot", maxsim_indexes={"mv": route},
-                         maxsim_sq_indexes={"mv": sqh})
+                         metric="dot", indexes={"mv": [route, sqh]})
         out = p.plan(req)
         return p.last_plan_info, [(r["vec_id"], round(r["score"], 9))
                                   for r in out.collect()]

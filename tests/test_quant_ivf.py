@@ -124,7 +124,7 @@ def test_quant_ivf_pruned_recall_and_scan(embeddings, ivf8, tmp_path):
 
 
 def test_planner_composes_when_both_registered(embeddings, ivf8):
-    """A column with BOTH ivf_indexes and quant_indexes entries routes
+    """A column with BOTH an IVF and a quantized handle routes
     dense `nearest` through the composed plan (quant_ivf_leaves) instead
     of the old IVF-wins rule; ignore/exact/filtered keep their existing
     routes."""
@@ -134,8 +134,7 @@ def test_planner_composes_when_both_registered(embeddings, ivf8):
                     id_col="vec_id")
     pl = QueryPlanner(embeddings, id_col="vec_id",
                       default_vec_col="embedding", metric="cosine",
-                      ivf_indexes={"embedding": ivf8},
-                      quant_indexes={"embedding": h})
+                      indexes={"embedding": [ivf8, h]})
     q = list(embeddings.limit(1).collect()[0]["embedding"])
     out = pl.plan({"query": {"nearest": q}, "limit": 10,
                    "params": {"quantization": {"oversampling": 6.0}}})
@@ -144,10 +143,10 @@ def test_planner_composes_when_both_registered(embeddings, ivf8):
     assert len(got) == 10
     assert pl.last_plan_info.get("quant_ivf_leaves") == 1
     # the lazily composed handle is cached for subsequent plans
-    assert "embedding" in pl.quant_ivf_indexes
+    assert "quant_ivf" in pl.indexes["embedding"]
 
     # values match the operator-level composed search exactly
-    qih = pl.quant_ivf_indexes["embedding"]
+    qih = pl.indexes["embedding"]["quant_ivf"]
     want = _rows(quant_ivf_search(qih, q, k=10, metric="cosine",
                                   oversampling=6.0))
     assert got == want
@@ -261,7 +260,7 @@ def test_client_quantized_ivf_composed(spark, embeddings, tmp_path):
     assert [(p.id, round(p.score, 6)) for p in got.points] == \
         [(p.id, round(p.score, 6)) for p in exact.points]
     # and the client's planner really takes the COMPOSED route (the
-    # registered handle, no ivf_indexes entry needed)
+    # registered handle, no IVF handle needed)
     pl = c._planner(c._coll("qivf"), None)
     pl.plan({"query": {"nearest": q}, "limit": 5}).collect()
     assert pl.last_plan_info.get("quant_ivf_leaves") == 1
@@ -344,8 +343,7 @@ def test_query_batch_composed_quant_ivf(embeddings, ivf8, monkeypatch):
         {"query": {"nearest": q1}, "limit": 8, "score_threshold": 0.1},
     ]
     kw = dict(id_col="vec_id", vec_col="embedding",
-              quant_indexes={"embedding": h},
-              quant_ivf_indexes={"embedding": qih})
+              indexes={"embedding": [h, qih]})
     want = [query_batch(embeddings, [dict(r)], **kw).collect()
             for r in reqs]
     calls = []
@@ -387,8 +385,7 @@ def test_query_batch_composed_all_kinds(embeddings, ivf8, config, metric):
          "params": {"quantization": {"oversampling": 8.0}}},
     ]
     kw = dict(id_col="vec_id", vec_col="embedding", metric=metric,
-              quant_indexes={"embedding": h},
-              quant_ivf_indexes={"embedding": qih})
+              indexes={"embedding": [h, qih]})
     want = [query_batch(embeddings, [dict(r)], **kw).collect()
             for r in reqs]
     got = query_batch(embeddings, [dict(r) for r in reqs], **kw).collect()
@@ -428,9 +425,8 @@ def test_quant_ivf_binary_asym_composes(embeddings, ivf8):
             {"query": {"nearest": q2}, "limit": 4,
              "params": {"quantization": {"rescore": False}}}]
     kw = dict(id_col="vec_id", vec_col="embedding", metric="cosine",
-              quant_indexes={"embedding": h},
-              quant_ivf_indexes={"embedding": compose_quant_ivf(
-                  h, ivf8, nprobe=3)})
+              indexes={"embedding": [h, compose_quant_ivf(
+                  h, ivf8, nprobe=3)]})
     want_b = [query_batch(embeddings, [dict(r)], **kw).collect()
               for r in reqs]
     got_b = query_batch(embeddings, [dict(r) for r in reqs],

@@ -467,7 +467,7 @@ def test_planner_routes_quantized(embeddings):
                     id_col="vec_id")
     pl = QueryPlanner(embeddings, id_col="vec_id",
                       default_vec_col="embedding",
-                      quant_indexes={"embedding": h})
+                      indexes={"embedding": [h]})
     q = list(embeddings.limit(1).collect()[0]["embedding"])
     exact = _exact_ids(embeddings, q, "cosine", 10)
 
@@ -479,7 +479,7 @@ def test_planner_routes_quantized(embeddings):
     for params in ({"quantization": {"ignore": True}}, {"exact": True}):
         pl2 = QueryPlanner(embeddings, id_col="vec_id",
                            default_vec_col="embedding",
-                           quant_indexes={"embedding": h})
+                           indexes={"embedding": [h]})
         got2 = [r["vec_id"] for r in pl2.plan(
             {"query": {"nearest": q}, "limit": 10,
              "params": params}).collect()]
@@ -497,7 +497,7 @@ def test_planner_quantized_offset_threshold_filter(embeddings):
                     id_col="vec_id")
     pl = QueryPlanner(embeddings, id_col="vec_id",
                       default_vec_col="embedding",
-                      quant_indexes={"embedding": h})
+                      indexes={"embedding": [h]})
     q = list(embeddings.limit(1).collect()[0]["embedding"])
     base = knn(embeddings, q, metric="cosine", k=12, vec_col="embedding",
                id_col="vec_id", select=["vec_id", "score"]).collect()
@@ -636,7 +636,7 @@ def test_quant_leaves_not_fused(embeddings):
     pl = QueryPlanner(embeddings, id_col="vec_id",
                       default_vec_col="embedding",
                       fuse_min_bytes=0,  # force fusion-eligible size
-                      quant_indexes={"embedding": h})
+                      indexes={"embedding": [h]})
     out = pl.plan(req)
     assert out.count() > 0
     assert pl.last_plan_info["fused_legs"] == 0
@@ -669,7 +669,7 @@ def test_query_batch_groups_quant_through_codes(embeddings):
         {"query": {"nearest": q1}, "limit": 8, "score_threshold": 0.1},
     ]
     kw = dict(id_col="vec_id", vec_col="embedding",
-              quant_indexes={"embedding": h})
+              indexes={"embedding": [h]})
     want = [query_batch(embeddings, [dict(r)], **kw).collect()
             for r in reqs]
 
@@ -713,7 +713,7 @@ def test_query_batch_groups_pq_through_codes(embeddings):
          "params": {"quantization": {"oversampling": 8.0}}},
     ]
     kw = dict(id_col="vec_id", vec_col="embedding",
-              quant_indexes={"embedding": h})
+              indexes={"embedding": [h]})
     want = [query_batch(embeddings, [dict(r)], **kw).collect()
             for r in reqs]
     calls = []
@@ -775,7 +775,7 @@ def test_quant_threshold_with_rescore_false_thresholds_coarse(embeddings):
     q = list(embeddings.limit(1).collect()[0]["embedding"])
     pl = QueryPlanner(embeddings, id_col="vec_id",
                       default_vec_col="embedding", metric="cosine",
-                      quant_indexes={"embedding": h})
+                      indexes={"embedding": [h]})
     base = pl.plan({"query": {"nearest": q}, "limit": 10,
                     "params": {"quantization": {"rescore": False}}})
     rows = [(r["vec_id"], r["score"]) for r in base.collect()]
@@ -799,7 +799,7 @@ def test_quant_threshold_rescore_false_binary_direction(embeddings):
     q = list(embeddings.limit(1).collect()[0]["embedding"])
     pl = QueryPlanner(embeddings, id_col="vec_id",
                       default_vec_col="embedding", metric="euclid",
-                      quant_indexes={"embedding": h})
+                      indexes={"embedding": [h]})
     base = pl.plan({"query": {"nearest": q}, "limit": 10,
                     "params": {"quantization": {"rescore": False}}})
     rows = [(r["vec_id"], r["score"]) for r in base.collect()]
@@ -822,7 +822,7 @@ def _batch_vs_single(embeddings, config, reqs, metric="cosine"):
     # exact-vs-quantized crossover (quantize.QUANT_FULL_SCAN_THRESHOLD)
     h.full_scan_threshold = 0
     kw = dict(id_col="vec_id", vec_col="embedding", metric=metric,
-              quant_indexes={"embedding": h})
+              indexes={"embedding": [h]})
     want = [query_batch(embeddings, [dict(r)], **kw).collect()
             for r in reqs]
     calls = []
@@ -859,6 +859,17 @@ def test_query_batch_groups_bq_through_codes(embeddings):
         {"query": {"nearest": q1}, "limit": 8, "score_threshold": 10.0,
          "params": {"quantization": {"rescore": False}}},
     ])
+
+
+def test_query_batch_null_oversampling_matches_single(embeddings):
+    """``quantization.oversampling: null`` falls back to the handle's
+    default in a batch group exactly as in the single-request leaf
+    (quant_search) — the batch group used to raise TypeError on it."""
+    rows = embeddings.limit(2).collect()
+    _batch_vs_single(embeddings, {"scalar": {}}, [
+        {"query": {"nearest": list(r["embedding"])}, "limit": 5,
+         "params": {"quantization": {"oversampling": None}}}
+        for r in rows])
 
 
 @pytest.mark.parametrize("metric", ["cosine", "euclid", "manhattan"])
@@ -1065,7 +1076,7 @@ def test_planner_routes_recommend_avg_through_quant(embeddings):
     p1, p2 = (list(r["embedding"]) for r in rows)
     pl = QueryPlanner(embeddings, id_col="vec_id",
                       default_vec_col="embedding",
-                      quant_indexes={"embedding": h})
+                      indexes={"embedding": [h]})
     got = pl.plan({"query": {"recommend": {"positive": [p1, p2]}},
                    "limit": 10}).collect()
     assert pl.last_plan_info.get("quant_leaves") == 1
@@ -1078,7 +1089,7 @@ def test_planner_routes_recommend_avg_through_quant(embeddings):
     # id-referenced: the examples never appear in the output
     pl2 = QueryPlanner(embeddings, id_col="vec_id",
                        default_vec_col="embedding",
-                       quant_indexes={"embedding": h})
+                       indexes={"embedding": [h]})
     ids = [rows[0]["vec_id"], rows[1]["vec_id"]]
     got2 = pl2.plan({"query": {"recommend": {
         "positive": [{"id": ids[0]}, {"id": ids[1]}]}},
@@ -1089,7 +1100,7 @@ def test_planner_routes_recommend_avg_through_quant(embeddings):
     # best_score keeps its dedicated multi-target scorer
     pl3 = QueryPlanner(embeddings, id_col="vec_id",
                        default_vec_col="embedding",
-                       quant_indexes={"embedding": h})
+                       indexes={"embedding": [h]})
     got3 = pl3.plan({"query": {"recommend": {
         "positive": [p1], "negative": [p2],
         "strategy": "best_score"}}, "limit": 5}).collect()
@@ -1114,7 +1125,7 @@ def test_query_batch_fuses_literal_avg_recommends(embeddings):
          "limit": 5},
     ]
     kw = dict(id_col="vec_id", vec_col="embedding", metric="cosine",
-              quant_indexes={"embedding": h})
+              indexes={"embedding": [h]})
     want = [query_batch(embeddings, [dict(r)], **kw).collect()
             for r in reqs]
     from qdrant_spark.operators import knn as K
@@ -1159,7 +1170,7 @@ def test_quant_crossover_single_leaf(embeddings):
                     id_col="vec_id")  # default threshold
     pl = QueryPlanner(embeddings, id_col="vec_id",
                       default_vec_col="embedding",
-                      quant_indexes={"embedding": h})
+                      indexes={"embedding": [h]})
     got = [r["vec_id"]
            for r in pl.plan({"query": {"nearest": q}, "limit": 10}).collect()]
     assert got == exact
@@ -1171,7 +1182,7 @@ def test_quant_crossover_single_leaf(embeddings):
                      vec_col="embedding", id_col="vec_id")
     pl2 = QueryPlanner(embeddings, id_col="vec_id",
                        default_vec_col="embedding",
-                       quant_indexes={"embedding": h2})
+                       indexes={"embedding": [h2]})
     got2 = [r["vec_id"] for r in
             pl2.plan({"query": {"nearest": q}, "limit": 10}).collect()]
     assert got2 == exact
@@ -1193,24 +1204,24 @@ def test_quant_crossover_batch_falls_back_to_fused_exact(embeddings):
     qs = [list(r["embedding"]) for r in rows]
     reqs = [{"query": {"nearest": q}, "limit": 5} for q in qs]
     kw = dict(id_col="vec_id", vec_col="embedding",
-              quant_indexes={"embedding": h}, fuse_min_bytes=0)
+              indexes={"embedding": [h]}, fuse_min_bytes=0)
 
     from qdrant_spark import query as QM
 
     seen = {}
-    orig_qb = QM._batch_quant_indexed
+    orig_qb = QM._fuse_batch
 
     def spy(planner, requests, outs):
         orig_qb(planner, requests, outs)
         seen["info"] = dict(planner.last_plan_info)
         seen["planner"] = planner
 
-    QM._batch_quant_indexed = spy
+    QM._fuse_batch = spy
     try:
         got = query_batch(embeddings, [dict(r) for r in reqs],
                           **kw).collect()
     finally:
-        QM._batch_quant_indexed = orig_qb
+        QM._fuse_batch = orig_qb
     info = seen["planner"].last_plan_info
     assert not info.get("quant_batch_groups")   # coarse grouping stood down
     assert info.get("fused_legs") == 3          # exact fused group took it
@@ -1238,20 +1249,19 @@ def test_quant_crossover_batch_composed_falls_back(embeddings, spark):
     qs = [list(r["embedding"]) for r in rows]
     reqs = [{"query": {"nearest": q}, "limit": 5} for q in qs]
     seen = {}
-    orig_qb = QM._batch_quant_ivf_indexed
+    orig_qb = QM._fuse_batch
 
     def spy(planner, requests, outs):
         orig_qb(planner, requests, outs)
         seen["planner"] = planner
 
-    QM._batch_quant_ivf_indexed = spy
+    QM._fuse_batch = spy
     try:
         got = query_batch(
             embeddings, reqs, id_col="vec_id", vec_col="embedding",
-            quant_indexes={"embedding": h},
-            quant_ivf_indexes={"embedding": qih}).collect()
+            indexes={"embedding": [h, qih]}).collect()
     finally:
-        QM._batch_quant_ivf_indexed = orig_qb
+        QM._fuse_batch = orig_qb
     assert not seen["planner"].last_plan_info.get("quant_ivf_batch_groups")
     for i, q in enumerate(qs):
         exp = _exact_ids(embeddings, q, "cosine", 5)
@@ -1320,7 +1330,7 @@ def test_quant_crossover_batch_threshold_sits_higher(embeddings):
 
     pl = QueryPlanner(embeddings, id_col="vec_id",
                       default_vec_col="embedding",
-                      quant_indexes={"embedding": h})
+                      indexes={"embedding": [h]})
     pl.plan({"query": {"nearest": q}, "limit": 10}).collect()
     assert pl.last_plan_info.get("quant_leaves") == 1  # single: quantized
 
@@ -1328,19 +1338,19 @@ def test_quant_crossover_batch_threshold_sits_higher(embeddings):
     reqs = [{"query": {"nearest": list(r["embedding"])}, "limit": 5}
             for r in rows]
     seen = {}
-    orig = QM._batch_quant_indexed
+    orig = QM._fuse_batch
 
     def spy(planner, requests, outs):
         orig(planner, requests, outs)
         seen["planner"] = planner
 
-    QM._batch_quant_indexed = spy
+    QM._fuse_batch = spy
     try:
         got = query_batch(embeddings, reqs, id_col="vec_id",
                           vec_col="embedding", fuse_min_bytes=0,
-                          quant_indexes={"embedding": h}).collect()
+                          indexes={"embedding": [h]}).collect()
     finally:
-        QM._batch_quant_indexed = orig
+        QM._fuse_batch = orig
     info = seen["planner"].last_plan_info
     assert not info.get("quant_batch_groups")
     assert info.get("fused_legs") == 2  # batch: exact fused matmul group

@@ -583,7 +583,8 @@ def test_planner_params_exact_opt_out(embeddings):
     exact_p = QueryPlanner(embeddings, id_col="vec_id",
                            default_vec_col="embedding")
     accel = QueryPlanner(embeddings, id_col="vec_id",
-                         default_vec_col="embedding", ivf_index=bad,
+                         default_vec_col="embedding",
+                         indexes={"embedding": [bad]},
                          full_scan_threshold=1, fuse_min_bytes=0)
     req = {"query": {"nearest": q0}, "using": "embedding", "limit": 5}
     assert accel.plan(req).count() == 0  # corrupt index, index route

@@ -507,7 +507,7 @@ def test_planner_routes_sparse_leaf_through_index(spark):
                                  "values": [1.0, 2.0]}}, "limit": 8}
     plain = QueryPlanner(df, id_col="id")
     routed = QueryPlanner(df, id_col="id",
-                          sparse_indexes={"vec": idx})
+                          indexes={"vec": [idx]})
     want = [(r["id"], round(r["score"], 9)) for r in plain.plan(req).collect()]
     got = [(r["id"], round(r["score"], 9)) for r in routed.plan(req).collect()]
     assert got == want
@@ -576,7 +576,7 @@ def test_query_batch_groups_sparse_through_index(spark):
         lambda *a, **k: calls.append(1) or orig(*a, **k)
     try:
         got = query_batch(df, [dict(r) for r in reqs], id_col="id",
-                          sparse_indexes={"vec": idx}).collect()
+                          indexes={"vec": [idx]}).collect()
     finally:
         SP.sparse_knn_index_batch = orig
     assert len(calls) == 1  # one batched index scan for all 3 requests
@@ -611,7 +611,7 @@ def test_query_batch_sparse_group_offset_threshold(spark):
     ]
     # single-request plans through the SAME index routing = ground truth
     want = query_batch(df, [dict(reqs[0])], id_col="id",
-                       sparse_indexes={"vec": idx}).collect()
+                       indexes={"vec": [idx]}).collect()
     assert sorted((r["id"], r["score"]) for r in want) == \
         [(14, 14.0), (15, 15.0), (16, 16.0)]  # ranks 5..7 of 20..1
 
@@ -621,7 +621,7 @@ def test_query_batch_sparse_group_offset_threshold(spark):
         lambda *a, **k: calls.append(k.get("k") or a[-1]) or orig(*a, **k)
     try:
         got = query_batch(df, [dict(r) for r in reqs], id_col="id",
-                          sparse_indexes={"vec": idx}).collect()
+                          indexes={"vec": [idx]}).collect()
     finally:
         SP.sparse_knn_index_batch = orig
     assert len(calls) == 1  # still ONE batched scan for all 3 requests
@@ -650,8 +650,8 @@ def test_planner_sparse_leaf_score_threshold(spark):
            "limit": 8, "score_threshold": 7.0}
     for pl in (QueryPlanner(df, id_col="id"),
                QueryPlanner(df, id_col="id",
-                            sparse_indexes={
-                                "vec": build_sparse_index(df, id_col="id")})):
+                            indexes={"vec": [
+                                build_sparse_index(df, id_col="id")]})):
         got = sorted((r["id"], r["score"]) for r in pl.plan(req).collect())
         # strict threshold (check_threshold, types.rs:364-369): 7.0 excluded
         assert got == [(8, 8.0), (9, 9.0), (10, 10.0)]
@@ -694,8 +694,8 @@ def test_planner_sparse_leaf_applies_offset(spark):
            "limit": 3, "offset": 2}
     for pl in (QueryPlanner(df, id_col="id"),
                QueryPlanner(df, id_col="id",
-                            sparse_indexes={
-                                "vec": build_sparse_index(df, id_col="id")})):
+                            indexes={"vec": [
+                                build_sparse_index(df, id_col="id")]})):
         got = [(r["id"], r["score"]) for r in pl.plan(req).collect()]
         assert got == [(8, 8.0), (7, 7.0), (6, 6.0)]
 
