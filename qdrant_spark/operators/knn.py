@@ -390,8 +390,10 @@ def arrow_topk(
 ) -> DataFrame:
     """Batch top-k over ``sel`` (id first) through :func:`topk_kernel`:
     at most partitions × Q × k candidate rows reach :func:`ranked`, which
-    returns (qid, id, score, rank <= k). With ``dedup_ids``, copies from
-    different partitions meet and collapse before the window."""
+    returns (qid, id, score, rank <= k). With one query the finish is a
+    top-k sort instead (``TakeOrderedAndProject``, no shuffle), and
+    ``rank`` numbers its <= k rows. With ``dedup_ids``, copies from
+    different partitions meet and collapse before the finish."""
     out_schema = T.StructType([
         T.StructField(qid_col, qid_type),
         T.StructField(id_col, sel.schema[id_col].dataType),
@@ -405,6 +407,13 @@ def arrow_topk(
         scored = scored.dropDuplicates([qid_col, id_col])
     if score_threshold is not None:
         scored = scored.filter(_threshold_cond(metric, score_threshold))
+    if len(qids) == 1:
+        # the limit's single-partition output already satisfies the
+        # per-qid window, so ``rank`` costs no exchange
+        order = score_order(metric, id_col=id_col)
+        w = Window.partitionBy(qid_col).orderBy(*order)
+        return scored.orderBy(*order).limit(k) \
+            .withColumn("rank", F.row_number().over(w))
     return ranked(scored, metric, k, qid_col=qid_col, id_col=id_col)
 
 

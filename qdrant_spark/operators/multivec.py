@@ -679,7 +679,7 @@ def build_maxsim_sq(
 ) -> MaxSimSq:
     """Fit per-dimension clip bounds on a seeded TOKEN sample (same
     quantile scheme as quantize.build_sq), then encode every token with
-    one codegen'd nested transform — no python workers, no training
+    one nested transform — no python workers, no training
     state beyond (lo, hi)."""
     from qdrant_spark.operators.quantize import _sq_code_expr
 
@@ -710,94 +710,18 @@ def build_maxsim_sq(
 
 
 def persist_maxsim_sq(index: MaxSimSq, path: str) -> MaxSimSq:
-    """Materialize the narrow (id, __msq) table — the coarse scan then
-    reads 1 B/dim parquet (the multivector twin of quantize.persist_quant
-    split storage)."""
-    from dataclasses import replace
-
-    index.codes.write.mode("overwrite").parquet(path)
-    spark = index.codes.sparkSession
-    return replace(index, codes=spark.read.parquet(path))
+    """Scalar-kind alias of :func:`persist_maxsim_quant`."""
+    return persist_maxsim_quant(index, path)
 
 
-def maxsim_knn_sq(
-    index: MaxSimSq,
-    query_multivector: Sequence[Sequence[float]],
-    *,
-    k: int = 10,
-    oversampling: float = 4.0,
-    metric: str = "dot",
-    rescore: bool = True,
-) -> DataFrame:
-    """Two-stage MaxSim: coarse Arrow scan over the int8 token codes
-    (decode is one affine on the flat buffer, then the same one-BLAS-call
-    segment-max scoring as maxsim_knn) keeps ``ceil(k*oversampling)``
-    docs; the exact MaxSim rescore touches only those docs' float tokens
-    via a broadcast semi-join — QuantizationSearchParams semantics
-    applied to multivectors (the reference's quantized multivector
-    storage + raw rescore)."""
-    if metric not in ("dot", "cosine"):
-        raise ValueError("maxsim supports dot/cosine")
-    Qm = np.asarray([list(t) for t in query_multivector], dtype=np.float64)
-    if metric == "cosine":
-        nq = np.linalg.norm(Qm, axis=1, keepdims=True)
-        nq[nq == 0] = 1.0
-        Qm = Qm / nq
-    lo = index.lo
-    scale = (index.hi - index.lo) / 255.0
-    dim = len(lo)
-    sc = index.codes.sparkSession.sparkContext
-    bq = sc.broadcast((Qm, lo, scale))
-
-    sel = index.codes.select(index.id_col, "__msq")
-    id_col = index.id_col
-    out_schema = T.StructType([
-        T.StructField(id_col, sel.schema[id_col].dataType),
-        T.StructField("score", T.DoubleType()),
-    ])
-
-    def score_batches(batches: Iterator) -> Iterator:
-        import pyarrow as pa
-
-        Q, lo_, scale_ = bq.value
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            ids = batch.column(0).to_numpy(zero_copy_only=False)
-            mv = batch.column(1)
-            if isinstance(mv, pa.ChunkedArray):
-                mv = mv.combine_chunks()
-            inner = mv.flatten()                   # list<int8> per token
-            outer_off = mv.offsets.to_numpy(zero_copy_only=False)
-            tok_counts = np.diff(outer_off)
-            vals = inner.flatten().to_numpy(zero_copy_only=False)
-            Tm = vals.reshape(-1, dim).astype(np.float64)
-            Tm = (Tm + 128.0) * scale_ + lo_       # affine decode
-            if metric == "cosine":
-                norms = np.linalg.norm(Tm, axis=1, keepdims=True)
-                norms[norms == 0] = 1.0
-                Tm = Tm / norms
-            S = Tm @ Q.T
-            starts = outer_off[:-1] - outer_off[0]
-            assert (tok_counts > 0).all()  # empties filtered at build
-            M = np.maximum.reduceat(S, starts, axis=0)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids),
-                 pa.array(M.sum(axis=1), type=pa.float64())],
-                names=[id_col, "score"],
-            )
-
-    scored = sel.mapInArrow(score_batches, out_schema)
-    n_coarse = max(k, int(np.ceil(k * oversampling)))
-    coarse = scored.orderBy(*score_order(metric, id_col=id_col)) \
-        .limit(n_coarse)
-    if not rescore:
-        return coarse.limit(k)
-    cand_ids = F.broadcast(coarse.select(id_col))
-    cand = index.points.join(cand_ids, id_col, "left_semi")
-    return maxsim_knn(cand, query_multivector, k=k, metric=metric,
-                      mv_col=index.mv_col, id_col=id_col)
+def maxsim_knn_sq(index: MaxSimSq, query_multivector, *, k: int = 10,
+                  oversampling: float = 4.0, metric: str = "dot",
+                  rescore: bool = True) -> DataFrame:
+    """Scalar-kind alias of :func:`maxsim_knn_quant` (int8 affine
+    decode coarse stage + exact rescore)."""
+    return maxsim_knn_quant(index, query_multivector, k=k,
+                            oversampling=oversampling, metric=metric,
+                            rescore=rescore)
 
 
 @dataclass
@@ -842,8 +766,8 @@ def build_maxsim_bq(
 ) -> MaxSimBq:
     """Fit per-dimension token mean/stddev in ONE aggregation pass over
     the exploded tokens (the same statistics build_bq fits for dense
-    rows), then bit-encode every token with one codegen'd nested
-    transform — no python workers, no training state beyond
+    rows), then bit-encode every token with one nested transform — no
+    python workers, no training state beyond
     (means, stds)."""
     from qdrant_spark.operators.quantize import (
         BQ_ENCODINGS, BQ_QUERY_ENCODINGS, _bq_code_expr,
@@ -887,98 +811,21 @@ def build_maxsim_bq(
 
 
 def persist_maxsim_bq(index: MaxSimBq, path: str) -> MaxSimBq:
-    """Materialize the narrow (id, __mbq) table — the coarse scan then
-    reads 1 bit/dim parquet (persist_quant split storage for
-    multivector binary codes)."""
-    from dataclasses import replace
-
-    index.codes.write.mode("overwrite").parquet(path)
-    spark = index.codes.sparkSession
-    return replace(index, codes=spark.read.parquet(path))
+    """Binary-kind alias of :func:`persist_maxsim_quant`."""
+    return persist_maxsim_quant(index, path)
 
 
-def maxsim_knn_bq(
-    index: MaxSimBq,
-    query_multivector: Sequence[Sequence[float]],
-    *,
-    k: int = 10,
-    oversampling: float = 4.0,
-    metric: str = "dot",
-    rescore: bool = True,
-) -> DataFrame:
-    """Two-stage MaxSim over binary token codes: the coarse Arrow scan
-    unpacks each stored token's packed words to a ±1 matrix and scores
-    MaxSim against the same-as-storage ±1 query tokens with the one-
-    BLAS-call segment-max kernel (the per-token-pair dot IS
-    ext_dim - 2*hamming, the dense bq_search quantity); the exact MaxSim
-    rescore touches only the oversampled candidates' float tokens. Like
-    dense BQ, the coarse rank is metric-blind (±1-dot, larger better) —
-    the rescore applies the requested metric."""
-    from qdrant_spark.operators.quantize import _bq_ext_dim, bq_bits_np
-
-    if metric not in ("dot", "cosine"):
-        raise ValueError("maxsim supports dot/cosine")
-    Qpm = np.asarray(
-        [bq_bits_np(list(t), index.means, index.stds, index.encoding)
-         for t in query_multivector], dtype=np.float64) * 2.0 - 1.0
-    ext_dim = _bq_ext_dim(len(index.means), index.encoding)
-    sc = index.codes.sparkSession.sparkContext
-    bqv = sc.broadcast(Qpm)
-
-    sel = index.codes.select(index.id_col, "__mbq")
-    id_col = index.id_col
-    out_schema = T.StructType([
-        T.StructField(id_col, sel.schema[id_col].dataType),
-        T.StructField("score", T.DoubleType()),
-    ])
-
-    def score_batches(batches: Iterator) -> Iterator:
-        import pyarrow as pa
-
-        Q = bqv.value
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            ids = batch.column(0).to_numpy(zero_copy_only=False)
-            mv = batch.column(1)
-            if isinstance(mv, pa.ChunkedArray):
-                mv = mv.combine_chunks()
-            inner = mv.flatten()                  # list<int64> per token
-            outer_off = mv.offsets.to_numpy(zero_copy_only=False)
-            tok_counts = np.diff(outer_off)
-            words = inner.flatten().to_numpy(zero_copy_only=False) \
-                .astype(np.int64).reshape(-1, (ext_dim + 63) // 64) \
-                .view(np.uint64)
-            pm = np.empty((words.shape[0], ext_dim), dtype=np.float64)
-            col = 0
-            for w in range(words.shape[1]):
-                nb = min(64, ext_dim - col)
-                sh = np.arange(nb - 1, -1, -1, dtype=np.uint64)
-                pm[:, col:col + nb] = \
-                    ((words[:, w:w + 1] >> sh) & np.uint64(1))
-                col += nb
-            pm = pm * 2.0 - 1.0
-            S = pm @ Q.T                          # ext_dim - 2*hamming
-            starts = outer_off[:-1] - outer_off[0]
-            assert (tok_counts > 0).all()  # empties filtered at build
-            M = np.maximum.reduceat(S, starts, axis=0)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids),
-                 pa.array(M.sum(axis=1), type=pa.float64())],
-                names=[id_col, "score"],
-            )
-
-    scored = sel.mapInArrow(score_batches, out_schema)
-    n_coarse = max(k, int(np.ceil(k * oversampling)))
-    coarse = scored.orderBy(*score_order("dot", id_col=id_col)) \
-        .limit(n_coarse)
-    if not rescore:
-        return coarse.limit(k)
-    cand_ids = F.broadcast(coarse.select(id_col))
-    cand = index.points.join(cand_ids, id_col, "left_semi")
-    return maxsim_knn(cand, query_multivector, k=k, metric=metric,
-                      mv_col=index.mv_col, id_col=id_col)
+def maxsim_knn_bq(index: MaxSimBq, query_multivector, *, k: int = 10,
+                  oversampling: float = 4.0, metric: str = "dot",
+                  rescore: bool = True) -> DataFrame:
+    """Binary-kind alias of :func:`maxsim_knn_quant`: the coarse rank is
+    metric-blind like dense BQ (the ±1-dot ``ext_dim - 2*hamming`` for
+    same-as-storage query tokens, the fractional-XOR quantity for the
+    index's asymmetric ``query_encoding``); the rescore applies the
+    requested metric."""
+    return maxsim_knn_quant(index, query_multivector, k=k,
+                            oversampling=oversampling, metric=metric,
+                            rescore=rescore)
 
 
 @dataclass
@@ -1215,8 +1062,9 @@ def _mtq_encode_columns(base: DataFrame, mv_col: str, id_col: str, *,
 
 def persist_maxsim_quant(index, path: str):
     """Materialize the narrow token-code table of ANY quantized
-    multivector index kind (the split-storage layout of
-    persist_maxsim_sq, generalized)."""
+    multivector index kind — the coarse scan then reads the persisted
+    (id, code...) parquet (the multivector twin of
+    quantize.persist_quant split storage)."""
     from dataclasses import replace
 
     index.codes.write.mode("overwrite").parquet(path)
@@ -1228,31 +1076,31 @@ def _mv_quant_prep(index, queries: Sequence[Sequence[Sequence[float]]],
                    metric: str):
     """Per-kind prep shared by the single-request and batched coarse
     scans over quantized token storage: returns ``(code_cols, Qtoks,
-    decode, offsets)`` where ``Qtoks`` holds one per-query token matrix
-    ALREADY in scoring space, ``decode(flats)`` maps the first-level-
-    flattened Arrow code arrays of one batch to the float token matrix
-    in the same space (cosine-normalized when the kind scores the
-    requested metric; binary stays metric-blind ±1-dot like the dense
-    coarse stage), ``offsets`` is a per-query additive constant the
-    kernel applies AFTER the MaxSim reduction, and ``scales`` is a
-    per-query multiplicative constant applied last —
-    ``(maxsim + offset) * scale``. Both are identity (0 / 1) except for
-    the asymmetric binary encoding, whose per-pair quantity is affine
-    in the bits: there the dot, the max and the token sum all run over
-    INTEGER-valued float64 (every partial sum is an exact integer, so
-    the result is independent of accumulation order — BLAS blocking,
-    reduceat order, CPU kernel choice), and the single ``1/ranges``
-    division happens once at the end. The float path computed the same
-    rational with a per-dim division first, which made equal integer
-    totals differ in the last ulp by summation order — splitting exact
-    score ties (endemic for integer coarse quantities) differently
-    than the oracle's id-asc tie-break at the top-k cut. The per-kind
-    quantities are exactly the dense scorers'
+    decode, offsets, scales)`` where ``Qtoks`` holds one per-query token
+    matrix ALREADY in scoring space, ``decode(flats)`` maps the first-
+    level-flattened Arrow code arrays of one batch to the float token
+    matrix in the same space through the kind's quantize decoder
+    (cosine-normalized when the kind scores the requested metric; binary
+    stays metric-blind ±1-dot like the dense coarse stage), ``offsets``
+    is a per-query additive constant the kernel applies AFTER the MaxSim
+    reduction, and ``scales`` is a per-query multiplicative constant
+    applied last — ``(maxsim + offset) * scale``. Both are identity
+    (0 / 1) except for the asymmetric binary encoding, whose per-pair
+    quantity is affine in the bits: there the dot, the max and the token
+    sum all run over INTEGER-valued float64 (every partial sum is an
+    exact integer, so the result is independent of accumulation order —
+    BLAS blocking, reduceat order, CPU kernel choice), and the single
+    ``1/ranges`` division happens once at the end. The float path
+    computed the same rational with a per-dim division first, which made
+    equal integer totals differ in the last ulp by summation order —
+    splitting exact score ties (endemic for integer coarse quantities)
+    differently than the oracle's id-asc tie-break at the top-k cut. The
+    per-kind quantities are exactly the dense scorers'
     (quantize.sq/pq/bq/tq_search) applied token-wise."""
+    from qdrant_spark.operators.knn import arrow_matrix
     from qdrant_spark.operators.quantize import (
-        _BQ_QUERY_BITS, _TQ_CENTROIDS, _bq_ext_dim, _tq_rotate,
-        _tq_rotation_params, _tq_unpack, bq_bits_np,
-        bq_scalar_query_codes,
+        _BQ_QUERY_BITS, _bq_ext_dim, _tq_scan, bq_bits_np, bq_decode,
+        bq_scalar_query_codes, pq_decode, sq_decode,
     )
 
     cosine = metric == "cosine"
@@ -1264,9 +1112,11 @@ def _mv_quant_prep(index, queries: Sequence[Sequence[Sequence[float]]],
         n[n == 0] = 1.0
         return M / n
 
+    def _tokens(flat):
+        return arrow_matrix(flat, len(flat))
+
     if isinstance(index, MaxSimBq):
         ext_dim = _bq_ext_dim(len(index.means), index.encoding)
-        nwords = (ext_dim + 63) // 64
         asym = index.query_encoding in _BQ_QUERY_BITS
         if asym:
             # asymmetric per-token encoding (BinaryQuantization
@@ -1305,82 +1155,45 @@ def _mv_quant_prep(index, queries: Sequence[Sequence[Sequence[float]]],
             scales = ones
 
         def decode(flats):
-            words = flats[0].flatten().to_numpy(zero_copy_only=False) \
-                .astype(np.int64).reshape(-1, nwords).view(np.uint64)
-            pm = np.empty((words.shape[0], ext_dim), dtype=np.float64)
-            col = 0
-            for w in range(words.shape[1]):
-                nb = min(64, ext_dim - col)
-                sh = np.arange(nb - 1, -1, -1, dtype=np.uint64)
-                pm[:, col:col + nb] = \
-                    ((words[:, w:w + 1] >> sh) & np.uint64(1))
-                col += nb
-            return pm if asym else pm * 2.0 - 1.0
+            bits = bq_decode(_tokens(flats[0]), ext_dim)
+            return bits if asym else bits * 2.0 - 1.0
 
         return ["__mbq"], Qtoks, decode, offsets, scales
 
-    if isinstance(index, MaxSimPq):
-        cb = index.codebooks
-        M_, _, dsub = cb.shape
-        dim = M_ * dsub
-        Qtoks = [np.asarray([list(t) for t in q], dtype=np.float64)
-                 for q in queries]
-        if cosine:
-            Qtoks = [_norm_rows(Q) for Q in Qtoks]
-
-        def decode(flats):
-            codes = flats[0].flatten().to_numpy(zero_copy_only=False) \
-                .astype(np.int16).reshape(-1, M_) + 128
-            Tm = np.empty((codes.shape[0], dim), dtype=np.float64)
-            for m in range(M_):
-                Tm[:, m * dsub:(m + 1) * dsub] = cb[m][codes[:, m]]
-            return _norm_rows(Tm) if cosine else Tm
-
-        return ["__mpq"], Qtoks, decode, zeros, ones
-
+    Qall = np.asarray([list(t) for q in queries for t in q],
+                      dtype=np.float64)
     if isinstance(index, MaxSimTq):
-        bpc = index.bits_per_code
-        centroids = _TQ_CENTROIDS[bpc]
-        pd_, dim_ = index.padded_dim, index.dim
-        params = _tq_rotation_params(pd_, index.seed)
-        Qtoks = []
-        for q in queries:
-            Qm = np.zeros((len(q), pd_), dtype=np.float64)
-            Qm[:, :dim_] = np.asarray([list(t) for t in q],
-                                      dtype=np.float64)
-            Qm = _tq_rotate(Qm, params)  # rotation preserves dots
-            Qtoks.append(_norm_rows(Qm) if cosine else Qm)
+        # renorm reconstruction in ROTATED space: rotation preserves dots,
+        # so the query tokens rotate once driver-side
+        tq_dec, Qall = _tq_scan(index, "dot", Qall)
 
         def decode(flats):
-            raw_objs = flats[0].to_numpy(zero_copy_only=False)
-            raw = np.frombuffer(b"".join(raw_objs), dtype=np.uint8) \
-                .reshape(len(raw_objs), -1)
-            idx = _tq_unpack(raw, bpc, pd_)
-            l2 = flats[1].to_numpy(zero_copy_only=False)
-            cn = np.maximum(flats[2].to_numpy(zero_copy_only=False), 1e-12)
-            # renorm reconstruction in ROTATED space: direction from the
-            # codebook, true token length from the stored l2 extra
-            Tm = centroids[idx] * (l2 / cn)[:, None]
-            return _norm_rows(Tm) if cosine else Tm
+            return tq_dec(*(f.to_numpy(zero_copy_only=False) for f in flats))
 
-        return ["__mtq", "__mtq_l2", "__mtq_cn"], Qtoks, decode, zeros, ones
+        code_cols = ["__mtq", "__mtq_l2", "__mtq_cn"]
+    elif isinstance(index, MaxSimPq):
+        cb = index.codebooks
 
-    # scalar (MaxSimSq)
-    lo = index.lo
-    scale = (index.hi - index.lo) / 255.0
-    dim = len(lo)
-    Qtoks = [np.asarray([list(t) for t in q], dtype=np.float64)
-             for q in queries]
+        def decode(flats):
+            return pq_decode(_tokens(flats[0]), cb)
+
+        code_cols = ["__mpq"]
+    else:  # MaxSimSq
+        lo, hi = index.lo, index.hi
+
+        def decode(flats):
+            return sq_decode(_tokens(flats[0]), lo, hi)
+
+        code_cols = ["__msq"]
+    Qtoks = np.split(Qall, np.cumsum([len(q) for q in queries])[:-1])
     if cosine:
         Qtoks = [_norm_rows(Q) for Q in Qtoks]
+        token_decode = decode
 
-    def decode(flats):
-        Tm = flats[0].flatten().to_numpy(zero_copy_only=False) \
-            .reshape(-1, dim).astype(np.float64)
-        Tm = (Tm + 128.0) * scale + lo
-        return _norm_rows(Tm) if cosine else Tm
+        def decode(flats):
+            return _norm_rows(token_decode(flats))
 
-    return ["__msq"], Qtoks, decode, zeros, ones
+    return code_cols, Qtoks, decode, zeros, ones
 
 
 def maxsim_knn_quant(

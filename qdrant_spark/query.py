@@ -1561,134 +1561,6 @@ def _local_result_df(spark, rows: list, schema) -> DataFrame:
     return df
 
 
-def _quant_scan_setup(qh, metric: str, Qraw):
-    """Per-kind shared-scan pieces for a batched quantized group: a
-    ``prep`` hook deriving the scan frame from the codes table (turbo
-    packs its three columns into one struct), the scanned column, the
-    Arrow decode hook producing the matrix whose ``scan_metric`` scoring
-    equals the kind's single-request coarse quantity, and the (possibly
-    re-encoded) query matrix. Scalar decodes the int8 affine; product
-    reconstructs x_hat (ADC decomposes exactly); binary unpacks words to
-    ±1 so the dot IS ``ext_dim - 2*hamming`` (the XOR scan's order and
-    rescore=False scale); turbo rebuilds the renormed rotated
-    reconstruction (manhattan un-rotates — the reference's L1 slow
-    path, mod.rs:110-112)."""
-    import numpy as np
-
-    idx = qh.index
-    Q = Qraw
-    scan_metric = metric
-    prep = lambda f: f  # noqa: E731
-    if qh.kind == "scalar":
-        lo, scale = idx.lo, (idx.hi - idx.lo) / 255.0
-
-        def dec(vec, n, lo=lo, scale=scale):
-            import pyarrow as pa
-
-            if isinstance(vec, pa.ChunkedArray):
-                vec = vec.combine_chunks()
-            flat = vec.flatten().to_numpy(zero_copy_only=False)
-            M = flat.reshape(n, len(lo)).astype(np.float64)
-            return (M + 128.0) * scale + lo
-
-        code_col = "__sq"
-    elif qh.kind == "product":
-        cb = idx.codebooks  # (M, K, dsub)
-
-        def dec(vec, n, cb=cb):
-            import pyarrow as pa
-
-            if isinstance(vec, pa.ChunkedArray):
-                vec = vec.combine_chunks()
-            flat = vec.flatten().to_numpy(zero_copy_only=False)
-            codes = (flat.reshape(n, cb.shape[0]).astype(np.int16)
-                     + 128)
-            return np.concatenate(
-                [cb[m][codes[:, m]] for m in range(cb.shape[0])],
-                axis=1)
-
-        code_col = "__pq"
-    elif qh.kind == "binary":
-        from qdrant_spark.operators.quantize import (
-            _BQ_QUERY_BITS, _bq_ext_dim, bq_query_bits,
-            bq_scalar_query_codes,
-        )
-
-        ext_dim = _bq_ext_dim(len(idx.means), idx.encoding)
-        if idx.query_encoding in _BQ_QUERY_BITS:
-            # asymmetric query encoding: with query rows (2q - R)/R the
-            # ±1-bit dot equals ext_dim - 2*xor/ranges — the single-
-            # request asym path's exact rescore=False scale
-            rows = []
-            for q in Qraw:
-                codes, ranges = bq_scalar_query_codes(idx, q)
-                rows.append((2.0 * codes - ranges) / ranges)
-            Q = np.asarray(rows, dtype=np.float64)
-        else:
-            Q = np.asarray([bq_query_bits(idx, q) for q in Qraw],
-                           dtype=np.float64) * 2.0 - 1.0
-        scan_metric = "dot"
-
-        def dec(vec, n, ext_dim=ext_dim):
-            import pyarrow as pa
-
-            if isinstance(vec, pa.ChunkedArray):
-                vec = vec.combine_chunks()
-            W = vec.flatten().to_numpy(zero_copy_only=False) \
-                .astype(np.int64).reshape(n, -1).view(np.uint64)
-            bits = np.empty((n, ext_dim), dtype=np.float64)
-            col = 0
-            for w in range(W.shape[1]):
-                nb = min(64, ext_dim - col)
-                sh = np.arange(nb - 1, -1, -1, dtype=np.uint64)
-                bits[:, col:col + nb] = \
-                    ((W[:, w:w + 1] >> sh) & np.uint64(1))
-                col += nb
-            return bits * 2.0 - 1.0
-
-        code_col = "__bq"
-    else:  # turbo
-        from qdrant_spark.operators.quantize import (
-            _TQ_CENTROIDS, _tq_rotate, _tq_rotation_params, _tq_unpack,
-            _tq_unrotate,
-        )
-
-        bpc = idx.bits_per_code
-        cents = _TQ_CENTROIDS[bpc]
-        pd_, dim_, seed_ = idx.padded_dim, idx.dim, idx.seed
-        params = _tq_rotation_params(pd_, seed_)
-        ecs, ecsh = idx.ec_scale, idx.ec_shift
-        if metric != "manhattan":
-            Qpad = np.zeros((len(Qraw), pd_), dtype=np.float64)
-            Qpad[:, :dim_] = Qraw
-            Q = _tq_rotate(Qpad, params)
-
-        def dec(vec, n, cents=cents, params=params):
-            import pyarrow as pa
-
-            if isinstance(vec, pa.ChunkedArray):
-                vec = vec.combine_chunks()
-            raw = np.frombuffer(
-                b"".join(vec.field("__tq").to_pylist()),
-                dtype=np.uint8).reshape(n, -1)
-            l2 = vec.field("__tq_l2").to_numpy(zero_copy_only=False)
-            cn = np.maximum(
-                vec.field("__tq_cn").to_numpy(zero_copy_only=False),
-                1e-12)
-            C = cents[_tq_unpack(raw, bpc, pd_)]
-            if ecs is not None:
-                C = C * ecs + ecsh
-            X = C * (l2 / cn)[:, None]
-            if metric == "manhattan":
-                return _tq_unrotate(X, params)[:, :dim_]
-            return X
-
-        prep = lambda f: f.withColumn(  # noqa: E731
-            "__tqz", F.struct("__tq", "__tq_l2", "__tq_cn"))
-        code_col = "__tqz"
-    return prep, code_col, dec, Q, scan_metric
-
-
 def _quant_params(req: dict[str, Any],
                   default_oversampling: float) -> tuple[bool, float]:
     """(rescore, oversampling) of a quantized leaf from its
@@ -1805,22 +1677,22 @@ def _fuse_quant(planner: "QueryPlanner", requests: list[dict[str, Any]],
                 outs: list) -> bool:
     """Dense legs on a quantized column — ALL FOUR kinds since r11: ONE
     coarse Arrow scan over the codes (all queries score per batch via the
-    block matmul, per-kind decode in :func:`_quant_scan_setup`) plus ONE
+    block matmul, per-kind decode in
+    :func:`~qdrant_spark.operators.quantize.quant_scan_setup`) plus ONE
     pair-scored rescore over the union of candidate floats. The
     reference's batch dispatch walks quantized storage once for the whole
     batch the same way (lib/segment/src/vector_storage/quantized/)."""
-    import numpy as np
-
     from qdrant_spark.operators.knn import _matmul_knn
+    from qdrant_spark.operators.quantize import quant_scan_setup
 
     (qh,) = handles
     ks, cs, rescores = _quant_widths(requests, idxs, qh)
     if len(idxs) * max(cs.values()) > planner.fused_collect_max:
         return False
     metric = planner.metric_for(vc)
-    Qraw = np.asarray(
-        [[float(x) for x in requests[i]["query"]["nearest"]] for i in idxs])
-    prep, code_col, dec, Q, scan_metric = _quant_scan_setup(qh, metric, Qraw)
+    prep, code_col, dec, Q, scan_metric = quant_scan_setup(
+        qh.kind, qh.index, metric,
+        [requests[i]["query"]["nearest"] for i in idxs])
     coarse = _matmul_knn(
         prep(qh.codes_frame()), None, metric=scan_metric,
         k=max(cs.values()),
@@ -1846,6 +1718,7 @@ def _fuse_quant_ivf(planner: "QueryPlanner", requests: list[dict[str, Any]],
     import numpy as np
 
     from qdrant_spark.operators import ann
+    from qdrant_spark.operators.quantize import quant_scan_setup
 
     (qih,) = handles
     qh = qih.handle
@@ -1853,9 +1726,11 @@ def _fuse_quant_ivf(planner: "QueryPlanner", requests: list[dict[str, Any]],
     if len(idxs) * max(cs.values()) > planner.fused_collect_max:
         return False
     metric = planner.metric_for(vc)
-    Qraw = np.asarray(
-        [[float(x) for x in requests[i]["query"]["nearest"]] for i in idxs])
-    prep, code_col, dec, Q, scan_metric = _quant_scan_setup(qh, metric, Qraw)
+    prep, code_col, dec, Q, scan_metric = quant_scan_setup(
+        qh.kind, qh.index, metric,
+        [requests[i]["query"]["nearest"] for i in idxs])
+    Qraw = np.asarray([requests[i]["query"]["nearest"] for i in idxs],
+                      dtype=np.float64)
     # per-query probes in RAW vector space (same argsort as the
     # single-request quant_ivf_search), masks keyed by cluster
     d = ((Qraw[:, None, :] - qih.centroids[None, :, :]) ** 2).sum(axis=2)

@@ -298,7 +298,7 @@ def live_maxsim_quant_index(sink: ParquetPointsSink, index):
     (None before the first commit): token codes AND float tokens live in
     the snapshot, so the coarse stage column-prunes to the code column
     and the rescore reads the floats from the same table. Pair with
-    maxsim_knn_sq / maxsim_knn_bq."""
+    maxsim_knn_quant."""
     from dataclasses import replace
 
     snap = sink.read()

@@ -88,14 +88,20 @@ def test_knn_batch(embeddings, emb_np, strategy, spark):
         assert [(v, pytest.approx(s, rel=1e-8)) for _, v, s in rows] == exp
 
 
-@pytest.mark.parametrize("path", ["matmul", "single_arrow", "ivf", "maxsim"])
+@pytest.mark.parametrize("path", ["matmul", "single_arrow", "ivf", "maxsim",
+                                  "sq_coarse", "pq_coarse"])
 def test_tied_scores_rank_by_id_on_arrow_paths(spark, tied_points, path):
     """Every row of ``tied_points`` scores the same, so the exact top k is
     ids 1..k, as the window strategy returns. Each Arrow scorer cuts a
-    local top k before the final window; a cut that keeps arbitrary tied
-    rows loses the low ids before the window sees them."""
+    local top k before the final window (or the one-query top-k sort); a
+    cut that keeps arbitrary tied rows loses the low ids before the
+    finish sees them. ``sq_coarse`` / ``pq_coarse`` are the single-request
+    scalar and product coarse scans (rescore off)."""
     from qdrant_spark.operators.ann import IvfIndex, ivf_search_batch
     from qdrant_spark.operators.multivec import maxsim_knn_batch
+    from qdrant_spark.operators.quantize import (
+        build_pq, build_sq, pq_search, sq_search,
+    )
 
     k = 5
     q = [1.0, 0.0, 0.5, 0.0]
@@ -112,8 +118,13 @@ def test_tied_scores_rank_by_id_on_arrow_paths(spark, tied_points, path):
             centroids=np.asarray([q]), vec_col="vec", id_col="id",
         )
         got = ivf_search_batch(idx, queries, k=k, nprobe=1).orderBy("rank")
-    else:
+    elif path == "maxsim":
         got = maxsim_knn_batch(tied_points, [[q, q]], k=k).orderBy("rank")
+    elif path == "sq_coarse":
+        got = sq_search(build_sq(tied_points), q, k=k, rescore=False)
+    else:
+        got = pq_search(build_pq(tied_points, n_subspaces=2), q, k=k,
+                        rescore=False)
     assert [r["id"] for r in got.collect()] == list(range(1, k + 1))
 
 

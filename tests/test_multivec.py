@@ -1130,6 +1130,26 @@ def test_client_multivector_quantization_pq_tq(spark, embeddings, tmp_path,
         [(p.id, round(p.score, 9)) for p in exact.points]
 
 
+@pytest.mark.parametrize("rescore", [False, True])
+def test_maxsim_knn_bq_honours_query_encoding(mv_points, q_mv, rescore):
+    """``maxsim_knn_bq`` on an asymmetric (scalar8bits) index scores the
+    index's query encoding, as ``maxsim_knn_quant`` and the planner do,
+    not symmetric ±1 query bits. ``oversampling=1`` makes the rescored
+    result depend on the coarse candidate set."""
+    from qdrant_spark.operators.multivec import (
+        build_maxsim_bq, maxsim_knn_bq, maxsim_knn_quant,
+    )
+
+    idx = build_maxsim_bq(mv_points, mv_col="mv", id_col="vec_id",
+                          query_encoding="scalar8bits")
+    kw = dict(k=5, oversampling=1.0, metric="dot", rescore=rescore)
+    want = [(r["vec_id"], r["score"])
+            for r in maxsim_knn_quant(idx, q_mv, **kw).collect()]
+    got = [(r["vec_id"], r["score"])
+           for r in maxsim_knn_bq(idx, q_mv, **kw).collect()]
+    assert got == want
+
+
 @pytest.mark.parametrize("enc", ["one_bit", "two_bits"])
 def test_maxsim_bq_asym_query_encoding(mv_points, embeddings, enc):
     """Asymmetric BQ query encoding on MULTIVECTOR token storage (r12;

@@ -89,16 +89,29 @@ def test_ivf_batch_prunes_clusters_no_join(embeddings, spark):
     assert "CartesianProduct" not in plan and "Join" not in plan
 
 
-def test_sq_coarse_stage_stays_jvm_side(embeddings):
-    from qdrant_spark.operators.quantize import build_sq, sq_search
+def test_sq_coarse_stage_is_one_arrow_scan(embeddings, tmp_path):
+    """A single-request scalar coarse stage is ONE codec scan over the
+    narrow (id, __sq) columns finished by a top-k sort: no per-qid
+    window shuffle, and on split storage the scan never reads the float
+    vector column."""
+    from qdrant_spark.operators.quantize import (
+        build_quant, persist_quant, sq_search,
+    )
 
-    idx = build_sq(embeddings, vec_col="embedding", id_col="vec_id")
-    q = [0.0] * 64
-    df = sq_search(idx, q, k=5, metric="cosine", rescore=False)
+    h = persist_quant(
+        build_quant(embeddings, {"scalar": {}}, vec_col="embedding",
+                    id_col="vec_id"),
+        str(tmp_path / "sq"))
+    q = list(embeddings.limit(1).collect()[0]["embedding"])
+    df = sq_search(h.index, q, k=5, metric="cosine", rescore=False)
     plan = _plan(df, "simple")
-    # no python evaluation anywhere in the coarse path
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
-    assert "mapInArrow" not in plan
+    arrow = [ln for ln in plan.splitlines() if "MapInArrow" in ln]
+    assert len(arrow) == 1
+    assert "(vec_id#" in arrow[0] and ", __sq#" in arrow[0]
+    assert "TakeOrderedAndProject" in plan
+    assert "Exchange hashpartitioning" not in plan
+    scans = [ln for ln in plan.splitlines() if "ReadSchema" in ln]
+    assert scans and all("embedding" not in ln for ln in scans)
 
 
 def test_grouped_search_no_global_single_partition_window(embeddings):

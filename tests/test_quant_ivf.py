@@ -114,7 +114,7 @@ def test_quant_ivf_pruned_recall_and_scan(embeddings, ivf8, tmp_path):
     out = quant_ivf_search(qih, qs[0], k=10, metric="cosine")
     plan = out._jdf.queryExecution().executedPlan().toString()
     coarse_scans = [s for s in plan.split("FileScan")[1:]
-                    if "__sq" in s.split("ReadSchema", 1)[0] + s[:1200]]
+                    if "__sq" in s.split("\n", 1)[0]]
     assert coarse_scans
     for s in coarse_scans:
         head = s[:1200]

@@ -1357,3 +1357,19 @@ def test_quant_crossover_batch_threshold_sits_higher(embeddings):
     for i, r in enumerate(rows):
         exp = _exact_ids(embeddings, list(r["embedding"]), "cosine", 5)
         assert [x["vec_id"] for x in got if x["request_idx"] == i] == exp
+
+
+@pytest.mark.parametrize("kind", ["scalar", "product", "binary", "turbo"])
+def test_query_dim_mismatch_raises(request, kind):
+    """A query one dimension short or long of the 64-dim index is
+    rejected driver-side, while the plan is built, with the same message
+    for every kind — not silently truncated (scalar) or failed inside a
+    NumPy reshape or broadcast (product, binary)."""
+    fixture, search = {"scalar": ("sq", sq_search),
+                       "product": ("pq", pq_search),
+                       "binary": ("bq", bq_search),
+                       "turbo": ("tq", tq_search)}[kind]
+    idx = request.getfixturevalue(fixture)
+    for dim in (63, 65):
+        with pytest.raises(ValueError, match=f"query dim {dim} != index dim 64"):
+            search(idx, [0.1] * dim, k=5, rescore=False)
