@@ -289,7 +289,7 @@ def cluster_masked_topk(frame: DataFrame, *, vec_col: str, id_col: str,
     return arrow_topk(
         frame.select(id_col, vec_col, "__cluster"), blocks, metric=metric,
         k=k, qids=qids, qid_type=qid_type or T.LongType(), qid_col=qid_col,
-        id_col=id_col,
+        id_col=id_col, broadcast=bq,
     )
 
 

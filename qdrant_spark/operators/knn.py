@@ -19,11 +19,23 @@ Spark shapes:
   * ``matmul`` (default) — block matrix multiply through the one Arrow
     score-and-top-k kernel, :func:`arrow_topk`: ``mapInArrow`` over the
     points scores every query against each Arrow batch with one BLAS
-    matmul (NumPy, float64), cuts each query's top k per batch, finishes
-    once per partition, and shuffles only <= partitions*Q*k candidate
-    rows into the final exact window. Spark's array higher-order
-    functions are interpreted (no whole-stage codegen), so this beats the
-    pure-Column plan ~50x on the N*Q hot path — this is the 100-TB plan.
+    matmul (NumPy, float64), cuts each query's top k per batch and
+    finishes once per partition, so at most partitions*Q*k candidate
+    rows leave the map side. Spark's array higher-order functions are
+    interpreted (no whole-stage codegen), so this beats the pure-Column
+    plan ~50x on the N*Q hot path — this is the 100-TB plan. The
+    candidates reach one of two finishes:
+
+    - *ranked* (the lazy DataFrame every consumer gets): the candidates
+      shuffle by query into the final exact window (:func:`ranked`);
+    - *collected* (:func:`collect_topk`, for callers that collect the
+      top-k anyway — the fused batch groups of ``query.query_batch``):
+      one job pulls the candidates with ``toArrow()`` and the driver
+      merges them with the tie-exact :func:`first_k`, as qdrant's
+      coordinator merges each segment's local top-k. No shuffle, no
+      window, no second job. It runs while partitions*Q*k stays within
+      the caller's driver budget; above it the ranked finish runs and is
+      collected.
   * ``window`` — broadcast crossJoin + ``row_number() over (partition by
     qid order by score)``; pure Column math, oracle-exact formula shape,
     with a map-side top-k combine before the shuffle. ``partial`` is an
@@ -38,7 +50,7 @@ merge plan returns exactly what one global sort would, ties included.
 
 from __future__ import annotations
 
-from typing import Any, Iterator, Sequence
+from typing import Any, Iterator, NamedTuple, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -286,12 +298,19 @@ def first_k(qi, key, ids, k: int):
     import numpy as np
 
     order = np.lexsort((ids, key, qi))
-    if len(order) == 0:
-        return order
-    qs = qi[order]
+    return order[_group_pos(qi[order]) < k]
+
+
+def _group_pos(qs):
+    """0-based position of each entry inside its run of equal values of
+    the sorted query array ``qs`` — a query's rank minus one."""
+    import numpy as np
+
     pos = np.arange(len(qs))
-    start = np.maximum.accumulate(np.where(np.r_[True, qs[1:] != qs[:-1]], pos, 0))
-    return order[pos - start < k]
+    if len(qs) == 0:
+        return pos
+    return pos - np.maximum.accumulate(
+        np.where(np.r_[True, qs[1:] != qs[:-1]], pos, 0))
 
 
 def topk_cut(key, ids, k: int):
@@ -387,13 +406,17 @@ def arrow_topk(
     id_col: str,
     score_threshold: float | None = None,
     dedup_ids: bool = False,
+    broadcast: Any = None,
 ) -> DataFrame:
     """Batch top-k over ``sel`` (id first) through :func:`topk_kernel`:
     at most partitions × Q × k candidate rows reach :func:`ranked`, which
     returns (qid, id, score, rank <= k). With one query the finish is a
     top-k sort instead (``TakeOrderedAndProject``, no shuffle), and
     ``rank`` numbers its <= k rows. With ``dedup_ids``, copies from
-    different partitions meet and collapse before the finish."""
+    different partitions meet and collapse before the finish. The
+    candidate frame rides along on the result for :func:`collect_topk`,
+    which destroys ``broadcast`` (the query set the blocks read) once it
+    has collected."""
     out_schema = T.StructType([
         T.StructField(qid_col, qid_type),
         T.StructField(id_col, sel.schema[id_col].dataType),
@@ -412,9 +435,65 @@ def arrow_topk(
         # per-qid window, so ``rank`` costs no exchange
         order = score_order(metric, id_col=id_col)
         w = Window.partitionBy(qid_col).orderBy(*order)
-        return scored.orderBy(*order).limit(k) \
+        out = scored.orderBy(*order).limit(k) \
             .withColumn("rank", F.row_number().over(w))
-    return ranked(scored, metric, k, qid_col=qid_col, id_col=id_col)
+    else:
+        out = ranked(scored, metric, k, qid_col=qid_col, id_col=id_col)
+    out._qs_topk = _Candidates(scored, metric, k, len(qids), broadcast)
+    return out
+
+
+class _Candidates(NamedTuple):
+    """The map side of an :func:`arrow_topk` result: the kernel's
+    (qid, id, score) candidate frame — at most Q × k rows per partition —
+    and what :func:`collect_topk` needs to finish it on the driver."""
+
+    frame: DataFrame
+    metric: str
+    k: int
+    nq: int
+    broadcast: Any
+
+
+def _num_partitions(df: DataFrame) -> int:
+    """Partition count of ``df``'s physical plan — the one its own
+    QueryExecution caches and its next action runs, so reading it plans
+    nothing twice. No job runs unless the plan holds an exchange
+    (adaptive execution then materializes the shuffle stages, which the
+    action reuses)."""
+    return int(df._jdf.queryExecution().executedPlan().execute()
+               .getNumPartitions())
+
+
+def collect_topk(topk: DataFrame, max_rows: int):
+    """The collected finish of an :func:`arrow_topk` result, for callers
+    that collect the top-k anyway. While the map side's candidates fit
+    the driver budget (partitions × Q × k <= ``max_rows``), ONE job pulls
+    them with ``toArrow()`` and the driver merges each query's top k with
+    the tie-exact :func:`first_k` (score direction, then id ascending) —
+    no shuffle, no window, no second job. Above the budget the ranked
+    shuffle finish (``topk`` itself) runs and is collected. Either way
+    returns query-major NumPy arrays (qid, id, score, rank), equal to
+    collecting ``topk`` and sorting by (qid, rank), and destroys the
+    query broadcast."""
+    import numpy as np
+
+    c: _Candidates = topk._qs_topk
+    try:
+        if _num_partitions(c.frame) * c.nq * c.k <= max_rows:
+            qid, ids, score = (col.to_numpy() for col in
+                               c.frame.toArrow().columns)
+            keep = first_k(qid, -score if larger_is_better(c.metric)
+                           else score, ids, c.k)
+            qid, ids, score = qid[keep], ids[keep], score[keep]
+            return qid, ids, score, _group_pos(qid) + 1
+        qid, ids, score, rank = (col.to_numpy() for col in
+                                 topk.toArrow().columns)
+        o = np.lexsort((rank, qid))
+        return qid[o], ids[o], score[o], rank[o]
+    finally:
+        if c.broadcast is not None:
+            c.broadcast.destroy()
 
 
 def _matmul_knn(
@@ -474,6 +553,7 @@ def _matmul_knn(
     return arrow_topk(
         sel, blocks, metric=metric, k=k, qids=qids, qid_type=qid_type,
         qid_col=qid_col, id_col=id_col, score_threshold=score_threshold,
+        broadcast=bq,
     )
 
 

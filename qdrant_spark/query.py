@@ -59,10 +59,19 @@ MAX_DEPTH = 64
 #: crossover. Same dispatch pattern as knn.ARROW_DISPATCH_BYTES.
 FUSE_MIN_BYTES = 32 << 20
 
-#: Hit-count ceiling for the driver-side fused-leg collect: above
+#: Row ceiling for what a fused group collects to the driver. Above
 #: legs * max(offset+limit) > this, leg splitting falls back to DataFrame
 #: windows over the (persisted) shared-scan result — the scan still runs
 #: once, but nothing funnels through the driver (r5 VERDICT item 5).
+#: Within it, the kernel's per-partition candidates (scan partitions *
+#: legs * k rows) merge on the driver while they fit under it too, else
+#: the ranked shuffle finish collects only the final top-k. The same
+#: bound serves both because both are (qid, id, score) rows on the
+#: driver, at most 24 B each: 100 000 rows are <= 2.4 MB of Arrow, and
+#: the merge (one lexsort plus a few same-length NumPy arrays) stays
+#: under ~10 MB, far below a driver heap. The number is that budget,
+#: not a measured memory limit; no benchmark workload reaches the ranked
+#: side (bulk_knn: 8 x 64 x 10 = 5 120 rows).
 FUSED_COLLECT_MAX = 100_000
 
 
@@ -440,12 +449,13 @@ class QueryPlanner:
     # would each run a full corpus scan; the reference batches exactly
     # these into one leaf-search pass (PlannedQuery merges prefetches into
     # a single batch, lib/shard/src/query/planned_query.rs:17-60). The
-    # Spark analogue: ONE knn_batch over the shared filtered scan with one
-    # query row per leg (block-matmul: every leg scored against each Arrow
-    # batch in one BLAS call), then the tiny per-leg top-k result set
-    # (<= legs * (limit+offset) rows) is split into per-child frames.
-    # The split materializes the batch result (a bounded collect, same
-    # class as _batch_resolve_ids) so the fused scan runs exactly once.
+    # Spark analogue: ONE block-matmul kernel scan over the shared
+    # filtered corpus (every leg scored against each Arrow batch in one
+    # BLAS call) whose per-partition candidates merge on the driver, then
+    # the tiny per-leg top-k result set (<= legs * (limit+offset) rows) is
+    # split into per-child frames. The split materializes the batch
+    # result (a bounded collect, same class as _batch_resolve_ids) so the
+    # fused scan runs exactly once, as one Spark job.
 
     @staticmethod
     def _leaf_exact(req: dict[str, Any]) -> bool:
@@ -644,7 +654,7 @@ class QueryPlanner:
         for key, idxs in groups.items():
             if len(idxs) < 2:
                 continue
-            legs = self._fused_leaves([children[i] for i in idxs], key[0])
+            legs = self._fused_leaves(children, idxs, key[0])
             for i, df in zip(idxs, legs):
                 out[i] = df
             fused_groups += 1
@@ -656,71 +666,59 @@ class QueryPlanner:
                 out[i] = self._node(c, depth + 1)
         return out
 
-    def _fused_leaves(self, reqs: list[dict], vec_col: str,
-                      as_rows: bool = False) -> list:
+    def _fused_leaves(self, requests: list[dict], idxs: list[int],
+                      vec_col: str, as_rows: bool = False) -> list:
+        """The exact dense legs ``requests[i]`` for ``i`` in ``idxs``,
+        sharing (vector column, filter), as ONE Spark job: the
+        block-matmul kernel (``knn._matmul_knn``) scores every leg per
+        Arrow batch, :func:`~qdrant_spark.operators.knn.collect_topk`
+        merges the per-partition candidates on the driver, and each leg
+        is sliced out of the query-major result. Returns one local result
+        per leg (``_RowsLeg`` with ``as_rows``). Legs whose combined top-k
+        exceeds ``fused_collect_max`` keep the shared scan but stay
+        DataFrames. Raises ValueError when the legs' query vectors differ
+        in dimension."""
+        import numpy as np
+
         from qdrant_spark.filters import apply_filter
         from qdrant_spark.functions.distances import larger_is_better
-        from qdrant_spark.operators.knn import knn_batch
+        from qdrant_spark.operators.knn import _matmul_knn, collect_topk
 
         spark = self.points.sparkSession
-        flt = reqs[0].get("filter")
         metric = self.metric_for(vec_col)
-        targets, needed, thresholds = [], [], []
-        for r in reqs:
-            t = self._resolve_vector_input(r["query"]["nearest"], r)
-            targets.append([float(x) for x in t])
-            limit = int(r.get("limit", DEFAULT_LIMIT))
-            needed.append(int(r.get("offset", 0)) + limit)
-            thresholds.append(r.get("score_threshold"))
-        # strategy resolved driver-side from plan stats (len(targets) is
-        # known here) — saves the queries.count() job of strategy='auto'
-        from qdrant_spark.operators.knn import (
-            ARROW_DISPATCH_BYTES, _matmul_knn, _plan_size_bytes,
+        reqs = [requests[i] for i in idxs]
+        targets = [[float(x) for x in
+                    self._resolve_vector_input(r["query"]["nearest"], r)]
+                   for r in reqs]
+        for i, t in zip(idxs, targets):
+            if len(t) != len(targets[0]):
+                raise ValueError(
+                    f"request {i}: query vector has {len(t)} dimensions "
+                    f"but request {idxs[0]} has {len(targets[0])}; fused "
+                    f"dense requests need one query dimension")
+        k = max(_leg_k(r) for r in reqs)
+        # the query set is already driver-side: hand it straight to the
+        # block-matmul scorer (q_data) — no query DataFrame round trip
+        res = _matmul_knn(
+            apply_filter(self.points, reqs[0].get("filter")), None,
+            metric=metric, k=k, vec_col=vec_col, id_col=self.id_col,
+            qid_col="qid", qvec_col="qvec", score_threshold=None,
+            q_data=(list(range(len(targets))),
+                    np.asarray(targets, dtype=np.float64)),
         )
-
-        src = apply_filter(self.points, flt)
-        strategy = ("matmul" if _plan_size_bytes(src) * len(targets)
-                    >= ARROW_DISPATCH_BYTES else "window")
-        if strategy == "matmul":
-            # the query set is already driver-side: hand it straight to
-            # the block-matmul scorer (q_data) instead of packing it into
-            # a local DataFrame the scorer would immediately collect back
-            # — saves a createDataFrame + one collect job per plan
-            import numpy as np
-
-            res = _matmul_knn(
-                src, None, metric=metric, k=max(needed),
-                vec_col=vec_col, id_col=self.id_col, qid_col="qid",
-                qvec_col="qvec", score_threshold=None,
-                q_data=(list(range(len(targets))),
-                        np.asarray(targets, dtype=np.float64)),
-            ).select("qid", self.id_col, "score")
-        else:
-            from qdrant_spark.session import local_df
-
-            qdf = local_df(
-                spark,
-                [(i, t) for i, t in enumerate(targets)],
-                "qid: long, qvec: array<double>",
-            )
-            res = knn_batch(
-                src, qdf, metric=metric,
-                k=max(needed), vec_col=vec_col, id_col=self.id_col,
-                strategy=strategy,
-            ).select("qid", self.id_col, "score")
         lb = larger_is_better(metric)
-        if len(reqs) * max(needed) > self.fused_collect_max:
+        if len(reqs) * k > self.fused_collect_max:
             # Unconditional guard (strict mode or not): a 64-leg x 10^6
             # limit request must not funnel through the driver. Keep the
-            # shared scan (res is already per-leg top-k, <= legs *
-            # max(needed) rows), persist it so the leg split doesn't
-            # re-run the scan, and slice legs with DataFrame windows; the
-            # fusion root then also stays a DataFrame op (these legs are
-            # deliberately NOT registered in _fused_hits_by_df).
+            # shared scan (res is already per-leg top-k, <= legs * k
+            # rows), persist it so the leg split doesn't re-run the scan,
+            # and slice legs with DataFrame windows; the fusion root then
+            # also stays a DataFrame op (these legs are deliberately NOT
+            # registered in _fused_hits_by_df).
             from pyspark.sql import Window
 
             self._bump("fused_df_fallback")
-            res = res.persist()
+            res = res.select("qid", self.id_col, "score").persist()
             self._fused_persisted.append(res)
             order = ((F.col("score").desc() if lb else F.col("score").asc()),
                      F.col(self.id_col).asc())
@@ -728,8 +726,8 @@ class QueryPlanner:
             out = []
             for i, r in enumerate(reqs):
                 leg = res.where(F.col("qid") == i)
-                th = thresholds[i]
-                if th is not None:  # threshold BEFORE offset, as below
+                th = r.get("score_threshold")
+                if th is not None:  # threshold BEFORE offset, as _leg_hits
                     leg = leg.where(F.col("score") > th if lb
                                     else F.col("score") < th)
                 off = int(r.get("offset", 0))
@@ -740,25 +738,12 @@ class QueryPlanner:
                        .select(self.id_col, "score"))
                 out.append(leg)
             return out
-        rows = res.collect()  # bounded: <= legs * max(offset+limit)
+        hits = _split_hits(collect_topk(res, self.fused_collect_max),
+                           range(len(reqs)))
         schema = self._hit_schema()
         out = []
-        for i, r in enumerate(reqs):
-            hits = sorted(
-                ((row[self.id_col], float(row["score"]))
-                 for row in rows if row["qid"] == i),
-                key=lambda h: ((-h[1] if lb else h[1]), h[0]),
-            )
-            # threshold post-top-k is exact: every row outside the top-k
-            # scores strictly worse, so a failing top row implies all
-            # lower rows fail too (direction-aware)
-            th = thresholds[i]
-            if th is not None:
-                hits = [h for h in hits
-                        if (h[1] > th if lb else h[1] < th)]
-            off = int(r.get("offset", 0))
-            limit = int(r.get("limit", DEFAULT_LIMIT))
-            kept = hits[off:off + limit]
+        for r, h in zip(reqs, hits):
+            kept = _leg_hits(r, h, lb)
             if as_rows:
                 # query_batch collapses all-local legs into ONE frame —
                 # skip the per-leg createDataFrame roundtrip entirely
@@ -1346,37 +1331,57 @@ def _best_first(hits: dict[int, list]) -> dict[int, list]:
     return {i: sorted(h, key=lambda x: (-x[1], x[0])) for i, h in hits.items()}
 
 
+def _split_hits(collected, qids) -> list[list]:
+    """Each of ``qids``' best-first (id, score) hits, sliced out of the
+    query-major arrays of :func:`~qdrant_spark.operators.knn.
+    collect_topk`."""
+    import numpy as np
+
+    qid, ids, scores, _ = collected
+    lo, hi = (np.searchsorted(qid, qids, side) for side in ("left", "right"))
+    ids, scores = ids.tolist(), scores.tolist()
+    return [list(zip(ids[a:b], scores[a:b])) for a, b in zip(lo, hi)]
+
+
+def _leg_hits(req: dict[str, Any], hits: list, larger: bool) -> list:
+    """One request's finish over its best-first (id, score) hits,
+    value-identical to the single-request leaf's post-processing: cut to
+    k = limit+offset, apply score_threshold with the reference's strict
+    check (check_threshold, types.rs:364-369) in the direction of the
+    scores (``larger``), then slice offset/limit. The threshold after the
+    top-k cut is exact: every row outside the top k scores no better."""
+    off = int(req.get("offset", 0))
+    lim = int(req.get("limit", DEFAULT_LIMIT))
+    h = hits[:off + lim]
+    t = req.get("score_threshold")
+    if t is not None:
+        h = [x for x in h if (x[1] > float(t) if larger else x[1] < float(t))]
+    return h[off:off + lim]
+
+
 def _emit_legs(planner: "QueryPlanner", requests: list[dict[str, Any]],
                hits: dict[int, list], outs: list,
                larger: dict[int, bool] | None = None) -> None:
-    """Per-request finish of a fused batch group, value-identical to the
-    single-request leaf's post-processing: cut each request's best-first
-    hits to k = limit+offset, apply score_threshold with the reference's
-    strict check (check_threshold, types.rs:364-369) in the direction of
-    the returned scores (``larger[i]``; default larger-better, as for
-    sparse dot and MaxSim), then slice offset/limit into a local frame."""
+    """Per-request finish of a fused batch group (:func:`_leg_hits`) into
+    a local frame, in the direction of the returned scores
+    (``larger[i]``; default larger-better, as for sparse dot and
+    MaxSim)."""
     spark = planner.points.sparkSession
     schema = planner._hit_schema()
     for i, h in hits.items():
-        req = requests[i]
-        off = int(req.get("offset", 0))
-        lim = int(req.get("limit", DEFAULT_LIMIT))
-        h = h[:off + lim]
-        t = req.get("score_threshold")
-        if t is not None:
-            lg = True if larger is None else larger[i]
-            h = [x for x in h if (x[1] > float(t) if lg else x[1] < float(t))]
-        outs[i] = _local_result_df(spark, h[off:off + lim], schema)
+        lg = True if larger is None else larger[i]
+        outs[i] = _local_result_df(spark, _leg_hits(requests[i], h, lg),
+                                   schema)
 
 
 def _fuse_dense(planner: "QueryPlanner", requests: list[dict[str, Any]],
                 idxs: list[int], vc: str, handles: tuple,
                 outs: list) -> bool:
-    """Exact dense legs sharing (vector column, filter): ONE knn_batch
-    corpus scan (the reference's batch dispatch special-cases exactly
-    this, dispatch.rs batch path / the PlannedQuery leaf merge)."""
-    legs = planner._fused_leaves([requests[i] for i in idxs], vc,
-                                 as_rows=True)
+    """Exact dense legs sharing (vector column, filter): ONE Spark job
+    over one corpus scan (:meth:`QueryPlanner._fused_leaves`; the
+    reference's batch dispatch special-cases exactly this, dispatch.rs
+    batch path / the PlannedQuery leaf merge)."""
+    legs = planner._fused_leaves(requests, idxs, vc, as_rows=True)
     for i, leg in zip(idxs, legs):
         outs[i] = leg
     return True
@@ -1512,7 +1517,7 @@ def _fuse_maxsim(planner: "QueryPlanner", requests: list[dict[str, Any]],
                  outs: list) -> bool:
     """Exact MaxSim legs (late r11): ONE scan of the float-token corpus
     (multivec.maxsim_knn_batch; scores are exact, no rescore stage) — the
-    multivector analogue of the dense knn_batch group."""
+    multivector analogue of the fused dense group."""
     from qdrant_spark.operators.multivec import maxsim_knn_batch
 
     ks = {i: _leg_k(requests[i]) for i in idxs}
@@ -1589,23 +1594,24 @@ def _quant_widths(requests: list[dict[str, Any]], idxs: list[int], handle):
 
 def _finish_quant_group(planner, requests, idxs, outs, qh, metric,
                         ks, cs, rescores, coarse) -> None:
-    """Shared tail of the batched dense quantized groups: keep each
-    request's top coarse-width candidates, rescore the rescore=True
-    requests' candidates with ONE pair-scored job, and finish each
-    request (:func:`_emit_legs`) in the direction of its returned scores
-    — binary coarse scores (rescore=False) are the ±1-dot estimate,
-    larger-better whatever the metric, the single-request leaf's rule."""
+    """Shared tail of the batched dense quantized groups: collect the
+    coarse top-k frame (``coarse``, qid = request index) through the
+    kernel's collected finish, keep each request's top coarse-width
+    candidates, rescore the rescore=True requests' candidates with ONE
+    pair-scored job, and finish each request (:func:`_emit_legs`) in the
+    direction of its returned scores — binary coarse scores
+    (rescore=False) are the ±1-dot estimate, larger-better whatever the
+    metric, the single-request leaf's rule."""
     from pyspark.sql import types as T
 
     from qdrant_spark.operators.knn import (
-        larger_is_better, rowwise_score_topk,
+        collect_topk, larger_is_better, rowwise_score_topk,
     )
 
     idx = qh.index
-    by_req: dict[int, list] = {i: [] for i in idxs}
-    for r in sorted(coarse, key=lambda r: (r["__qid"], r["rank"])):
-        if r["rank"] <= cs[r["__qid"]]:
-            by_req[r["__qid"]].append((r[idx.id_col], float(r["score"])))
+    by_req = {i: h[:cs[i]] for i, h in zip(
+        idxs, _split_hits(collect_topk(coarse, planner.fused_collect_max),
+                          idxs))}
     need_rescore = [i for i in idxs if rescores[i]]
     if need_rescore:
         from qdrant_spark.session import local_df
@@ -1699,7 +1705,7 @@ def _fuse_quant(planner: "QueryPlanner", requests: list[dict[str, Any]],
         vec_col=code_col, id_col=qh.index.id_col, qid_col="__qid",
         qvec_col="__qvec", score_threshold=None,
         q_data=(idxs, Q), vec_decode=dec,
-    ).collect()
+    )
     _finish_quant_group(planner, requests, idxs, outs, qh, metric, ks, cs,
                         rescores, coarse)
     return True
@@ -1743,7 +1749,7 @@ def _fuse_quant_ivf(planner: "QueryPlanner", requests: list[dict[str, Any]],
         pruned, vec_col=code_col, id_col=qih.id_col, qids=idxs,
         Q=Q, cluster_q=cluster_q, k=max(cs.values()),
         metric=scan_metric, vec_decode=dec,
-    ).collect()
+    )
     _finish_quant_group(planner, requests, idxs, outs, qh, metric, ks, cs,
                         rescores, coarse)
     return True
@@ -1817,11 +1823,16 @@ def query_batch(
     Requests may differ arbitrarily (prefetch trees, filters, fusion), so
     each compiles to its own sub-plan — EXCEPT single-leaf nearest
     requests that share a route and vector column (:func:`_fuse_batch`):
-    exact dense legs sharing a filter run ONE ``knn_batch`` corpus scan
-    (the reference's batch dispatch special-cases exactly this,
-    dispatch.rs batch path / the PlannedQuery leaf merge); unfiltered
-    legs on an indexed sparse column, a quantized or composed dense
-    column, or a multivector column share one scan per route kind.
+    exact dense legs sharing a filter run ONE corpus scan through the
+    block-matmul kernel, as ONE Spark job whose per-partition top-k
+    candidates merge on the driver (the reference's batch dispatch
+    special-cases exactly this, dispatch.rs batch path / the PlannedQuery
+    leaf merge; its coordinator merges per-segment top-k the same way);
+    unfiltered legs on an indexed sparse column, a quantized or composed
+    dense column, or a multivector column share one scan per route kind,
+    the dense quantized ones with the same driver merge. The legs of one
+    fused dense group must share a query dimension (ValueError names the
+    request otherwise).
     Requests carrying a ``shard_key`` selector route to their shard's
     partition directories before planning. Per-request
     limit/offset/score_threshold are preserved; the batched leg results

@@ -1,0 +1,167 @@
+"""Same-window A/B of the repository benchmark: a parent commit against
+the working tree, in alternating runs.
+
+Usage:
+    python3 scripts/ab.py PARENT [--workload W ...] [--seeds N]
+
+Exports ``PARENT`` with ``git archive`` and the working tree (every
+tracked file plus every untracked file that ``.gitignore`` does not
+exclude, as ``git add -A`` would commit it) into fresh temporary
+directories, so each side runs from its files only, the way the
+benchmark is judged.
+
+For each workload and each seed 1..N it runs the ``command`` of
+``BENCHMARK.json`` with
+
+    --workload W --seed N --seconds <run_seconds> --trace 0
+
+once in the parent and once in the change; the parent goes first on odd
+seeds and second on even ones, so drift in the machine's load falls on
+both sides alike. It then prints one markdown row per end-to-end metric
+of ``BENCHMARK.json``: median (interquartile range / median) per side,
+by how much the change's median is worse (negative: better), in how many
+of the N same-seed pairs the change was better, and the failed checks of
+each side.
+
+Run no other Spark job while it runs: every run is timed.
+"""
+
+from __future__ import annotations
+
+import argparse
+import json
+import math
+import os
+import shutil
+import statistics
+import subprocess
+import sys
+import tempfile
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def git(*args: str, **kw) -> subprocess.CompletedProcess:
+    return subprocess.run(["git", "-C", REPO, *args], check=True, **kw)
+
+
+def export_commit(commit: str, dest: str) -> None:
+    """The committed files of ``commit`` in ``dest``."""
+    os.makedirs(dest)
+    archive = git("archive", "--format=tar", commit,
+                  capture_output=True).stdout
+    subprocess.run(["tar", "-x", "-C", dest], input=archive, check=True)
+
+
+def export_worktree(dest: str) -> None:
+    """The working tree's files as ``git add -A`` would commit them."""
+    files = git("ls-files", "-z", "--cached", "--others", "--exclude-standard",
+                capture_output=True).stdout.decode().split("\0")
+    for rel in filter(None, files):
+        src = os.path.join(REPO, rel)
+        if not os.path.isfile(src):  # deleted but still in the index
+            continue
+        os.makedirs(os.path.dirname(os.path.join(dest, rel)), exist_ok=True)
+        shutil.copy2(src, os.path.join(dest, rel))
+
+
+def run_once(side_dir: str, bench: dict, workload: str, seed: int) -> dict:
+    """One benchmark run: its final JSON line, or a failed record."""
+    cmd = [*bench["command"], "--workload", workload, "--seed", str(seed),
+           "--seconds", str(bench["run_seconds"]), "--trace", "0"]
+    p = subprocess.run(cmd, cwd=side_dir, capture_output=True, text=True)
+    lines = p.stdout.strip().splitlines()
+    try:
+        out = json.loads(lines[-1])
+    except (IndexError, json.JSONDecodeError):
+        sys.stderr.write(p.stderr[-2000:])
+        return {"correct": False, "attempted": 0, "failed": 1,
+                "metrics": {}, "returncode": p.returncode}
+    out["returncode"] = p.returncode
+    return out
+
+
+def value(run: dict, metric: str) -> float:
+    m = run["metrics"].get(metric)
+    return float(m["value"]) if m is not None else math.nan
+
+
+def spread(xs: list[float]) -> tuple[float, float]:
+    """(median, interquartile range / median) of the finite values."""
+    xs = [x for x in xs if not math.isnan(x)]
+    if not xs:
+        return math.nan, math.nan
+    med = statistics.median(xs)
+    if len(xs) < 2:
+        return med, 0.0
+    q1, _, q3 = statistics.quantiles(xs, n=4, method="inclusive")
+    return med, ((q3 - q1) / med if med else math.nan)
+
+
+def table(results: dict, metrics: list[dict]) -> list[str]:
+    rows = ["| workload | metric | parent | change | change worse by "
+            "| change better in | failed checks (parent / change) |",
+            "|---|---|---|---|---|---|---|"]
+    for workload, runs in results.items():
+        failed = tuple(sum(r["failed"] for r in runs[side])
+                       for side in ("parent", "change"))
+        for m in metrics:
+            name, lower = m["name"], m["better"] == "lower"
+            a = [value(r, name) for r in runs["parent"]]
+            b = [value(r, name) for r in runs["change"]]
+            (ma, sa), (mb, sb) = spread(a), spread(b)
+            worse = ((mb - ma) if lower else (ma - mb)) / ma if ma else math.nan
+            better = sum((y < x) if lower else (y > x) for x, y in zip(a, b))
+            rows.append(
+                f"| {workload} | {name} | {ma:.4g} ({sa:.3f}) "
+                f"| {mb:.4g} ({sb:.3f}) | {worse:+.1%} "
+                f"| {better}/{len(a)} | {failed[0]} / {failed[1]} |")
+    return rows
+
+
+def main(argv: list[str] | None = None) -> int:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("parent", help="parent commit (any git revision)")
+    ap.add_argument("--workload", action="append",
+                    help="workload name, repeatable (default: all in "
+                         "BENCHMARK.json)")
+    ap.add_argument("--seeds", type=int, default=10)
+    args = ap.parse_args(argv)
+
+    with open(os.path.join(REPO, "BENCHMARK.json")) as f:
+        bench = json.load(f)
+    workloads = args.workload or [w["name"] for w in bench["workloads"]]
+    work = tempfile.mkdtemp(prefix="ab-")
+    dirs = {"parent": os.path.join(work, "parent"),
+            "change": os.path.join(work, "change")}
+    try:
+        export_commit(args.parent, dirs["parent"])
+        export_worktree(dirs["change"])
+        results = run_pairs(dirs, bench, workloads, args.seeds)
+    finally:
+        shutil.rmtree(work)
+    print("\n".join(table(results, bench["end_to_end"])))
+    return 0
+
+
+def run_pairs(dirs: dict, bench: dict, workloads: list[str],
+              seeds: int) -> dict:
+    """workload -> side -> the runs of seeds 1..N, alternating sides."""
+    results: dict = {}
+    for workload in workloads:
+        runs = results.setdefault(workload, {"parent": [], "change": []})
+        for seed in range(1, seeds + 1):
+            order = ("parent", "change") if seed % 2 else ("change", "parent")
+            for side in order:
+                r = run_once(dirs[side], bench, workload, seed)
+                runs[side].append(r)
+                print(f"[ab] {workload} seed {seed} {side}: "
+                      + ", ".join(f"{m['name']}={value(r, m['name']):.4g}"
+                                  for m in bench["end_to_end"])
+                      + f", failed={r['failed']}", file=sys.stderr,
+                      flush=True)
+    return results
+
+
+if __name__ == "__main__":
+    sys.exit(main())

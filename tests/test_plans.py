@@ -411,3 +411,39 @@ def test_local_df_nan_in_map_falls_back(spark):
     assert "LocalTableScan" not in plan
     v = df.collect()[0]["m"]["a"]
     assert v != v  # NaN preserved, not NULL
+
+
+def test_fused_dense_batch_is_one_job(spark, embeddings, tmp_path,
+                                      monkeypatch):
+    """A fused dense query_batch runs exactly ONE Spark job: the Arrow
+    kernel's candidates (MapInArrow, no Exchange) are pulled with
+    toArrow and merged on the driver — no shuffle, no window job."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from qdrant_spark.query import query_batch
+
+    path = str(tmp_path / "emb")
+    embeddings.repartition(3).write.parquet(path)
+    pts = spark.read.parquet(path)
+    qs = [list(r["embedding"]) for r in embeddings.limit(3).collect()]
+    reqs = [{"query": {"nearest": q}, "limit": 5} for q in qs]
+    plans = []
+    orig = DataFrame.toArrow
+
+    def to_arrow(self):
+        plans.append(_plan(self, "simple"))
+        return orig(self)
+
+    monkeypatch.setattr(DataFrame, "toArrow", to_arrow)
+    sc = spark.sparkContext
+    sc.setJobGroup("fused-dense-one-job", "fused dense batch")
+    try:
+        rows = query_batch(pts, reqs, id_col="vec_id", vec_col="embedding",
+                           fuse_min_bytes=0).collect()
+    finally:
+        sc._jsc.clearJobGroup()
+    assert len(rows) == 15
+    assert len(sc.statusTracker().getJobIdsForGroup("fused-dense-one-job")) == 1
+    (plan,) = plans
+    assert "MapInArrow" in plan
+    assert "Exchange" not in plan

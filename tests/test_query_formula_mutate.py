@@ -514,10 +514,8 @@ def test_driver_side_fusion_matches_spark_path(embeddings):
         assert [(r["vec_id"], round(r["score"], 9)) for r in fast] == \
             [(r["vec_id"], round(r["score"], 9)) for r in lazy], fusion
 
-    # force the block-matmul leaf strategy (q_data handoff — no query
-    # DataFrame round trip) and re-check value parity with the lazy plan
-    import qdrant_spark.operators.knn as knn_mod
-
+    # the fused legs run the block-matmul kernel (q_data handoff — no
+    # query DataFrame round trip): re-check value parity with the lazy plan
     req_m = {
         "prefetch": [
             {"query": {"nearest": v[1]}, "limit": 20},
@@ -526,15 +524,10 @@ def test_driver_side_fusion_matches_spark_path(embeddings):
         "query": {"fusion": "rrf"},
         "limit": 10,
     }
-    old_cut = knn_mod.ARROW_DISPATCH_BYTES
-    knn_mod.ARROW_DISPATCH_BYTES = 0
-    try:
-        pm = QueryPlanner(embeddings, id_col="vec_id",
-                          default_vec_col="embedding", fuse_min_bytes=0)
-        fast_m = pm.plan(req_m).collect()
-        assert pm.last_plan_info["fused_legs"] == 2
-    finally:
-        knn_mod.ARROW_DISPATCH_BYTES = old_cut
+    pm = QueryPlanner(embeddings, id_col="vec_id",
+                      default_vec_col="embedding", fuse_min_bytes=0)
+    fast_m = pm.plan(req_m).collect()
+    assert pm.last_plan_info["fused_legs"] == 2
     lazy_m = QueryPlanner(embeddings, id_col="vec_id",
                           default_vec_col="embedding").plan(req_m).collect()
     assert [(r["vec_id"], round(r["score"], 9)) for r in fast_m] == \
