@@ -43,7 +43,7 @@ import os
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -1150,7 +1150,13 @@ class QdrantSparkClient:
         return {c: row[c] for c in cols if c in row and row[c] is not None}
 
     def _rows_as_dicts(self, df: DataFrame) -> list[dict]:
-        return [r.asDict(recursive=True) for r in df.collect()]
+        """The frame's rows as dicts; a driver-side result frame
+        (``_qs_local_rows``, e.g. a fused query's hits) is read without a
+        collect."""
+        local = getattr(df, "_qs_local_rows", None)
+        rows = df.collect() if local is None \
+            else [Row(*df.columns)(*r) for r in local]
+        return [r.asDict(recursive=True) for r in rows]
 
     def _needed_cols(self, col: _Collection,
                      with_payload: bool | list[str] | dict,
@@ -1394,6 +1400,45 @@ class QdrantSparkClient:
             req["using"] = col.vec_col(req["using"])
         for p in req.get("prefetch") or []:
             QdrantSparkClient._translate_using(col, p)
+
+    @staticmethod
+    def _check_dims(col: _Collection, req: dict[str, Any],
+                    default_col: str) -> None:
+        """Raise ValueError when a literal dense query vector anywhere in
+        the request tree (nearest, recommend / discover / context
+        examples) does not have its vector's declared ``size`` — the
+        reference rejects such a request instead of scoring it. Call
+        after ``_translate_using``; a node without ``using`` searches
+        ``default_col``."""
+        dims = {col.vec_col(n): (n, c.dim) for n, c in col.vectors.items()
+                if c.kind == "dense"}
+
+        def vectors(q: dict[str, Any]):
+            yield q.get("nearest")
+            for k in ("recommend", "discover"):
+                sub = q.get(k) or {}
+                yield from sub.get("positive") or []
+                yield from sub.get("negative") or []
+                yield sub.get("target")
+                for p in sub.get("context") or []:
+                    yield from (p.get("positive"), p.get("negative"))
+            for p in q.get("context") or []:
+                yield from (p.get("positive"), p.get("negative"))
+
+        def walk(node: dict[str, Any]) -> None:
+            q, vc = node.get("query"), node.get("using", default_col)
+            if isinstance(q, dict) and vc in dims:
+                name, dim = dims[vc]
+                for v in vectors(q):
+                    if isinstance(v, list) and v and not isinstance(
+                            v[0], (list, tuple, dict)) and len(v) != dim:
+                        raise ValueError(
+                            f"query vector has {len(v)} dimensions but "
+                            f"vector {name or '<default>'!r} has {dim}")
+            for p in node.get("prefetch") or []:
+                walk(p)
+
+        walk(req)
 
     def _sparse_idf(self, col: _Collection, name: str,
                     dims: list) -> dict[int, float]:
@@ -1876,64 +1921,76 @@ class QdrantSparkClient:
             indexes=col.indexes_map(),
         )
 
-    def _hydrate(self, col: _Collection, scored: DataFrame, *,
-                 with_payload: bool | list[str] | dict,
+    def _hydration_cols(self, col: _Collection,
+                        selections: list[tuple[Any, Any]],
+                        extra: tuple[str, ...] = ()) -> list[str]:
+        """The columns that hydrating hits under every (with_payload,
+        with_vectors) selection reads, plus ``extra``, id first; just
+        ``id`` and ``extra`` when no selection reads payload or vectors."""
+        need = ["id"]
+        for wp, wv in selections:
+            if wp is not False or wv is not False:
+                need += self._needed_cols(col, wp, wv)
+        return list(dict.fromkeys(need + list(extra)))
+
+    @staticmethod
+    def _carry(need: list[str]) -> tuple[str, ...]:
+        """The hydration columns a plan carries beside (id, score): none
+        when a payload field's name collides with a result column, so
+        those hits hydrate through the id lookup instead."""
+        cols = tuple(c for c in need if c != "id")
+        return () if {"score", "__rank", "request_idx"} & set(cols) else cols
+
+    def _lookup(self, col: _Collection, hits: list[dict],
+                need: list[str]) -> dict[Any, dict] | None:
+        """None when the hit rows hold every ``need`` column (the plan
+        carried them); else id -> row of ONE bounded id lookup of the
+        hits, the fallback of routes that cannot carry."""
+        if not hits or set(need) <= set(hits[0]):
+            return None
+        return {r["id"]: r for r in self._rows_as_dicts(
+            col.df.select(*need).filter(
+                F.col("id").isin(list({h["id"] for h in hits}))))}
+
+    def _scored_point(self, col: _Collection, hit: dict,
+                      lookup: dict[Any, dict] | None, with_payload,
+                      with_vectors) -> ScoredPoint:
+        """A hit as a ScoredPoint, its columns from the hit row itself or
+        from ``lookup`` (:meth:`_lookup`); a hit the lookup misses gets no
+        version, payload or vector."""
+        r = hit if lookup is None else lookup.get(hit["id"])
+        if r is None:
+            return ScoredPoint(id=hit["id"], score=float(hit["score"]))
+        return ScoredPoint(
+            id=hit["id"], score=float(hit["score"]), version=r.get("version"),
+            payload=self._payload_out(col, r, with_payload),
+            vector=self._vector_out(col, r, with_vectors))
+
+    def _hydrate(self, col: _Collection, scored: DataFrame, need: list[str],
+                 *, with_payload: bool | list[str] | dict,
                  with_vectors: bool | list[str],
                  direction: bool | None = None,
                  rank_col: str | None = None) -> list[ScoredPoint]:
-        """Attach payload/vectors to a scored frame. When ``direction``
-        says the result order is (score direction, id asc) — the planner's
-        last_plan_direction — or ``rank_col`` carries an explicit plan
-        order (the planner's last_plan_rank_col for MMR/sample roots),
-        hydration is ONE job: join before the collect and re-sort
-        driver-side. Otherwise the plan's order is authoritative and
-        hydration is a second bounded id-lookup job."""
-        if rank_col is not None and rank_col not in scored.columns:
-            rank_col = None
-        if (direction is not None or rank_col is not None) \
-                and (with_payload is not False or with_vectors is not False):
-            need = self._needed_cols(col, with_payload, with_vectors)
-            if not {"score", rank_col} & set(need):  # a payload column
-                joined = scored.join(          # named "score"/rank would
-                    col.df.select(*need), "id", "left")  # collide
-                rows = self._rows_as_dicts(joined)
-                if rank_col is not None:
-                    rows.sort(key=lambda r: r[rank_col])
-                else:
-                    rows.sort(key=lambda r: (
-                        -r["score"] if direction else r["score"], r["id"]))
-                return [ScoredPoint(
-                    id=r["id"], score=float(r["score"]),
-                    version=r.get("version"),
-                    payload=self._payload_out(col, r, with_payload),
-                    vector=self._vector_out(col, r, with_vectors))
-                    for r in rows]
-        if rank_col is not None and with_payload is False \
-                and with_vectors is False:
-            # bare collect (no payload/vectors): still one job — sort the
-            # collected rows by the explicit rank
-            hits = sorted(scored.collect(), key=lambda r: r[rank_col])
-            return [ScoredPoint(id=h["id"], score=float(h["score"]),
-                                version=None, payload=None, vector=None)
-                    for h in hits]
-        hits = scored.collect()
-        if not hits:
-            return []
-        rows: dict[Any, dict] = {}
-        if with_payload is not False or with_vectors is not False:
-            ids = [h["id"] for h in hits]
-            need = self._needed_cols(col, with_payload, with_vectors)
-            rows = {r["id"]: r for r in self._rows_as_dicts(
-                col.df.select(*need).filter(F.col("id").isin(ids)))}
-        out = []
-        for h in hits:
-            r = rows.get(h["id"], {})
-            out.append(ScoredPoint(
-                id=h["id"], score=float(h["score"]),
-                version=r.get("version"),
-                payload=self._payload_out(col, r, with_payload) if r else None,
-                vector=self._vector_out(col, r, with_vectors) if r else None))
-        return out
+        """ScoredPoints of a planned result, in its order. The planner
+        carried the hydration columns ``need`` through its top-k
+        (:attr:`QueryPlanner.carry`): the exact dense, sparse, scroll,
+        order_by and sample leaves, MMR roots and driver-side fusion over
+        such legs. Their collected rows already hold payload and vectors,
+        so the read is ONE job with one scan. Routes that cannot carry
+        (indexed, quantized or IVF leaves, rescore roots) return (id,
+        score), and their hits hydrate through one bounded id lookup.
+        ``rank_col`` (MMR pick order, sample order) or ``direction``
+        (score direction, then id ascending) orders the rows on the
+        driver."""
+        rows = self._rows_as_dicts(scored)
+        if rank_col is not None and rows and rank_col in rows[0]:
+            rows.sort(key=lambda r: r[rank_col])
+        elif direction is not None:
+            rows.sort(key=lambda r: (
+                -r["score"] if direction else r["score"], r["id"]))
+        lookup = self._lookup(col, rows, need)
+        return [self._scored_point(col, r, lookup, with_payload, with_vectors)
+                for r in rows]
 
     def query_points(self, collection_name: str, *,
                      query: Any = None, using: str | None = None,
@@ -1982,19 +2039,22 @@ class QdrantSparkClient:
         self._norm_lookup_tree(req)
         self._apply_sparse_modifiers(col, req)
         self._check_strict(col.name, req)
+        self._check_dims(col, req, col.vec_col(using or ""))
         points = self._route(col, col.df, shard_key_selector)
         planner = self._planner(col, using)
         planner.points = points
         # MMR/sample roots attach an explicit plan-order rank so
         # hydration below stays a single job (r8 VERDICT item 5)
         planner.emit_rank = True
+        need = self._hydration_cols(col, [(with_payload, with_vectors)])
+        planner.carry = self._carry(need)
         if shard_key_selector is not None:
             # a registered IVF index covers the WHOLE corpus; routing
             # through it would leak other shards' points — shard-scoped
             # requests stay exact over the routed partition directories
             planner.indexes = {}
         scored = planner.plan(req)
-        out = self._hydrate(col, scored, with_payload=with_payload,
+        out = self._hydrate(col, scored, need, with_payload=with_payload,
                             with_vectors=with_vectors,
                             direction=planner.last_plan_direction,
                             rank_col=planner.last_plan_rank_col)
@@ -2016,11 +2076,24 @@ class QdrantSparkClient:
         counts groups (as in the reference). ``shard_key_selector`` scopes
         the whole grouped query to the selected shards (ShardSelector on
         the groups API), bypassing whole-corpus indexes like every other
-        shard-scoped request."""
+        shard-scoped request.
+
+        One job on a carrying route: the plan's top ``limit *
+        group_size * GROUP_OVERSAMPLE`` hits carry the group field and the
+        hydration columns (:attr:`QueryPlanner.carry`), are collected, and
+        group on the driver (:func:`~qdrant_spark.operators.groupby.
+        group_hits`): best group first, ranked by its best hit, ties by
+        group value ascending. Other routes look their hits up once by
+        id, and ``with_lookup`` reads the ≤ ``limit`` group ids from the
+        lookup collection once."""
+        from qdrant_spark.operators.groupby import group_hits
+        from qdrant_spark.query import GROUP_OVERSAMPLE
+
         col = self._coll(collection_name)
         if col.df is None:
             return GroupsResult(groups=[])
-        req: dict[str, Any] = {"query": self._norm_query(query)}
+        req: dict[str, Any] = {"query": self._norm_query(query),
+                               "limit": limit * group_size * GROUP_OVERSAMPLE}
         if using:
             req["using"] = col.vec_col(using)
         if prefetch is not None:
@@ -2036,45 +2109,45 @@ class QdrantSparkClient:
         self._norm_lookup_tree(req)
         self._apply_sparse_modifiers(col, req)
         self._check_strict(col.name, {**req, "limit": limit})
+        self._check_dims(col, req, col.vec_col(using or ""))
         planner = self._planner(col, using)
         if shard_key_selector is not None:
             planner.points = self._route(col, col.df, shard_key_selector)
             planner.indexes = {}
-        lookup = lookup_cols = None
-        if with_lookup is not None:
-            if isinstance(with_lookup, str):
-                lookup = with_lookup
-            else:
-                lookup = with_lookup["collection"]
-                wp = with_lookup.get("with_payload")
-                if isinstance(wp, list):
-                    lookup_cols = wp
-        grouped = planner.plan_groups(
-            req, group_by_field=group_by, groups=limit,
-            group_size=group_size, lookup=lookup, lookup_cols=lookup_cols)
-        rows = self._rows_as_dicts(grouped)
+        need = self._hydration_cols(col, [(with_payload, with_vectors)],
+                                    extra=(group_by,))
+        planner.carry = self._carry(need)
+        rows = self._rows_as_dicts(planner.plan(req))
         planner.close()
-        groups: dict[Any, PointGroup] = {}
-        hydr = {p.id: p for p in self._hydrate(
-            col,
-            local_df(
-                self.spark,
-                [(r["id"], r["score"]) for r in rows],
-                col.df.select("id").withColumn("score", F.lit(0.0)).schema),
-            with_payload=with_payload, with_vectors=with_vectors)}
-        lookup_keys = [k for k in (rows[0].keys() if rows else [])
-                       if k.startswith("lookup_")]
-        for r in rows:
-            gv = r["group_value"]
-            if gv not in groups:
-                lk = {k[len("lookup_"):]: r[k] for k in lookup_keys} \
-                    if lookup_keys else None
-                groups[gv] = PointGroup(id=gv, hits=[], lookup=lk)
-            sp = hydr[r["id"]]
-            groups[gv].hits.append(ScoredPoint(
-                id=sp.id, score=float(r["score"]), version=sp.version,
-                payload=sp.payload, vector=sp.vector))
-        return GroupsResult(groups=list(groups.values()))
+        lookup = self._lookup(col, rows, need)
+        if lookup is not None:  # the group field of every hit, by id
+            rows = [dict(r, **{group_by: lookup.get(r["id"], {}).get(group_by)})
+                    for r in rows]
+        grouped = group_hits(rows, group_by, groups=limit,
+                             group_size=group_size,
+                             larger_better=planner.larger_better(req))
+        found = None
+        if with_lookup is not None and grouped:
+            name = with_lookup if isinstance(with_lookup, str) \
+                else with_lookup["collection"]
+            wp = None if isinstance(with_lookup, str) \
+                else with_lookup.get("with_payload")
+            ldf = planner.collections[name]
+            keep = [c for c in (wp if isinstance(wp, list) else ldf.columns)
+                    if c != "id"]
+            # keyed as strings: the join this replaces matched a group
+            # value to an id of another type (1 vs "1") through a cast
+            found = {str(r["id"]): r for r in self._rows_as_dicts(
+                ldf.select("id", *keep).filter(
+                    F.col("id").isin([gv for gv, _ in grouped])))}
+        return GroupsResult(groups=[
+            PointGroup(
+                id=gv,
+                hits=[self._scored_point(col, h, lookup, with_payload,
+                                         with_vectors) for h in hits],
+                lookup=None if found is None or not keep else
+                {c: found.get(str(gv), {}).get(c) for c in keep})
+            for gv, hits in grouped])
 
     def query_batch_points(self, collection_name: str,
                            requests: list[dict[str, Any]],
@@ -2101,58 +2174,34 @@ class QdrantSparkClient:
             self._norm_lookup_tree(n)
             self._apply_sparse_modifiers(col, n)
             self._check_strict(col.name, n)
+            self._check_dims(col, n, col.vec_col(""))
             norm.append(n)
         registry = {n: cc.df for n, cc in self._colls.items()
                     if cc.df is not None}
+        selections = [(r.get("with_payload", True),
+                       r.get("with_vector", r.get("with_vectors", False)))
+                      for r in requests]
+        # ONE hydration for the whole batch: every request's plan carries
+        # the union of the requested columns, and the requests are
+        # assembled from the one collected union, each in its own plan
+        # order and payload selection
+        need = self._hydration_cols(col, selections)
         tagged = query_batch(col.df, norm, id_col="id",
                              vec_col=col.vec_col(""),
                              metric=col.metric_for(None),
                              collections=registry,
                              metrics=col.metrics_map(),
-                             indexes=col.indexes_map())
+                             indexes=col.indexes_map(),
+                             carry=list(self._carry(need)))
+        rows = self._rows_as_dicts(tagged)
+        lookup = self._lookup(col, rows, need)
         by_idx: dict[int, list] = {}
-        for r in tagged.collect():
+        for r in rows:
             by_idx.setdefault(r["request_idx"], []).append(r)
-        # ONE hydration lookup for the whole batch (not one id-lookup scan
-        # per request): the union of all hit ids against the union of the
-        # requested columns, assembled per request driver-side in each
-        # request's own plan order / payload selection
-        selections = []
-        for i in range(len(norm)):
-            wp = requests[i].get("with_payload", True)
-            wv = requests[i].get("with_vector",
-                                 requests[i].get("with_vectors", False))
-            selections.append((wp, wv))
-        all_ids = {h["id"] for hits in by_idx.values() for h in hits}
-        rows: dict[Any, dict] = {}
-        if all_ids and any(wp is not False or wv is not False
-                           for wp, wv in selections):
-            need: list[str] = []
-            for i, (wp, wv) in enumerate(selections):
-                if not by_idx.get(i):
-                    continue
-                for c in self._needed_cols(col, wp, wv):
-                    if c not in need:
-                        need.append(c)
-            rows = {r["id"]: r for r in self._rows_as_dicts(
-                col.df.select(*need).filter(F.col("id").isin(list(all_ids))))}
-        out = []
-        for i, req in enumerate(norm):
-            hits = by_idx.get(i, [])
-            if not hits:
-                out.append(QueryResponse(points=[]))
-                continue
-            wp, wv = selections[i]
-            pts = []
-            for h in hits:
-                r = rows.get(h["id"], {})
-                pts.append(ScoredPoint(
-                    id=h["id"], score=float(h["score"]),
-                    version=r.get("version"),
-                    payload=self._payload_out(col, r, wp) if r else None,
-                    vector=self._vector_out(col, r, wv) if r else None))
-            out.append(QueryResponse(points=pts))
-        return out
+        return [QueryResponse(points=[
+            self._scored_point(col, h, lookup, wp, wv)
+            for h in by_idx.get(i, [])])
+            for i, (wp, wv) in enumerate(selections)]
 
     # -- distance matrix ---------------------------------------------------------
 

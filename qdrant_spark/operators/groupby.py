@@ -20,9 +20,17 @@ back onto the capped hits. No iteration, no driver loop, and — unlike a
 naive global dense_rank window — no stage that funnels every candidate
 row through a single partition (that plan breaks at high group
 cardinality; r8 rework).
+
+A caller that collects the scored top-k anyway (the client's grouped
+queries) groups the collected rows with :func:`group_hits` instead, the
+way qdrant's coordinator groups merged hits (group_by.rs:263-356) — the
+same semantics with no shuffle, as ``knn.collect_topk`` finishes a batch
+top-k on the driver.
 """
 
 from __future__ import annotations
+
+from typing import Any, Iterable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -89,6 +97,37 @@ def group_by(
         part + ["group_value"],
     )
     return df.select(*out_cols, "group_rank")
+
+
+def group_hits(
+    rows: Iterable[dict[str, Any]],
+    group_key: str,
+    *,
+    groups: int = 10,
+    group_size: int = 3,
+    larger_better: bool = True,
+    id_col: str = "id",
+) -> list[tuple[Any, list[dict[str, Any]]]]:
+    """:func:`group_by` over driver-side hits (dicts holding ``id_col``,
+    ``score`` and ``group_key``): ``[(group_value, hits)]``, best group
+    first. An array value puts the hit in each of its distinct non-null
+    values; a null value puts it in none. Each group keeps its
+    ``group_size`` best hits (score direction, then id ascending); groups
+    rank by their best hit, then by group value ascending, and the first
+    ``groups`` are returned."""
+    sign = -1.0 if larger_better else 1.0
+    by_value: dict[Any, list[dict[str, Any]]] = {}
+    for r in sorted(rows, key=lambda r: (sign * r["score"], r[id_col])):
+        v = r[group_key]
+        for gv in dict.fromkeys(v) if isinstance(v, (list, tuple)) else (v,):
+            if gv is None:
+                continue
+            hits = by_value.setdefault(gv, [])
+            if len(hits) < group_size:
+                hits.append(r)
+    ranked = sorted(by_value.items(),
+                    key=lambda g: (sign * g[1][0]["score"], g[0]))
+    return ranked[:groups]
 
 
 def with_lookup(

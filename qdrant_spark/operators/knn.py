@@ -89,6 +89,20 @@ def _threshold_cond(metric: str, threshold: float, score_col: str = "score") -> 
 ARROW_DISPATCH_BYTES = 128 << 20
 
 
+def dim_guard(vec_col: str, dim: int) -> Column:
+    """Filter condition of an exact dense scan: false for rows without a
+    vector, true for rows whose vector has ``dim`` values, and an in-plan
+    error for any other row — a query of the wrong dimension fails
+    instead of scoring nulls or matching nothing. The message names both
+    dimensions."""
+    return (F.when(F.col(vec_col).isNull(), False)
+            .when(F.size(vec_col) == dim, True)
+            .otherwise(F.raise_error(F.format_string(
+                f"query vector has {dim} dimensions but "
+                f"{vec_col.replace('%', '%%')} vectors have %d",
+                F.size(vec_col)))))
+
+
 def _plan_size_bytes(df: DataFrame) -> int:
     try:
         return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
@@ -128,6 +142,7 @@ def knn(
         )
     from qdrant_spark.functions.distances import distance_to_lit
 
+    df = df.filter(dim_guard(vec_col, len(query_vector)))
     score = distance_to_lit(metric, vec_col, query_vector)
     out_cols = select if select is not None else \
         [c for c in df.columns if c != vec_col and c != "score"] + ["score"]
@@ -549,7 +564,7 @@ def _matmul_knn(
 
     sel = pts.select(id_col, vec_col)
     if vec_decode is None:
-        sel = sel.filter(F.size(vec_col) == len(Q[0]))
+        sel = sel.filter(dim_guard(vec_col, Q.shape[1]))
     return arrow_topk(
         sel, blocks, metric=metric, k=k, qids=qids, qid_type=qid_type,
         qid_col=qid_col, id_col=id_col, score_threshold=score_threshold,

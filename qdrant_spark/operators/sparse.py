@@ -3,11 +3,13 @@
 Reference semantics:
 - sparse KNN = dot product over (indices, values) pairs, searched via an
   inverted index (lib/sparse/src/index/search_context.rs:37-91; posting
-  lists pruned by max_next_weight). In Spark the inverted index IS the
-  exploded (id, dim, value) DataFrame: a query becomes a broadcast join on
-  dim + groupBy(id) sum — the classic SQL inverted-index plan. At 100 TB
-  the terms table is partitioned/bucketed by dim so each query term touches
-  one partition (posting list locality for free).
+  lists pruned by max_next_weight). Over the points table the exact leaf
+  scores row-wise (:func:`sparse_knn`: one fold per row, then a top-k
+  sort). A prebuilt index IS the exploded (id, dim, value) DataFrame: a
+  query becomes a broadcast join on dim + groupBy(id) sum — the classic
+  SQL inverted-index plan. At 100 TB the pairs table is partitioned by
+  dim bucket so each query term touches one partition (posting list
+  locality for free).
 - BM25 embedding (lib/bm25/src/lib.rs:19-166): tf component
   tf*(k1+1) / (tf + k1*(1 - b + b*doc_len/avg_doc_len)), defaults k1=1.2,
   b=0.75, avg_doc_len=256; token ids via murmur3 in the reference — we use
@@ -108,24 +110,43 @@ def sparse_knn(
     indices_col: str = "sparse_indices",
     values_col: str = "sparse_values",
     flt: dict[str, Any] | None = None,
+    select: list[str] | None = None,
 ) -> DataFrame:
-    """Sparse KNN over (indices array<int/long>, values array<float>) columns
-    — the qdrant SparseVector layout. Explodes to the inverted-index shape
-    and joins with the query terms (lib/sparse/src/common/sparse_vector.rs)."""
-    df = apply_filter(points, flt)
-    pairs = _explode_pairs(df, id_col, indices_col, values_col)
-    spark = points.sparkSession
-    q = local_df(
-        spark,
-        list(zip([int(i) for i in query_indices], [float(v) for v in query_values])),
-        "dim: long, qv: double",
-    )
-    scored = (
-        pairs.join(F.broadcast(q), "dim")
-        .groupBy(id_col)
-        .agg(F.sum(F.col("v") * F.col("qv")).alias("score"))
-    )
-    return scored.orderBy(F.col("score").desc(), F.col(id_col).asc()).limit(k)
+    """Sparse KNN over (indices array<int/long>, values array<float>)
+    columns — the qdrant SparseVector layout: the dot product with the
+    query (lib/sparse/src/common/sparse_vector.rs) over every row that
+    shares a dimension with it, ``k`` best first (score desc, id asc).
+
+    Each row scores in ONE projection, a fold of its (dim, value) pairs
+    through the query's dim -> weight map, so the plan is a scan and a
+    top-k sort (``TakeOrderedAndProject``: k rows leave each task, one
+    job, no shuffle). ``select`` names the output columns (default
+    (id, score)); payload columns listed there ride through the top-k
+    with the score. Duplicate query dims sum their weights. The indexed
+    route, :func:`sparse_knn_index`, scores the same pairs through the
+    posting lists instead."""
+    from qdrant_spark.functions.distances import vec_lit
+
+    weights: dict[int, float] = {}
+    for d, v in zip(query_indices, query_values):
+        weights[int(d)] = weights.get(int(d), 0.0) + float(v)
+    if weights:
+        qmap = F.map_from_arrays(
+            F.expr("array(" + ", ".join(f"{d}L" for d in weights) + ")"),
+            vec_lit(list(weights.values())))
+        dims = F.col(indices_col).cast("array<bigint>")
+        pairs = F.arrays_zip(
+            dims.alias("dim"), F.col(values_col).cast("array<double>").alias("v"))
+        score = F.aggregate(pairs, F.lit(0.0), lambda acc, p: acc + F.coalesce(
+            F.element_at(qmap, p["dim"]), F.lit(0.0)) * p["v"])
+        shares = F.exists(dims, lambda d: F.map_contains_key(qmap, d))
+    else:
+        score, shares = F.lit(0.0), F.lit(False)
+    out_cols = select if select is not None else [id_col, "score"]
+    return (apply_filter(points, flt).filter(shares)
+            .select(*[score.alias("score") if c == "score" else c
+                      for c in out_cols])
+            .orderBy(F.col("score").desc(), F.col(id_col).asc()).limit(k))
 
 
 @dataclass

@@ -74,6 +74,11 @@ FUSE_MIN_BYTES = 32 << 20
 #: side (bulk_knn: 8 x 64 x 10 = 5 120 rows).
 FUSED_COLLECT_MAX = 100_000
 
+#: Candidate oversampling of a grouped query: it plans the top
+#: ``groups * group_size * GROUP_OVERSAMPLE`` hits and groups those (the
+#: reference refills underfilled groups with follow-up searches instead).
+GROUP_OVERSAMPLE = 4
+
 
 def merge_filters(a: dict | None, b: dict | None) -> dict | None:
     """``Filter::merge`` — AND of two filter objects. A Filter is itself a
@@ -196,6 +201,14 @@ class QueryPlanner:
         #: restore the order driver-side; ``last_plan_rank_col`` names it
         self.emit_rank = False
         self.last_plan_rank_col: str | None = None
+        #: columns of ``points`` the caller reads for each hit (payload,
+        #: vectors, version). The exact dense, sparse, scroll, order_by
+        #: and sample leaves carry them through their top-k when they are
+        #: the root or a leg of a driver-side fusion root, as do MMR roots
+        #: and driver-side fusion roots over carrying legs; the root's
+        #: result then holds them beside (id, score). Other routes return
+        #: (id, score) only, so a caller checks the result's columns.
+        self.carry: tuple[str, ...] = ()
         self.fuse_min_bytes = (FUSE_MIN_BYTES if fuse_min_bytes is None
                                else fuse_min_bytes)
         self.fused_collect_max = (FUSED_COLLECT_MAX if fused_collect_max
@@ -290,7 +303,8 @@ class QueryPlanner:
     unpersist_all = close
 
     def plan(self, request: dict[str, Any]) -> DataFrame:
-        """Returns (id, score) best-first, limited."""
+        """Returns (id, score) best-first, limited — followed by the
+        :attr:`carry` columns when the root's route carries them."""
         self._vec_cache = self._batch_resolve_ids(request)
         # Exclude all same-collection referenced point ids (root and
         # nested) by merging a must_not/has_id into the ROOT filter —
@@ -315,7 +329,7 @@ class QueryPlanner:
         self.last_plan_info = {"fused_groups": 0, "fused_legs": 0,
                                "driver_fused_root": 0}
         self.last_plan_rank_col = None
-        return self._node(request, depth=0)
+        return self._node(request, depth=0, carry=tuple(self.carry))
 
     def plan_groups(
         self,
@@ -324,7 +338,7 @@ class QueryPlanner:
         group_by_field: str,
         groups: int = 10,
         group_size: int = 3,
-        oversample: int = 4,
+        oversample: int = GROUP_OVERSAMPLE,
         lookup: DataFrame | str | None = None,
         lookup_cols: list[str] | None = None,
         larger_better: bool | None = None,
@@ -341,20 +355,13 @@ class QueryPlanner:
         ``larger_better`` for ``order_by`` roots."""
         from qdrant_spark.operators.groupby import group_by as _group_by
         from qdrant_spark.operators.groupby import with_lookup as _with_lookup
-        from qdrant_spark.operators.knn import larger_is_better
 
         req = dict(request)
         req["limit"] = max(int(req.get("limit", 0) or 0),
                            groups * group_size * oversample)
         scored = self.plan(req)
-        if larger_better is not None:
-            lb = larger_better
-        elif self.last_plan_direction is not None:
-            # the root's actual score direction (per-`using` metric aware)
-            lb = self.last_plan_direction
-        else:
-            lb = larger_is_better(
-                self.metric_for(req.get("using", self.default_vec_col)))
+        lb = self.larger_better(req) if larger_better is None \
+            else larger_better
         enriched = scored.join(
             self.points.select(self.id_col, group_by_field),
             self.id_col, "left",
@@ -368,9 +375,24 @@ class QueryPlanner:
             out = _with_lookup(out, lookup, select=lookup_cols)
         return out
 
+    def larger_better(self, request: dict[str, Any]) -> bool:
+        """Whether larger scores rank first in the last plan of
+        ``request``: the root's recorded direction (per-``using`` metric
+        aware), else — MMR and sample roots, ordered only in the plan —
+        the metric of the request's vector column."""
+        from qdrant_spark.operators.knn import larger_is_better
+
+        if self.last_plan_direction is not None:
+            return self.last_plan_direction
+        return larger_is_better(
+            self.metric_for(request.get("using", self.default_vec_col)))
+
     # -- internals ----------------------------------------------------------
 
-    def _node(self, req: dict[str, Any], depth: int) -> DataFrame:
+    def _node(self, req: dict[str, Any], depth: int,
+              carry: tuple[str, ...] = ()) -> DataFrame:
+        """The plan of one request node; ``carry`` (see :attr:`carry`)
+        reaches the node's top-k where its route can hold the columns."""
         if depth > MAX_DEPTH:
             raise ValueError("prefetch tree deeper than 64")
         children = req.get("prefetch") or []
@@ -389,8 +411,14 @@ class QueryPlanner:
                                                  c.get("filter")))
                     for c in children
                 ]
-            child_dfs = self._plan_children(children, depth)
-            out = self._rescore(query, child_dfs, req, limit, depth=depth)
+            # the legs of a driver-side fusion root are collected, so
+            # they carry for it; every other root re-plans its candidates
+            lazy_fusion = self.driver_lazy_fusion and (
+                query is None or "fusion" in query)
+            child_dfs = self._plan_children(
+                children, depth, carry if lazy_fusion else ())
+            out = self._rescore(query, child_dfs, req, limit, depth=depth,
+                                carry=carry)
             # record the root's result-order contract AFTER the recursion
             # (plan() is depth-first: the last assignment is the root's).
             # True/False = result is sortable by (score direction, id
@@ -400,7 +428,7 @@ class QueryPlanner:
                 query, leaf=False,
                 vec_col=req.get("using", self.default_vec_col))
             return out
-        out = self._leaf(query, req, limit, depth=depth)
+        out = self._leaf(query, req, limit, depth=depth, carry=carry)
         self.last_plan_direction = self._direction_of(
             query, leaf=True, vec_col=req.get("using", self.default_vec_col))
         return out
@@ -642,7 +670,8 @@ class QueryPlanner:
             self._fuse_ok = _plan_size_bytes(self.points) >= self.fuse_min_bytes
         return self._fuse_ok
 
-    def _plan_children(self, children: list[dict], depth: int) -> list[DataFrame]:
+    def _plan_children(self, children: list[dict], depth: int,
+                       carry: tuple[str, ...] = ()) -> list[DataFrame]:
         groups: dict[tuple, list[int]] = {}
         if self._fusion_worthwhile():
             for i, c in enumerate(children):
@@ -663,7 +692,7 @@ class QueryPlanner:
         self.last_plan_info["fused_legs"] += fused_legs
         for i, c in enumerate(children):
             if out[i] is None:
-                out[i] = self._node(c, depth + 1)
+                out[i] = self._node(c, depth + 1, carry)
         return out
 
     def _fused_leaves(self, requests: list[dict], idxs: list[int],
@@ -864,7 +893,7 @@ class QueryPlanner:
         return target
 
     def _leaf(self, query: Any, req: dict[str, Any], limit: int,
-              depth: int = 0) -> DataFrame:
+              depth: int = 0, carry: tuple[str, ...] = ()) -> DataFrame:
         from qdrant_spark.operators import recommend as R
         from qdrant_spark.operators.knn import knn
         from qdrant_spark.operators.points import sample as sample_points
@@ -887,10 +916,11 @@ class QueryPlanner:
             flt = None
             pre_filtered = True
         kw = dict(vec_col=vec_col, id_col=self.id_col, k=limit, flt=flt)
+        hit_cols = [self.id_col, "score", *carry]
 
         if query is None:  # scroll by id
             out = scroll(pts, limit=limit, flt=flt, id_col=self.id_col)
-            return out.select(self.id_col).withColumn("score", F.lit(0.0))
+            return out.select(self.id_col, F.lit(0.0).alias("score"), *carry)
         if "recommend" in query:
             r = query["recommend"]
             if r.get("strategy", "average_vector") == "average_vector" \
@@ -967,9 +997,8 @@ class QueryPlanner:
                                values_col=f"{vec_col}.values")
                 out = sparse_knn(
                     pts, target["indices"], target["values"],
-                    k=limit + offset,
-                    id_col=self.id_col, flt=flt, **skw,
-                ).select(self.id_col, "score")
+                    k=limit + offset, id_col=self.id_col, flt=flt,
+                    select=hit_cols, **skw)
                 if threshold is not None:
                     out = out.filter(F.col("score") > float(threshold))
                 return out.offset(offset) if offset else out
@@ -1091,7 +1120,7 @@ class QueryPlanner:
                 return out.offset(offset) if offset else out
             return knn(pts, target, metric=metric,
                        score_threshold=threshold, offset=offset,
-                       select=[self.id_col, "score"], **kw)
+                       select=hit_cols, **kw)
         rv = lambda t: self._resolve_vector_input(t, req)  # noqa: E731
         if "recommend" in query:
             r = query["recommend"]
@@ -1129,11 +1158,10 @@ class QueryPlanner:
                          order_by=key, direction=direction,
                          start_from=ob.get("start_from"))
             return out.select(
-                self.id_col, F.col(key).cast("double").alias("score")
-            )
+                self.id_col, F.col(key).cast("double").alias("score"), *carry)
         if "sample" in query:
             out = sample_points(pts, limit, flt=flt)
-            out = out.select(self.id_col).withColumn("score", F.lit(0.0))
+            out = out.select(self.id_col, F.lit(0.0).alias("score"), *carry)
             if self.emit_rank and depth == 0:
                 # the sample's hash order, as an explicit rank: the
                 # window re-sorts only the <= limit sampled rows
@@ -1150,14 +1178,15 @@ class QueryPlanner:
 
     def _rescore(self, query: Any, children: list[DataFrame],
                  req: dict[str, Any], limit: int,
-                 depth: int = 0) -> DataFrame:
+                 depth: int = 0, carry: tuple[str, ...] = ()) -> DataFrame:
         from qdrant_spark.operators.fusion import dbsf, rrf
 
         if query is None:
             query = {"fusion": "rrf"}
         if "fusion" in query:
+            from pyspark.sql import types as T
+
             from qdrant_spark.operators.fusion import dbsf_hits, rrf_hits
-            from qdrant_spark.operators.knn import larger_is_better
 
             # Driver-side fast path: every child is a fused leg whose hits
             # are already collected (bounded, best-first). Restricted to
@@ -1182,31 +1211,46 @@ class QueryPlanner:
                 # values match rrf()/dbsf() for any leg metric.
                 from concurrent.futures import ThreadPoolExecutor
 
-                from qdrant_spark.operators.fusion import (
-                    dbsf_hits, rrf_hits,
-                )
+                from pyspark import inheritable_thread_target
 
-                def _leg_hits(i_c):
-                    i, c = i_c
+                def _leg_rows(c):
+                    """(best-first (id, score) hits, carried rows by id
+                    or None) of one leg."""
                     h = self._fused_hits_by_df.get(id(c))
                     if h is not None:
-                        return h
-                    rows = c.select(self.id_col, "score").collect()
-                    return sorted(((r[0], float(r[1])) for r in rows),
-                                  key=lambda t: (-t[1], t[0]))
+                        return h, None
+                    carried = bool(carry) and set(carry) <= set(c.columns)
+                    rows = c.select(self.id_col, "score",
+                                    *(carry if carried else ())).collect()
+                    return (sorted(((r[0], float(r[1])) for r in rows),
+                                   key=lambda t: (-t[1], t[0])),
+                            {r[0]: tuple(r[2:]) for r in rows}
+                            if carried else None)
 
                 if len(children) > 1:
+                    # inheritable: the legs' jobs run under the caller's
+                    # job group, local properties and tags
                     with ThreadPoolExecutor(
                             max_workers=min(3, len(children))) as pool:
-                        hits = list(pool.map(_leg_hits,
-                                             enumerate(children)))
+                        legs = list(pool.map(inheritable_thread_target(
+                            self.points.sparkSession)(_leg_rows), children))
                 else:
-                    hits = [_leg_hits((0, children[0]))]
+                    legs = [_leg_rows(children[0])]
                 self._bump("driver_lazy_fusion")
                 fused = {"rrf": rrf_hits, "dbsf": dbsf_hits}[
-                    query["fusion"]](hits, limit=limit)
+                    query["fusion"]]([h for h, _ in legs], limit=limit)
+                schema = self._hit_schema()
+                if carry and all(rows is not None for _, rows in legs):
+                    # every leg brought its hits' columns: the fused
+                    # result carries them without another scan
+                    by_id = {i: v for _, rows in legs
+                             for i, v in rows.items()}
+                    fused = [(i, sc, *by_id[i]) for i, sc in fused]
+                    pschema = self.points.schema
+                    schema = T.StructType(schema.fields
+                                          + [pschema[c] for c in carry])
                 return _local_result_df(
-                    self.points.sparkSession, fused, self._hit_schema())
+                    self.points.sparkSession, fused, schema)
             fn = {"rrf": rrf, "dbsf": dbsf}[query["fusion"]]
             return fn(children, id_col=self.id_col, limit=limit)
         # merge children candidate ids (dedup), then re-score
@@ -1238,9 +1282,13 @@ class QueryPlanner:
 
             m = query["mmr"]
             vec_col = req.get("using", self.default_vec_col)
+            # the candidate join reads the points anyway: the carried
+            # columns come along (the MMR kernel drops the vector column,
+            # so a request for it keeps (id, score))
+            kept = () if vec_col in carry else carry
             cand = children[0].join(
-                self.points.select(self.id_col, vec_col), self.id_col, "left"
-            )
+                self.points.select(self.id_col, vec_col, *kept),
+                self.id_col, "left")
             out = mmr(cand, lambda_=1.0 - float(m.get("diversity", 0.5)),
                       k=limit, metric=self.metric_for(vec_col),
                       id_col=self.id_col, vec_col=vec_col)
@@ -1248,9 +1296,9 @@ class QueryPlanner:
                 # carry the pick order as an explicit column so the
                 # caller can hydrate in ONE job and re-sort driver-side
                 self.last_plan_rank_col = "__rank"
-                return out.select(self.id_col, "score",
+                return out.select(self.id_col, "score", *kept,
                                   F.col("rank").alias("__rank"))
-            return out.select(self.id_col, "score")
+            return out.select(self.id_col, "score", *kept)
         if "order_by" in query:
             ob = query["order_by"]
             key, direction = ob["key"], ob.get("direction", "asc")
@@ -1814,6 +1862,7 @@ def query_batch(
     metrics: dict[str, str] | None = None,
     indexes: dict[str, list] | None = None,
     ivf_index=None,
+    carry: list[str] | None = None,
 ) -> DataFrame:
     """Batch universal query (``POST /collections/{c}/points/query/batch``,
     reference src/actix/api/query_api.rs; per-request independence as in
@@ -1841,6 +1890,12 @@ def query_batch(
     ``indexes`` is the :class:`QueryPlanner` mapping; ``ivf_index``
     registers one more IVF index on its own vector column.
 
+    ``carry`` names columns of ``points`` the caller reads for each hit
+    (:attr:`QueryPlanner.carry`). When every request's plan carries them,
+    the result holds them after (request_idx, id, score), so one collect
+    answers the batch; when any leg cannot (a fused group, an indexed
+    route), the result is (request_idx, id, score) for every request.
+
     Like :func:`universal_query`, if any request engages the fused
     DataFrame fallback the whole batch result is materialized eagerly
     (≤ ``sum(limit_i)`` rows collected, returned as a local snapshot
@@ -1856,6 +1911,7 @@ def query_batch(
         collections=collections, fuse_min_bytes=fuse_min_bytes,
         metrics=metrics, indexes=indexes,
     )
+    planner.carry = tuple(carry or ())
     if not requests:
         raise ValueError("empty request batch")
 
@@ -1911,6 +1967,13 @@ def query_batch(
             planner._fused_persisted = []
     planner._fused_persisted.extend(fused_persists)
     spark = planner.points.sparkSession
+    if carry:
+        cols = [None if isinstance(o, _RowsLeg) else set(o.columns)
+                for o in outs]
+        if not all(c is not None and set(carry) <= c for c in cols):
+            outs = [o.select(id_col, "score")
+                    if c is not None and set(carry) <= c else o
+                    for o, c in zip(outs, cols)]
 
     def _leg_local(o):
         """(column names, schema, rows) when the leg is driver-local."""

@@ -1712,3 +1712,77 @@ def test_point_frames_plan_as_local_relations(client):
     plan2 = (client._points_to_df(col, nan_pts)
              ._jdf.queryExecution().executedPlan().toString())
     assert "LocalTableScan" not in plan2
+
+
+class TestGroupOrder:
+    """Grouped queries return groups best-first: ranked by their best
+    hit's score, ties by group value ascending (group_by.rs ranks groups
+    the same way); hits inside a group rank by score, then id."""
+
+    @pytest.fixture(scope="class")
+    def grouped(self, spark):
+        vecs = np.random.default_rng(3).normal(size=(400, 4))
+        c = QdrantSparkClient(spark)
+        c.create_collection("g40", vectors_config={"size": 4,
+                                                   "distance": "Dot"})
+        c.upsert("g40", [{"id": i, "vector": vecs[i].tolist(),
+                          "payload": {"g": f"g{i % 40:02d}"}}
+                         for i in range(400)])
+        return c, vecs
+
+    def test_groups_best_first(self, grouped):
+        c, vecs = grouped
+        q = [0.3, -0.2, 0.9, 0.1]
+        s = vecs @ np.asarray(q)
+        top = sorted(range(400), key=lambda i: (-s[i], i))[:10 * 2 * 4]
+        want: dict[str, list[int]] = {}
+        for i in top:
+            hits = want.setdefault(f"g{i % 40:02d}", [])
+            if len(hits) < 2:
+                hits.append(i)
+        want_order = sorted(want, key=lambda g: (-s[want[g][0]], g))[:10]
+        for res in (
+                c.query_points_groups("g40", group_by="g", query=q,
+                                      limit=10, group_size=2),
+                c.search_groups("g40", q, group_by="g", limit=10,
+                                group_size=2)):
+            assert [g.id for g in res.groups] == want_order
+            assert [[h.id for h in g.hits] for g in res.groups] == \
+                [want[g] for g in want_order]
+        rec = c.recommend_groups("g40", group_by="g", positive=[7],
+                                 limit=10, group_size=2)
+        best = [g.hits[0].score for g in rec.groups]
+        assert len(best) == 10 and best == sorted(best, reverse=True)
+
+    def test_tied_groups_rank_by_group_value(self, spark):
+        c = QdrantSparkClient(spark)
+        c.create_collection("gtie", vectors_config={"size": 2,
+                                                    "distance": "Dot"})
+        c.upsert("gtie", [{"id": i, "vector": [1.0, 0.5],
+                           "payload": {"g": ["c", "a", "b"][i % 3]}}
+                          for i in range(12)])
+        res = c.query_points_groups("gtie", group_by="g", query=[1.0, 1.0],
+                                    limit=3, group_size=2)
+        assert [g.id for g in res.groups] == ["a", "b", "c"]
+        assert [[h.id for h in g.hits] for g in res.groups] == \
+            [[1, 4], [2, 5], [0, 3]]
+        assert all(h.payload == {"g": g.id}
+                   for g in res.groups for h in g.hits)
+
+
+def test_dense_query_dimension_checked(client):
+    """A dense query of the wrong dimension raises ValueError naming both
+    dimensions (it used to crash in hydration on null scores, or match
+    nothing)."""
+    with pytest.raises(ValueError, match=r"3 dimensions.*has 4"):
+        client.query_points("test_collection", query=[0.1, 0.2, 0.3])
+    with pytest.raises(ValueError, match=r"5 dimensions.*has 4"):
+        client.query_points("test_collection", prefetch=[
+            {"query": [0.1] * 4, "limit": 5},
+            {"query": [0.1] * 5, "limit": 5}], query={"fusion": "rrf"})
+    with pytest.raises(ValueError, match=r"3 dimensions.*has 4"):
+        client.query_batch_points("test_collection", [
+            {"query": [0.1] * 4}, {"query": [0.1, 0.2, 0.3]}])
+    with pytest.raises(ValueError, match=r"3 dimensions.*has 4"):
+        client.query_points_groups("test_collection", group_by="city",
+                                   query=[0.1, 0.2, 0.3])

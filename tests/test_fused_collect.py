@@ -197,3 +197,14 @@ def test_fused_dense_mixed_dimensions_raise(split_emb):
     with pytest.raises(ValueError, match=r"request 1\b.*63.*request 0\b.*64"):
         Q.query_batch(split_emb, reqs, id_col="id", vec_col="vec",
                       fuse_min_bytes=0)
+
+
+def test_fused_dense_wrong_dimension_raises(split_emb):
+    """A fused dense group whose every leg has the wrong dimension fails
+    in-plan, naming both dimensions, instead of returning no hits."""
+    q = list(split_emb.limit(1).collect()[0]["vec"])[:63]
+    reqs = [{"query": {"nearest": q}, "limit": 3},
+            {"query": {"nearest": [2 * x for x in q]}, "limit": 3}]
+    with pytest.raises(Exception, match=r"63 dimensions.*vec vectors have 64"):
+        Q.query_batch(split_emb, reqs, id_col="id", vec_col="vec",
+                      fuse_min_bytes=0).collect()

@@ -195,3 +195,13 @@ def test_knn_batch_auto_dispatch(embeddings):
         assert got_f == ref
     finally:
         K.ARROW_DISPATCH_BYTES = old
+
+
+def test_knn_wrong_dimension_raises(embeddings):
+    """The Column path fails in-plan on a query of the wrong dimension,
+    naming both dimensions, instead of scoring nulls into no hits."""
+    q = [0.1] * 63
+    df = knn(embeddings, q, metric="cosine", k=5, vec_col="embedding",
+             id_col="vec_id", select=["vec_id", "score"])
+    with pytest.raises(Exception, match=r"63 dimensions.*embedding vectors have 64"):
+        df.collect()

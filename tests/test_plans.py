@@ -447,3 +447,90 @@ def test_fused_dense_batch_is_one_job(spark, embeddings, tmp_path,
     (plan,) = plans
     assert "MapInArrow" in plan
     assert "Exchange" not in plan
+
+
+@pytest.fixture(scope="module")
+def mix_client(spark):
+    """A client collection shaped like the benchmark's client mix: a
+    dense 8-d cosine vector, a sparse ``text`` vector and a typed
+    payload."""
+    import numpy as np
+
+    from qdrant_spark.client import QdrantSparkClient
+
+    rng = np.random.default_rng(5)
+    c = QdrantSparkClient(spark)
+    c.create_collection("jobs", vectors_config={"size": 8,
+                                                "distance": "Cosine"},
+                        sparse_vectors_config={"text": {}})
+    c.upsert("jobs", [
+        {"id": i,
+         "vector": {"": rng.normal(size=8).tolist(),
+                    "text": {"indices": sorted(rng.choice(40, 4, replace=False)
+                                               .tolist()),
+                             "values": rng.random(4).tolist()}},
+         "payload": {"cat": "abcde"[i % 5], "price": float(i % 100)}}
+        for i in range(300)])
+    return c
+
+
+_Q8 = [0.3, -0.1, 0.8, 0.2, -0.5, 0.4, 0.1, -0.2]
+_READS = {
+    "query_points": lambda c: c.query_points("jobs", query=_Q8, limit=5),
+    "filtered": lambda c: c.query_points(
+        "jobs", query=_Q8, limit=5, query_filter={"must": [
+            {"key": "cat", "match": {"value": "a"}},
+            {"key": "price", "range": {"lt": 50.0}}]}),
+    "groups": lambda c: c.query_points_groups(
+        "jobs", group_by="cat", query=_Q8, limit=3, group_size=2),
+    "batch": lambda c: c.query_batch_points(
+        "jobs", [{"query": _Q8, "limit": 3},
+                 {"query": _Q8[::-1], "limit": 3}]),
+    "hybrid": lambda c: c.query_points(
+        "jobs", prefetch=[
+            {"query": _Q8, "limit": 10},
+            {"query": {"indices": [1, 5, 9], "values": [0.5, 0.3, 0.2]},
+             "using": "text", "limit": 10}],
+        query={"fusion": "rrf"}, limit=5),
+}
+
+
+@pytest.mark.parametrize("kind,jobs", [
+    ("query_points", 1), ("filtered", 1), ("groups", 1), ("batch", 1),
+    ("hybrid", 2)])
+def test_client_read_job_count(spark, mix_client, kind, jobs):
+    """Each exact client read kind runs its pinned number of Spark jobs,
+    all under the caller's job group: the hydration columns ride through
+    the top-k, groups form on the driver, and a fused query runs one job
+    per prefetch leg with no hydration job."""
+    sc = spark.sparkContext
+    ungrouped = len(sc.statusTracker().getJobIdsForGroup(None))
+    group = f"read-{kind}"
+    sc.setJobGroup(group, kind)
+    try:
+        out = _READS[kind](mix_client)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert out
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == jobs
+    assert len(sc.statusTracker().getJobIdsForGroup(None)) == ungrouped
+
+
+def test_client_query_points_plan_has_no_exchange(mix_client, monkeypatch):
+    """query_points collects one top-k plan that carries the payload: no
+    broadcast of the collection for a hydration join, no shuffle."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    plans = []
+    orig = DataFrame.collect
+
+    def collect(self):
+        plans.append(_plan(self, "simple"))
+        return orig(self)
+
+    monkeypatch.setattr(DataFrame, "collect", collect)
+    res = _READS["query_points"](mix_client)
+    assert res.points[0].payload
+    (plan,) = plans
+    assert "TakeOrderedAndProject" in plan
+    assert "BroadcastExchange" not in plan and "Exchange" not in plan
