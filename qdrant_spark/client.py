@@ -1547,15 +1547,41 @@ class QdrantSparkClient:
                             **_ignored: Any) -> str:
         """Idempotent vector-index maintenance for one named vector — the
         reference's automatic past-threshold indexing surfaced as the
-        explicit command a Spark job scheduler would run after ingest
-        (plans/maintenance.ensure_ann_index: skip below threshold, build +
-        persist, reload on matching meta, rebuild on drift/param change).
-        Once built, dense `nearest` queries route through the
-        selectivity-aware dispatcher (exact below the plain-scan
-        crossover, cluster-pruned above; per-request ``params.exact``
-        opts out). Returns the action taken."""
+        explicit command a Spark job scheduler would run after ingest.
+        The vector's config picks the index kind(s) and
+        plans/maintenance.ensure_index runs each one's lifecycle (skip
+        below threshold, build + persist + commit, reload on matching
+        meta, rebuild on drift/param change; in memory without a
+        storage root) under ``root/<collection>/<kind dir><vector>``:
+
+        - dense: the IVF index (``index_``); with a
+          ``quantization_config`` the codes (``quant_index_``) — or,
+          with clustering params (``n_clusters`` kwarg or declared in
+          the vector's index params), the composed quantized IVF
+          (``quant_ivf_index_``), the reference's HNSW-over-quantized-
+          codes deployment (hnsw_quantized_search_test.rs);
+        - multivector: the token-cluster index (``maxsim_index_``,
+          multivector_hnsw_test.rs), or the quantized token codes
+          (``maxsim_sq_index_``) — with clustering params composed with
+          the token index, plus the declared ``clustered_codes``
+          invlist (``maxsim_codes_``, storage root only).
+
+        Once registered, `nearest` queries route through the index —
+        the dense dispatcher and the MaxSim routes only above their
+        exact-vs-pruned crossovers (``full_scan_threshold``); per-request
+        ``params.exact`` / ``quantization.ignore`` opt out. A declared
+        ``clustered_points`` invlist makes routed MaxSim queries prune
+        the float scan at the file level (``prefer_composed`` keeps the
+        composed ladder instead). The kinds whose layout freezes floats
+        get the points table's file-listing digest as
+        ``corpus_signature``, so count-stable content drift (e.g.
+        update_vectors) rebuilds them instead of serving stale floats.
+        Returns the action taken ("exists" when already registered)."""
+        from dataclasses import replace
+        from functools import partial
+
         from qdrant_spark.operators.dispatch import FULL_SCAN_THRESHOLD
-        from qdrant_spark.plans.maintenance import ensure_ann_index
+        from qdrant_spark.plans.maintenance import read_meta
 
         col = self._coll(collection_name)
         if col.df is None:
@@ -1565,319 +1591,118 @@ class QdrantSparkClient:
         if using in col.sparse:
             return self._ensure_sparse_index(col, using, thr)
         vc = col.vectors.get(using)
-        declared = dict((vc.index_params if vc is not None else None) or {})
+        if vc is None or vc.kind not in ("dense", "multi"):
+            raise ValueError("vector index needs a declared dense vector")
+        declared = dict(vc.index_params or {})
         if n_clusters is None:
             n_clusters = declared.get("n_clusters")
-        for kk in ("nprobe", "candidates", "full_scan_threshold",
-                   "clustered_points", "prefer_composed",
-                   "clustered_codes"):
-            if kk in declared and kk not in _ignored:
-                _ignored[kk] = declared[kk]
-        if vc is not None and vc.kind == "multi":
-            if vc.quantization is not None:
-                action = self._ensure_maxsim_sq_index(col, using, vc, thr)
-                if n_clusters is not None and action != "skipped":
-                    # explicit clustering params compose the token-IVF
-                    # route WITH the token codes (the dense quantized
-                    # posture mirrored, r12): the planner then runs
-                    # probe-clusters -> coarse-over-candidate-codes ->
-                    # exact-rescore (maxsim_quant_ivf_leaves)
-                    a2 = self._ensure_maxsim_index(
-                        col, using, thr, n_clusters=n_clusters,
-                        **_ignored)
-                    if _ignored.get("clustered_codes") \
-                            and a2 != "skipped":
-                        # r14: the declared CODES invlist — the composed
-                        # coarse stage then file-prunes to the probed
-                        # clusters' code files; rebuilt whenever either
-                        # parent index was (it derives from both)
-                        self._ensure_maxsim_codes(
-                            col, using,
-                            parents_fresh=(
-                                action not in ("exists", "loaded")
-                                or a2 not in ("exists", "loaded")))
-                    if a2 not in ("exists", "loaded"):
-                        action = a2 if action in ("exists", "loaded") \
-                            else action
+        opts = {**declared, **_ignored}
+        ensure = partial(self._ensure_kind, col, using, thr=thr)
+        vcol, quant = col.vec_col(using), vc.quantization
+
+        if vc.kind == "dense":
+            if quant is None:
+                idx, action = ensure("ivf", n_clusters=n_clusters or 16,
+                                     vec_col=vcol)
+                if idx is not None:
+                    col.ivf[using] = idx
                 return action
-            return self._ensure_maxsim_index(col, using, thr,
-                                             n_clusters=n_clusters or 16,
-                                             **_ignored)
-        if vc is None or vc.kind != "dense":
-            raise ValueError("vector index needs a declared dense vector")
-        if vc.quantization is not None:
-            # explicit clustering params (kwarg or declared per-vector
-            # index config) compose the cluster structure WITH the codes
-            # — probe clusters, score codes, rescore floats, the
-            # reference's quantized-HNSW posture; without them the codes
-            # alone are built (pure byte-width pruning, exact modulo
-            # oversampling)
-            return self._ensure_quant_index(
-                col, using, vc, thr, n_clusters=n_clusters,
-                nprobe=_ignored.get("nprobe", 4))
-        if self.root is not None:
-            path = os.path.join(self.root, col.name,
-                                f"index_{using or 'default'}")
-            idx, action = ensure_ann_index(
-                col.df, path, n_clusters=n_clusters or 16,
-                vec_col=col.vec_col(using), id_col="id",
-                indexing_threshold=thr)
-        else:
-            if col.df.count() < thr:
-                return "skipped"
-            from qdrant_spark.operators.ann import build_ivf
-
-            idx, action = build_ivf(
-                col.df, n_clusters=n_clusters or 16,
-                vec_col=col.vec_col(using),
-                id_col="id"), "built"
-        if idx is not None:
-            col.ivf[using] = idx
-        return action
-
-    def _ensure_quant_index(self, col: _Collection, using: str,
-                            vc: "VectorConfig", thr: int,
-                            n_clusters: int | None = None,
-                            nprobe: int = 4) -> str:
-        """Quantized analogue of the dense ensure: build the codes the
-        declared ``quantization_config`` describes (build_quant dispatches
-        scalar/product/binary/turbo — the reference quantizes segment
-        storage from the same config, quantized_vectors.rs). With a
-        storage root the (id, code) columns are persisted as their own
-        narrow parquet (persist_quant), so the coarse stage scans 1-4
-        B/dim instead of recomputing codes from the float column. Once
-        registered, dense `nearest` queries run coarse+rescore through it
-        (per-request SearchParams.quantization opts out/tunes).
-
-        With ``n_clusters`` (explicit kwarg or the vector's declared
-        index params) the ensure builds the COMPOSED index instead —
-        cluster-partitioned (id, __cluster, code) storage searched
-        probe-clusters -> score-codes -> exact-rescore, the reference's
-        HNSW-over-quantized-codes deployment
-        (hnsw_quantized_search_test.rs). The coarse handle registers too
-        so `quantization.ignore` / filtered requests keep their planned
-        routes."""
-        if n_clusters is not None:
+            if n_clusters is None:
+                if using in col.quant:
+                    return "exists"
+                handle, action = ensure("quant", config=quant,
+                                        vec_col=vcol, dim=vc.dim)
+                if handle is not None:
+                    col.quant[using] = handle
+                return action
             if using in col.quant_ivf:
                 return "exists"
-            from qdrant_spark.plans.maintenance import ensure_quant_ivf_index
-
-            if self.root is not None:
-                path = os.path.join(self.root, col.name,
-                                    f"quant_ivf_index_{using or 'default'}")
-                qih, action = ensure_quant_ivf_index(
-                    col.df, path, vc.quantization,
-                    n_clusters=int(n_clusters), nprobe=int(nprobe),
-                    vec_col=col.vec_col(using), id_col="id", dim=vc.dim,
-                    indexing_threshold=thr,
-                    corpus_signature=self._points_signature(col))
-            else:
-                if col.df.count() < thr:
-                    return "skipped"
-                from qdrant_spark.operators.quantize import (
-                    build_quant, compose_quant_ivf,
-                )
-                from qdrant_spark.operators.ann import build_ivf
-
-                handle = build_quant(
-                    col.df, vc.quantization, vec_col=col.vec_col(using),
-                    id_col="id", dim=vc.dim)
-                ivf = build_ivf(col.df, n_clusters=int(n_clusters),
-                                vec_col=col.vec_col(using), id_col="id")
-                qih, action = compose_quant_ivf(
-                    handle, ivf, nprobe=int(nprobe)), "built"
+            qih, action = ensure(
+                "quant_ivf", config=quant, n_clusters=int(n_clusters),
+                nprobe=int(opts.get("nprobe", 4)), vec_col=vcol, dim=vc.dim)
             if qih is not None:
                 col.quant_ivf[using] = qih
                 col.quant[using] = qih.handle
             return action
-        if using in col.quant:
-            return "exists"
-        if self.root is not None:
-            from qdrant_spark.plans.maintenance import ensure_quant_index
 
-            path = os.path.join(self.root, col.name,
-                                f"quant_index_{using or 'default'}")
-            handle, action = ensure_quant_index(
-                col.df, path, vc.quantization,
-                vec_col=col.vec_col(using), id_col="id", dim=vc.dim,
-                indexing_threshold=thr)
-            if handle is not None:
-                col.quant[using] = handle
+        if quant is None:
+            return self._ensure_maxsim(col, using, ensure,
+                                       n_clusters or 16, opts)
+        if using in col.mv_sq:
+            action = "exists"
+        else:
+            idx, action = ensure("maxsim_quant", config=quant, mv_col=vcol)
+            if idx is not None:
+                col.mv_sq[using] = idx
+        if n_clusters is None or action == "skipped":
             return action
-        from qdrant_spark.operators.quantize import build_quant
+        # explicit clustering params compose the token-IVF route WITH the
+        # token codes (the dense quantized posture mirrored): the planner
+        # then runs probe-clusters -> coarse-over-candidate-codes ->
+        # exact-rescore (maxsim_quant_ivf_leaves)
+        a2 = self._ensure_maxsim(col, using, ensure, n_clusters, opts)
+        if opts.get("clustered_codes") and a2 != "skipped" \
+                and self.root is not None:
+            # the CODES invlist derives from both parents: their versions
+            # are its requested params, so rebuilding either rebuilds it
+            route = col.mv_idx[using]
+            parents = [(read_meta(k, self._index_path(col, using, k))
+                        or {}).get("version")
+                       for k in ("maxsim", "maxsim_quant")]
+            idx, _ = ensure("maxsim_codes", total=route.n_docs,
+                            index=route.index, qidx=col.mv_sq[using],
+                            parents=parents, mv_col=vcol)
+            col.mv_idx[using] = replace(route, index=idx)
+        if action in ("exists", "loaded"):
+            return a2 if a2 not in ("exists", "loaded") else action
+        return action
 
-        if col.df.count() < thr:
-            return "skipped"
-        col.quant[using] = build_quant(
-            col.df, vc.quantization, vec_col=col.vec_col(using),
-            id_col="id", dim=vc.dim)
-        return "built"
+    #: the directory prefix each index kind persists under, + vector name
+    _INDEX_DIRS = {"ivf": "index_", "quant": "quant_index_",
+                   "quant_ivf": "quant_ivf_index_",
+                   "maxsim": "maxsim_index_",
+                   "maxsim_quant": "maxsim_sq_index_",
+                   "maxsim_codes": "maxsim_codes_"}
 
-    def _ensure_maxsim_index(self, col: _Collection, using: str,
-                             thr: int, *, n_clusters: int = 16,
-                             nprobe: int = 4,
-                             candidates: int | None = None,
-                             full_scan_threshold: int | None = None,
-                             clustered_points: bool = False,
-                             prefer_composed: bool = False,
-                             **_ignored: Any) -> str:
-        """Multivector analogue of the dense ensure: cluster the corpus's
-        token vectors (multivec.build_maxsim_ivf — the coarse structure
-        the reference gets from HNSW over multivector storage,
-        multivector_hnsw_test.rs); with a storage root the ensure is
-        meta-matched (plans/maintenance.ensure_maxsim_index): a restarted
-        session LOADS the cluster-partitioned token frame + centroids
-        instead of re-clustering, and rebuilds on param change or corpus
-        drift — the same lifecycle the quant/dense ensures have. Once
-        registered, MaxSim queries route through the pruned plan with the
-        declared ``nprobe`` / ``candidates`` — but ONLY above the
-        exact-vs-pruned crossover (``full_scan_threshold`` docs, default
-        multivec.MAXSIM_FULL_SCAN_THRESHOLD; the bench measured the
-        pruned path 3.4x slower at 512k docs). Per-request
-        ``params.exact`` and filtered requests keep the exact scan.
+    def _index_path(self, col: _Collection, using: str,
+                    kind: str) -> str | None:
+        if self.root is None:
+            return None
+        return os.path.join(self.root, col.name,
+                            f"{self._INDEX_DIRS[kind]}{using or 'default'}")
 
-        ``clustered_points=True`` (kwarg or declared in the vector's
-        index params) also builds the INVLIST layout — the full rows
-        stored once per distinct doc token-cluster, partitioned by
-        cluster — so routed queries prune the float-token SCAN at the
-        file level; the planner then prefers that route over the
-        composed quantized ladder (r14; ``prefer_composed`` overrides
-        for cold-IO deployments). It needs a storage root (the layout
-        IS a persisted artifact); without one the plain route builds.
-        The ensure passes the points table's file-listing digest as
-        ``corpus_signature``, so count-stable content drift (e.g.
-        update_vectors) rebuilds the frozen layout instead of serving
-        stale floats."""
-        from qdrant_spark.operators.multivec import (
-            MaxSimRoute, build_maxsim_ivf,
-        )
+    def _ensure_kind(self, col: _Collection, using: str, kind: str,
+                     thr: int, **params: Any):
+        """plans/maintenance.ensure_index for one index kind of ``using``
+        over the collection's points."""
+        from qdrant_spark.plans.maintenance import ensure_index
+
+        return ensure_index(
+            kind, col.df, self._index_path(col, using, kind),
+            indexing_threshold=thr,
+            corpus_signature=self._points_signature(col),
+            id_col="id", **params)
+
+    def _ensure_maxsim(self, col: _Collection, using: str, ensure,
+                       n_clusters: int, opts: dict[str, Any]) -> str:
+        """The token-cluster index, registered as a MaxSimRoute with the
+        declared routing knobs."""
+        from qdrant_spark.operators.multivec import MaxSimRoute
 
         if using in col.mv_idx:
             return "exists"
         n = col.df.count()
-        if self.root is not None:
-            from qdrant_spark.plans.maintenance import ensure_maxsim_index
-
-            path = os.path.join(self.root, col.name,
-                                f"maxsim_index_{using or 'default'}")
-            idx, action = ensure_maxsim_index(
-                col.df, path, n_clusters=n_clusters,
-                mv_col=col.vec_col(using), id_col="id",
-                indexing_threshold=thr, total=n,
-                clustered_points=bool(clustered_points),
-                corpus_signature=self._points_signature(col))
-        else:
-            if n < thr:
-                return "skipped"
-            idx, action = build_maxsim_ivf(
-                col.df, n_clusters=n_clusters,
-                mv_col=col.vec_col(using), id_col="id"), "built"
+        idx, action = ensure(
+            "maxsim", total=n, n_clusters=n_clusters,
+            mv_col=col.vec_col(using),
+            clustered_points=bool(opts.get("clustered_points", False)))
         if idx is not None:
             col.mv_idx[using] = MaxSimRoute(
-                index=idx, nprobe=nprobe, candidates=candidates,
-                full_scan_threshold=full_scan_threshold, n_docs=n,
-                prefer_composed=bool(prefer_composed))
-        return action
-
-    def _ensure_maxsim_codes(self, col: _Collection, using: str, *,
-                             parents_fresh: bool) -> str:
-        """Build/load the composed route's CODES invlist (r14 —
-        declared via ``{"index": {"clustered_codes": true}}``): the
-        quantized token codes stored once per distinct (doc, token
-        cluster), cluster-partitioned, so the composed coarse stage
-        file-prunes (maxsim_knn_quant_ivf reads it off the route).
-        Derives from BOTH the token-cluster index and the quantized
-        storage — rebuilt whenever either parent ensure built/rebuilt,
-        loaded otherwise; needs a storage root (the layout IS a
-        persisted artifact; in-memory composed plans keep the
-        candidate-broadcast semi-join)."""
-        from dataclasses import replace
-
-        route = col.mv_idx.get(using)
-        qidx = col.mv_sq.get(using)
-        if route is None or qidx is None or self.root is None:
-            return "skipped"
-        from qdrant_spark.plans.maintenance import ensure_maxsim_codes
-
-        path = os.path.join(self.root, col.name,
-                            f"maxsim_codes_{using or 'default'}")
-        idx2, action = ensure_maxsim_codes(
-            route.index, qidx, path, force_rebuild=parents_fresh,
-            total=route.n_docs,
-            corpus_signature=self._points_signature(col))
-        col.mv_idx[using] = replace(route, index=idx2)
-        return action
-
-    def _ensure_maxsim_sq_index(self, col: _Collection, using: str,
-                                vc: "VectorConfig", thr: int) -> str:
-        """Quantized multivector storage from a declared
-        ``quantization_config`` (ANY kind since r12 —
-        quantized_vectors.rs treats multivectors like any other kind):
-        int8 token codes (scalar), 1-bit packed token words (binary),
-        codebook indices (product) or rotated Lloyd-Max codes (turbo)
-        for the coarse MaxSim scan, float tokens only for the
-        oversampled rescore. Meta-matched ensure with a storage root;
-        per-request ``SearchParams.quantization`` tunes/ignores."""
-        from qdrant_spark.operators.quantize import _TQ_BITS, quant_kind
-
-        if using in col.mv_sq:
-            return "exists"
-        if self.root is not None:
-            from qdrant_spark.plans.maintenance import ensure_maxsim_sq_index
-
-            path = os.path.join(self.root, col.name,
-                                f"maxsim_sq_index_{using or 'default'}")
-            idx, action = ensure_maxsim_sq_index(
-                col.df, path, vc.quantization,
-                mv_col=col.vec_col(using), id_col="id",
-                indexing_threshold=thr)
-        else:
-            n = col.df.count()
-            if n < thr:
-                return "skipped"
-            from dataclasses import replace
-
-            qk = quant_kind(vc.quantization)
-            cfg = vc.quantization[qk] or {}
-            over = float(cfg.get("oversampling", 4.0))
-            mvc, idc = col.vec_col(using), "id"
-            if qk == "binary":
-                from qdrant_spark.operators.multivec import build_maxsim_bq
-
-                idx = build_maxsim_bq(
-                    col.df, mv_col=mvc, id_col=idc,
-                    encoding=cfg.get("encoding", "one_bit"),
-                    query_encoding=cfg.get("query_encoding", "default"),
-                    oversampling=over)
-            elif qk == "product":
-                from qdrant_spark.operators.multivec import build_maxsim_pq
-
-                idx = build_maxsim_pq(
-                    col.df, mv_col=mvc, id_col=idc,
-                    compression=str(cfg.get("compression", "x8")),
-                    oversampling=over)
-            elif qk == "turbo":
-                from qdrant_spark.operators.multivec import build_maxsim_tq
-
-                bits = _TQ_BITS.get(str(cfg.get("bits", "bits4")))
-                if bits is None:
-                    raise ValueError(
-                        f"unknown turbo bits {cfg.get('bits')!r}")
-                idx = build_maxsim_tq(
-                    col.df, mv_col=mvc, id_col=idc, bits=bits,
-                    oversampling=over)
-            else:
-                from qdrant_spark.operators.multivec import build_maxsim_sq
-
-                idx = build_maxsim_sq(
-                    col.df, mv_col=mvc, id_col=idc,
-                    quantile=float(cfg.get("quantile", 0.99)),
-                    oversampling=over)
-            idx, action = replace(
-                idx, full_scan_threshold=cfg.get("full_scan_threshold"),
-                n_docs=n), "built"
-        if idx is not None:
-            col.mv_sq[using] = idx
+                index=idx, nprobe=opts.get("nprobe", 4),
+                candidates=opts.get("candidates"),
+                full_scan_threshold=opts.get("full_scan_threshold"),
+                n_docs=n,
+                prefer_composed=bool(opts.get("prefer_composed", False)))
         return action
 
     def _ensure_sparse_index(self, col: _Collection, using: str,

@@ -10,39 +10,45 @@ config → rebuild).
 
 Spark mapping: merge and vacuum are :meth:`PointsTable.optimize` /
 :meth:`PointsTable.vacuum` (sources/parquet.py). This module covers the
-other two as ONE idempotent command, :func:`ensure_ann_index` — the
-"index maintenance job" a scheduler would run after ingest batches:
+other two as ONE idempotent command, :func:`ensure_index`, run over the
+:data:`_KINDS` table (ivf, quant, quant_ivf, maxsim, maxsim_quant,
+maxsim_codes) — the "index maintenance job" a scheduler runs after ingest
+batches. Every kind goes through the same lifecycle:
 
 - below ``indexing_threshold`` rows it does nothing (plain scans are the
-  faster plan there — the same crossover the query-time dispatcher uses,
+  faster plan there — the crossover the query-time dispatcher uses,
   operators/dispatch.FULL_SCAN_THRESHOLD);
-- above it, it builds an IVF index and persists it cluster-partitioned
-  (directory pruning at probe time) together with a meta file recording
-  the build params and corpus size;
-- on later runs it LOADS the persisted index when the meta still matches,
-  REBUILDS when the requested params changed (config_mismatch_optimizer)
-  or the corpus drifted past ``stale_fraction`` since the build
-  (indexing_optimizer's grew-past-threshold re-trigger). Small drift is
-  the incremental path's job (ann.assign_to_ivf), not a rebuild.
+- it LOADS the persisted index when the stored meta holds every key the
+  kind's load reads, its requested params equal the stored ones, the row
+  count stayed within ``stale_fraction`` of the build's, and (for kinds
+  whose layout freezes the floats) the corpus signature or, failing
+  that, a one-pass content fingerprint still matches;
+- otherwise it BUILDS (no meta) or REBUILDS (config_mismatch_optimizer,
+  the indexing_optimizer's grew-past-threshold re-trigger, content drift,
+  or a meta from an older layout) into a fresh ``path/_v{n}`` and commits
+  it through :mod:`qdrant_spark.versioned`: the kind's meta file is the
+  pointer, swapped atomically after the data is written, so a crash at
+  any step leaves the previous index or the new one — never new data
+  under old meta. Small drift is the incremental path's job
+  (ann.assign_to_ivf), not a rebuild.
 
-Scale shape: the only corpus passes are the KMeans sample fit + one
-assignment pass inside build_ivf; load touches nothing but the meta file.
+``path=None`` builds in memory and persists nothing. Scale shape: a build
+pays the kind's corpus passes once; a load touches only the meta file.
 """
 
 from __future__ import annotations
 
 import json
 import os
-from typing import Any
+from dataclasses import dataclass, replace
+from functools import partial
+from typing import Any, Callable
 
 import numpy as np
 from pyspark.sql import DataFrame
 
-from qdrant_spark.operators.ann import IvfIndex, build_ivf, persist_ivf
+from qdrant_spark import versioned
 from qdrant_spark.operators.dispatch import FULL_SCAN_THRESHOLD
-
-_META = "ivf_meta.json"
-_DATA = "assigned"
 
 
 def corpus_content_fp(points: DataFrame, cols: list[str]) -> str:
@@ -64,138 +70,65 @@ def corpus_content_fp(points: DataFrame, cols: list[str]) -> str:
     return f"{row['n']}:{row['x']}"
 
 
-def _signature_check(meta: dict[str, Any], meta_path: str,
-                     corpus_signature: str | None,
-                     points: DataFrame, cols: list[str]) -> bool:
-    """True when the corpus content behind a matching meta is still the
-    one the index froze. No-op (True) without a requested signature; a
-    matching signature is trusted without a scan; a mismatched one runs
-    the one-pass content probe — identical content re-stamps the new
-    signature into the meta and loads, anything else (including pre-
-    signature metas) reports drift."""
-    if corpus_signature is None \
-            or meta.get("corpus_signature") == corpus_signature:
-        return True
-    if meta.get("content_fp") is None:
-        return False  # pre-signature build: can't prove freshness
-    if corpus_content_fp(points, cols) != meta["content_fp"]:
-        return False
-    meta["corpus_signature"] = corpus_signature
-    with open(meta_path, "w") as f:
-        json.dump(meta, f)
-    return True
+@dataclass(frozen=True)
+class _Kind:
+    """One persisted index kind: data and functions only, the lifecycle
+    is :func:`ensure_index`'s."""
+
+    meta: str                   # meta file name, the commit pointer
+    keys: tuple[str, ...]       # requested params stored and compared
+    defaults: dict[str, Any]    # every param the kind accepts
+    #: params naming the columns the content probe hashes; None = the
+    #: kind ignores ``corpus_signature``
+    sig: tuple[str, ...] | None
+    needs: tuple[str, ...]      # meta keys ``load`` reads
+    #: ``build(points, params, n_rows, dir) -> (index, meta extras)``
+    #: writes the kind's data under ``dir`` (None = in memory)
+    build: Callable
+    #: ``load(points, dir, meta, params) -> index``
+    load: Callable
 
 
-def _meta_path(path: str) -> str:
-    return os.path.join(path, _META)
+# -- ivf: the cluster-partitioned float corpus + centroids -------------------
+
+def _build_ivf(points, p, n, d):
+    from qdrant_spark.operators.ann import build_ivf, persist_ivf
+
+    idx = build_ivf(points, n_clusters=p["n_clusters"],
+                    vec_col=p["vec_col"], id_col=p["id_col"],
+                    seed=p["seed"], fit_fraction=p["fit_fraction"])
+    if d is not None:
+        persist_ivf(idx, os.path.join(d, "assigned"))
+    return idx, {"dim": idx.centroids.shape[1],
+                 "centroids": idx.centroids.tolist()}
 
 
-def read_index_meta(path: str) -> dict[str, Any] | None:
-    try:
-        with open(_meta_path(path)) as f:
-            return json.load(f)
-    except (OSError, ValueError):
-        return None
+def _load_ivf(points, d, meta, p):
+    from qdrant_spark.operators.ann import IvfIndex
 
-
-def load_ann_index(spark, path: str) -> IvfIndex:
-    """Re-open a persisted index from its meta + cluster-partitioned
-    parquet (no corpus pass)."""
-    meta = read_index_meta(path)
-    if meta is None:
-        raise FileNotFoundError(f"no index meta at {path}")
     return IvfIndex(
-        assigned=spark.read.parquet(os.path.join(path, _DATA)),
+        assigned=points.sparkSession.read.parquet(os.path.join(d, "assigned")),
         centroids=np.asarray(meta["centroids"], dtype=np.float64),
-        vec_col=meta["vec_col"],
-        id_col=meta["id_col"],
-        persisted=True,
-    )
+        vec_col=meta["vec_col"], id_col=meta["id_col"], persisted=True)
 
 
-def ensure_ann_index(
-    points: DataFrame,
-    path: str,
-    *,
-    n_clusters: int = 16,
-    vec_col: str = "vec",
-    id_col: str = "id",
-    seed: int = 42,
-    fit_fraction: float | None = None,
-    indexing_threshold: int = FULL_SCAN_THRESHOLD,
-    stale_fraction: float = 0.2,
-    total: int | None = None,
-) -> tuple[IvfIndex | None, str]:
-    """Idempotent index maintenance; returns ``(index, action)`` with
-    action in ``{"skipped", "loaded", "built", "rebuilt"}``.
+# -- quant: narrow (id, code) parquet + encoder state (quantized_vectors.rs
+#    builds/loads the same way from segment meta) ---------------------------
 
-    ``total`` skips the row-count job when the caller already knows it.
-    """
-    n = points.count() if total is None else int(total)
-    if n < indexing_threshold:
-        # indexing_optimizer: small segments stay plain (is_big_for_index
-        # false, indexing_optimizer.rs:74) — even if an old index exists,
-        # the dispatcher's plain route wins at this size
-        return None, "skipped"
+def _save_state(handle, d) -> dict[str, Any]:
+    from qdrant_spark.operators.quantize import quant_state
 
-    requested = {
-        "n_clusters": int(n_clusters),
-        "vec_col": vec_col,
-        "id_col": id_col,
-        "seed": int(seed),
-        "fit_fraction": fit_fraction,
-    }
-    meta = read_index_meta(path)
-    action = "built"
-    if meta is not None:
-        stored = {k: meta.get(k) for k in requested}
-        if stored != requested:
-            action = "rebuilt"  # config_mismatch_optimizer
-        elif abs(n - meta["n_rows"]) > stale_fraction * max(meta["n_rows"], 1):
-            action = "rebuilt"  # corpus drifted past the re-index trigger
-        else:
-            return load_ann_index(points.sparkSession, path), "loaded"
-
-    index = build_ivf(points, n_clusters=n_clusters, vec_col=vec_col,
-                      id_col=id_col, seed=seed, fit_fraction=fit_fraction)
-    index = persist_ivf(index, os.path.join(path, _DATA))
-    os.makedirs(path, exist_ok=True)
-    with open(_meta_path(path), "w") as f:
-        json.dump({**requested, "n_rows": n, "dim": index.centroids.shape[1],
-                   "centroids": index.centroids.tolist()}, f)
-    return index, action
+    arrays, scalars = quant_state(handle)
+    np.savez(os.path.join(d, "quant_params.npz"), **arrays)
+    return {"kind": handle.kind, "scalars": scalars,
+            "oversampling": handle.oversampling}
 
 
-# ---------------------------------------------------------------------------
-# Quantized-storage maintenance (config_mismatch + indexing optimizers for
-# a declared quantization_config — quantized_vectors.rs builds/loads the
-# same way from segment meta)
-# ---------------------------------------------------------------------------
-
-_QMETA = "quant_meta.json"
-_QDATA = "codes"
-_QPARAMS = "quant_params.npz"
-
-
-def read_quant_meta(path: str) -> dict[str, Any] | None:
-    try:
-        with open(os.path.join(path, _QMETA)) as f:
-            return json.load(f)
-    except (OSError, ValueError):
-        return None
-
-
-def load_quant_index(points: DataFrame, path: str):
-    """Re-open persisted quantized storage: narrow (id, code) parquet +
-    the encoder state npz; ``points`` becomes the full-precision frame
-    for the exact rescore. No corpus pass, no re-training."""
+def _load_state(codes, points, d, meta):
     from qdrant_spark.operators.quantize import quant_from_state
 
-    meta = read_quant_meta(path)
-    if meta is None:
-        raise FileNotFoundError(f"no quant meta at {path}")
-    arrays = dict(np.load(os.path.join(path, _QPARAMS), allow_pickle=False))
-    codes = points.sparkSession.read.parquet(os.path.join(path, _QDATA))
+    arrays = dict(np.load(os.path.join(d, "quant_params.npz"),
+                          allow_pickle=False))
     fst = (meta["config"].get(meta["kind"]) or {}).get("full_scan_threshold")
     return quant_from_state(
         meta["kind"], codes, points,
@@ -205,534 +138,293 @@ def load_quant_index(points: DataFrame, path: str):
         full_scan_threshold=None if fst is None else int(fst))
 
 
-def ensure_quant_index(
-    points: DataFrame,
-    path: str,
-    config: dict[str, Any],
-    *,
-    vec_col: str = "vec",
-    id_col: str = "id",
-    dim: int | None = None,
-    indexing_threshold: int = FULL_SCAN_THRESHOLD,
-    stale_fraction: float = 0.2,
-    total: int | None = None,
-):
-    """Idempotent quantized-storage maintenance; returns
-    ``(QuantHandle | None, action)`` with action in ``{"skipped",
-    "loaded", "built", "rebuilt"}`` — the quantization twin of
-    :func:`ensure_ann_index`: skip below threshold, LOAD when the stored
-    meta matches the requested config and the corpus hasn't drifted past
-    ``stale_fraction``, REBUILD on config mismatch
-    (QuantizationConfig::mismatch_requires_rebuild, types.rs:1143-1151)
-    or drift, BUILD otherwise. The persisted layout is the
-    :func:`~qdrant_spark.operators.quantize.persist_quant` split: narrow
-    (id, code) parquet for the coarse scan, encoder state in an npz."""
-    from qdrant_spark.operators.quantize import (
-        build_quant, quant_state,
-    )
+def _build_quant(points, p, n, d):
+    from qdrant_spark.operators.quantize import build_quant
 
-    n = points.count() if total is None else int(total)
-    if n < indexing_threshold:
-        return None, "skipped"
-
-    requested = {"config": config, "vec_col": vec_col, "id_col": id_col}
-    meta = read_quant_meta(path)
-    action = "built"
-    if meta is not None:
-        stored = {k: meta.get(k) for k in requested}
-        if stored != requested:
-            action = "rebuilt"
-        elif abs(n - meta["n_rows"]) > stale_fraction * max(meta["n_rows"], 1):
-            action = "rebuilt"
-        else:
-            return load_quant_index(points, path), "loaded"
-
-    handle = build_quant(points, config, vec_col=vec_col, id_col=id_col,
-                         dim=dim)
-    frame = handle.codes_frame()
-    cols = [id_col, *handle.code_cols()]
-    frame.select(*cols).write.mode("overwrite").parquet(
-        os.path.join(path, _QDATA))
-    arrays, scalars = quant_state(handle)
-    os.makedirs(path, exist_ok=True)
-    np.savez(os.path.join(path, _QPARAMS), **arrays)
-    with open(os.path.join(path, _QMETA), "w") as f:
-        json.dump({**requested, "kind": handle.kind, "scalars": scalars,
-                   "oversampling": handle.oversampling, "n_rows": n}, f)
-    return load_quant_index(points, path), action
+    handle = build_quant(points, p["config"], vec_col=p["vec_col"],
+                         id_col=p["id_col"], dim=p["dim"])
+    if d is None:
+        return handle, {}
+    handle.codes_frame().select(handle.id_col, *handle.code_cols()) \
+        .write.mode("overwrite").parquet(os.path.join(d, "codes"))
+    return handle, _save_state(handle, d)
 
 
-# ---------------------------------------------------------------------------
-# Composed quantization x IVF maintenance (the reference's quantized-HNSW
-# posture: the graph is built over quantized codes and loads from segment
-# meta — hnsw.rs quantized scorer path, hnsw_quantized_search_test.rs)
-# ---------------------------------------------------------------------------
-
-_QIMETA = "quant_ivf_meta.json"
-_QICODED = "coded"
-_QICLUSTERED = "clustered"
-_QIPARAMS = "quant_params.npz"
+def _load_quant(points, d, meta, p):
+    codes = points.sparkSession.read.parquet(os.path.join(d, "codes"))
+    return _load_state(codes, points, d, meta)
 
 
-def read_quant_ivf_meta(path: str) -> dict[str, Any] | None:
-    try:
-        with open(os.path.join(path, _QIMETA)) as f:
-            return json.load(f)
-    except (OSError, ValueError):
-        return None
+# -- quant_ivf: cluster-partitioned (id, __cluster, code) parquet + the
+#    cluster-partitioned float layout for the probed-partition rescore (the
+#    reference's quantized-HNSW posture, hnsw_quantized_search_test.rs) ----
 
-
-def load_quant_ivf_index(points: DataFrame, path: str):
-    """Re-open a persisted composed index: cluster-partitioned
-    (id, __cluster, code) parquet + encoder state npz + centroid matrix
-    from meta; ``points`` becomes the full-precision rescore frame. No
-    corpus pass, no re-training, no re-clustering. A persisted
-    cluster-partitioned float layout (``clustered_full`` in meta, the
-    ensure writes it since r14) re-opens with it, so the reloaded
-    route's exact rescore keeps the probed-partition file pruning
-    instead of silently falling back to the flat-table decode (r13
-    VERDICT #2: reload used to drop the layout)."""
-    from qdrant_spark.operators.quantize import (
-        QuantIvfHandle, quant_from_state,
-    )
-
-    meta = read_quant_ivf_meta(path)
-    if meta is None:
-        raise FileNotFoundError(f"no quant-ivf meta at {path}")
-    spark = points.sparkSession
-    arrays = dict(np.load(os.path.join(path, _QIPARAMS), allow_pickle=False))
-    coded = spark.read.parquet(os.path.join(path, _QICODED))
-    fst = (meta["config"].get(meta["kind"]) or {}).get("full_scan_threshold")
-    handle = quant_from_state(
-        meta["kind"], coded.drop("__cluster"), points,
-        vec_col=meta["vec_col"], id_col=meta["id_col"],
-        arrays=arrays, scalars=meta["scalars"],
-        oversampling=float(meta["oversampling"]),
-        full_scan_threshold=None if fst is None else int(fst))
-    clustered_full = None
-    if meta.get("clustered_full"):  # absent in pre-r14 metas
-        clustered_full = spark.read.parquet(
-            os.path.join(path, _QICLUSTERED))
-    return QuantIvfHandle(
-        handle=handle,
-        centroids=np.asarray(meta["centroids"], dtype=np.float64),
-        coded=coded, nprobe=int(meta["nprobe"]),
-        clustered_full=clustered_full)
-
-
-def ensure_quant_ivf_index(
-    points: DataFrame,
-    path: str,
-    config: dict[str, Any],
-    *,
-    n_clusters: int = 16,
-    nprobe: int = 4,
-    vec_col: str = "vec",
-    id_col: str = "id",
-    dim: int | None = None,
-    seed: int = 42,
-    fit_fraction: float | None = None,
-    indexing_threshold: int = FULL_SCAN_THRESHOLD,
-    stale_fraction: float = 0.2,
-    total: int | None = None,
-    corpus_signature: str | None = None,
-):
-    """Idempotent composed-index maintenance; returns
-    ``(QuantIvfHandle | None, action)`` with the same skip/LOAD/REBUILD
-    contract as :func:`ensure_ann_index` / :func:`ensure_quant_index`.
-    ONE build does everything the composed plan needs: encode the
-    declared quantization, KMeans-cluster the corpus, join, persist the
-    (id, __cluster, code) frame partitioned by cluster — so a query
-    probe reads nprobe/K of a 1-4 B/dim table — AND persist the IVF's
-    full-precision assignment the same way (``clustered_full``), so the
-    exact rescore reads only the probed clusters' float FILES after any
-    later load (dense docs sit in exactly one cluster: the layout costs
-    one corpus-sized float copy, not a blowup). The build passes are one
-    sampled KMeans fit, one assignment scan, one encode scan, the
-    compose join, and the two partitioned writes.
-
-    Both persisted layouts FREEZE the float corpus at build time: a
-    mutation that keeps the row count inside ``stale_fraction`` (e.g.
-    in-place vector updates) is invisible to the row-count drift check
-    and a later ensure would LOAD stale floats. Pass ``corpus_signature``
-    (any cheap opaque token of the corpus state — a snapshot version, a
-    file-listing digest) to close that: a changed signature triggers the
-    one-pass content probe (:func:`corpus_content_fp`) — identical
-    content loads and re-stamps, real drift rebuilds (the client passes
-    its points-dir digest; r13 ADVICE content-drift item)."""
-    from qdrant_spark.operators.quantize import (
-        build_quant, compose_quant_ivf, quant_state,
-    )
-
-    n = points.count() if total is None else int(total)
-    if n < indexing_threshold:
-        return None, "skipped"
-
-    requested = {"config": config, "vec_col": vec_col, "id_col": id_col,
-                 "n_clusters": int(n_clusters), "seed": int(seed),
-                 "fit_fraction": fit_fraction}
-    meta = read_quant_ivf_meta(path)
-    action = "built"
-    if meta is not None:
-        stored = {k: meta.get(k) for k in requested}
-        if stored != requested:
-            action = "rebuilt"
-        elif abs(n - meta["n_rows"]) > stale_fraction * max(meta["n_rows"], 1):
-            action = "rebuilt"  # corpus drifted past the re-index trigger
-        elif not meta.get("clustered_full"):
-            action = "rebuilt"  # pre-r14 index: upgrade to the layout
-        elif not _signature_check(meta, os.path.join(path, _QIMETA),
-                                  corpus_signature, points,
-                                  [id_col, vec_col]):
-            action = "rebuilt"  # content drift (count-stable mutations)
-        else:
-            qih = load_quant_ivf_index(points, path)
-            if int(meta["nprobe"]) != int(nprobe):
-                from dataclasses import replace
-
-                qih = replace(qih, nprobe=int(nprobe))  # routing knob only
-            return qih, "loaded"
-
-    handle = build_quant(points, config, vec_col=vec_col, id_col=id_col,
-                         dim=dim)
+def _build_quant_ivf(points, p, n, d):
     from qdrant_spark.operators.ann import build_ivf, persist_ivf
+    from qdrant_spark.operators.quantize import build_quant, compose_quant_ivf
 
-    ivf = build_ivf(points, n_clusters=n_clusters, vec_col=vec_col,
-                    id_col=id_col, seed=seed, fit_fraction=fit_fraction)
-    ivf = persist_ivf(ivf, os.path.join(path, _QICLUSTERED))
-    qih = compose_quant_ivf(handle, ivf, nprobe=nprobe)
+    handle = build_quant(points, p["config"], vec_col=p["vec_col"],
+                         id_col=p["id_col"], dim=p["dim"])
+    ivf = build_ivf(points, n_clusters=p["n_clusters"], vec_col=p["vec_col"],
+                    id_col=p["id_col"], seed=p["seed"],
+                    fit_fraction=p["fit_fraction"])
+    if d is not None:
+        ivf = persist_ivf(ivf, os.path.join(d, "clustered"))
+    qih = compose_quant_ivf(handle, ivf, nprobe=int(p["nprobe"]))
+    if d is None:
+        return qih, {}
     qih.coded.write.mode("overwrite").partitionBy("__cluster").parquet(
-        os.path.join(path, _QICODED))
-    arrays, scalars = quant_state(handle)
-    os.makedirs(path, exist_ok=True)
-    np.savez(os.path.join(path, _QIPARAMS), **arrays)
-    fp = corpus_content_fp(points, [id_col, vec_col]) \
-        if corpus_signature is not None else None
-    with open(os.path.join(path, _QIMETA), "w") as f:
-        json.dump({**requested, "kind": handle.kind, "scalars": scalars,
-                   "oversampling": handle.oversampling, "nprobe": int(nprobe),
-                   "centroids": ivf.centroids.tolist(), "n_rows": n,
-                   "clustered_full": True,
-                   "corpus_signature": corpus_signature,
-                   "content_fp": fp}, f)
-    return load_quant_ivf_index(points, path), action
+        os.path.join(d, "coded"))
+    return qih, {**_save_state(handle, d),
+                 "centroids": ivf.centroids.tolist(),
+                 "clustered_full": "clustered"}
 
 
-# ---------------------------------------------------------------------------
-# Multivector coarse-index maintenance (the reference persists its
-# multivector HNSW inside the segment and loads it on open —
-# lib/segment/src/index/hnsw_index/; here the analogous state is the
-# token-cluster parquet + the centroid matrix)
-# ---------------------------------------------------------------------------
+def _load_quant_ivf(points, d, meta, p):
+    """The composed index re-opens WITH its cluster-partitioned float
+    layout, so the reloaded route's exact rescore keeps the
+    probed-partition file pruning. ``nprobe`` is a routing knob taken
+    from the request, not a rebuild trigger."""
+    from qdrant_spark.operators.quantize import QuantIvfHandle
 
-_MSMETA = "maxsim_meta.json"
-_MSDATA = "tokens"
-_MSPOINTS = "points"
-
-
-def read_maxsim_meta(path: str) -> dict[str, Any] | None:
-    try:
-        with open(os.path.join(path, _MSMETA)) as f:
-            return json.load(f)
-    except (OSError, ValueError):
-        return None
-
-
-def load_maxsim_index(points: DataFrame, path: str):
-    """Re-open a persisted token-cluster index: cluster-partitioned
-    (id, __cluster) parquet + centroids from meta; ``points`` is the
-    multivector corpus for the exact stage. No token explode, no KMeans.
-    A persisted invlist layout (``clustered_points`` in meta) re-opens
-    with it, so the reloaded route keeps the file-level scan pruning."""
-    from qdrant_spark.operators.multivec import MaxSimIvf
-
-    meta = read_maxsim_meta(path)
-    if meta is None:
-        raise FileNotFoundError(f"no maxsim meta at {path}")
-    spark = points.sparkSession
-    inv = None
-    if meta.get("clustered_points"):
-        inv = spark.read.parquet(os.path.join(path, _MSPOINTS))
-    return MaxSimIvf(
-        tokens=spark.read.parquet(os.path.join(path, _MSDATA)),
+    read = points.sparkSession.read.parquet
+    coded = read(os.path.join(d, "coded"))
+    return QuantIvfHandle(
+        handle=_load_state(coded.drop("__cluster"), points, d, meta),
         centroids=np.asarray(meta["centroids"], dtype=np.float64),
-        points=points, mv_col=meta["mv_col"], id_col=meta["id_col"],
-        clustered_points=inv)
+        coded=coded, nprobe=int(p["nprobe"]),
+        clustered_full=read(os.path.join(d, meta["clustered_full"])))
 
 
-def ensure_maxsim_index(
-    points: DataFrame,
-    path: str,
-    *,
-    n_clusters: int = 16,
-    mv_col: str = "mv",
-    id_col: str = "id",
-    seed: int = 42,
-    fit_fraction: float | None = None,
-    indexing_threshold: int = FULL_SCAN_THRESHOLD,
-    stale_fraction: float = 0.2,
-    total: int | None = None,
-    clustered_points: bool = False,
-    corpus_signature: str | None = None,
-):
-    """Idempotent multivector coarse-index maintenance; returns
-    ``(MaxSimIvf | None, action)`` with the skip/LOAD/REBUILD contract of
-    :func:`ensure_ann_index`. Before this a restarted session re-exploded
-    and re-clustered every token on its first ensure (r10 VERDICT #2 /
-    ADVICE); now a matching meta loads the cluster-partitioned token
-    parquet + centroids with no corpus pass. ``clustered_points=True``
-    also builds/loads the INVLIST layout (the full rows stored once per
-    distinct doc token-cluster, partitioned by cluster —
-    :func:`~qdrant_spark.operators.multivec.persist_maxsim_ivf_points`),
-    so probing prunes the float scan at the file level after reload.
+# -- maxsim: cluster-partitioned token memberships + centroids, optionally
+#    the invlist float layout (the reference persists its multivector HNSW
+#    inside the segment, lib/segment/src/index/hnsw_index/) ----------------
 
-    The invlist FREEZES the float corpus at persist time: the invlist
-    route scores the persisted copies while the flat route reads the
-    live ``points`` frame, so a mutation that keeps the row count inside
-    ``stale_fraction`` (e.g. in-place vector updates) would silently
-    serve stale scores from a LOADed invlist. Pass ``corpus_signature``
-    (any cheap opaque token of the corpus state — a snapshot version, a
-    file-listing digest): a changed signature triggers the one-pass
-    content probe (:func:`corpus_content_fp`) — identical content loads
-    and re-stamps, real drift rebuilds (r13 ADVICE content-drift item;
-    the client passes its points-dir digest)."""
+def _build_maxsim(points, p, n, d):
     from qdrant_spark.operators.multivec import (
         build_maxsim_ivf, persist_maxsim_ivf, persist_maxsim_ivf_points,
     )
 
-    n = points.count() if total is None else int(total)
-    if n < indexing_threshold:
-        return None, "skipped"
-
-    requested = {"n_clusters": int(n_clusters), "mv_col": mv_col,
-                 "id_col": id_col, "seed": int(seed),
-                 "fit_fraction": fit_fraction,
-                 "clustered_points": bool(clustered_points)}
-    meta = read_maxsim_meta(path)
-    action = "built"
-    if meta is not None:
-        stored = {k: meta.get(k) for k in requested}
-        # pre-r13 metas have no invlist flag: absent == not built
-        stored["clustered_points"] = bool(meta.get("clustered_points",
-                                                   False))
-        if stored != requested:
-            action = "rebuilt"
-        elif abs(n - meta["n_rows"]) > stale_fraction * max(meta["n_rows"], 1):
-            action = "rebuilt"
-        elif not _signature_check(meta, os.path.join(path, _MSMETA),
-                                  corpus_signature, points,
-                                  [id_col, mv_col]):
-            action = "rebuilt"  # content drift (count-stable mutations)
-        else:
-            return load_maxsim_index(points, path), "loaded"
-
-    idx = build_maxsim_ivf(points, n_clusters=n_clusters, mv_col=mv_col,
-                           id_col=id_col, seed=seed,
-                           fit_fraction=fit_fraction)
-    idx = persist_maxsim_ivf(idx, os.path.join(path, _MSDATA))
-    if clustered_points:
-        idx = persist_maxsim_ivf_points(idx, os.path.join(path, _MSPOINTS))
-    os.makedirs(path, exist_ok=True)
-    fp = corpus_content_fp(points, [id_col, mv_col]) \
-        if corpus_signature is not None else None
-    with open(os.path.join(path, _MSMETA), "w") as f:
-        json.dump({**requested, "n_rows": n,
-                   "corpus_signature": corpus_signature,
-                   "content_fp": fp,
-                   "centroids": idx.centroids.tolist()}, f)
-    return idx, action
+    idx = build_maxsim_ivf(points, n_clusters=p["n_clusters"],
+                           mv_col=p["mv_col"], id_col=p["id_col"],
+                           seed=p["seed"], fit_fraction=p["fit_fraction"])
+    if d is not None:
+        idx = persist_maxsim_ivf(idx, os.path.join(d, "tokens"))
+        if p["clustered_points"]:
+            persist_maxsim_ivf_points(idx, os.path.join(d, "points"))
+    return idx, {"centroids": idx.centroids.tolist()}
 
 
-# ---------------------------------------------------------------------------
-# Quantized multivector storage maintenance (the reference's
-# quantized_vectors.rs handles multivector segments with the same config
-# machinery and loads from segment meta)
-# ---------------------------------------------------------------------------
+def _load_maxsim(points, d, meta, p):
+    from qdrant_spark.operators.multivec import MaxSimIvf
 
-_MSQMETA = "maxsim_sq_meta.json"
-_MSQDATA = "codes"
-_MSQPARAMS = "maxsim_sq_params.npz"
+    read = points.sparkSession.read.parquet
+    return MaxSimIvf(
+        tokens=read(os.path.join(d, "tokens")),
+        centroids=np.asarray(meta["centroids"], dtype=np.float64),
+        points=points, mv_col=meta["mv_col"], id_col=meta["id_col"],
+        clustered_points=(read(os.path.join(d, "points"))
+                          if meta["clustered_points"] else None))
 
 
-def read_maxsim_sq_meta(path: str) -> dict[str, Any] | None:
+# -- maxsim_quant: quantized token codes of any kind + encoder state -------
+
+def _build_maxsim_quant(points, p, n, d):
+    from qdrant_spark.operators.multivec import (
+        build_maxsim_quant, maxsim_quant_state, persist_maxsim_quant,
+    )
+    from qdrant_spark.operators.quantize import quant_kind
+
+    idx = build_maxsim_quant(points, p["config"], mv_col=p["mv_col"],
+                             id_col=p["id_col"], n_docs=n)
+    if d is None:
+        return idx, {}
+    persist_maxsim_quant(idx, os.path.join(d, "codes"))
+    arrays, scalars = maxsim_quant_state(idx)
+    np.savez(os.path.join(d, "maxsim_sq_params.npz"), **arrays)
+    return idx, {"kind": quant_kind(p["config"]), "scalars": scalars,
+                 "oversampling": idx.oversampling}
+
+
+def _load_maxsim_quant(points, d, meta, p):
+    from qdrant_spark.operators.multivec import maxsim_quant_from_state
+
+    arrays = np.load(os.path.join(d, "maxsim_sq_params.npz"),
+                     allow_pickle=False)
+    codes = points.sparkSession.read.parquet(os.path.join(d, "codes"))
+    return maxsim_quant_from_state(
+        meta["kind"], codes, points,
+        mv_col=meta["mv_col"], id_col=meta["id_col"],
+        arrays=arrays, scalars=meta["scalars"],
+        oversampling=float(meta["oversampling"]),
+        full_scan_threshold=(meta["config"][meta["kind"]] or {})
+        .get("full_scan_threshold"),
+        n_docs=meta["n_rows"])
+
+
+# -- maxsim_codes: the composed route's cluster-partitioned CODES invlist,
+#    derived from a maxsim and a maxsim_quant index — ``parents`` carries
+#    their versions, so rebuilding either one rebuilds this one ----------
+
+def _build_maxsim_codes(points, p, n, d):
+    from qdrant_spark.operators.multivec import persist_maxsim_quant_codes
+
+    if d is None:
+        return p["index"], {}
+    return persist_maxsim_quant_codes(p["index"], p["qidx"],
+                                      os.path.join(d, "codes")), {}
+
+
+def _load_maxsim_codes(points, d, meta, p):
+    return replace(p["index"], clustered_codes=points.sparkSession.read
+                   .parquet(os.path.join(d, "codes")))
+
+
+_COMMON = {"id_col": "id", "seed": 42, "fit_fraction": None}
+_QUANT_NEEDS = ("kind", "scalars", "oversampling")
+
+_KINDS: dict[str, _Kind] = {
+    "ivf": _Kind(
+        "ivf_meta.json",
+        ("n_clusters", "vec_col", "id_col", "seed", "fit_fraction"),
+        {**_COMMON, "n_clusters": 16, "vec_col": "vec"},
+        None, ("centroids",), _build_ivf, _load_ivf),
+    "quant": _Kind(
+        "quant_meta.json", ("config", "vec_col", "id_col"),
+        {"config": None, "vec_col": "vec", "id_col": "id", "dim": None},
+        None, _QUANT_NEEDS, _build_quant, _load_quant),
+    "quant_ivf": _Kind(
+        "quant_ivf_meta.json",
+        ("config", "vec_col", "id_col", "n_clusters", "seed", "fit_fraction"),
+        {**_COMMON, "config": None, "vec_col": "vec", "dim": None,
+         "n_clusters": 16, "nprobe": 4},
+        ("id_col", "vec_col"), (*_QUANT_NEEDS, "centroids", "clustered_full"),
+        _build_quant_ivf, _load_quant_ivf),
+    "maxsim": _Kind(
+        "maxsim_meta.json",
+        ("n_clusters", "mv_col", "id_col", "seed", "fit_fraction",
+         "clustered_points"),
+        {**_COMMON, "n_clusters": 16, "mv_col": "mv",
+         "clustered_points": False},
+        ("id_col", "mv_col"), ("centroids",), _build_maxsim, _load_maxsim),
+    "maxsim_quant": _Kind(
+        "maxsim_sq_meta.json", ("config", "mv_col", "id_col"),
+        {"config": None, "mv_col": "mv", "id_col": "id"},
+        None, _QUANT_NEEDS, _build_maxsim_quant, _load_maxsim_quant),
+    "maxsim_codes": _Kind(
+        "maxsim_codes_meta.json", ("parents",),
+        {"parents": None, "index": None, "qidx": None, "mv_col": "mv",
+         "id_col": "id"},
+        ("id_col", "mv_col"), (), _build_maxsim_codes, _load_maxsim_codes),
+}
+
+
+def read_meta(kind: str, path: str) -> dict[str, Any] | None:
+    """The committed meta of the ``kind`` index at ``path`` (None when
+    absent or unreadable)."""
+    text = versioned.read_pointer(path, _KINDS[kind].meta)
     try:
-        with open(os.path.join(path, _MSQMETA)) as f:
-            return json.load(f)
-    except (OSError, ValueError):
+        return None if text is None else json.loads(text)
+    except ValueError:
         return None
 
 
-def load_maxsim_sq_index(points: DataFrame, path: str):
-    """Re-open persisted quantized token codes + encoder state;
-    ``points`` is the full-precision multivector corpus for the exact
-    rescore. ``meta["kind"]`` picks the index class (absent = scalar,
-    the pre-binary layout)."""
-    from qdrant_spark.operators.multivec import (
-        MaxSimBq, MaxSimPq, MaxSimSq, MaxSimTq,
-    )
-
-    meta = read_maxsim_sq_meta(path)
-    if meta is None:
-        raise FileNotFoundError(f"no maxsim-sq meta at {path}")
-    arrays = np.load(os.path.join(path, _MSQPARAMS), allow_pickle=False)
-    codes = points.sparkSession.read.parquet(os.path.join(path, _MSQDATA))
-    common = dict(codes=codes, points=points, mv_col=meta["mv_col"],
-                  id_col=meta["id_col"],
-                  oversampling=float(meta["oversampling"]),
-                  full_scan_threshold=meta.get("full_scan_threshold"),
-                  n_docs=meta.get("n_rows"))
-    kind = meta.get("kind", "scalar")
-    if kind == "binary":
-        return MaxSimBq(means=arrays["means"], stds=arrays["stds"],
-                        encoding=meta.get("encoding", "one_bit"),
-                        query_encoding=meta.get("query_encoding",
-                                                "default"),
-                        **common)
-    if kind == "product":
-        return MaxSimPq(codebooks=arrays["codebooks"], **common)
-    if kind == "turbo":
-        return MaxSimTq(bits=float(meta["bits"]), dim=int(meta["dim"]),
-                        padded_dim=int(meta["padded_dim"]),
-                        seed=int(meta["seed"]), **common)
-    return MaxSimSq(lo=arrays["lo"], hi=arrays["hi"], **common)
+def _jsonable(value: Any) -> Any:
+    return json.loads(json.dumps(value, default=lambda o: o.item()))
 
 
-def ensure_maxsim_sq_index(
+def _content_fresh(k: _Kind, path: str, meta: dict[str, Any],
+                   signature: str | None, points: DataFrame,
+                   cols: list[str]) -> bool:
+    """True when the corpus behind a matching meta is still the one the
+    index froze: no requested signature, or the stored one, or — after
+    the one-pass content probe — identical content, whose new signature
+    is then committed onto the same version."""
+    if signature is None or meta["corpus_signature"] == signature:
+        return True
+    if meta["content_fp"] is None \
+            or corpus_content_fp(points, cols) != meta["content_fp"]:
+        return False
+    target = f"_v{meta['version']}"
+    versioned.commit(path, k.meta,
+                     json.dumps({**meta, "corpus_signature": signature}),
+                     target, target)
+    return True
+
+
+def ensure_index(
+    kind: str,
     points: DataFrame,
-    path: str,
-    config: dict[str, Any],
+    path: str | None,
+    config: dict[str, Any] | None = None,
     *,
-    mv_col: str = "mv",
-    id_col: str = "id",
     indexing_threshold: int = FULL_SCAN_THRESHOLD,
     stale_fraction: float = 0.2,
     total: int | None = None,
-):
-    """Idempotent quantized-multivector maintenance; skip/LOAD/REBUILD
-    contract of the other ensures. ``config`` is the declared
-    quantization_config — ANY kind since r12 (scalar int8 token codes,
-    binary packed token words, product codebook indices, turbo rotated
-    Lloyd-Max codes), matching the reference's vector-kind-agnostic
-    quantized_vectors.rs."""
-    from qdrant_spark.operators.multivec import (
-        build_maxsim_bq, build_maxsim_pq, build_maxsim_sq, build_maxsim_tq,
-    )
-    from qdrant_spark.operators.quantize import _TQ_BITS, quant_kind
+    corpus_signature: str | None = None,
+    **params: Any,
+) -> tuple[Any, str]:
+    """Idempotent maintenance of one ``kind`` index (a :data:`_KINDS`
+    key) over ``points``; returns ``(index | None, action)`` with action
+    in ``{"skipped", "loaded", "built", "rebuilt"}``. ``config`` is the
+    declared quantization_config of the quantized kinds; ``params`` the
+    kind's build params (see its ``defaults``). ``total`` skips the
+    row-count job when the caller already knows it.
 
-    qk = quant_kind(config)
-    cfg = config[qk] or {}
-
+    ``corpus_signature`` (any cheap opaque token of the corpus state — a
+    snapshot version, a file-listing digest; the client passes its
+    points-dir digest) guards the kinds whose persisted layout freezes
+    the floats against count-stable mutations: a changed signature runs
+    the one-pass content probe (:func:`corpus_content_fp`) — identical
+    content loads and re-stamps, real drift rebuilds."""
+    k = _KINDS[kind]
+    unknown = set(params) - set(k.defaults)
+    if unknown:
+        raise TypeError(f"{kind} index has no params {sorted(unknown)}")
+    p = {**k.defaults, **params}
+    if config is not None:
+        p["config"] = config
     n = points.count() if total is None else int(total)
     if n < indexing_threshold:
+        # indexing_optimizer: small segments stay plain (is_big_for_index
+        # false, indexing_optimizer.rs:74) — even if an old index exists,
+        # the dispatcher's plain route wins at this size
         return None, "skipped"
+    if path is None:
+        return k.build(points, p, n, None)[0], "built"
 
-    requested = {"config": config, "mv_col": mv_col, "id_col": id_col}
-    meta = read_maxsim_sq_meta(path)
-    action = "built"
-    if meta is not None:
-        stored = {k: meta.get(k) for k in requested}
-        if stored != requested:
-            action = "rebuilt"
-        elif abs(n - meta["n_rows"]) > stale_fraction * max(meta["n_rows"], 1):
-            action = "rebuilt"
-        else:
-            return load_maxsim_sq_index(points, path), "loaded"
-
-    extra: dict[str, Any] = {"kind": qk}
-    over = float(cfg.get("oversampling", 4.0))
-    if qk == "binary":
-        idx = build_maxsim_bq(
-            points, mv_col=mv_col, id_col=id_col,
-            encoding=cfg.get("encoding", "one_bit"),
-            query_encoding=cfg.get("query_encoding", "default"),
-            oversampling=over)
-        arrays = {"means": idx.means, "stds": idx.stds}
-        extra["encoding"] = idx.encoding
-        extra["query_encoding"] = idx.query_encoding
-    elif qk == "product":
-        idx = build_maxsim_pq(
-            points, mv_col=mv_col, id_col=id_col,
-            compression=str(cfg.get("compression", "x8")),
-            oversampling=over)
-        arrays = {"codebooks": idx.codebooks}
-    elif qk == "turbo":
-        bits = _TQ_BITS.get(str(cfg.get("bits", "bits4")))
-        if bits is None:
-            raise ValueError(f"unknown turbo bits {cfg.get('bits')!r}")
-        idx = build_maxsim_tq(
-            points, mv_col=mv_col, id_col=id_col, bits=bits,
-            oversampling=over)
-        arrays = {}  # seed-only encoder; state lives in the meta scalars
-        extra.update(bits=idx.bits, dim=idx.dim,
-                     padded_dim=idx.padded_dim, seed=idx.seed)
+    requested = _jsonable({key: p[key] for key in k.keys})
+    signature = corpus_signature if k.sig is not None else None
+    cols = [p[c] for c in k.sig or ()]
+    meta = read_meta(kind, path)
+    if meta is None:
+        action, previous = "built", None
     else:
-        idx = build_maxsim_sq(
-            points, mv_col=mv_col, id_col=id_col,
-            quantile=float(cfg.get("quantile", 0.99)), oversampling=over)
-        arrays = {"lo": idx.lo, "hi": idx.hi}
-    idx.codes.write.mode("overwrite").parquet(os.path.join(path, _MSQDATA))
-    os.makedirs(path, exist_ok=True)
-    np.savez(os.path.join(path, _MSQPARAMS), **arrays)
-    fst = cfg.get("full_scan_threshold")
-    with open(os.path.join(path, _MSQMETA), "w") as f:
-        json.dump({**requested, **extra,
-                   "oversampling": idx.oversampling,
-                   "full_scan_threshold": fst, "n_rows": n}, f)
-    return load_maxsim_sq_index(points, path), action
+        action = "rebuilt"
+        previous = f"_v{meta['version']}" if "version" in meta else None
+        complete = all(key in meta for key in (
+            "version", "n_rows", "corpus_signature", "content_fp", *k.needs))
+        if (complete
+                and {key: meta.get(key) for key in requested} == requested
+                and abs(n - meta["n_rows"])
+                <= stale_fraction * max(meta["n_rows"], 1)
+                and _content_fresh(k, path, meta, signature, points, cols)):
+            live = versioned.version_dir(path, meta["version"])
+            return k.load(points, live, meta, p), "loaded"
+
+    version = versioned.fresh_version(path)
+    out = versioned.version_dir(path, version)
+    os.makedirs(out)
+    _, extras = k.build(points, p, n, out)
+    meta = {**requested, **extras, "version": version, "n_rows": n,
+            "corpus_signature": signature,
+            "content_fp": (None if signature is None
+                           else corpus_content_fp(points, cols))}
+    versioned.commit(path, k.meta, json.dumps(meta), f"_v{version}", previous)
+    return k.load(points, out, meta, p), action
 
 
-# ---------------------------------------------------------------------------
-# Composed multivector CODES-layout maintenance (r14): the cluster-
-# partitioned copy of the quantized token codes that maxsim_knn_quant_ivf's
-# coarse stage file-prunes — derived from BOTH the token-cluster index and
-# the quantized storage, so its lifecycle follows theirs.
-# ---------------------------------------------------------------------------
-
-_MSCMETA = "maxsim_codes_meta.json"
-_MSCDATA = "codes"
-
-
-def read_maxsim_codes_meta(path: str) -> dict[str, Any] | None:
-    try:
-        with open(os.path.join(path, _MSCMETA)) as f:
-            return json.load(f)
-    except (OSError, ValueError):
-        return None
-
-
-def ensure_maxsim_codes(
-    index,
-    qidx,
-    path: str,
-    *,
-    force_rebuild: bool = False,
-    total: int | None = None,
-    corpus_signature: str | None = None,
-):
-    """Idempotent maintenance of the composed route's CODES invlist
-    (:func:`~qdrant_spark.operators.multivec.persist_maxsim_quant_codes`):
-    LOAD when the meta matches (same corpus rows + signature) and
-    neither parent was rebuilt this round, REBUILD otherwise. The
-    layout is a pure derivation of the token memberships and the code
-    frame — callers pass ``force_rebuild=True`` whenever either parent
-    ensure built/rebuilt (the derivation's inputs changed), which is
-    how the client wires it. Returns ``(MaxSimIvf-with-layout,
-    action)``."""
-    from dataclasses import replace
-
-    from qdrant_spark.operators.multivec import persist_maxsim_quant_codes
-
-    n = index.points.count() if total is None else int(total)
-    meta = read_maxsim_codes_meta(path)
-    if not force_rebuild and meta is not None and meta["n_rows"] == n \
-            and (corpus_signature is None
-                 or meta.get("corpus_signature") == corpus_signature):
-        spark = index.points.sparkSession
-        return replace(index, clustered_codes=spark.read.parquet(
-            os.path.join(path, _MSCDATA))), "loaded"
-    idx2 = persist_maxsim_quant_codes(index, qidx,
-                                      os.path.join(path, _MSCDATA))
-    os.makedirs(path, exist_ok=True)
-    with open(os.path.join(path, _MSCMETA), "w") as f:
-        json.dump({"n_rows": n, "corpus_signature": corpus_signature}, f)
-    return idx2, ("rebuilt" if meta is not None else "built")
+ensure_ann_index = partial(ensure_index, "ivf")
+ensure_quant_ivf_index = partial(ensure_index, "quant_ivf")
+ensure_maxsim_index = partial(ensure_index, "maxsim")
+read_index_meta = partial(read_meta, "ivf")

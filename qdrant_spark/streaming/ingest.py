@@ -9,12 +9,19 @@ writes after each batch commit.
 
 Spark mapping: ``readStream -> foreachBatch(upsert) -> parquet snapshot``.
 Each micro-batch applies the same MERGE-shaped ``upsert_points`` transform
-used by the batch mutation surface, then atomically swaps the snapshot
-directory. With Delta/Iceberg available this becomes a real MERGE INTO;
-the plan shape (anti-join + union on id) is identical.
+used by the batch mutation surface into a fresh ``_v<batch_id>``
+directory, then commits it through :mod:`qdrant_spark.versioned`: the
+``CURRENT`` pointer is swapped atomically (temp file + ``os.replace``) and
+only the new snapshot and the one it replaced are kept. With Delta/Iceberg
+available this becomes a real MERGE INTO; the plan shape (anti-join +
+union on id) is identical.
 
-The checkpoint directory gives exactly-once batch application — the WAL
-equivalent (stream restarts resume from the last committed batch).
+The checkpoint directory resumes a restarted stream after the last
+committed batch (the WAL equivalent). ``foreachBatch`` is at-least-once:
+a batch whose id equals the committed one is a replay and the sink skips
+it — qdrant's "stale-version ops are skipped" idempotent replay (SURVEY
+§3). Only the EQUAL id is skipped: a stream restarted on a fresh
+checkpoint numbers its batches from 0 again, and those apply.
 """
 
 from __future__ import annotations
@@ -26,6 +33,7 @@ from typing import Any, Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from qdrant_spark import versioned
 from qdrant_spark.operators.mutate import upsert_points
 
 #: partition column of the ``id_buckets`` incremental-commit layout
@@ -53,9 +61,10 @@ class ParquetPointsSink:
     """foreachBatch sink: maintains a parquet snapshot of the points table
     under ``table_dir``, applying each micro-batch as an upsert.
 
-    Layout: ``table_dir/_v<N>`` snapshot directories + ``table_dir/CURRENT``
-    pointer file — readers always see a complete snapshot (poor-man's
-    transaction log; swap is a one-line file write).
+    Layout: ``table_dir/_v<batch_id>`` snapshot directories +
+    ``table_dir/CURRENT`` naming the live one — readers always see a
+    complete snapshot, and a frame read before a commit keeps its
+    snapshot until the commit after next (versioned.commit).
 
     ``partition_cols`` commits each snapshot parquet-PARTITIONED by the
     given columns — the persisted layout the cluster-pruned search
@@ -90,12 +99,8 @@ class ParquetPointsSink:
     # -- snapshot plumbing ---------------------------------------------------
 
     def _current_path(self) -> str | None:
-        ptr = os.path.join(self.table_dir, "CURRENT")
-        if not os.path.exists(ptr):
-            return None
-        with open(ptr) as f:
-            name = f.read().strip()
-        return os.path.join(self.table_dir, name) if name else None
+        name = versioned.read_pointer(self.table_dir, "CURRENT")
+        return None if name is None else os.path.join(self.table_dir, name)
 
     def read(self) -> DataFrame | None:
         path = self._current_path()
@@ -124,8 +129,8 @@ class ParquetPointsSink:
         commit (reproduced: 40 rows at B=4, one update at B=8 left the
         id twice)."""
         if self.id_buckets:
-            with open(os.path.join(out, self._META), "w") as f:
-                f.write(str(self.id_buckets))
+            versioned.write_text(os.path.join(out, self._META),
+                                 str(self.id_buckets))
 
     def _snapshot_buckets(self, path: str) -> int | None:
         """The modulus ``path`` was committed with (None = unknown:
@@ -136,16 +141,22 @@ class ParquetPointsSink:
         except (OSError, ValueError):
             return None
 
-    def _swap_current(self, name: str, batch_id: int) -> None:
-        with open(os.path.join(self.table_dir, "CURRENT"), "w") as f:
-            f.write(name)
-        # retire old snapshots (keep the previous one for in-flight
-        # readers; hardlinked carry-over files keep their inodes alive
-        # in newer snapshots regardless)
-        keep = {name, f"_v{batch_id - 1}"}
-        for d in os.listdir(self.table_dir):
-            if d.startswith("_v") and d not in keep:
-                shutil.rmtree(os.path.join(self.table_dir, d), ignore_errors=True)
+    def _fresh(self, batch_id: int) -> str:
+        """The batch's snapshot directory, emptied: a leftover of a
+        commit that crashed before its swap is never the live one."""
+        out = versioned.version_dir(self.table_dir, batch_id)
+        shutil.rmtree(out, ignore_errors=True)
+        return out
+
+    def _swap_current(self, out: str) -> None:
+        """Record the bucket modulus in ``out`` and make it the live
+        snapshot, keeping the one it replaces for in-flight readers
+        (hardlinked carry-over files keep their inodes alive in newer
+        snapshots regardless)."""
+        self._write_meta(out)
+        name = os.path.basename(out)
+        versioned.commit(self.table_dir, "CURRENT", name, name,
+                         versioned.read_pointer(self.table_dir, "CURRENT"))
 
     def _cluster_for_write(self, df: DataFrame,
                            parts: tuple[str, ...]) -> DataFrame:
@@ -160,8 +171,7 @@ class ParquetPointsSink:
         return df.repartition(*[F.col(c) for c in parts])
 
     def _commit(self, df: DataFrame, batch_id: int) -> None:
-        name = f"_v{batch_id}"
-        out = os.path.join(self.table_dir, name)
+        out = self._fresh(batch_id)
         parts = self.partition_cols
         if self.id_buckets:
             df = self._bucketed(df)
@@ -172,8 +182,7 @@ class ParquetPointsSink:
         if parts:
             w = w.partitionBy(*parts)
         w.parquet(out)
-        self._write_meta(out)
-        self._swap_current(name, batch_id)
+        self._swap_current(out)
 
     def _commit_incremental(self, keys_df: DataFrame, batch_id: int,
                             prev_path: str, merge) -> None:
@@ -189,8 +198,7 @@ class ParquetPointsSink:
             r[0] for r in self._bucketed(keys_df)
             .select(BUCKET_COL).distinct().collect()
         )
-        name = f"_v{batch_id}"
-        out = os.path.join(self.table_dir, name)
+        out = self._fresh(batch_id)
         if dirty:
             cur_dirty = (
                 self.spark.read.parquet(prev_path)
@@ -208,8 +216,7 @@ class ParquetPointsSink:
         for d in os.listdir(prev_path):
             if d.startswith(f"{BUCKET_COL}=") and d not in dirty_set:
                 _link_tree(os.path.join(prev_path, d), os.path.join(out, d))
-        self._write_meta(out)
-        self._swap_current(name, batch_id)
+        self._swap_current(out)
 
     def _incremental_prev(self) -> str | None:
         """The previous snapshot path IF an incremental commit is sound:
@@ -227,25 +234,28 @@ class ParquetPointsSink:
 
     # -- foreachBatch --------------------------------------------------------
 
-    def apply_batch(self, batch_df: DataFrame, batch_id: int) -> None:
+    def _apply(self, keys_df: DataFrame,
+               merge: Callable[[DataFrame | None], DataFrame],
+               batch_id: int) -> None:
+        """Commit batch ``batch_id``: ``merge(rows)`` maps snapshot rows
+        (None before the first commit) to the merged rows, and
+        ``keys_df`` carries every id the batch touches. A replay of the
+        committed batch is skipped; otherwise the commit is incremental
+        when the bucketed layout allows it, else a full rewrite — both
+        into a NEW _v dir, never the one they read."""
+        committed = versioned.read_pointer(self.table_dir, "CURRENT")
+        if committed == f"_v{batch_id}":
+            return
         prev = self._incremental_prev()
         if prev is not None:
-            # safe while reading the previous snapshot: new _v dir
-            self._commit_incremental(
-                batch_df, batch_id, prev,
-                lambda cur_dirty: upsert_points(
-                    cur_dirty, batch_df,
-                    id_col=self.id_col, version_col=self.version_col))
-            return
-        current = self.read()
-        if current is None:
-            merged = batch_df
+            self._commit_incremental(keys_df, batch_id, prev, merge)
         else:
-            merged = upsert_points(
-                current, batch_df, id_col=self.id_col, version_col=self.version_col
-            )
-        # safe while reading the previous snapshot: we write a NEW _v dir
-        self._commit(merged, batch_id)
+            self._commit(merge(self.read()), batch_id)
+
+    def apply_batch(self, batch_df: DataFrame, batch_id: int) -> None:
+        self._apply(batch_df, lambda cur: batch_df if cur is None else
+                    upsert_points(cur, batch_df, id_col=self.id_col,
+                                  version_col=self.version_col), batch_id)
 
 
 def start_upsert_stream(

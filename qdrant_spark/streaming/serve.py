@@ -134,27 +134,13 @@ class SparsePairsSink(ParquetPointsSink):
 
     def apply_pairs(self, pairs_df: DataFrame, ids_df: DataFrame,
                     batch_id: int) -> None:
-        prev = self._incremental_prev()
-        if prev is not None:
-            # id-bucketed incremental commit (r15): every old pair of a
-            # batch id lives in that id's hash bucket, so the
-            # replace-posting-set merge is complete over the dirty
-            # buckets alone; dirtiness keys on ids_df (EVERY batch id —
-            # a point re-upserted with no pairs still clears its old
-            # ones), clean buckets carry over by hardlink.
-            self._commit_incremental(
-                ids_df, batch_id, prev,
-                lambda cur_dirty: cur_dirty
-                .join(ids_df, on=self.id_col, how="left_anti")
-                .unionByName(pairs_df))
-            return
-        current = self.read()
-        if current is None:
-            merged = pairs_df
-        else:
-            kept = current.join(ids_df, on=self.id_col, how="left_anti")
-            merged = kept.unionByName(pairs_df)
-        self._commit(merged, batch_id)
+        # ids_df holds EVERY batch id, so a point re-upserted with no
+        # pairs still clears its old ones; every old pair of a batch id
+        # lives in that id's hash bucket, so under id_buckets the merge
+        # is complete over the dirty buckets alone
+        self._apply(ids_df, lambda cur: pairs_df if cur is None else
+                    cur.join(ids_df, on=self.id_col, how="left_anti")
+                    .unionByName(pairs_df), batch_id)
 
 
 def start_sparse_index_stream(
@@ -318,8 +304,8 @@ class MaxSimInvlistSink(SparsePairsSink):
     reference's inverted indexes apply updates the same way), which
     ``upsert_points`` can't express (it keeps one row per id and this
     layout is deliberately multi-row). Because the snapshot rows ARE the
-    live floats, the batch layout's frozen-corpus staleness
-    (plans.maintenance.ensure_maxsim_index's corpus_signature caveat)
+    live floats, the batch layout's frozen-corpus staleness (which
+    plans.maintenance.ensure_index guards with ``corpus_signature``)
     does not arise here: an update rewrites the copies in the same
     commit."""
 
@@ -338,7 +324,7 @@ def start_maxsim_ivf_upsert_stream(
     trigger: dict[str, Any] | None = None,
 ):
     """Ingest stream that keeps the multivector INVLIST fresh (r14 —
-    closes the lifecycle gap where only direct ensure_maxsim_index
+    closes the lifecycle gap where only direct ensure_index("maxsim")
     callers got the layout): each micro-batch's tokens are assigned to
     the FROZEN token-space ``centroids`` (map-only argmin,
     ann.ivf_from_centroids — no KMeans refit, the

@@ -81,3 +81,58 @@ def tied_points(spark):
     return spark.createDataFrame(
         rows, "id long, vec array<float>, mv array<array<float>>"
     ).coalesce(1)
+
+
+class InjectedCrash(RuntimeError):
+    """Raised by ``fail_at`` where a process would die mid-commit."""
+
+
+#: the points of a versioned commit a crash can fall between
+COMMIT_STEPS = ("written", "swap", "retire")
+
+
+class _NoReplace:
+    """``os`` for qdrant_spark.versioned with ``os.replace`` crashing."""
+
+    def __getattr__(self, name):
+        import os
+
+        return getattr(os, name)
+
+    @staticmethod
+    def replace(*_args):
+        raise InjectedCrash("before the pointer swap")
+
+
+@pytest.fixture
+def fail_at():
+    """``with fail_at(step):`` makes every versioned commit inside the
+    block raise :class:`InjectedCrash` at ``step``:
+
+    - ``"written"``: after the data write, before the commit starts;
+    - ``"swap"``: the temp pointer written, before ``os.replace``;
+    - ``"retire"``: after the swap, before old versions are retired."""
+    from contextlib import contextmanager
+
+    from qdrant_spark import versioned
+
+    def crash(*_args, **_kwargs):
+        raise InjectedCrash
+
+    @contextmanager
+    def arm(step):
+        mp = pytest.MonkeyPatch()
+        if step == "written":
+            mp.setattr(versioned, "commit", crash)
+        elif step == "swap":
+            mp.setattr(versioned, "os", _NoReplace())
+        elif step == "retire":
+            mp.setattr(versioned, "_retire", crash)
+        else:
+            raise ValueError(f"unknown commit step {step!r}")
+        try:
+            yield
+        finally:
+            mp.undo()
+
+    return arm
