@@ -1883,7 +1883,6 @@ class QdrantSparkClient:
                             with_vectors=with_vectors,
                             direction=planner.last_plan_direction,
                             rank_col=planner.last_plan_rank_col)
-        planner.close()
         return QueryResponse(points=out)
 
     def query_points_groups(self, collection_name: str, *, group_by: str,
@@ -1943,7 +1942,6 @@ class QdrantSparkClient:
                                     extra=(group_by,))
         planner.carry = self._carry(need)
         rows = self._rows_as_dicts(planner.plan(req))
-        planner.close()
         lookup = self._lookup(col, rows, need)
         if lookup is not None:  # the group field of every hit, by id
             rows = [dict(r, **{group_by: lookup.get(r["id"], {}).get(group_by)})

@@ -88,10 +88,12 @@ def rrf_hits(
     weights: list[float] | None = None,
     limit: int | None = None,
 ) -> list[tuple]:
-    """RRF over already-collected, already-ranked hit lists — the driver-
-    side fast path for fused prefetch legs (each list is a bounded global
-    top-k, best-first, exactly what ``QueryPlanner._fused_leaves``
-    produces). Same formula as :func:`rrf`
+    """RRF over already-collected, already-ranked hit lists — the driver
+    finish of every planner fusion root (``QueryPlanner._fuse_root``).
+    Each list is a bounded global top-k, best first in its own score
+    direction (nearest first for a smaller-is-better metric), ties id
+    asc: the ranking :func:`rrf` assigns with ``orders``. Only the
+    position counts, not the score. Same formula as :func:`rrf`
     (reciprocal_rank_fusion.rs:32-100); returns [(id, score)] best-first,
     ties id-asc. Running this through Spark would spend ~1s of job
     overhead on <=legs*limit local rows — measured 1.3s for 4 legs of 100
@@ -116,7 +118,8 @@ def dbsf_hits(
     """DBSF over already-collected hit lists (driver-side twin of
     :func:`dbsf`, score_fusion.rs:23-165): per source normalize to [0,1]
     with extremes mean±3*sample-stddev, single-element / zero-variance
-    sources normalize to 0.5, weighted sum per id."""
+    sources normalize to 0.5, weighted sum per id. ``orders`` as in
+    :func:`dbsf`: smaller-is-better sources are negated first."""
     import math
 
     weights = weights or [1.0] * len(hit_lists)

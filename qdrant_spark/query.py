@@ -9,12 +9,12 @@ leaves run search/scroll, parents re-score or merge their children.
 Max depth 64 (planned_query.rs).
 
 Spark mapping: every node compiles to a DataFrame of (id, score) — leaves
-are KNN/sparse/scroll plans, parents compose child DataFrames (fusion
-windows, rescore joins, MMR). The reference's shard-level vs
-collection-level rescore distinction (RescoreStages) disappears: a Spark
-window over the union IS the global merge, and rank-dependent fusion is
-computed after each child's global top-k, which is exactly the semantics
-the reference engineers for.
+are KNN/sparse/scroll plans, parents compose child DataFrames (rescore
+joins, MMR). The reference's shard-level vs collection-level rescore
+distinction (RescoreStages) disappears: each child is already a global
+top-k, and a fusion root reads those bounded lists on the driver and
+fuses them rank by rank, which is exactly the semantics the reference
+engineers for.
 
 Request shape (qdrant JSON, dict form):
 
@@ -59,19 +59,17 @@ MAX_DEPTH = 64
 #: crossover. Same dispatch pattern as knn.ARROW_DISPATCH_BYTES.
 FUSE_MIN_BYTES = 32 << 20
 
-#: Row ceiling for what a fused group collects to the driver. Above
-#: legs * max(offset+limit) > this, leg splitting falls back to DataFrame
-#: windows over the (persisted) shared-scan result — the scan still runs
-#: once, but nothing funnels through the driver (r5 VERDICT item 5).
-#: Within it, the kernel's per-partition candidates (scan partitions *
-#: legs * k rows) merge on the driver while they fit under it too, else
-#: the ranked shuffle finish collects only the final top-k. The same
-#: bound serves both because both are (qid, id, score) rows on the
-#: driver, at most 24 B each: 100 000 rows are <= 2.4 MB of Arrow, and
-#: the merge (one lexsort plus a few same-length NumPy arrays) stays
-#: under ~10 MB, far below a driver heap. The number is that budget,
-#: not a measured memory limit; no benchmark workload reaches the ranked
-#: side (bulk_knn: 8 x 64 x 10 = 5 120 rows).
+#: Row ceiling for what a fused group collects to the driver. A group
+#: whose legs * max(offset+limit) exceeds it declines, and its legs plan
+#: one request at a time. Within it, the kernel's per-partition
+#: candidates (scan partitions * legs * k rows) merge on the driver while
+#: they fit under it too, else the ranked shuffle finish collects only
+#: the final top-k. The same bound serves both because both are
+#: (qid, id, score) rows on the driver, at most 24 B each: 100 000 rows
+#: are <= 2.4 MB of Arrow, and the merge (one lexsort plus a few
+#: same-length NumPy arrays) stays under ~10 MB, far below a driver heap.
+#: The number is that budget, not a measured memory limit; no benchmark
+#: workload reaches the ranked side (bulk_knn: 8 x 64 x 10 = 5 120 rows).
 FUSED_COLLECT_MAX = 100_000
 
 #: Candidate oversampling of a grouped query: it plans the top
@@ -148,7 +146,16 @@ class QueryPlanner:
     - ``multivec.MaxSimRoute``: MaxSim leaves run the token-level-IVF
       pruned plan (multivector_hnsw_test.rs);
     - ``multivec.MaxSimSq`` / ``MaxSimBq`` / ``MaxSimPq`` / ``MaxSimTq``:
-      MaxSim leaves run coarse-over-token-codes + exact rescore."""
+      MaxSim leaves run coarse-over-token-codes + exact rescore.
+
+    ``fuse_min_bytes`` (default :data:`FUSE_MIN_BYTES`) is the corpus
+    size from which sibling exact dense prefetch leaves share one scan
+    (:meth:`_fused_leaves`). Every fusion root finishes on the driver
+    (:meth:`_fuse_root`). Between plans a caller sets :attr:`carry` and
+    :attr:`emit_rank` and reads :attr:`last_plan_info`,
+    :attr:`last_plan_direction` and :attr:`last_plan_rank_col`; each is
+    documented where ``__init__`` sets it. A planner holds no Spark
+    resources, so there is nothing to release after a plan."""
 
     def __init__(self, points: DataFrame, *, id_col: str = "id",
                  default_vec_col: str = "vec", metric: str = "cosine",
@@ -156,8 +163,6 @@ class QueryPlanner:
                  indexes: dict[str, list] | None = None,
                  full_scan_threshold: int | None = None,
                  fuse_min_bytes: int | None = None,
-                 fused_collect_max: int | None = None,
-                 driver_lazy_fusion: bool = True,
                  text_params: dict[str, dict[str, Any]] | None = None,
                  metrics: dict[str, str] | None = None):
         self.points = points
@@ -190,6 +195,8 @@ class QueryPlanner:
         self._index_totals: dict[str, int] = {}
         #: diagnostics from the last plan(): how many sibling prefetch
         #: groups were fused into a single shared scan (see _plan_children)
+        #: and whether the fusion root read every leg without a collect
+        #: (``driver_fused_root``, see _fuse_root)
         self.last_plan_info: dict[str, int] = {"fused_groups": 0,
                                                "fused_legs": 0,
                                                "driver_fused_root": 0}
@@ -211,26 +218,7 @@ class QueryPlanner:
         self.carry: tuple[str, ...] = ()
         self.fuse_min_bytes = (FUSE_MIN_BYTES if fuse_min_bytes is None
                                else fuse_min_bytes)
-        self.fused_collect_max = (FUSED_COLLECT_MAX if fused_collect_max
-                                  is None else fused_collect_max)
         self._fuse_ok: bool | None = None
-        #: id(leg DataFrame) -> its collected hits [(id, score)] best-first,
-        #: recorded by _fused_leaves so a fusion root over all-fused legs
-        #: can fuse DRIVER-SIDE (rrf_hits/dbsf_hits) instead of spending
-        #: ~1s of Spark job overhead on <=legs*limit local rows
-        self._fused_hits_by_df: dict[int, list] = {}
-        #: r14: a fusion root over LAZY (un-fused) legs also fuses
-        #: driver-side — every leg is a bounded top-k frame (each leaf /
-        #: nested rescore carries its request limit), so the root's
-        #: union + per-leg rank windows + groupBy-sum Spark plan spends
-        #: 3-4 AQE stage waves on <= legs*limit rows. Instead the legs
-        #: collect as overlapped jobs (guide §2.6) and rrf_hits /
-        #: dbsf_hits re-rank with the operators' exact ordering
-        #: (score desc, id asc). False restores the Spark-side fusion.
-        self.driver_lazy_fusion = driver_lazy_fusion
-        #: shared-scan results persisted by the DataFrame fallback; freed
-        #: at the next plan() so the leak is bounded to one request
-        self._fused_persisted: list[DataFrame] = []
 
     # -- public ------------------------------------------------------------
 
@@ -288,20 +276,6 @@ class QueryPlanner:
             return self.metric
         return self.metrics.get(vec_col, self.metric)
 
-    def close(self) -> None:
-        """Release any shared-scan DataFrames persisted by the fused
-        DataFrame fallback. plan() frees the previous request's persists
-        automatically, but that only bounds the leak for LONG-LIVED
-        planners — a planner used once would otherwise leave its cached
-        blocks resident for the application lifetime (r6 ADVICE). Call
-        after the returned DataFrames have materialized; calling earlier
-        is safe but re-runs the shared scan per leg on materialization."""
-        for df in self._fused_persisted:
-            df.unpersist()
-        self._fused_persisted = []
-
-    unpersist_all = close
-
     def plan(self, request: dict[str, Any]) -> DataFrame:
         """Returns (id, score) best-first, limited — followed by the
         :attr:`carry` columns when the root's route carries them."""
@@ -319,10 +293,6 @@ class QueryPlanner:
             request["filter"] = merge_filters(
                 {"must_not": [{"has_id": sorted(self._self_refs, key=str)}]},
                 request.get("filter"))
-        self._fused_hits_by_df = {}
-        for df in self._fused_persisted:
-            df.unpersist()
-        self._fused_persisted = []
         # reset ONCE per plan; _plan_children accumulates (+=) so the
         # diagnostics cover every prefetch level of a nested tree, not
         # just the innermost one (r5 ADVICE)
@@ -411,42 +381,45 @@ class QueryPlanner:
                                                  c.get("filter")))
                     for c in children
                 ]
-            # the legs of a driver-side fusion root are collected, so
-            # they carry for it; every other root re-plans its candidates
-            lazy_fusion = self.driver_lazy_fusion and (
-                query is None or "fusion" in query)
-            child_dfs = self._plan_children(
-                children, depth, carry if lazy_fusion else ())
-            out = self._rescore(query, child_dfs, req, limit, depth=depth,
-                                carry=carry)
+            if query is None or "fusion" in query:
+                # the legs of a fusion root are read on the driver, so
+                # they carry for it (default fusion = rrf)
+                out = self._fuse_root(
+                    (query or {"fusion": "rrf"})["fusion"],
+                    *self._plan_children(children, depth, carry),
+                    limit, carry)
+            else:
+                # every other root re-plans its candidates
+                out = self._rescore(query, self._plan_children(
+                    children, depth)[0], req, limit, depth=depth,
+                    carry=carry)
             # record the root's result-order contract AFTER the recursion
             # (plan() is depth-first: the last assignment is the root's).
             # True/False = result is sortable by (score direction, id
             # asc); None = the order exists only in the plan (MMR pick
             # order, sample hash order, order_by key ordering).
-            self.last_plan_direction = self._direction_of(
-                query, leaf=False,
-                vec_col=req.get("using", self.default_vec_col))
+            self.last_plan_direction = self._direction_of(req)
             return out
         out = self._leaf(query, req, limit, depth=depth, carry=carry)
-        self.last_plan_direction = self._direction_of(
-            query, leaf=True, vec_col=req.get("using", self.default_vec_col))
+        self.last_plan_direction = self._direction_of(req)
         return out
 
-    def _direction_of(self, query: Any, *, leaf: bool,
-                      vec_col: str | None = None) -> bool | None:
+    def _direction_of(self, req: dict[str, Any]) -> bool | None:
         """Whether the node's output order equals sort-by-(score, id):
         True = score desc, False = score asc, None = not score-ordered.
         Must mirror the ordering each _leaf/_rescore path actually emits
         (knn/_topk: metric direction; sparse dot, MaxSim, discover/
-        context, fusion, formula, best_score/sum_scores: score desc)."""
+        context, fusion, formula, best_score/sum_scores, binary-quantized
+        coarse scores: score desc)."""
         from qdrant_spark.operators.knn import larger_is_better
 
+        query = req.get("query")
+        leaf = not req.get("prefetch")
         if query is None:
             # scroll leaf: id asc with score pinned 0.0 — all-ties, so a
             # (score, id asc) sort reproduces it | parent default = rrf
             return False if leaf else True
-        metric = self.metric_for(vec_col)
+        metric = self.metric_for(req.get("using", self.default_vec_col))
         if "nearest" in query:
             t = query["nearest"]
             if isinstance(t, dict) and "indices" in t:
@@ -454,6 +427,14 @@ class QueryPlanner:
             if isinstance(t, (list, tuple)) and t \
                     and isinstance(t[0], (list, tuple)):
                 return True  # MaxSim
+            if leaf and not _quant_params(req, 0.0)[0]:
+                # rescore=false on a binary-quantized route returns the
+                # ±1-dot estimate, larger-better whatever the metric
+                rt = self._route(req)
+                qh = rt.handles[0] if rt.kind == "quant" else (
+                    rt.handles[0].handle if rt.kind == "quant_ivf" else None)
+                if qh is not None and qh.kind == "binary":
+                    return True
             return larger_is_better(metric)
         if "recommend" in query:
             strat = query["recommend"].get("strategy", "average_vector")
@@ -671,7 +652,12 @@ class QueryPlanner:
         return self._fuse_ok
 
     def _plan_children(self, children: list[dict], depth: int,
-                       carry: tuple[str, ...] = ()) -> list[DataFrame]:
+                       carry: tuple[str, ...] = ()) -> tuple[list, list]:
+        """Each child's plan and the direction its scores are ordered in
+        (see :meth:`_direction_of`): sibling exact dense leaves that
+        share a scan fuse (:meth:`_fused_leaves`), the rest plan alone."""
+        from qdrant_spark.operators.knn import larger_is_better
+
         groups: dict[tuple, list[int]] = {}
         if self._fusion_worthwhile():
             for i, c in enumerate(children):
@@ -679,13 +665,17 @@ class QueryPlanner:
                 if key is not None:
                     groups.setdefault(key, []).append(i)
         out: list[DataFrame | None] = [None] * len(children)
+        orders: list[bool | None] = [None] * len(children)
         fused_groups = fused_legs = 0
         for key, idxs in groups.items():
             if len(idxs) < 2:
                 continue
             legs = self._fused_leaves(children, idxs, key[0])
+            if legs is None:
+                continue
             for i, df in zip(idxs, legs):
                 out[i] = df
+                orders[i] = larger_is_better(self.metric_for(key[0]))
             fused_groups += 1
             fused_legs += len(idxs)
         self.last_plan_info["fused_groups"] += fused_groups
@@ -693,29 +683,34 @@ class QueryPlanner:
         for i, c in enumerate(children):
             if out[i] is None:
                 out[i] = self._node(c, depth + 1, carry)
-        return out
+                orders[i] = self.last_plan_direction
+        return out, orders
 
     def _fused_leaves(self, requests: list[dict], idxs: list[int],
-                      vec_col: str, as_rows: bool = False) -> list:
+                      vec_col: str, as_rows: bool = False) -> list | None:
         """The exact dense legs ``requests[i]`` for ``i`` in ``idxs``,
         sharing (vector column, filter), as ONE Spark job: the
         block-matmul kernel (``knn._matmul_knn``) scores every leg per
         Arrow batch, :func:`~qdrant_spark.operators.knn.collect_topk`
         merges the per-partition candidates on the driver, and each leg
         is sliced out of the query-major result. Returns one local result
-        per leg (``_RowsLeg`` with ``as_rows``). Legs whose combined top-k
-        exceeds ``fused_collect_max`` keep the shared scan but stay
-        DataFrames. Raises ValueError when the legs' query vectors differ
-        in dimension."""
+        per leg (``_RowsLeg`` with ``as_rows``), best first in the
+        metric's direction. Returns None when the legs' combined top-k
+        exceeds :data:`FUSED_COLLECT_MAX`: the caller then plans each leg
+        alone. Raises ValueError when the legs' query vectors differ in
+        dimension."""
         import numpy as np
 
         from qdrant_spark.filters import apply_filter
         from qdrant_spark.functions.distances import larger_is_better
         from qdrant_spark.operators.knn import _matmul_knn, collect_topk
 
+        reqs = [requests[i] for i in idxs]
+        k = max(_leg_k(r) for r in reqs)
+        if len(reqs) * k > FUSED_COLLECT_MAX:
+            return None
         spark = self.points.sparkSession
         metric = self.metric_for(vec_col)
-        reqs = [requests[i] for i in idxs]
         targets = [[float(x) for x in
                     self._resolve_vector_input(r["query"]["nearest"], r)]
                    for r in reqs]
@@ -725,7 +720,6 @@ class QueryPlanner:
                     f"request {i}: query vector has {len(t)} dimensions "
                     f"but request {idxs[0]} has {len(targets[0])}; fused "
                     f"dense requests need one query dimension")
-        k = max(_leg_k(r) for r in reqs)
         # the query set is already driver-side: hand it straight to the
         # block-matmul scorer (q_data) — no query DataFrame round trip
         res = _matmul_knn(
@@ -736,55 +730,15 @@ class QueryPlanner:
                     np.asarray(targets, dtype=np.float64)),
         )
         lb = larger_is_better(metric)
-        if len(reqs) * k > self.fused_collect_max:
-            # Unconditional guard (strict mode or not): a 64-leg x 10^6
-            # limit request must not funnel through the driver. Keep the
-            # shared scan (res is already per-leg top-k, <= legs * k
-            # rows), persist it so the leg split doesn't re-run the scan,
-            # and slice legs with DataFrame windows; the fusion root then
-            # also stays a DataFrame op (these legs are deliberately NOT
-            # registered in _fused_hits_by_df).
-            from pyspark.sql import Window
-
-            self._bump("fused_df_fallback")
-            res = res.select("qid", self.id_col, "score").persist()
-            self._fused_persisted.append(res)
-            order = ((F.col("score").desc() if lb else F.col("score").asc()),
-                     F.col(self.id_col).asc())
-            w = Window.partitionBy("qid").orderBy(*order)
-            out = []
-            for i, r in enumerate(reqs):
-                leg = res.where(F.col("qid") == i)
-                th = r.get("score_threshold")
-                if th is not None:  # threshold BEFORE offset, as _leg_hits
-                    leg = leg.where(F.col("score") > th if lb
-                                    else F.col("score") < th)
-                off = int(r.get("offset", 0))
-                limit = int(r.get("limit", DEFAULT_LIMIT))
-                leg = (leg.withColumn("__rnk", F.row_number().over(w))
-                       .where((F.col("__rnk") > off)
-                              & (F.col("__rnk") <= off + limit))
-                       .select(self.id_col, "score"))
-                out.append(leg)
-            return out
-        hits = _split_hits(collect_topk(res, self.fused_collect_max),
+        hits = _split_hits(collect_topk(res, FUSED_COLLECT_MAX),
                            range(len(reqs)))
         schema = self._hit_schema()
-        out = []
-        for r, h in zip(reqs, hits):
-            kept = _leg_hits(r, h, lb)
-            if as_rows:
-                # query_batch collapses all-local legs into ONE frame —
-                # skip the per-leg createDataFrame roundtrip entirely
-                out.append(_RowsLeg(schema, kept))
-                continue
-            df = _local_result_df(spark, kept, schema)
-            if lb:
-                # only larger-is-better legs register for the driver-side
-                # fusion fast path: rrf_hits/dbsf_hits rank score-desc
-                self._fused_hits_by_df[id(df)] = kept
-            out.append(df)
-        return out
+        # query_batch collapses all-local legs into ONE frame (as_rows
+        # skips the per-leg createDataFrame roundtrip entirely); a fusion
+        # root reads the local frames' rows without a job
+        return [_RowsLeg(schema, kept) if as_rows
+                else _local_result_df(spark, kept, schema)
+                for kept in (_leg_hits(r, h, lb) for r, h in zip(reqs, hits))]
 
     # -- VectorInput id resolution ------------------------------------------
 
@@ -1176,83 +1130,71 @@ class QueryPlanner:
             return out
         raise ValueError(f"unsupported leaf query: {query!r}")
 
+    def _fuse_root(self, fusion: str, children: list[DataFrame],
+                   directions: list[bool | None], limit: int,
+                   carry: tuple[str, ...] = ()) -> DataFrame:
+        """RRF / DBSF of a fusion root, finished on the driver, as
+        qdrant fuses each prefetch's globally merged list at collection
+        level (RescoreStages, planned_query.rs:62-101). Every leg is a
+        bounded top-k: a leg that is already local (a fused leaf, a
+        nested fusion root) gives its rows (``_qs_local_rows``), any
+        other leg is collected, several as overlapped jobs from a small
+        thread pool. Each leg ranks best first in the direction its
+        scores are ordered in (``directions``, from :meth:`_plan_children`;
+        score desc for a leg ordered only in its plan, MMR or sample),
+        ties id asc — what :func:`~qdrant_spark.operators.fusion.rrf` /
+        ``dbsf`` compute with ``orders`` — and ``dbsf_hits`` negates
+        smaller-is-better scores. The result is local and carries
+        ``carry`` when every leg did; ``driver_fused_root`` is 1 when no
+        leg was collected."""
+        from concurrent.futures import ThreadPoolExecutor
+
+        from pyspark import inheritable_thread_target
+        from pyspark.sql import types as T
+
+        from qdrant_spark.operators.fusion import dbsf_hits, rrf_hits
+
+        spark = self.points.sparkSession
+        # None (an order that exists only in the plan) ranks score desc
+        orders = [d is not False for d in directions]
+        carried = [bool(carry) and set(carry) <= set(c.columns)
+                   for c in children]
+        rows = [getattr(c, "_qs_local_rows", None) for c in children]
+        todo = [i for i, r in enumerate(rows) if r is None]
+
+        def collect(i: int) -> list:
+            return children[i].select(
+                self.id_col, "score",
+                *(carry if carried[i] else ())).collect()
+
+        # inheritable: the legs' jobs run under the caller's job group,
+        # local properties and tags
+        with ThreadPoolExecutor(max_workers=3) as pool:
+            for i, got in zip(todo, pool.map(
+                    inheritable_thread_target(spark)(collect), todo)):
+                rows[i] = got
+        self.last_plan_info["driver_fused_root"] = int(not todo)
+        hits = [sorted(((r[0], float(r[1])) for r in leg),
+                       key=lambda t, lb=lb: (-t[1] if lb else t[1], t[0]))
+                for leg, lb in zip(rows, orders)]
+        fn, kw = {"rrf": (rrf_hits, {}),
+                  "dbsf": (dbsf_hits, {"orders": orders})}[fusion]
+        fused = fn(hits, limit=limit, **kw)
+        schema = self._hit_schema()
+        if carry and all(carried):
+            # every leg brought its hits' columns: the fused result
+            # carries them without another scan
+            by_id = {r[0]: tuple(r[2:]) for leg in rows for r in leg}
+            fused = [(i, sc, *by_id[i]) for i, sc in fused]
+            schema = T.StructType(schema.fields + [
+                self.points.schema[c] for c in carry])
+        return _local_result_df(spark, fused, schema)
+
     def _rescore(self, query: Any, children: list[DataFrame],
                  req: dict[str, Any], limit: int,
                  depth: int = 0, carry: tuple[str, ...] = ()) -> DataFrame:
-        from qdrant_spark.operators.fusion import dbsf, rrf
-
-        if query is None:
-            query = {"fusion": "rrf"}
-        if "fusion" in query:
-            from pyspark.sql import types as T
-
-            from qdrant_spark.operators.fusion import dbsf_hits, rrf_hits
-
-            # Driver-side fast path: every child is a fused leg whose hits
-            # are already collected (bounded, best-first). Restricted to
-            # larger-is-better metrics so the ranking matches the Spark
-            # fusion operators bit-for-bit (they rank score-desc).
-            hits = [self._fused_hits_by_df.get(id(c)) for c in children]
-            # every registered leg is larger-is-better by construction
-            # (_fused_leaves only registers those), matching the Spark
-            # fusion operators' score-desc ranking bit-for-bit
-            if hits and all(h is not None for h in hits):
-                self.last_plan_info["driver_fused_root"] = 1
-                fused = {"rrf": rrf_hits, "dbsf": dbsf_hits}[query["fusion"]](
-                    hits, limit=limit)
-                return _local_result_df(
-                    self.points.sparkSession, fused, self._hit_schema())
-            if self.driver_lazy_fusion:
-                # r14: lazy legs are bounded top-k frames too — collect
-                # them (jobs overlapped from a small thread pool, guide
-                # §2.6) and fuse driver-side. Ranking mirrors the Spark
-                # operators' DEFAULT orders exactly: every leg re-sorted
-                # (score desc, id asc) before the rank-based formula, so
-                # values match rrf()/dbsf() for any leg metric.
-                from concurrent.futures import ThreadPoolExecutor
-
-                from pyspark import inheritable_thread_target
-
-                def _leg_rows(c):
-                    """(best-first (id, score) hits, carried rows by id
-                    or None) of one leg."""
-                    h = self._fused_hits_by_df.get(id(c))
-                    if h is not None:
-                        return h, None
-                    carried = bool(carry) and set(carry) <= set(c.columns)
-                    rows = c.select(self.id_col, "score",
-                                    *(carry if carried else ())).collect()
-                    return (sorted(((r[0], float(r[1])) for r in rows),
-                                   key=lambda t: (-t[1], t[0])),
-                            {r[0]: tuple(r[2:]) for r in rows}
-                            if carried else None)
-
-                if len(children) > 1:
-                    # inheritable: the legs' jobs run under the caller's
-                    # job group, local properties and tags
-                    with ThreadPoolExecutor(
-                            max_workers=min(3, len(children))) as pool:
-                        legs = list(pool.map(inheritable_thread_target(
-                            self.points.sparkSession)(_leg_rows), children))
-                else:
-                    legs = [_leg_rows(children[0])]
-                self._bump("driver_lazy_fusion")
-                fused = {"rrf": rrf_hits, "dbsf": dbsf_hits}[
-                    query["fusion"]]([h for h, _ in legs], limit=limit)
-                schema = self._hit_schema()
-                if carry and all(rows is not None for _, rows in legs):
-                    # every leg brought its hits' columns: the fused
-                    # result carries them without another scan
-                    by_id = {i: v for _, rows in legs
-                             for i, v in rows.items()}
-                    fused = [(i, sc, *by_id[i]) for i, sc in fused]
-                    pschema = self.points.schema
-                    schema = T.StructType(schema.fields
-                                          + [pschema[c] for c in carry])
-                return _local_result_df(
-                    self.points.sparkSession, fused, schema)
-            fn = {"rrf": rrf, "dbsf": dbsf}[query["fusion"]]
-            return fn(children, id_col=self.id_col, limit=limit)
+        """A nearest / formula / mmr / order_by root over its children's
+        candidates; fusion roots finish in :meth:`_fuse_root`."""
         # merge children candidate ids (dedup), then re-score
         merged = children[0].select(self.id_col)
         for c in children[1:]:
@@ -1326,15 +1268,7 @@ def universal_query(
     (shard_holder resolves ShardSelectorInternal above the per-shard query,
     shard_holder/mod.rs:663): the whole prefetch tree then runs against the
     selected shards only, and the filter prunes partitions when the shard
-    column is a partition column.
-
-    When the large-corpus prefetch-fusion fallback engages (shared scan
-    persisted as a DataFrame), the result is materialized EAGERLY here —
-    at most ``limit`` rows are collected to the driver and returned as a
-    local DataFrame — so the cached scan can be freed before this
-    one-shot planner is discarded. Consequence: on that path the returned
-    DataFrame is a snapshot and does NOT recompute against later
-    mutations of ``points``; the common non-fallback paths stay lazy."""
+    column is a partition column."""
     if request.get("shard_key") is not None:
         from qdrant_spark.operators.sharding import select_shards
 
@@ -1345,27 +1279,7 @@ def universal_query(
         points, id_col=id_col, default_vec_col=vec_col, metric=metric,
         collections=collections,
     )
-    out = planner.plan(request)
-    return _release_one_shot(planner, out)
-
-
-def _release_one_shot(planner: "QueryPlanner", out: DataFrame) -> DataFrame:
-    """One-shot entries discard the planner, so a shared scan persisted by
-    the fused DataFrame fallback would stay cached forever (r6 ADVICE).
-    Materialize the root (small: <= the request's limit rows — the output
-    the caller is about to collect, NOT the legs*need-row scan the
-    fallback exists to keep off the driver) through the cache once, then
-    free the scan and hand back a rebuilt local DataFrame. No-op on the
-    common non-fallback paths; localCheckpoint is avoided because its
-    blocks would themselves stay resident for the application lifetime."""
-    if planner._fused_persisted:
-        from qdrant_spark.session import local_df
-
-        rows = out.collect()
-        spark = planner.points.sparkSession
-        out = local_df(spark, rows, out.schema)
-        planner.close()
-    return out
+    return planner.plan(request)
 
 
 def _leg_k(req: dict[str, Any]) -> int:
@@ -1428,8 +1342,11 @@ def _fuse_dense(planner: "QueryPlanner", requests: list[dict[str, Any]],
     """Exact dense legs sharing (vector column, filter): ONE Spark job
     over one corpus scan (:meth:`QueryPlanner._fused_leaves`; the
     reference's batch dispatch special-cases exactly this, dispatch.rs
-    batch path / the PlannedQuery leaf merge)."""
+    batch path / the PlannedQuery leaf merge). Declines over
+    :data:`FUSED_COLLECT_MAX`."""
     legs = planner._fused_leaves(requests, idxs, vc, as_rows=True)
+    if legs is None:
+        return False
     for i, leg in zip(idxs, legs):
         outs[i] = leg
     return True
@@ -1446,7 +1363,7 @@ def _fuse_sparse_index(planner: "QueryPlanner",
 
     (idx,) = handles
     k = max(_leg_k(requests[i]) for i in idxs)
-    if len(idxs) * k > planner.fused_collect_max:
+    if len(idxs) * k > FUSED_COLLECT_MAX:
         return False  # keep per-request plans; nothing funnels the driver
     qs = [(i, [int(d) for d in requests[i]["query"]["nearest"]["indices"]],
            [float(v) for v in requests[i]["query"]["nearest"]["values"]])
@@ -1470,7 +1387,7 @@ def _fuse_maxsim_codes(planner: "QueryPlanner",
 
     (sqh,) = handles
     ks, cs, rescores = _quant_widths(requests, idxs, sqh)
-    if len(idxs) * max(cs.values()) > planner.fused_collect_max:
+    if len(idxs) * max(cs.values()) > FUSED_COLLECT_MAX:
         return False
     metric = planner.metric_for(vc)
     queries = [requests[i]["query"]["nearest"] for i in idxs]
@@ -1542,7 +1459,7 @@ def _fuse_maxsim_composed(planner: "QueryPlanner",
 
     rt, sqh = handles
     ks, cs, rescores = _quant_widths(requests, idxs, sqh)
-    if len(idxs) * max(cs.values()) > planner.fused_collect_max:
+    if len(idxs) * max(cs.values()) > FUSED_COLLECT_MAX:
         return False
     metric = planner.metric_for(vc)
     queries = [requests[i]["query"]["nearest"] for i in idxs]
@@ -1569,7 +1486,7 @@ def _fuse_maxsim(planner: "QueryPlanner", requests: list[dict[str, Any]],
     from qdrant_spark.operators.multivec import maxsim_knn_batch
 
     ks = {i: _leg_k(requests[i]) for i in idxs}
-    if len(idxs) * max(ks.values()) > planner.fused_collect_max:
+    if len(idxs) * max(ks.values()) > FUSED_COLLECT_MAX:
         return False
     queries = [requests[i]["query"]["nearest"] for i in idxs]
     rows = maxsim_knn_batch(
@@ -1658,7 +1575,7 @@ def _finish_quant_group(planner, requests, idxs, outs, qh, metric,
 
     idx = qh.index
     by_req = {i: h[:cs[i]] for i, h in zip(
-        idxs, _split_hits(collect_topk(coarse, planner.fused_collect_max),
+        idxs, _split_hits(collect_topk(coarse, FUSED_COLLECT_MAX),
                           idxs))}
     need_rescore = [i for i in idxs if rescores[i]]
     if need_rescore:
@@ -1741,7 +1658,7 @@ def _fuse_quant(planner: "QueryPlanner", requests: list[dict[str, Any]],
 
     (qh,) = handles
     ks, cs, rescores = _quant_widths(requests, idxs, qh)
-    if len(idxs) * max(cs.values()) > planner.fused_collect_max:
+    if len(idxs) * max(cs.values()) > FUSED_COLLECT_MAX:
         return False
     metric = planner.metric_for(vc)
     prep, code_col, dec, Q, scan_metric = quant_scan_setup(
@@ -1777,7 +1694,7 @@ def _fuse_quant_ivf(planner: "QueryPlanner", requests: list[dict[str, Any]],
     (qih,) = handles
     qh = qih.handle
     ks, cs, rescores = _quant_widths(requests, idxs, qh)
-    if len(idxs) * max(cs.values()) > planner.fused_collect_max:
+    if len(idxs) * max(cs.values()) > FUSED_COLLECT_MAX:
         return False
     metric = planner.metric_for(vc)
     prep, code_col, dec, Q, scan_metric = quant_scan_setup(
@@ -1829,7 +1746,7 @@ def _fuse_batch(planner: "QueryPlanner", requests: list[dict[str, Any]],
     pays (:meth:`QueryPlanner._fusion_worthwhile`) — through the kind's
     fused batch function, value-identical per request to planning each
     alone. A function that declines (its collect would exceed
-    ``fused_collect_max``) leaves its requests to per-request plans."""
+    :data:`FUSED_COLLECT_MAX`) leaves its requests to per-request plans."""
     import json
 
     groups: dict[tuple, tuple] = {}
@@ -1894,13 +1811,7 @@ def query_batch(
     (:attr:`QueryPlanner.carry`). When every request's plan carries them,
     the result holds them after (request_idx, id, score), so one collect
     answers the batch; when any leg cannot (a fused group, an indexed
-    route), the result is (request_idx, id, score) for every request.
-
-    Like :func:`universal_query`, if any request engages the fused
-    DataFrame fallback the whole batch result is materialized eagerly
-    (≤ ``sum(limit_i)`` rows collected, returned as a local snapshot
-    DataFrame that does not recompute against later ``points``
-    mutations); otherwise the result is lazy as usual."""
+    route), the result is (request_idx, id, score) for every request."""
     from functools import reduce
 
     if ivf_index is not None:
@@ -1932,11 +1843,6 @@ def query_batch(
     planner._vec_cache = planner._batch_resolve_ids({"prefetch": list(requests)})
     outs: list = [None] * len(requests)
     _fuse_batch(planner, requests, outs)
-    # stash fallback persists from the fused legs: the per-request plan()
-    # calls below free planner._fused_persisted at entry, which would
-    # evict the shared scan before the batch union materializes
-    fused_persists = planner._fused_persisted
-    planner._fused_persisted = []
     for i, req in enumerate(requests):
         if outs[i] is None:
             if req.get("shard_key") is not None:
@@ -1958,14 +1864,6 @@ def query_batch(
                     planner.points, planner.indexes = saved
             else:
                 outs[i] = planner.plan(req)
-            # a per-request plan() can itself hit the fused DataFrame
-            # fallback; move its persists into the stash immediately or
-            # the NEXT plan() call unpersists them at entry — before the
-            # batch union materializes — silently re-running the shared
-            # scan per leg at collect
-            fused_persists.extend(planner._fused_persisted)
-            planner._fused_persisted = []
-    planner._fused_persisted.extend(fused_persists)
     spark = planner.points.sparkSession
     if carry:
         cols = [None if isinstance(o, _RowsLeg) else set(o.columns)
@@ -2001,13 +1899,11 @@ def query_batch(
             + list(base_schema.fields))
         data = [(i, *tuple(r)) for i, loc in enumerate(locals_)
                 for r in loc[2]]
-        return _release_one_shot(
-            planner, _local_result_df(spark, data, schema))
+        return _local_result_df(spark, data, schema)
     tagged = [(df if not isinstance(df, _RowsLeg)
                else _local_result_df(spark, df.rows, df.schema))
               for df in outs]
     tagged = [df.withColumn("request_idx", F.lit(i))
               for i, df in enumerate(tagged)]
-    out = reduce(lambda a, b: a.unionByName(b), tagged) \
+    return reduce(lambda a, b: a.unionByName(b), tagged) \
         .select("request_idx", *(c for c in tagged[0].columns if c != "request_idx"))
-    return _release_one_shot(planner, out)

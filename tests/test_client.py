@@ -270,6 +270,31 @@ class TestQueryPoints:
         ids = [p.id for p in res.points]
         assert 1 in ids and 4 in ids  # each leg's own top hit survives rrf
 
+    def test_prefetch_rrf_fusion_euclid(self, spark):
+        """RRF on a Euclid collection ranks each prefetch leg nearest
+        first: ids and scores equal a NumPy RRF over the legs' exact
+        nearest-first lists."""
+        rng = np.random.default_rng(3)
+        vecs = {i: rng.normal(size=2).tolist() for i in range(1, 21)}
+        c = QdrantSparkClient(spark)
+        c.create_collection("rrf_eu", vectors_config={"size": 2,
+                                                      "distance": "Euclid"})
+        c.upsert("rrf_eu", [{"id": i, "vector": v} for i, v in vecs.items()])
+        legs = [([0.0, 0.0], 6), ([1.0, 1.0], 6)]
+        acc: dict = {}
+        for q, k in legs:
+            near = sorted(vecs, key=lambda i: (
+                float(np.linalg.norm(np.subtract(vecs[i], q))), i))[:k]
+            for pos, i in enumerate(near):
+                acc[i] = acc.get(i, 0.0) + 1.0 / (pos + 2)  # k = 2
+        want = sorted(acc.items(), key=lambda t: (-t[1], t[0]))[:4]
+        res = c.query_points(
+            "rrf_eu", prefetch=[{"query": q, "limit": k} for q, k in legs],
+            query={"fusion": "rrf"}, limit=4, with_payload=False)
+        assert [p.id for p in res.points] == [i for i, _ in want]
+        for p, (_, s) in zip(res.points, want):
+            assert p.score == pytest.approx(s)
+
     def test_order_by_query(self, client):
         res = client.query_points(
             "test_collection",

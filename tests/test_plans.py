@@ -502,9 +502,11 @@ def test_client_read_job_count(spark, mix_client, kind, jobs):
     """Each exact client read kind runs its pinned number of Spark jobs,
     all under the caller's job group: the hydration columns ride through
     the top-k, groups form on the driver, and a fused query runs one job
-    per prefetch leg with no hydration job."""
+    per prefetch leg with no hydration job. No ungrouped job id appears:
+    the tracker may evict old ids during the read, so the ids are
+    compared as sets, not counted."""
     sc = spark.sparkContext
-    ungrouped = len(sc.statusTracker().getJobIdsForGroup(None))
+    ungrouped = set(sc.statusTracker().getJobIdsForGroup(None))
     group = f"read-{kind}"
     sc.setJobGroup(group, kind)
     try:
@@ -513,7 +515,7 @@ def test_client_read_job_count(spark, mix_client, kind, jobs):
         sc._jsc.clearJobGroup()
     assert out
     assert len(sc.statusTracker().getJobIdsForGroup(group)) == jobs
-    assert len(sc.statusTracker().getJobIdsForGroup(None)) == ungrouped
+    assert not set(sc.statusTracker().getJobIdsForGroup(None)) - ungrouped
 
 
 def test_client_query_points_plan_has_no_exchange(mix_client, monkeypatch):

@@ -791,7 +791,8 @@ def test_quant_threshold_with_rescore_false_thresholds_coarse(embeddings):
 
 def test_quant_threshold_rescore_false_binary_direction(embeddings):
     """Binary coarse scores are the ±1-dot estimate (larger-better
-    whatever the metric) — the threshold applies in THAT direction."""
+    whatever the metric) — the threshold applies in THAT direction, the
+    plan reports that direction, and a fusion root ranks the leg by it."""
     from qdrant_spark.query import QueryPlanner
 
     h = build_quant(embeddings, {"binary": {"full_scan_threshold": 0}},
@@ -800,9 +801,15 @@ def test_quant_threshold_rescore_false_binary_direction(embeddings):
     pl = QueryPlanner(embeddings, id_col="vec_id",
                       default_vec_col="embedding", metric="euclid",
                       indexes={"embedding": [h]})
-    base = pl.plan({"query": {"nearest": q}, "limit": 10,
-                    "params": {"quantization": {"rescore": False}}})
+    leg = {"query": {"nearest": q}, "limit": 10,
+           "params": {"quantization": {"rescore": False}}}
+    base = pl.plan(leg)
+    assert pl.last_plan_direction is True
     rows = [(r["vec_id"], r["score"]) for r in base.collect()]
+    fused = pl.plan({"prefetch": [leg, leg], "query": {"fusion": "rrf"},
+                     "limit": 5}).collect()
+    best = sorted(rows, key=lambda t: (-t[1], t[0]))[:5]
+    assert [r["vec_id"] for r in fused] == [i for i, _ in best]
     thr = sorted((s for _, s in rows), reverse=True)[4]
     got = pl.plan({"query": {"nearest": q}, "limit": 10,
                    "score_threshold": thr,

@@ -484,10 +484,9 @@ def test_prefetch_fusion_with_threshold(embeddings):
 
 
 def test_driver_side_fusion_matches_spark_path(embeddings):
-    """The driver-side fusion fast path (rrf_hits/dbsf_hits over the
-    already-collected fused-leg hits) is value-identical to the Spark
-    fusion operators, and is SKIPPED for smaller-is-better metrics where
-    the Spark operators' score-desc ranking would diverge."""
+    """A fusion root over fused legs reads their local hits (no collect,
+    ``driver_fused_root`` 1) and fuses value-identically to the same root
+    over lazy legs, for a smaller-is-better metric too."""
     from qdrant_spark.operators.fusion import dbsf, rrf
     from qdrant_spark.query import QueryPlanner
 
@@ -533,8 +532,8 @@ def test_driver_side_fusion_matches_spark_path(embeddings):
     assert [(r["vec_id"], round(r["score"], 9)) for r in fast_m] == \
         [(r["vec_id"], round(r["score"], 9)) for r in lazy_m]
 
-    # euclid (smaller-is-better): fused legs still share the scan, but the
-    # root fusion stays on the Spark operators (ranking-direction parity)
+    # euclid (smaller-is-better): fused legs share the scan and the root
+    # reads them without a collect, ranking each leg nearest first
     req_e = {
         "prefetch": [
             {"query": {"nearest": v[1]}, "limit": 15},
@@ -548,7 +547,7 @@ def test_driver_side_fusion_matches_spark_path(embeddings):
                       fuse_min_bytes=0)
     out_e = pe.plan(req_e).collect()
     assert pe.last_plan_info["fused_legs"] == 2
-    assert pe.last_plan_info["driver_fused_root"] == 0
+    assert pe.last_plan_info["driver_fused_root"] == 1
     lazy_e = QueryPlanner(embeddings, id_col="vec_id",
                           default_vec_col="embedding",
                           metric="euclid").plan(req_e).collect()
@@ -637,59 +636,62 @@ def test_query_batch_fuses_homogeneous_nearest(embeddings):
     assert len(by_req[0]) == 7 and len(by_req[1]) == 4 and len(by_req[4]) == 3
 
 
-def test_fused_collect_guard_falls_back_to_dataframe_fusion(embeddings):
-    """r5 VERDICT item 5: above the fused-collect hit ceiling the leg
-    split stays a DataFrame op (persisted shared scan + window slices) —
-    no driver-side hit collection, value-identical results."""
-    from qdrant_spark.query import QueryPlanner
+def test_fused_collect_guard_declines_to_per_leg_plans(embeddings,
+                                                      monkeypatch):
+    """Above FUSED_COLLECT_MAX a fused dense group declines: its legs plan
+    one request at a time, nothing is persisted, and the values equal
+    the fused path, for a prefetch fusion root and a query_batch group."""
+    import qdrant_spark.query as Q
 
     rows = embeddings.filter(F.col("vec_id").isin([0, 3, 5, 7])).collect()
     v = {r["vec_id"]: list(r["embedding"]) for r in rows}
-    req = {
-        "prefetch": [
-            {"query": {"nearest": v[0]}, "limit": 20},
-            {"query": {"nearest": v[3]}, "limit": 15, "offset": 2},
-            {"query": {"nearest": v[5]}, "limit": 20,
-             "score_threshold": 0.1},
-            {"query": {"nearest": v[7]}, "limit": 20},
-        ],
-        "query": {"fusion": "rrf"},
-        "limit": 8,
-    }
-    # ceiling of 10 forces the fallback (4 legs * 22 needed = 88 > 10)
-    p = QueryPlanner(embeddings, id_col="vec_id",
-                     default_vec_col="embedding", fuse_min_bytes=0,
-                     fused_collect_max=10)
-    got = p.plan(req).collect()
-    assert p.last_plan_info["fused_legs"] == 4
-    assert p.last_plan_info["fused_df_fallback"] == 1
-    assert p.last_plan_info["driver_fused_root"] == 0  # DataFrame fusion
-    assert not p._fused_hits_by_df  # nothing funneled through the driver
-    assert len(p._fused_persisted) == 1  # shared scan cached, split lazily
+    legs = [
+        {"query": {"nearest": v[0]}, "limit": 20},
+        {"query": {"nearest": v[3]}, "limit": 15, "offset": 2},
+        {"query": {"nearest": v[5]}, "limit": 20, "score_threshold": 0.1},
+        {"query": {"nearest": v[7]}, "limit": 20},
+    ]
+    req = {"prefetch": legs, "query": {"fusion": "rrf"}, "limit": 8}
+    kw = dict(id_col="vec_id", vec_col="embedding", fuse_min_bytes=0)
 
-    # reference: the ordinary driver-side fused path
-    p_ref = QueryPlanner(embeddings, id_col="vec_id",
-                         default_vec_col="embedding", fuse_min_bytes=0)
-    want = p_ref.plan(req).collect()
+    def hits(rs):
+        return [(r["vec_id"], round(r["score"], 9)) for r in rs]
+
+    def batch_hits(rs):
+        return sorted((r["request_idx"], r["vec_id"], round(r["score"], 9))
+                      for r in rs)
+
+    # reference: the fused paths within the budget
+    p_ref = Q.QueryPlanner(embeddings, id_col="vec_id",
+                           default_vec_col="embedding", fuse_min_bytes=0)
+    want = hits(p_ref.plan(req).collect())
+    assert p_ref.last_plan_info["fused_legs"] == 4
     assert p_ref.last_plan_info["driver_fused_root"] == 1
-    assert [(r["vec_id"], round(r["score"], 9)) for r in got] == \
-        [(r["vec_id"], round(r["score"], 9)) for r in want]
+    want_batch = batch_hits(Q.query_batch(embeddings, legs, **kw).collect())
 
-    # the persisted shared scan is freed at the next plan()
-    p.plan({"query": {"nearest": v[0]}, "limit": 3})
-    assert p._fused_persisted == []
+    # a ceiling of 10 makes the group over budget (4 legs * 22 > 10)
+    monkeypatch.setattr(Q, "FUSED_COLLECT_MAX", 10)
+    declined = []
+    fused_leaves = Q.QueryPlanner._fused_leaves
 
-    # close() frees eagerly for single-use planners (r6 ADVICE)
-    p2 = QueryPlanner(embeddings, id_col="vec_id",
-                      default_vec_col="embedding", fuse_min_bytes=0,
-                      fused_collect_max=10)
-    p2.plan(req).collect()
-    assert len(p2._fused_persisted) == 1
-    assert p2._fused_persisted[0].storageLevel.useMemory
-    cached = p2._fused_persisted[0]
-    p2.close()
-    assert p2._fused_persisted == []
-    assert not cached.storageLevel.useMemory  # actually unpersisted
+    def spy(self, *a, **k):
+        out = fused_leaves(self, *a, **k)
+        declined.append(out is None)
+        return out
+
+    monkeypatch.setattr(Q.QueryPlanner, "_fused_leaves", spy)
+    sc = embeddings.sparkSession.sparkContext
+    before = sc._jsc.getPersistentRDDs().size()
+    p = Q.QueryPlanner(embeddings, id_col="vec_id",
+                       default_vec_col="embedding", fuse_min_bytes=0)
+    got = hits(p.plan(req).collect())
+    assert p.last_plan_info["fused_legs"] == 0
+    assert p.last_plan_info["driver_fused_root"] == 0
+    assert got == want
+    got_batch = batch_hits(Q.query_batch(embeddings, legs, **kw).collect())
+    assert got_batch == want_batch
+    assert declined == [True, True]
+    assert sc._jsc.getPersistentRDDs().size() == before
 
 
 def test_one_shot_universal_query_leaves_no_persisted_scan(embeddings):
@@ -774,37 +776,62 @@ def test_delta_upsert_merge_env_gated(spark, table, tmp_path):
 
 
 def test_driver_lazy_fusion_parity(embeddings):
-    """r14: a fusion root over LAZY legs fuses driver-side (bounded leg
-    collects + rrf_hits/dbsf_hits with the Spark operators' exact
-    ordering). Values must equal the Spark-side rrf()/dbsf() plan for
-    every fusion kind and for a smaller-is-better leg metric, and the
-    plan info must record the lazy-driver path without touching
-    driver_fused_root (the fused-root contract)."""
+    """Every fusion root finishes on the driver, each leg ranked best
+    first in its own score direction. Values equal the Spark rrf() /
+    dbsf() with ``orders`` over per-leg knn / sparse_knn plans, for
+    cosine, euclid (nearest first) and a euclid dense + sparse dot pair,
+    over fused legs (``fuse_min_bytes=0``) and lazy legs alike."""
+    from qdrant_spark.operators.fusion import dbsf, rrf
+    from qdrant_spark.operators.knn import knn
+    from qdrant_spark.operators.sparse import sparse_knn
     from qdrant_spark.query import QueryPlanner
 
+    pts = embeddings.withColumn("sp", F.struct(
+        F.array(*(F.lit(d) for d in range(4))).alias("indices"),
+        F.slice("embedding", 1, 4).alias("values")))
     rows = embeddings.orderBy("vec_id").limit(8).collect()
     v = {r["vec_id"]: list(r["embedding"]) for r in rows}
-    for fusion in ("rrf", "dbsf"):
-        for metric in ("cosine", "euclid"):
-            req = {
-                "prefetch": [
-                    {"query": {"nearest": v[1]}, "limit": 25},
-                    {"query": {"nearest": v[4]}, "limit": 12},
-                    {"query": {"nearest": v[7]}, "limit": 18, "offset": 1},
-                ],
-                "query": {"fusion": fusion},
-                "limit": 10,
-            }
-            new_p = QueryPlanner(embeddings, id_col="vec_id",
-                                 default_vec_col="embedding", metric=metric)
-            got = new_p.plan(req).collect()
-            assert new_p.last_plan_info.get("driver_lazy_fusion") == 1
-            assert new_p.last_plan_info["driver_fused_root"] == 0
-            old_p = QueryPlanner(embeddings, id_col="vec_id",
+    sp = {"indices": [0, 2, 3], "values": [0.7, -0.2, 0.4]}
+    dense = [{"query": {"nearest": v[1]}, "limit": 25},
+             {"query": {"nearest": v[4]}, "limit": 12},
+             {"query": {"nearest": v[7]}, "limit": 18, "offset": 1}]
+    cases = {"cosine": (dense, {}), "euclid": (dense, {}),
+             "mixed": (dense[:2] + [{"query": {"nearest": sp},
+                                     "using": "sp", "limit": 15}],
+                       {"embedding": "euclid"})}
+
+    def leg_plan(leg, metric):
+        """A leg's reference plan and its score direction."""
+        if leg.get("using") == "sp":
+            return sparse_knn(pts, sp["indices"], sp["values"],
+                              k=leg["limit"], id_col="vec_id",
+                              indices_col="sp.indices",
+                              values_col="sp.values"), True
+        got = knn(pts, leg["query"]["nearest"], metric=metric,
+                  k=leg["limit"], offset=leg.get("offset", 0),
+                  vec_col="embedding", id_col="vec_id",
+                  select=["vec_id", "score"])
+        return got, metric == "cosine"
+
+    for name, (legs, metrics) in cases.items():
+        metric = "cosine" if name == "mixed" else name
+        plans = [leg_plan(leg, metrics.get("embedding", metric))
+                 for leg in legs]
+        orders = [lb for _, lb in plans]
+        for fusion, fn in (("rrf", rrf), ("dbsf", dbsf)):
+            want = [(r["vec_id"], round(r["score"], 9)) for r in fn(
+                [df for df, _ in plans], orders=orders, id_col="vec_id",
+                limit=10).collect()]
+            req = {"prefetch": legs, "query": {"fusion": fusion},
+                   "limit": 10}
+            for fmb, fused in ((None, 0), (0, 2 if name == "mixed" else 3)):
+                p = QueryPlanner(pts, id_col="vec_id",
                                  default_vec_col="embedding", metric=metric,
-                                 driver_lazy_fusion=False)
-            want = old_p.plan(req).collect()
-            assert "driver_lazy_fusion" not in old_p.last_plan_info
-            assert [(r["vec_id"], round(r["score"], 9)) for r in got] == \
-                [(r["vec_id"], round(r["score"], 9)) for r in want], \
-                (fusion, metric)
+                                 metrics=metrics, fuse_min_bytes=fmb)
+                got = [(r["vec_id"], round(r["score"], 9))
+                       for r in p.plan(req).collect()]
+                assert p.last_plan_info["fused_legs"] == fused
+                assert p.last_plan_info["driver_fused_root"] == int(
+                    fused == len(legs))
+                assert got == want, (name, fusion, fmb)
+
