@@ -203,21 +203,21 @@ def _q_knn(metric: str, flt=None, threshold=None):
     return run
 
 
-def _q_knn_batch(strategy: str):
-    def run(spark: SparkSession, sf: str) -> DataFrame:
-        from qdrant_spark.operators.knn import knn_batch
+def _q_knn_batch(spark: SparkSession, sf: str) -> DataFrame:
+    """Batch exact KNN through the block-matmul Arrow kernel; the
+    knn_batch, knn_batch_partial and knn_batch_matmul entries share this
+    plan and one oracle SQL."""
+    from qdrant_spark.operators.knn import knn_batch
 
-        emb = _emb(spark, sf)
-        queries = emb.filter(F.col("vec_id") < 5).select(
-            F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
-        )
-        out = knn_batch(
-            emb, queries, metric="cosine", k=10, vec_col="embedding",
-            id_col="vec_id", strategy=strategy,
-        ).select("qid", "vec_id", "score", "rank")
-        return _long(_r6(out, "score"), "rank")
-
-    return run
+    emb = _emb(spark, sf)
+    queries = emb.filter(F.col("vec_id") < 5).select(
+        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
+    )
+    out = knn_batch(
+        emb, queries, metric="cosine", k=10, vec_col="embedding",
+        id_col="vec_id",
+    ).select("qid", "vec_id", "score", "rank")
+    return _long(_r6(out, "score"), "rank")
 
 
 _KNN_BATCH_SQL = f"""
@@ -245,7 +245,7 @@ def _q_similarity_join(spark: SparkSession, sf: str) -> DataFrame:
     )
     out = knn_batch(
         emb, queries, metric="cosine", k=5, vec_col="embedding",
-        id_col="vec_id", strategy="matmul",
+        id_col="vec_id",
     ).select("qid", "vec_id", "score", "rank")
     return _long(_r6(out, "score"), "rank")
 
@@ -4764,9 +4764,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             flt={"must": [{"key": "label", "match": {"any": [1, 2, 3]}}]},
             threshold=0.1,
         ),
-        "knn_batch": _q_knn_batch("window"),
-        "knn_batch_partial": _q_knn_batch("partial"),
-        "knn_batch_matmul": _q_knn_batch("matmul"),
+        "knn_batch": _q_knn_batch,
+        "knn_batch_partial": _q_knn_batch,
+        "knn_batch_matmul": _q_knn_batch,
         "similarity_join": _q_similarity_join,
         "scroll_random": _q_scroll_random,
         "recommend_avg_vector": _q_reco("avg"),

@@ -475,8 +475,7 @@ def main() -> None:
 
     def q_knn_batch64():
         return knn_batch(emb, queries_df, metric="cosine", k=10,
-                         vec_col="embedding", id_col="vec_id",
-                         strategy="matmul").count()
+                         vec_col="embedding", id_col="vec_id").count()
 
     def q_knn_filtered():
         flt = {"must": [{"key": "label", "match": {"any": [1, 2, 3]}}]}
@@ -561,8 +560,7 @@ def main() -> None:
 
     def q_knn_batch64_xl():
         return knn_batch(xl, queries_df, metric="cosine", k=10,
-                         vec_col="embedding", id_col="vec_id",
-                         strategy="matmul").count()
+                         vec_col="embedding", id_col="vec_id").count()
 
     def q_knn_single_xl():
         # below ARROW_DISPATCH_BYTES: plan-stats dispatch keeps Column math
@@ -614,7 +612,7 @@ def main() -> None:
     ex_b: dict = {}
     for r in knn_batch(emb, queries_df.filter(F.col("qid") < 8),
                        metric="cosine", k=10, vec_col="embedding",
-                       id_col="vec_id", strategy="matmul").collect():
+                       id_col="vec_id").collect():
         ex_b.setdefault(r["qid"], set()).add(r["vec_id"])
     sym_h = asym_h = 0
     for qi in range(8):
@@ -723,8 +721,7 @@ def main() -> None:
         # cached at scale). Compare against ann_ivf_batch64_xxl, which also
         # reads parquet but prunes 28/32 cluster partitions per query.
         return knn_batch(xxl_disk, queries_df, metric="cosine", k=10,
-                         vec_col="embedding", id_col="vec_id",
-                         strategy="matmul").count()
+                         vec_col="embedding", id_col="vec_id").count()
 
     def q_ann_ivf_batch64_xxl():
         # NOTE: with 64 queries x 4 probes over 32 clusters the probe UNION
@@ -778,8 +775,7 @@ def main() -> None:
 
     def q_knn_batch256_xxl_disk():
         return knn_batch(xxl_disk, q256_df, metric="cosine", k=10,
-                         vec_col="embedding", id_col="vec_id",
-                         strategy="matmul").count()
+                         vec_col="embedding", id_col="vec_id").count()
 
     mark("group3: xxl queries")
     measure("knn_single_xxl", q_knn_single_xxl)
@@ -1134,7 +1130,7 @@ def main() -> None:
     exact10 = {}
     ex = knn_batch(xxl_disk, queries_df.filter(F.col("qid") < n_rq),
                    metric="cosine", k=10, vec_col="embedding",
-                   id_col="vec_id", strategy="matmul").collect()
+                   id_col="vec_id").collect()
     for r in ex:
         exact10.setdefault(r["qid"], set()).add(r["vec_id"])
 
@@ -1349,7 +1345,7 @@ def main() -> None:
             ivf_xxxl, q0, k=10, nprobe=4, metric="cosine").collect())
         run_app("knn_batch64_xxxl_disk", lambda: knn_batch(
             xxxl_disk, queries_df, metric="cosine", k=10,
-            vec_col="embedding", id_col="vec_id", strategy="matmul").count())
+            vec_col="embedding", id_col="vec_id").count())
         # the quantized narrow-scan path at 2M: coarse ADC reads 8 B/row of
         # codes from the cluster-partitioned parquet vs 1536 B of floats —
         # the second data point for where the 100-TB plan crosses over

@@ -14,35 +14,30 @@ Spark shapes:
   ``TakeOrderedAndProject`` — per-partition partial top-k, then a driver
   merge. No shuffle of the scored set. This is already the optimal
   distributed plan at 100 TB.
-- batch queries -> two physical strategies:
+- batch queries -> block matrix multiply through the one Arrow
+  score-and-top-k kernel, :func:`arrow_topk`: ``mapInArrow`` over the
+  points scores every query against each Arrow batch with one BLAS
+  matmul (NumPy, float64), cuts each query's top k per batch and
+  finishes once per partition, so at most partitions*Q*k candidate rows
+  leave the map side. Spark's array higher-order functions are
+  interpreted (no whole-stage codegen), so this beats the pure-Column
+  plan ~50x on the N*Q hot path — this is the 100-TB plan. The
+  candidates reach one of two finishes:
 
-  * ``matmul`` (default) — block matrix multiply through the one Arrow
-    score-and-top-k kernel, :func:`arrow_topk`: ``mapInArrow`` over the
-    points scores every query against each Arrow batch with one BLAS
-    matmul (NumPy, float64), cuts each query's top k per batch and
-    finishes once per partition, so at most partitions*Q*k candidate
-    rows leave the map side. Spark's array higher-order functions are
-    interpreted (no whole-stage codegen), so this beats the pure-Column
-    plan ~50x on the N*Q hot path — this is the 100-TB plan. The
-    candidates reach one of two finishes:
+  * *ranked* (the lazy DataFrame every consumer gets): the candidates
+    shuffle by query into the final exact window (:func:`ranked`);
+  * *collected* (:func:`collect_topk`, for callers that collect the
+    top-k anyway — the fused batch groups of ``query.query_batch``):
+    one job pulls the candidates with ``toArrow()`` and the driver
+    merges them with the tie-exact :func:`first_k`, as qdrant's
+    coordinator merges each segment's local top-k. No shuffle, no
+    window, no second job. It runs while partitions*Q*k stays within
+    the caller's driver budget; above it the ranked finish runs and is
+    collected.
 
-    - *ranked* (the lazy DataFrame every consumer gets): the candidates
-      shuffle by query into the final exact window (:func:`ranked`);
-    - *collected* (:func:`collect_topk`, for callers that collect the
-      top-k anyway — the fused batch groups of ``query.query_batch``):
-      one job pulls the candidates with ``toArrow()`` and the driver
-      merges them with the tie-exact :func:`first_k`, as qdrant's
-      coordinator merges each segment's local top-k. No shuffle, no
-      window, no second job. It runs while partitions*Q*k stays within
-      the caller's driver budget; above it the ranked finish runs and is
-      collected.
-  * ``window`` — broadcast crossJoin + ``row_number() over (partition by
-    qid order by score)``; pure Column math, oracle-exact formula shape,
-    with a map-side top-k combine before the shuffle. ``partial`` is an
-    alias of ``window``.
-
-The same kernel serves every batch scorer (IVF cluster blocks, IVF-PQ
-ADC shortlists, batch MaxSim, quantized coarse scans). Its local cut is
+The same kernel serves every Arrow scorer (IVF cluster blocks, IVF-PQ
+ADC shortlists, single and batch MaxSim, MaxSim pair rescores,
+quantized coarse scans, the composed recommend scores). Its local cut is
 tie-exact: it keeps each query's k best rows under the final window's
 order — score direction, then id ascending — so the local-top-k-then-
 merge plan returns exactly what one global sort would, ties included.
@@ -58,13 +53,7 @@ from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from qdrant_spark.filters import apply_filter
-from qdrant_spark.functions.distances import distance, larger_is_better
-
-
-def _vec_lit(vec: Sequence[float]) -> Column:
-    from qdrant_spark.functions.distances import vec_lit
-
-    return vec_lit(vec)  # one py4j call, not one per element
+from qdrant_spark.functions.distances import larger_is_better
 
 
 def score_order(metric: str, score_col: str = "score", id_col: str = "id") -> list[Column]:
@@ -216,55 +205,18 @@ def knn_batch(
     qvec_col: str = "qvec",
     flt: dict[str, Any] | None = None,
     score_threshold: float | None = None,
-    strategy: str = "matmul",
-    keep_cols: list[str] | None = None,
 ) -> DataFrame:
-    """Batch exact KNN: one top-k result set per row of ``queries``.
+    """Batch exact KNN: one top-k result set per row of ``queries``,
+    scored by the block-matmul kernel (:func:`_matmul_knn`).
 
     ``queries`` must have (qid_col, qvec_col). Returns
-    (qid, id, score, rank, *keep_cols) with rank 1..k per query.
+    (qid, id, score, rank) with rank 1..k per query.
     """
     pts = apply_filter(points, flt).filter(F.col(vec_col).isNotNull())
-    if strategy == "auto":
-        # Same plain-vs-index dispatch as single-query knn(), scaled by the
-        # batch width: the interpreted window path does n*Q element walks,
-        # so the Arrow crossover corpus shrinks by ~Q. queries is always a
-        # small driver-built DF, so count() here is a no-shuffle job.
-        nq = max(1, queries.count())
-        strategy = ("matmul"
-                    if _plan_size_bytes(pts) * nq >= ARROW_DISPATCH_BYTES
-                    else "window")
-        if strategy == "matmul" and keep_cols:
-            strategy = "window"  # matmul path drops payload columns
-    if strategy == "matmul":
-        if keep_cols:
-            raise ValueError("keep_cols unsupported with strategy='matmul'")
-        return _matmul_knn(
-            pts, queries, metric=metric, k=k, vec_col=vec_col, id_col=id_col,
-            qid_col=qid_col, qvec_col=qvec_col, score_threshold=score_threshold,
-        )
-    q = queries.select(
-        F.col(qid_col).alias("__qid"), F.col(qvec_col).alias("__qvec")
+    return _matmul_knn(
+        pts, queries, metric=metric, k=k, vec_col=vec_col, id_col=id_col,
+        qid_col=qid_col, qvec_col=qvec_col, score_threshold=score_threshold,
     )
-    scored = pts.crossJoin(F.broadcast(q)).withColumn(
-        "score", distance(metric, F.col(vec_col), F.col("__qvec"))
-    )
-    if score_threshold is not None:
-        scored = scored.filter(_threshold_cond(metric, score_threshold))
-    keep = keep_cols or []
-    scored = scored.select(
-        F.col("__qid").alias(qid_col), F.col(id_col), F.col("score"), *keep
-    )
-
-    # map-side top-k combine, UNCONDITIONAL (r8 VERDICT item 8): the
-    # per-qid window below would otherwise shuffle all n*Q scored rows
-    # partitioned by qid — with few queries over a huge corpus a single
-    # qid partition is the whole corpus. After the combine the window
-    # sees <= partitions*Q*k candidate rows. ('partial' is kept as an
-    # accepted alias of 'window'.)
-    scored = _partial_topk(scored, metric, k, qid_col=qid_col, id_col=id_col)
-
-    return ranked(scored, metric, k, qid_col=qid_col, id_col=id_col)
 
 
 def score_block(M, Qm, metric: str, qnorm=None):
@@ -653,36 +605,3 @@ def rowwise_score_topk(
     if k is None:
         return scored
     return ranked(scored, metric, k, qid_col=qid_col, id_col=id_col)
-
-
-def _partial_topk(
-    scored: DataFrame, metric: str, k: int, *, qid_col: str, id_col: str
-) -> DataFrame:
-    """Per-partition running top-k per query over Arrow batches.
-
-    Reduces each points-partition to <= Q*k candidate rows BEFORE the
-    per-query shuffle — the map-side-combine of top-k. Only the narrow
-    (qid, id, score, ...) projection crosses the Python boundary.
-    """
-    bigger_better = larger_is_better(metric)
-    schema = scored.schema
-    cols = [f.name for f in schema.fields]
-
-    def take_topk(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        cand: "pd.DataFrame | None" = None
-        for pdf in batches:
-            cand = pdf if cand is None else pd.concat([cand, pdf], ignore_index=True)
-            # exact same ordering as the global window: (score dir, id asc)
-            cand = (
-                cand.sort_values(
-                    ["score", id_col], ascending=[not bigger_better, True]
-                )
-                .groupby(qid_col, sort=False)
-                .head(k)
-                .reset_index(drop=True)
-            )
-        yield cand if cand is not None else pd.DataFrame(columns=cols)
-
-    return scored.mapInPandas(take_topk, schema=schema)

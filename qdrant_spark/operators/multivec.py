@@ -8,23 +8,23 @@ max over d in D of sim(q, d).
 The Column implementation (functions/distances.maxsim) nests two
 higher-order functions and runs interpreted — fine for a rescore of a
 bounded candidate set, wrong for a corpus scan. This operator is the scan
-path: one mapInArrow pass where each batch's doc token vectors flatten
-into a single (total_tokens, dim) matrix, one BLAS matmul against the
-query token matrix, and `np.maximum.reduceat` over the Arrow list offsets
-computes the per-doc segment max — no per-doc python loop.
+path: each Arrow batch's doc token vectors flatten into a single
+(total_tokens, dim) matrix, one BLAS matmul against the query token
+matrix, and `np.maximum.reduceat` over the Arrow list offsets computes
+the per-doc segment max — no per-doc python loop. Every scorer here is a
+``blocks(batch)`` function of the one Arrow score-and-top-k kernel
+(:func:`~qdrant_spark.operators.knn.arrow_topk`), which does the cut,
+the dedup and the finish.
 """
 
 from __future__ import annotations
 
-from typing import Any, Iterator, Sequence
+from typing import Any, Sequence
 
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-
-from qdrant_spark.operators.knn import score_order
 
 
 def maxsim_knn(
@@ -38,73 +38,77 @@ def maxsim_knn(
     dedup_ids: bool = False,
 ) -> DataFrame:
     """Top-k by MaxSim of an ``array<array<float>>`` column against a query
-    multivector. ``metric``: dot or cosine (both larger-is-better, as the
-    reference restricts multivectors to sim metrics). ``dedup_ids`` keeps
-    one row per id after scoring (for the invlist layout, where a doc is
-    stored once per token cluster)."""
+    multivector, through the one Arrow score-and-top-k kernel
+    (:func:`~qdrant_spark.operators.knn.arrow_topk`, one query: a top-k
+    sort finish, no shuffle). Returns (id, score) best-first. ``metric``:
+    dot or cosine (both larger-is-better, as the reference restricts
+    multivectors to sim metrics). ``dedup_ids`` keeps one row per id (for
+    the invlist layout, where a doc is stored once per token cluster and
+    every copy scores the same)."""
+    from qdrant_spark.operators.knn import arrow_topk
+
     if metric not in ("dot", "cosine"):
         raise ValueError("maxsim supports dot/cosine")
+    cosine = metric == "cosine"
     Qm = np.asarray([list(t) for t in query_multivector], dtype=np.float64)
-    if metric == "cosine":
+    if cosine:
         Qm = Qm / np.linalg.norm(Qm, axis=1, keepdims=True)
     sc = points.sparkSession.sparkContext
     bq = sc.broadcast(Qm)
+    q0 = np.zeros(1, dtype=np.int64)
 
-    sel = points.filter(F.col(mv_col).isNotNull()).filter(
-        F.size(mv_col) > 0
-    ).select(id_col, mv_col)
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, sel.schema[id_col].dataType),
-            T.StructField("score", T.DoubleType()),
-        ]
-    )
+    # one filter, one select: each DataFrame op re-analyzes the plan on
+    # the driver, a fixed cost every single-query call pays
+    sel = points.filter(F.col(mv_col).isNotNull() & (F.size(mv_col) > 0)) \
+        .select(id_col, mv_col)
 
-    def score_batches(batches: Iterator) -> Iterator:
-        import pyarrow as pa
-
+    def blocks(batch):
         Q = bq.value
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            ids = batch.column(0).to_numpy(zero_copy_only=False)
-            mv = batch.column(1)
-            if isinstance(mv, pa.ChunkedArray):
-                mv = mv.combine_chunks()
-            # outer list: docs -> token vectors; inner list: floats
-            inner = mv.flatten()                    # list<float> per token
-            # token count per doc from the outer offsets
-            outer_off = mv.offsets.to_numpy(zero_copy_only=False)
-            tok_counts = np.diff(outer_off)
-            vals = inner.flatten().to_numpy(zero_copy_only=False)
-            dim = Q.shape[1]
-            Tm = vals.reshape(-1, dim).astype(np.float64, copy=False)
-            if metric == "cosine":
-                norms = np.linalg.norm(Tm, axis=1, keepdims=True)
-                norms[norms == 0] = 1.0
-                Tm = Tm / norms
-            S = Tm @ Q.T                            # (total_tokens, tq)
-            starts = outer_off[:-1] - outer_off[0]
-            # segment max per doc per query token, then sum over qtokens
-            # reduceat on an empty segment would grab the next one; empty
-            # docs were filtered out Spark-side (size > 0)
-            assert (tok_counts > 0).all()
-            M = np.maximum.reduceat(S, starts, axis=0)
-            scores = M.sum(axis=1)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids), pa.array(scores, type=pa.float64())],
-                names=[id_col, "score"],
-            )
+        ids = batch.column(0).to_numpy(zero_copy_only=False)
+        Tm, outer_off = _mv_tokens(batch.column(1), Q.shape[1], cosine)
+        S = Tm @ Q.T                            # (total_tokens, tq)
+        starts = outer_off[:-1] - outer_off[0]
+        # segment max per doc per query token, then sum over qtokens
+        # reduceat on an empty segment would grab the next one; empty
+        # docs were filtered out Spark-side (size > 0)
+        assert (np.diff(outer_off) > 0).all()
+        M = np.maximum.reduceat(S, starts, axis=0)
+        yield q0, ids, M.sum(axis=1)[None, :]
 
-    scored = sel.mapInArrow(score_batches, out_schema)
-    if dedup_ids:
-        # invlist layout stores one row per (doc, token-cluster): a doc
-        # probed through several clusters scores identically on each
-        # copy — dedup the NARROW (id, score) frame, never the floats
-        scored = scored.dropDuplicates([id_col])
-    # single global top-k: TakeOrderedAndProject, no shuffle of scored rows
-    return scored.orderBy(*score_order(metric, id_col=id_col)).limit(k)
+    return arrow_topk(
+        sel, blocks, metric="dot", k=k, qids=q0, qid_type=T.LongType(),
+        qid_col="__qid", id_col=id_col, dedup_ids=dedup_ids,
+    ).select(id_col, "score")
+
+
+def _query_tokens(query_multivector, metric: str):
+    """One query multivector as a (tokens, dim) float64 matrix, each
+    token unit-normalized for cosine (a zero token stays zero)."""
+    Qm = np.asarray([list(t) for t in query_multivector], dtype=np.float64)
+    if metric == "cosine":
+        n = np.linalg.norm(Qm, axis=1, keepdims=True)
+        n[n == 0] = 1.0
+        Qm = Qm / n
+    return Qm
+
+
+def _mv_tokens(col, dim: int, cosine: bool):
+    """Every doc's token vectors of an Arrow ``array<array<float>>``
+    column stacked into one (total_tokens, dim) float64 matrix —
+    unit-normalized with ``cosine`` (a zero token stays zero) — and the
+    per-doc token offsets."""
+    import pyarrow as pa
+
+    if isinstance(col, pa.ChunkedArray):
+        col = col.combine_chunks()
+    outer_off = col.offsets.to_numpy(zero_copy_only=False)
+    flat = col.flatten().flatten().to_numpy(zero_copy_only=False)
+    Tm = flat.reshape(-1, dim).astype(np.float64, copy=False)
+    if cosine:
+        norms = np.linalg.norm(Tm, axis=1, keepdims=True)
+        norms[norms == 0] = 1.0
+        Tm = Tm / norms
+    return Tm, outer_off
 
 
 # ---------------------------------------------------------------------------
@@ -1413,19 +1417,9 @@ def maxsim_quant_coarse_batch(index, queries: Sequence[Sequence[Sequence[float]]
     ncols = len(code_cols)
 
     def blocks(batch):
-        import pyarrow as pa
-
         Qm, qs, offs, scl = bq.value
         ids = batch.column(0).to_numpy(zero_copy_only=False)
-        flats = []
-        outer_off = None
-        for ci in range(1, 1 + ncols):
-            col = batch.column(ci)
-            if isinstance(col, pa.ChunkedArray):
-                col = col.combine_chunks()
-            if outer_off is None:
-                outer_off = col.offsets.to_numpy(zero_copy_only=False)
-            flats.append(col.flatten())
+        flats, outer_off = _list_columns(batch, 1, ncols)
         assert (np.diff(outer_off) > 0).all()  # empties filtered at build
         scores = _batch_maxsim(decode(flats), outer_off[:-1] - outer_off[0],
                                Qm, qs)
@@ -1437,8 +1431,25 @@ def maxsim_quant_coarse_batch(index, queries: Sequence[Sequence[Sequence[float]]
     return arrow_topk(
         index.codes.select(id_col, *code_cols), blocks, metric="dot", k=k,
         qids=qall, qid_type=T.LongType(), qid_col="__qid", id_col=id_col,
-        dedup_ids=dedup_ids,
+        dedup_ids=dedup_ids, broadcast=bq,
     )
+
+
+def _list_columns(batch, first: int, n: int):
+    """The ``n`` list columns of an Arrow batch from column ``first`` on
+    (one doc's token codes per row), each flattened one level, plus the
+    per-doc offsets they share."""
+    import pyarrow as pa
+
+    flats, outer_off = [], None
+    for ci in range(first, first + n):
+        col = batch.column(ci)
+        if isinstance(col, pa.ChunkedArray):
+            col = col.combine_chunks()
+        if outer_off is None:
+            outer_off = col.offsets.to_numpy(zero_copy_only=False)
+        flats.append(col.flatten())
+    return flats, outer_off
 
 
 def _batch_maxsim(Tm, starts, Qm, qstarts):
@@ -1465,73 +1476,24 @@ def maxsim_quant_pair_topk(qidx, pairs: DataFrame,
     QUANTIZED token storage of any kind — the coarse half of the fused
     composed multivector batch (r12): the code table joins the pair set
     once (the join lands on 1-4 bit/dim codes, never float tokens), each
-    Arrow batch decodes its rows' tokens via the per-kind hook and runs
-    one BLAS call per qid group, scoring every candidate ONLY against
-    its own query (so results equal the per-request composed plans).
-    Returns per-qid (score desc, id) rank<=k."""
-    from pyspark.sql.window import Window
-
+    Arrow batch decodes its rows' tokens via the per-kind hook and
+    scores every candidate ONLY against its own query
+    (:func:`_pair_maxsim_topk`), so results equal the per-request
+    composed plans. Returns (__qid, id, score, rank <= k) per qid,
+    ranked (score desc, id)."""
     code_cols, Qtoks, decode, offsets, scales = _mv_quant_prep(
         qidx, queries, metric)
     id_col = qidx.id_col
-    sel = qidx.codes.select(id_col, *code_cols)
-    joined = sel.join(pairs, id_col).select("__qid", id_col, *code_cols)
-    out_schema = T.StructType([
-        T.StructField("__qid", T.LongType()),
-        T.StructField(id_col, sel.schema[id_col].dataType),
-        T.StructField("score", T.DoubleType()),
-    ])
+    joined = qidx.codes.select(id_col, *code_cols).join(pairs, id_col) \
+        .select("__qid", id_col, *code_cols)
     ncols = len(code_cols)
-    bq = joined.sparkSession.sparkContext.broadcast((offsets, scales))
 
-    def score_batches(batches: Iterator) -> Iterator:
-        import pyarrow as pa
+    def tokens(batch):
+        flats, outer_off = _list_columns(batch, 2, ncols)
+        return decode(flats), outer_off
 
-        offs, scl = bq.value
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            qids = batch.column(0).to_numpy(zero_copy_only=False)
-            ids = batch.column(1).to_numpy(zero_copy_only=False)
-            flats = []
-            outer_off = None
-            for ci in range(2, 2 + ncols):
-                col = batch.column(ci)
-                if isinstance(col, pa.ChunkedArray):
-                    col = col.combine_chunks()
-                if outer_off is None:
-                    outer_off = col.offsets.to_numpy(zero_copy_only=False)
-                flats.append(col.flatten())
-            Tm = decode(flats)
-            starts = outer_off[:-1] - outer_off[0]
-            out = np.empty(n, dtype=np.float64)
-            for qi in np.unique(qids):
-                mask = np.where(qids == qi)[0]
-                Qm = Qtoks[int(qi)]
-                segs = [np.arange(starts[i],
-                                  starts[i] + (outer_off[i + 1]
-                                               - outer_off[i]))
-                        for i in mask]
-                rows = np.concatenate(segs)
-                S = Tm[rows] @ Qm.T
-                lens = np.array([len(s) for s in segs])
-                st = np.concatenate([[0], np.cumsum(lens)[:-1]])
-                M = np.maximum.reduceat(S, st, axis=0)
-                # offset + scale: identity except asym BQ's one final
-                # 1/ranges division (integer-exact pipeline)
-                out[mask] = (M.sum(axis=1) + offs[int(qi)]) * scl[int(qi)]
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(qids), pa.array(ids),
-                 pa.array(out, type=pa.float64())],
-                names=["__qid", id_col, "score"],
-            )
-
-    scored = joined.mapInArrow(score_batches, out_schema)
-    w = Window.partitionBy("__qid").orderBy(
-        F.col("score").desc(), F.col(id_col).asc())
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k))
+    return _pair_maxsim_topk(joined, tokens, Qtoks, k=k, id_col=id_col,
+                             offsets=offsets, scales=scales)
 
 
 def maxsim_ivf_candidate_pairs(
@@ -1551,11 +1513,7 @@ def maxsim_ivf_candidate_pairs(
     candidate set bit-for-bit."""
     cluster_q: dict[int, list[int]] = {}
     for qi, q in enumerate(queries):
-        Qm = np.asarray([list(t) for t in q], dtype=np.float64)
-        if metric == "cosine":
-            n = np.linalg.norm(Qm, axis=1, keepdims=True)
-            n[n == 0] = 1.0
-            Qm = Qm / n
+        Qm = _query_tokens(q, metric)
         d2 = ((Qm[:, None, :] - route_index.centroids[None, :, :]) ** 2) \
             .sum(axis=2)
         per_tok = np.argsort(d2, axis=1)[:, :nprobe]
@@ -1599,11 +1557,7 @@ def maxsim_ivf_capped_pairs(
     qdata = []
     union: set[int] = set()
     for q in queries:
-        Qm = np.asarray([list(t) for t in q], dtype=np.float64)
-        if metric == "cosine":
-            n = np.linalg.norm(Qm, axis=1, keepdims=True)
-            n[n == 0] = 1.0
-            Qm = Qm / n
+        Qm = _query_tokens(q, metric)
         d2 = ((Qm[:, None, :] - route_index.centroids[None, :, :]) ** 2) \
             .sum(axis=2)
         per_tok = np.argsort(d2, axis=1)[:, :nprobe]
@@ -1668,80 +1622,62 @@ def maxsim_pair_topk(points: DataFrame, pairs: DataFrame,
                      mv_col: str = "mv", id_col: str = "id") -> DataFrame:
     """Exact MaxSim over a (qid, id) candidate PAIR set — the rescore
     half of the batched quantized MaxSim path: the float corpus is
-    semi-joined to the candidate union once, each Arrow batch groups its
-    rows by qid and runs one BLAS call per (qid group) against that
-    query's token matrix. Returns per-qid (score desc, id) top-k."""
-    from pyspark.sql.window import Window
-
-    Qtoks = []
-    for q in queries:
-        Qm = np.asarray([list(t) for t in q], dtype=np.float64)
-        if metric == "cosine":
-            nq = np.linalg.norm(Qm, axis=1, keepdims=True)
-            nq[nq == 0] = 1.0
-            Qm = Qm / nq
-        Qtoks.append(Qm)
-    sc = points.sparkSession.sparkContext
-    bq = sc.broadcast(Qtoks)
-
+    semi-joined to the candidate union once, and each Arrow batch scores
+    its rows against their own query's token matrix
+    (:func:`_pair_maxsim_topk`). Returns (__qid, id, score, rank <= k)
+    per qid, ranked (score desc, id)."""
+    Qtoks = [_query_tokens(q, metric) for q in queries]
+    dim = Qtoks[0].shape[1]
     joined = points.select(id_col, mv_col) \
         .join(F.broadcast(pairs), id_col) \
         .select("__qid", id_col, mv_col)
-    out_schema = T.StructType([
-        T.StructField("__qid", T.LongType()),
-        T.StructField(id_col, joined.schema[id_col].dataType),
-        T.StructField("score", T.DoubleType()),
-    ])
 
-    def score_batches(batches: Iterator) -> Iterator:
-        import pyarrow as pa
+    def tokens(batch):
+        return _mv_tokens(batch.column(2), dim, metric == "cosine")
 
-        Qs = bq.value
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            qids = batch.column(0).to_numpy(zero_copy_only=False)
-            ids = batch.column(1).to_numpy(zero_copy_only=False)
-            mv = batch.column(2)
-            if isinstance(mv, pa.ChunkedArray):
-                mv = mv.combine_chunks()
-            inner = mv.flatten()
-            outer_off = mv.offsets.to_numpy(zero_copy_only=False)
-            flat = inner.flatten().to_numpy(zero_copy_only=False)
-            dim = Qs[0].shape[1]
-            Tm = flat.reshape(-1, dim).astype(np.float64)
-            if metric == "cosine":
-                norms = np.linalg.norm(Tm, axis=1, keepdims=True)
-                norms[norms == 0] = 1.0
-                Tm = Tm / norms
-            starts = outer_off[:-1] - outer_off[0]
-            out = np.empty(n, dtype=np.float64)
-            for qi in np.unique(qids):
-                mask = np.where(qids == qi)[0]
-                Qm = Qs[int(qi)]
-                # token rows of just this qid's docs
-                segs = [np.arange(starts[i],
-                                  starts[i] + (outer_off[i + 1]
-                                               - outer_off[i]))
-                        for i in mask]
-                rows = np.concatenate(segs)
-                S = Tm[rows] @ Qm.T
-                lens = np.array([len(s) for s in segs])
-                st = np.concatenate([[0], np.cumsum(lens)[:-1]])
-                M = np.maximum.reduceat(S, st, axis=0)
-                out[mask] = M.sum(axis=1)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(qids), pa.array(ids),
-                 pa.array(out, type=pa.float64())],
-                names=["__qid", id_col, "score"],
-            )
+    return _pair_maxsim_topk(joined, tokens, Qtoks, k=k, id_col=id_col)
 
-    scored = joined.mapInArrow(score_batches, out_schema)
-    w = Window.partitionBy("__qid").orderBy(
-        F.col("score").desc(), F.col(id_col).asc())
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k).drop("rank"))
+
+def _pair_maxsim_topk(joined: DataFrame, tokens, Qtoks, *, k: int,
+                      id_col: str, offsets=None, scales=None) -> DataFrame:
+    """Per-qid MaxSim top-k of a (__qid, id, token columns...) pair frame
+    through :func:`~qdrant_spark.operators.knn.arrow_topk`: each distinct
+    ``__qid`` of an Arrow batch is one 1 × n block, its rows' tokens
+    scored with one BLAS call against query ``__qid``'s token matrix
+    ``Qtoks[__qid]`` only. ``tokens(batch)`` returns the batch's token
+    matrix in scoring space and its per-doc list offsets. With
+    ``offsets``, a query's score is ``(maxsim + offsets[q]) * scales[q]``
+    (see :func:`_mv_quant_prep`)."""
+    from qdrant_spark.operators.knn import arrow_topk
+
+    bq = joined.sparkSession.sparkContext.broadcast((Qtoks, offsets, scales))
+
+    def blocks(batch):
+        Qs, offs, scl = bq.value
+        qids = batch.column(0).to_numpy(zero_copy_only=False)
+        ids = batch.column(1).to_numpy(zero_copy_only=False)
+        Tm, outer_off = tokens(batch)
+        starts = outer_off[:-1] - outer_off[0]
+        for qi in np.unique(qids):
+            mask = np.where(qids == qi)[0]
+            # token rows of just this qid's docs
+            segs = [np.arange(starts[i],
+                              starts[i] + (outer_off[i + 1] - outer_off[i]))
+                    for i in mask]
+            S = Tm[np.concatenate(segs)] @ Qs[int(qi)].T
+            lens = np.array([len(s) for s in segs])
+            st = np.concatenate([[0], np.cumsum(lens)[:-1]])
+            out = np.maximum.reduceat(S, st, axis=0).sum(axis=1)
+            if offs is not None:
+                # identity except asym BQ's one final 1/ranges division
+                # (integer-exact pipeline)
+                out = (out + offs[int(qi)]) * scl[int(qi)]
+            yield np.array([qi]), ids[mask], out[None, :]
+
+    return arrow_topk(
+        joined, blocks, metric="dot", k=k, qids=np.arange(len(Qtoks)),
+        qid_type=T.LongType(), qid_col="__qid", id_col=id_col, broadcast=bq,
+    )
 
 
 def maxsim_knn_batch(points: DataFrame,
@@ -1761,14 +1697,7 @@ def maxsim_knn_batch(points: DataFrame,
 
     if metric not in ("dot", "cosine"):
         raise ValueError("maxsim supports dot/cosine")
-    Qtoks = []
-    for q in queries:
-        Qm = np.asarray([list(t) for t in q], dtype=np.float64)
-        if metric == "cosine":
-            nq = np.linalg.norm(Qm, axis=1, keepdims=True)
-            nq[nq == 0] = 1.0
-            Qm = Qm / nq
-        Qtoks.append(Qm)
+    Qtoks = [_query_tokens(q, metric) for q in queries]
     Qall = np.concatenate(Qtoks, axis=0)
     qstarts = np.cumsum([0] + [len(t) for t in Qtoks[:-1]])
     qall = np.arange(len(Qtoks))
@@ -1777,20 +1706,9 @@ def maxsim_knn_batch(points: DataFrame,
     cosine = metric == "cosine"
 
     def blocks(batch):
-        import pyarrow as pa
-
         Qm, qs = bq.value
         ids = batch.column(0).to_numpy(zero_copy_only=False)
-        mv = batch.column(1)
-        if isinstance(mv, pa.ChunkedArray):
-            mv = mv.combine_chunks()
-        outer_off = mv.offsets.to_numpy(zero_copy_only=False)
-        flat = mv.flatten().flatten().to_numpy(zero_copy_only=False)
-        Tm = flat.reshape(-1, dim).astype(np.float64, copy=False)
-        if cosine:
-            norms = np.linalg.norm(Tm, axis=1, keepdims=True)
-            norms[norms == 0] = 1.0
-            Tm = Tm / norms
+        Tm, outer_off = _mv_tokens(batch.column(1), dim, cosine)
         scores = _batch_maxsim(Tm, outer_off[:-1] - outer_off[0], Qm, qs)
         yield qall, ids, scores.T
 
@@ -1798,5 +1716,5 @@ def maxsim_knn_batch(points: DataFrame,
         F.col(mv_col).isNotNull() & (F.size(mv_col) > 0))
     return arrow_topk(
         base.select(id_col, mv_col), blocks, metric="dot", k=k, qids=qall,
-        qid_type=T.LongType(), qid_col="__qid", id_col=id_col,
+        qid_type=T.LongType(), qid_col="__qid", id_col=id_col, broadcast=bq,
     )

@@ -35,8 +35,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from qdrant_spark.filters import apply_filter
-from qdrant_spark.functions.distances import distance, distance_to_lit, larger_is_better
-from qdrant_spark.operators.knn import knn, score_order
+from qdrant_spark.functions.distances import distance_to_lit
+from qdrant_spark.operators.knn import knn
 
 F32_EPSILON = float(np.finfo(np.float32).eps)
 
@@ -47,12 +47,6 @@ def fast_sigmoid(x: Column) -> Column:
 
 def scaled_fast_sigmoid(x: Column) -> Column:
     return F.lit(0.5) * (fast_sigmoid(x) + F.lit(1.0))
-
-
-def _vec_lit(vec: Sequence[float]) -> Column:
-    from qdrant_spark.functions.distances import vec_lit
-
-    return vec_lit(vec)  # one py4j call, not one per element
 
 
 def _sims(metric: str, vec_col: str, vectors: list[Sequence[float]]) -> list[Column]:
@@ -71,15 +65,17 @@ def _arrow_compose_topk(df: DataFrame, vectors, compose, *, metric: str,
                         k: int, vec_col: str, id_col: str,
                         arrow_dispatch_bytes: int | None = None):
     """Arrow fast path shared by the best_score/sum_scores/discover/
-    context/feedback scorers: ONE ``mapInArrow`` pass scores every example
-    vector against each Arrow batch in a single BLAS call
-    (:func:`~qdrant_spark.operators.knn.score_block`), then ``compose``
-    folds the per-example sims matrix into the operator's score in NumPy
-    — the same per-example composition the reference applies after its
-    batched sim computation (reco_query.rs:64-133, discover_query.rs:
-    44-73). Returns None below the dispatch cutoff (the interpreted
-    Column path wins on small corpora, exactly like ``knn()``); cutoff
-    scales with the example count because the interpreted cost does.
+    context/feedback scorers, a one-query ``blocks`` of the one Arrow
+    score-and-top-k kernel (:func:`~qdrant_spark.operators.knn.
+    arrow_topk`): each Arrow batch scores every example vector in a
+    single BLAS call (:func:`~qdrant_spark.operators.knn.score_block`),
+    then ``compose`` folds the per-example sims matrix into the
+    operator's score in NumPy — the same per-example composition the
+    reference applies after its batched sim computation (reco_query.rs:
+    64-133, discover_query.rs:44-73). Returns (id, score) best-first, or
+    None below the dispatch cutoff (the interpreted Column path wins on
+    small corpora, exactly like ``knn()``); cutoff scales with the
+    example count because the interpreted cost does.
 
     ``compose(S)``: (n, m) sims -> (n,) scores, larger-is-better (every
     operator in this family ranks score-desc).
@@ -94,17 +90,12 @@ def _arrow_compose_topk(df: DataFrame, vectors, compose, *, metric: str,
         return None
     from pyspark.sql import types as T
 
-    from qdrant_spark.operators.knn import arrow_matrix, score_block, topk_kernel
+    from qdrant_spark.operators.knn import arrow_matrix, arrow_topk, score_block
 
     Vm = np.asarray(vectors, dtype=np.float64)
     bV = df.sparkSession.sparkContext.broadcast(Vm)
     vnorm = np.linalg.norm(Vm, axis=1) if metric == "cosine" else None
     q0 = np.zeros(1, dtype=np.int64)
-    out_schema = T.StructType([
-        T.StructField("__q", T.LongType()),
-        T.StructField(id_col, df.schema[id_col].dataType),
-        T.StructField("score", T.DoubleType()),
-    ])
 
     def blocks(batch):
         ids = batch.column(0).to_numpy(zero_copy_only=False)
@@ -114,12 +105,11 @@ def _arrow_compose_topk(df: DataFrame, vectors, compose, *, metric: str,
         # points): the kernel's tie-exact cut keeps the low-id ones
         yield q0, ids, compose(S.T)[None, :]
 
-    cand = df.select(id_col, vec_col).mapInArrow(topk_kernel(
-        blocks, k=k, bigger_better=True, qids=q0, qid_col="__q",
-        id_col=id_col), out_schema)
-    # global re-rank over <= partitions*k candidates only
-    return (cand.select(id_col, "score")
-            .orderBy(F.col("score").desc(), F.col(id_col).asc()).limit(k))
+    # "dot": the composed score ranks larger-better whatever ``metric``
+    return arrow_topk(
+        df.select(id_col, vec_col), blocks, metric="dot", k=k, qids=q0,
+        qid_type=T.LongType(), qid_col="__q", id_col=id_col,
+    ).select(id_col, "score")
 
 
 def _topk(df: DataFrame, metric_like_larger_better: bool, k: int, id_col: str,

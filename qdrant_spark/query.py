@@ -1392,7 +1392,7 @@ def _fuse_maxsim_codes(planner: "QueryPlanner",
     metric = planner.metric_for(vc)
     queries = [requests[i]["query"]["nearest"] for i in idxs]
     coarse = maxsim_quant_coarse_batch(
-        sqh, queries, max(cs.values()), metric=metric).collect()
+        sqh, queries, max(cs.values()), metric=metric)
     _finish_maxsim_group(planner, requests, idxs, outs, sqh, metric, ks, cs,
                          rescores, queries, coarse)
     return True
@@ -1401,19 +1401,19 @@ def _fuse_maxsim_codes(planner: "QueryPlanner",
 def _finish_maxsim_group(planner, requests, idxs, outs, sqh, metric,
                          ks, cs, rescores, queries, coarse) -> None:
     """Shared tail of the batched quantized / composed MaxSim groups:
-    bucket the collected coarse rows per request, exact-rescore the
-    rescore=True requests' survivors over ONE float-token pair scan, and
-    finish each request (:func:`_emit_legs`)."""
+    collect the coarse top-k frame (``coarse``, qid = position in
+    ``idxs``) through the kernel's collected finish, keep each request's
+    top coarse-width candidates, exact-rescore the rescore=True
+    requests' survivors with ONE float-token pair job, and finish each
+    request (:func:`_emit_legs`)."""
     from pyspark.sql import types as T
 
+    from qdrant_spark.operators.knn import collect_topk
     from qdrant_spark.operators.multivec import maxsim_pair_topk
 
-    by_req: dict[int, list] = {i: [] for i in idxs}
-    for r in coarse:  # local qid 0..len(idxs)-1, ranked
-        gi = idxs[r["__qid"]]
-        if r["rank"] <= cs[gi]:
-            by_req[gi].append((r[sqh.id_col], float(r["score"])))
-    by_req = _best_first(by_req)
+    local = range(len(idxs))
+    by_req = {i: h[:cs[i]] for i, h in zip(
+        idxs, _split_hits(collect_topk(coarse, FUSED_COLLECT_MAX), local))}
     need_rescore = [i for i in idxs if rescores[i]]
     if need_rescore:
         from qdrant_spark.session import local_df
@@ -1428,13 +1428,9 @@ def _finish_maxsim_group(planner, requests, idxs, outs, sqh, metric,
         rescored = maxsim_pair_topk(
             sqh.points, pairs, queries,
             metric=metric, k=max(ks[i] for i in need_rescore),
-            mv_col=sqh.mv_col, id_col=sqh.id_col).collect()
-        re_by: dict[int, list] = {i: [] for i in need_rescore}
-        for r in rescored:
-            gi = idxs[r["__qid"]]
-            if gi in re_by:
-                re_by[gi].append((r[sqh.id_col], float(r["score"])))
-        by_req.update(_best_first(re_by))
+            mv_col=sqh.mv_col, id_col=sqh.id_col)
+        by_req.update((i, h) for i, h in zip(idxs, _split_hits(
+            collect_topk(rescored, FUSED_COLLECT_MAX), local)) if rescores[i])
     # maxsim is larger-better (dot/cosine; binary coarse scores are the
     # ±1-dot estimate — also larger-better)
     _emit_legs(planner, requests, by_req, outs)
@@ -1471,7 +1467,7 @@ def _fuse_maxsim_composed(planner: "QueryPlanner",
         pairs = maxsim_ivf_candidate_pairs(
             rt.index, queries, nprobe=rt.nprobe, metric=metric)
     coarse = maxsim_quant_pair_topk(
-        sqh, pairs, queries, k=max(cs.values()), metric=metric).collect()
+        sqh, pairs, queries, k=max(cs.values()), metric=metric)
     _finish_maxsim_group(planner, requests, idxs, outs, sqh, metric, ks, cs,
                          rescores, queries, coarse)
     return True
@@ -1482,23 +1478,21 @@ def _fuse_maxsim(planner: "QueryPlanner", requests: list[dict[str, Any]],
                  outs: list) -> bool:
     """Exact MaxSim legs (late r11): ONE scan of the float-token corpus
     (multivec.maxsim_knn_batch; scores are exact, no rescore stage) — the
-    multivector analogue of the fused dense group."""
+    multivector analogue of the fused dense group: one job, the
+    kernel's candidates merged on the driver (:func:`~qdrant_spark.
+    operators.knn.collect_topk`)."""
+    from qdrant_spark.operators.knn import collect_topk
     from qdrant_spark.operators.multivec import maxsim_knn_batch
 
     ks = {i: _leg_k(requests[i]) for i in idxs}
     if len(idxs) * max(ks.values()) > FUSED_COLLECT_MAX:
         return False
     queries = [requests[i]["query"]["nearest"] for i in idxs]
-    rows = maxsim_knn_batch(
+    res = maxsim_knn_batch(
         planner.points, queries, k=max(ks.values()),
-        metric=planner.metric_for(vc), mv_col=vc,
-        id_col=planner.id_col).collect()
-    hits: dict[int, list] = {i: [] for i in idxs}
-    for r in rows:
-        gi = idxs[r["__qid"]]
-        if r["rank"] <= ks[gi]:
-            hits[gi].append((r[planner.id_col], float(r["score"])))
-    _emit_legs(planner, requests, _best_first(hits), outs)
+        metric=planner.metric_for(vc), mv_col=vc, id_col=planner.id_col)
+    hits = _split_hits(collect_topk(res, FUSED_COLLECT_MAX), range(len(idxs)))
+    _emit_legs(planner, requests, dict(zip(idxs, hits)), outs)
     return True
 
 

@@ -7,10 +7,15 @@ comparison (floats rounded to 5 decimals for the comparison itself —
 both engines already round to 6 in the query).
 
 Usage: python scripts/check_oracle.py [sf_dir] [query ...]
+
+Each ``query`` is an ``fnmatch`` pattern over the entry names
+(``'maxsim*'`` runs every MaxSim entry); an exact name matches only
+itself.
 """
 
 from __future__ import annotations
 
+import fnmatch
 import math
 import os
 import sys
@@ -49,7 +54,7 @@ def norm_rows(cols, rows):
 
 def main() -> int:
     sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    only = set(sys.argv[2:])
+    only = sys.argv[2:]
 
     import duckdb
 
@@ -67,7 +72,7 @@ def main() -> int:
     failed = []
     t_all = time.time()
     for name, fn in qs.items():
-        if only and name not in only:
+        if only and not any(fnmatch.fnmatchcase(name, p) for p in only):
             continue
         t0 = time.time()
         try:

@@ -187,7 +187,7 @@ def test_batch_full_probe_matches_exact_batch(spark, embeddings, ivfpq, metric):
         (r.qid, r.vec_id, r.rank)
         for r in knn_batch(
             embeddings, queries, metric=metric, k=5, vec_col="embedding",
-            id_col="vec_id", strategy="window",
+            id_col="vec_id",
         ).select("qid", "vec_id", "rank").collect()
     ]
     assert sorted(got) == sorted(want)
@@ -203,8 +203,7 @@ def test_batch_pruned_recall(spark, embeddings, ivfpq):
     got = ivf_pq_search_batch(ivfpq, queries, k=10, nprobe=4,
                               oversampling=6.0, metric="cosine").collect()
     exact = knn_batch(embeddings, queries, metric="cosine", k=10,
-                      vec_col="embedding", id_col="vec_id",
-                      strategy="window").collect()
+                      vec_col="embedding", id_col="vec_id").collect()
     by_q: dict = {}
     for r in exact:
         by_q.setdefault(r.qid, set()).add(r.vec_id)
@@ -239,7 +238,7 @@ def test_batch_modes_match_exact_at_full_probe(spark, embeddings, ivfpq, mode):
         (r.qid, r.vec_id, r.rank)
         for r in knn_batch(
             embeddings, queries, metric="cosine", k=5, vec_col="embedding",
-            id_col="vec_id", strategy="window",
+            id_col="vec_id",
         ).select("qid", "vec_id", "rank").collect()
     ]
     assert sorted(got) == sorted(want)

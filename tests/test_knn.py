@@ -63,8 +63,7 @@ def test_knn_filter_and_threshold(embeddings, emb_np):
     assert all(r["score"] > 0.0 for r in got)
 
 
-@pytest.mark.parametrize("strategy", ["window", "partial", "matmul"])
-def test_knn_batch(embeddings, emb_np, strategy, spark):
+def test_knn_batch(embeddings, emb_np, spark):
     ids, mat = emb_np
     queries = spark.createDataFrame(
         [(int(ids[i]), mat[i].tolist()) for i in range(4)], "qid long, qvec array<double>"
@@ -76,7 +75,6 @@ def test_knn_batch(embeddings, emb_np, strategy, spark):
         k=5,
         vec_col="embedding",
         id_col="vec_id",
-        strategy=strategy,
     ).collect()
     by_q = {}
     for r in got:
@@ -89,27 +87,31 @@ def test_knn_batch(embeddings, emb_np, strategy, spark):
 
 
 @pytest.mark.parametrize("path", ["matmul", "single_arrow", "ivf", "maxsim",
-                                  "sq_coarse", "pq_coarse"])
+                                  "sq_coarse", "pq_coarse", "maxsim_single",
+                                  "maxsim_pair", "reco_compose"])
 def test_tied_scores_rank_by_id_on_arrow_paths(spark, tied_points, path):
     """Every row of ``tied_points`` scores the same, so the exact top k is
-    ids 1..k, as the window strategy returns. Each Arrow scorer cuts a
-    local top k before the final window (or the one-query top-k sort); a
-    cut that keeps arbitrary tied rows loses the low ids before the
-    finish sees them. ``sq_coarse`` / ``pq_coarse`` are the single-request
-    scalar and product coarse scans (rescore off)."""
+    ids 1..k. Each Arrow scorer cuts a local top k before the final
+    window (or the one-query top-k sort); a cut that keeps arbitrary
+    tied rows loses the low ids before the finish sees them.
+    ``sq_coarse`` / ``pq_coarse`` are the single-request scalar and
+    product coarse scans (rescore off); ``maxsim_pair`` rescores a pair
+    set holding every id; ``reco_compose`` is the recommend scorers'
+    composed-score path."""
     from qdrant_spark.operators.ann import IvfIndex, ivf_search_batch
-    from qdrant_spark.operators.multivec import maxsim_knn_batch
+    from qdrant_spark.operators.multivec import (
+        maxsim_knn, maxsim_knn_batch, maxsim_pair_topk,
+    )
     from qdrant_spark.operators.quantize import (
         build_pq, build_sq, pq_search, sq_search,
     )
+    from qdrant_spark.operators.recommend import recommend_best_score
 
     k = 5
     q = [1.0, 0.0, 0.5, 0.0]
     queries = spark.createDataFrame([(0, q)], "qid long, qvec array<double>")
-    window = knn_batch(tied_points, queries, k=k, strategy="window")
-    assert [r["id"] for r in window.orderBy("rank").collect()] == list(range(1, k + 1))
     if path == "matmul":
-        got = knn_batch(tied_points, queries, k=k, strategy="matmul").orderBy("rank")
+        got = knn_batch(tied_points, queries, k=k).orderBy("rank")
     elif path == "single_arrow":
         got = knn(tied_points, q, k=k, select=["id", "score"], arrow_dispatch_bytes=0)
     elif path == "ivf":
@@ -122,9 +124,18 @@ def test_tied_scores_rank_by_id_on_arrow_paths(spark, tied_points, path):
         got = maxsim_knn_batch(tied_points, [[q, q]], k=k).orderBy("rank")
     elif path == "sq_coarse":
         got = sq_search(build_sq(tied_points), q, k=k, rescore=False)
-    else:
+    elif path == "pq_coarse":
         got = pq_search(build_pq(tied_points, n_subspaces=2), q, k=k,
                         rescore=False)
+    elif path == "maxsim_single":
+        got = maxsim_knn(tied_points, [q, q], k=k)
+    elif path == "maxsim_pair":
+        pairs = tied_points.select(F.lit(0).cast("long").alias("__qid"), "id")
+        got = maxsim_pair_topk(tied_points, pairs, [[q, q]], k=k) \
+            .orderBy("rank")
+    else:
+        got = recommend_best_score(tied_points, [q], [[0.0, 1.0, 0.0, 0.0]],
+                                   k=k, arrow_dispatch_bytes=0)
     assert [r["id"] for r in got.collect()] == list(range(1, k + 1))
 
 
@@ -162,39 +173,6 @@ def test_knn_single_arrow_with_filter_threshold_offset(embeddings, emb_np):
     arrow_path = knn(embeddings, q, **kw, arrow_dispatch_bytes=0).collect()
     assert [(r["vec_id"], r["label"]) for r in arrow_path] == \
            [(r["vec_id"], r["label"]) for r in col_path]
-
-
-def test_knn_batch_auto_dispatch(embeddings):
-    """strategy='auto' mirrors the single-query size dispatch: window for
-    small corpora, matmul past the (bytes * n_queries) crossover — results
-    identical either way."""
-    from pyspark.sql import functions as F
-
-    from qdrant_spark.operators import knn as K
-
-    queries = embeddings.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec"))
-    kw = dict(metric="cosine", k=5, vec_col="embedding", id_col="vec_id")
-    auto = K.knn_batch(embeddings, queries, strategy="auto", **kw)
-    win = K.knn_batch(embeddings, queries, strategy="window", **kw)
-    got = sorted((r["qid"], r["rank"], r["vec_id"]) for r in auto.collect())
-    ref = sorted((r["qid"], r["rank"], r["vec_id"]) for r in win.collect())
-    assert got == ref
-    # tiny corpus stays JVM-side; huge dispatch threshold forces window
-    small = K.knn_batch(embeddings, queries, strategy="auto", **kw)
-    assert "mapInArrow" not in small._jdf.queryExecution().executedPlan().toString() \
-        or K._plan_size_bytes(embeddings.filter(F.col("embedding").isNotNull())) * 3 >= K.ARROW_DISPATCH_BYTES
-    # past the crossover the same call routes through the Arrow scorer
-    old = K.ARROW_DISPATCH_BYTES
-    K.ARROW_DISPATCH_BYTES = 1
-    try:
-        forced = K.knn_batch(embeddings, queries, strategy="auto", **kw)
-        plan = forced._jdf.queryExecution().executedPlan().toString()
-        assert "MapInArrow" in plan or "mapInArrow" in plan.lower()
-        got_f = sorted((r["qid"], r["rank"], r["vec_id"]) for r in forced.collect())
-        assert got_f == ref
-    finally:
-        K.ARROW_DISPATCH_BYTES = old
 
 
 def test_knn_wrong_dimension_raises(embeddings):

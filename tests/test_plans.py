@@ -11,7 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from qdrant_spark.filters import apply_filter
-from qdrant_spark.operators.knn import knn, knn_batch
+from qdrant_spark.operators.knn import knn
 
 
 def _plan(df, mode: str = "formatted") -> str:
@@ -50,15 +50,6 @@ def test_single_knn_is_take_ordered(embeddings):
     plan = _plan(df, "simple")
     assert "TakeOrderedAndProject" in plan
     assert "Exchange rangepartitioning" not in plan  # no global sort
-
-
-def test_batch_knn_window_broadcasts_queries(embeddings, spark):
-    qdf = spark.createDataFrame([(0, [0.0] * 64)], "qid: long, qvec: array<float>")
-    df = knn_batch(embeddings, qdf, metric="cosine", k=5, vec_col="embedding",
-                   id_col="vec_id", strategy="window")
-    plan = _plan(df, "simple")
-    assert "Broadcast" in plan
-    assert "SortMergeJoin" not in plan
 
 
 def test_bm25_index_search_all_broadcast(documents):
@@ -382,25 +373,6 @@ def test_multilingual_fmm_tokenize_stays_jvm_side(documents):
     assert "mapInArrow" not in plan
 
 
-def test_batch_knn_window_has_mapside_topk_combine(embeddings, spark):
-    """strategy='window' (and anything 'auto' resolves to it) must not
-    shuffle the full scored corpus partitioned by qid: the map-side
-    _partial_topk combine (a Python ArrowEvalPython/MapInPandas stage)
-    runs BEFORE the per-qid window, so the exchange carries only
-    <= partitions*Q*k candidate rows (r8 VERDICT item 8)."""
-    qdf = spark.createDataFrame([(0, [0.0] * 64)], "qid: long, qvec: array<float>")
-    for strat in ("window", "partial", "auto"):
-        df = knn_batch(embeddings, qdf, metric="cosine", k=5,
-                       vec_col="embedding", id_col="vec_id", strategy=strat)
-        plan = _plan(df, "simple")
-        if "MapInPandas" not in plan:
-            assert strat == "auto"  # resolved to matmul: no window at all
-            assert "Window" not in plan
-            continue
-        # the combine must sit below the window's exchange
-        assert plan.index("MapInPandas") > plan.index("Window")
-
-
 def test_local_df_nan_in_map_falls_back(spark):
     # r15 ADVICE fix: a NaN inside a MapType cell must take the plain
     # createDataFrame path (Arrow would silently convert it to NULL)
@@ -447,6 +419,34 @@ def test_fused_dense_batch_is_one_job(spark, embeddings, tmp_path,
     (plan,) = plans
     assert "MapInArrow" in plan
     assert "Exchange" not in plan
+
+
+def test_fused_maxsim_batch_is_one_job(spark, embeddings, tmp_path):
+    """An exact fused MaxSim query_batch group runs exactly ONE Spark
+    job, like the fused dense group: the batch MaxSim kernel's
+    candidates are merged on the driver (knn.collect_topk)."""
+    from qdrant_spark.query import query_batch
+
+    d_mv = F.transform(
+        F.sequence(F.lit(0), F.lit(7)),
+        lambda i: F.slice(F.col("embedding").cast("array<double>"),
+                          i * 8 + 1, 8))
+    path = str(tmp_path / "mv")
+    embeddings.select("vec_id", d_mv.alias("mv")).repartition(3) \
+        .write.parquet(path)
+    pts = spark.read.parquet(path)
+    qs = [[list(r["embedding"])[t * 8:(t + 1) * 8] for t in range(8)]
+          for r in embeddings.limit(3).collect()]
+    reqs = [{"query": {"nearest": q}, "limit": 5} for q in qs]
+    sc = spark.sparkContext
+    sc.setJobGroup("fused-maxsim-one-job", "fused maxsim batch")
+    try:
+        rows = query_batch(pts, reqs, id_col="vec_id", vec_col="mv",
+                           metric="dot", fuse_min_bytes=0).collect()
+    finally:
+        sc._jsc.clearJobGroup()
+    assert len(rows) == 15
+    assert len(sc.statusTracker().getJobIdsForGroup("fused-maxsim-one-job")) == 1
 
 
 @pytest.fixture(scope="module")

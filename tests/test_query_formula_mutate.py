@@ -694,9 +694,11 @@ def test_fused_collect_guard_declines_to_per_leg_plans(embeddings,
     assert sc._jsc.getPersistentRDDs().size() == before
 
 
-def test_one_shot_universal_query_leaves_no_persisted_scan(embeddings):
-    """r6 ADVICE: the one-shot entry must not leave the fused-fallback
-    shared scan cached for the application lifetime."""
+def test_one_shot_universal_query_leaves_no_persisted_scan(embeddings,
+                                                          monkeypatch):
+    """The one-shot entry runs its prefetch legs fused (one scan, merged
+    on the driver) and leaves nothing persisted for the application
+    lifetime."""
     import qdrant_spark.query as Q
 
     rows = embeddings.filter(F.col("vec_id").isin([0, 3, 5, 7])).collect()
@@ -710,20 +712,24 @@ def test_one_shot_universal_query_leaves_no_persisted_scan(embeddings):
         "query": {"fusion": "rrf"},
         "limit": 8,
     }
-    # route through universal_query with the fallback forced: patch the
-    # module ceiling (universal_query doesn't expose fused_collect_max)
-    old_max, old_bytes = Q.FUSED_COLLECT_MAX, Q.FUSE_MIN_BYTES
-    Q.FUSED_COLLECT_MAX, Q.FUSE_MIN_BYTES = 10, 0
-    try:
-        sc = embeddings.sparkSession.sparkContext
-        before = sc._jsc.getPersistentRDDs().size()
-        out = Q.universal_query(embeddings, req, id_col="vec_id",
-                                vec_col="embedding")
-        assert out.count() == 8
-        after = sc._jsc.getPersistentRDDs().size()
-        assert after == before  # scan unpersisted once the root landed
-    finally:
-        Q.FUSED_COLLECT_MAX, Q.FUSE_MIN_BYTES = old_max, old_bytes
+    # universal_query takes no fuse_min_bytes: lower the module default
+    monkeypatch.setattr(Q, "FUSE_MIN_BYTES", 0)
+    planners = []
+    plan = Q.QueryPlanner.plan
+
+    def spy(self, request):
+        planners.append(self)
+        return plan(self, request)
+
+    monkeypatch.setattr(Q.QueryPlanner, "plan", spy)
+    sc = embeddings.sparkSession.sparkContext
+    before = sc._jsc.getPersistentRDDs().size()
+    out = Q.universal_query(embeddings, req, id_col="vec_id",
+                            vec_col="embedding")
+    assert out.count() == 8
+    (p,) = planners
+    assert p.last_plan_info["fused_legs"] == 3
+    assert sc._jsc.getPersistentRDDs().size() == before
 
 
 def test_delta_upsert_building_blocks(spark, table):

@@ -19,14 +19,26 @@ from qdrant_spark.operators.knn import knn_batch
 from qdrant_spark.operators.sparse import bm25_search, doc_terms, sparse_knn, sparse_knn_terms
 
 
+def _column_window_knn(points, queries, *, metric, k, vec_col, id_col):
+    """Batch exact KNN in pure Column math: every (query, point) pair
+    scored by an interpreted distance, ranked by one per-qid window."""
+    from qdrant_spark.functions.distances import distance
+    from qdrant_spark.operators.knn import ranked
+
+    scored = points.crossJoin(F.broadcast(queries)).select(
+        "qid", id_col, distance(metric, F.col(vec_col), F.col("qvec")).alias("score"))
+    return ranked(scored, metric, k, qid_col="qid", id_col=id_col)
+
+
 def test_matmul_equals_window(embeddings):
+    """The Arrow block-matmul batch equals a pure-Column per-qid window."""
     qdf = embeddings.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
     )
     for metric in ["cosine", "euclid", "manhattan"]:
         kw = dict(metric=metric, k=5, vec_col="embedding", id_col="vec_id")
-        a = knn_batch(embeddings, qdf, strategy="window", **kw)
-        b = knn_batch(embeddings, qdf, strategy="matmul", **kw)
+        a = _column_window_knn(embeddings, qdf, **kw)
+        b = knn_batch(embeddings, qdf, **kw)
         ra = [(r["qid"], r["vec_id"], r["rank"]) for r in a.orderBy("qid", "rank").collect()]
         rb = [(r["qid"], r["vec_id"], r["rank"]) for r in b.orderBy("qid", "rank").collect()]
         assert ra == rb, metric
