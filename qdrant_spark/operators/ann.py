@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from qdrant_spark.functions.distances import vec_lit
-from qdrant_spark.operators.knn import knn
+from qdrant_spark.operators.knn import knn, with_rank
 
 #: Probed-scan size (Catalyst estimate, bytes) under which the batched
 #: IVF-PQ search fuses ADC shortlist + exact rescore into one python stage
@@ -251,11 +251,11 @@ def ivf_search_batch(
         int(c): np.where((probes == c).any(axis=1))[0] for c in used
     }
     pruned = index.assigned.filter(F.col("__cluster").isin(used))
-    return cluster_masked_topk(
+    return with_rank(cluster_masked_topk(
         pruned, vec_col=index.vec_col, id_col=index.id_col, qids=qids, Q=Qm,
         cluster_q=cluster_q, k=k, metric=metric, qid_col=qid_col,
         qid_type=queries.schema[qid_col].dataType,
-    )
+    ))
 
 
 def cluster_masked_topk(frame: DataFrame, *, vec_col: str, id_col: str,
@@ -817,10 +817,10 @@ def ivf_pq_search_batch(
         use_fused = False
     qid_type = queries.schema[qid_col].dataType
     if use_fused:
-        return _ivf_pq_fused_batch(
+        return with_rank(_ivf_pq_fused_batch(
             index, qids, qid_type, pruned, b, k=k, n_coarse=n_coarse,
             metric=metric, qid_col=qid_col,
-        )
+        ))
     id_col = index.id_col
     lut_t_cache: dict = {}
 

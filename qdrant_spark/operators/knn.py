@@ -213,10 +213,10 @@ def knn_batch(
     (qid, id, score, rank) with rank 1..k per query.
     """
     pts = apply_filter(points, flt).filter(F.col(vec_col).isNotNull())
-    return _matmul_knn(
+    return with_rank(_matmul_knn(
         pts, queries, metric=metric, k=k, vec_col=vec_col, id_col=id_col,
         qid_col=qid_col, qvec_col=qvec_col, score_threshold=score_threshold,
-    )
+    ))
 
 
 def score_block(M, Qm, metric: str, qnorm=None):
@@ -378,8 +378,9 @@ def arrow_topk(
     """Batch top-k over ``sel`` (id first) through :func:`topk_kernel`:
     at most partitions × Q × k candidate rows reach :func:`ranked`, which
     returns (qid, id, score, rank <= k). With one query the finish is a
-    top-k sort instead (``TakeOrderedAndProject``, no shuffle), and
-    ``rank`` numbers its <= k rows. With ``dedup_ids``, copies from
+    top-k sort instead (``TakeOrderedAndProject``, no shuffle): its <= k
+    (qid, id, score) rows best-first, without ``rank`` (callers that read
+    it add it with :func:`with_rank`). With ``dedup_ids``, copies from
     different partitions meet and collapse before the finish. The
     candidate frame rides along on the result for :func:`collect_topk`,
     which destroys ``broadcast`` (the query set the blocks read) once it
@@ -398,15 +399,27 @@ def arrow_topk(
     if score_threshold is not None:
         scored = scored.filter(_threshold_cond(metric, score_threshold))
     if len(qids) == 1:
-        # the limit's single-partition output already satisfies the
-        # per-qid window, so ``rank`` costs no exchange
-        order = score_order(metric, id_col=id_col)
-        w = Window.partitionBy(qid_col).orderBy(*order)
-        out = scored.orderBy(*order).limit(k) \
-            .withColumn("rank", F.row_number().over(w))
+        out = scored.orderBy(*score_order(metric, id_col=id_col)).limit(k)
     else:
         out = ranked(scored, metric, k, qid_col=qid_col, id_col=id_col)
-    out._qs_topk = _Candidates(scored, metric, k, len(qids), broadcast)
+    out._qs_topk = _Candidates(scored, metric, k, len(qids), broadcast,
+                               qid_col, id_col)
+    return out
+
+
+def with_rank(topk: DataFrame) -> DataFrame:
+    """An :func:`arrow_topk` result with ``rank`` 1..k per query, for
+    callers that read it: the one-query finish carries none, so it gains
+    a ``row_number`` window (the limit's single-partition output already
+    satisfies it, so it costs no exchange). The candidates ride along for
+    :func:`collect_topk`."""
+    c: _Candidates = topk._qs_topk
+    if c.nq != 1:
+        return topk
+    w = Window.partitionBy(c.qid_col).orderBy(
+        *score_order(c.metric, id_col=c.id_col))
+    out = topk.withColumn("rank", F.row_number().over(w))
+    out._qs_topk = c
     return out
 
 
@@ -420,6 +433,8 @@ class _Candidates(NamedTuple):
     k: int
     nq: int
     broadcast: Any
+    qid_col: str
+    id_col: str
 
 
 def _num_partitions(df: DataFrame) -> int:
@@ -438,8 +453,9 @@ def collect_topk(topk: DataFrame, max_rows: int):
     the driver budget (partitions × Q × k <= ``max_rows``), ONE job pulls
     them with ``toArrow()`` and the driver merges each query's top k with
     the tie-exact :func:`first_k` (score direction, then id ascending) —
-    no shuffle, no window, no second job. Above the budget the ranked
-    shuffle finish (``topk`` itself) runs and is collected. Either way
+    no shuffle, no window, no second job. Above the budget ``topk``
+    itself runs and is collected (the one-query finish arrives sorted, so
+    its rank is the row's position). Either way
     returns query-major NumPy arrays (qid, id, score, rank), equal to
     collecting ``topk`` and sorting by (qid, rank), and destroys the
     query broadcast."""
@@ -454,10 +470,13 @@ def collect_topk(topk: DataFrame, max_rows: int):
                            else score, ids, c.k)
             qid, ids, score = qid[keep], ids[keep], score[keep]
             return qid, ids, score, _group_pos(qid) + 1
-        qid, ids, score, rank = (col.to_numpy() for col in
-                                 topk.toArrow().columns)
-        o = np.lexsort((rank, qid))
-        return qid[o], ids[o], score[o], rank[o]
+        cols = [col.to_numpy() for col in topk.toArrow().columns]
+        qid, ids, score = cols[:3]
+        if c.nq == 1:
+            # the one-query finish arrives sorted: rank is the position
+            return qid, ids, score, np.arange(1, len(qid) + 1)
+        o = np.lexsort((cols[3], qid))
+        return qid[o], ids[o], score[o], cols[3][o]
     finally:
         if c.broadcast is not None:
             c.broadcast.destroy()

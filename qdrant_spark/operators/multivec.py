@@ -1399,7 +1399,7 @@ def maxsim_quant_coarse_batch(index, queries: Sequence[Sequence[Sequence[float]]
     ``dedup_ids``: the codes frame is an INVLIST layout holding one
     identical-scoring copy per (doc, cluster) — the kernel keeps one copy
     per (query, doc) (see :func:`~qdrant_spark.operators.knn.arrow_topk`)."""
-    from qdrant_spark.operators.knn import arrow_topk
+    from qdrant_spark.operators.knn import arrow_topk, with_rank
 
     code_cols, Qtoks, decode, offsets, scales = _mv_quant_prep(
         index, queries, metric)
@@ -1428,11 +1428,11 @@ def maxsim_quant_coarse_batch(index, queries: Sequence[Sequence[Sequence[float]]
         # integer-exact pipeline — see _mv_quant_prep)
         yield qall, ids, ((scores + offs) * scl).T
 
-    return arrow_topk(
+    return with_rank(arrow_topk(
         index.codes.select(id_col, *code_cols), blocks, metric="dot", k=k,
         qids=qall, qid_type=T.LongType(), qid_col="__qid", id_col=id_col,
         dedup_ids=dedup_ids, broadcast=bq,
-    )
+    ))
 
 
 def _list_columns(batch, first: int, n: int):
@@ -1648,7 +1648,7 @@ def _pair_maxsim_topk(joined: DataFrame, tokens, Qtoks, *, k: int,
     matrix in scoring space and its per-doc list offsets. With
     ``offsets``, a query's score is ``(maxsim + offsets[q]) * scales[q]``
     (see :func:`_mv_quant_prep`)."""
-    from qdrant_spark.operators.knn import arrow_topk
+    from qdrant_spark.operators.knn import arrow_topk, with_rank
 
     bq = joined.sparkSession.sparkContext.broadcast((Qtoks, offsets, scales))
 
@@ -1674,10 +1674,10 @@ def _pair_maxsim_topk(joined: DataFrame, tokens, Qtoks, *, k: int,
                 out = (out + offs[int(qi)]) * scl[int(qi)]
             yield np.array([qi]), ids[mask], out[None, :]
 
-    return arrow_topk(
+    return with_rank(arrow_topk(
         joined, blocks, metric="dot", k=k, qids=np.arange(len(Qtoks)),
         qid_type=T.LongType(), qid_col="__qid", id_col=id_col, broadcast=bq,
-    )
+    ))
 
 
 def maxsim_knn_batch(points: DataFrame,
@@ -1693,7 +1693,7 @@ def maxsim_knn_batch(points: DataFrame,
     (__qid, id, score, rank<=k); scores are EXACT MaxSim (no rescore
     stage). 64 sequential maxsim_knn calls read the corpus 64 times;
     this reads it once."""
-    from qdrant_spark.operators.knn import arrow_topk
+    from qdrant_spark.operators.knn import arrow_topk, with_rank
 
     if metric not in ("dot", "cosine"):
         raise ValueError("maxsim supports dot/cosine")
@@ -1714,7 +1714,7 @@ def maxsim_knn_batch(points: DataFrame,
 
     base = points.filter(
         F.col(mv_col).isNotNull() & (F.size(mv_col) > 0))
-    return arrow_topk(
+    return with_rank(arrow_topk(
         base.select(id_col, mv_col), blocks, metric="dot", k=k, qids=qall,
         qid_type=T.LongType(), qid_col="__qid", id_col=id_col, broadcast=bq,
-    )
+    ))

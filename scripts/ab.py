@@ -21,7 +21,10 @@ both sides alike. It then prints one markdown row per end-to-end metric
 of ``BENCHMARK.json``: median (interquartile range / median) per side,
 by how much the change's median is worse (negative: better), in how many
 of the N same-seed pairs the change was better, and the failed checks of
-each side.
+each side. Under them it prints one row per request kind from the
+``per-kind median seconds`` line each run writes to stderr: the median
+over the runs of each side's per-run median, so a mixed workload shows
+which kind of request moved.
 
 Run no other Spark job while it runs: every run is timed.
 """
@@ -32,6 +35,7 @@ import argparse
 import json
 import math
 import os
+import re
 import shutil
 import statistics
 import subprocess
@@ -39,6 +43,8 @@ import sys
 import tempfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+#: one "<kind> <seconds> (n=<count>)" item of the per-kind stderr line
+KIND_ITEM = re.compile(r"(\S+) ([0-9.]+) \(n=\d+\)")
 
 
 def git(*args: str, **kw) -> subprocess.CompletedProcess:
@@ -78,7 +84,18 @@ def run_once(side_dir: str, bench: dict, workload: str, seed: int) -> dict:
         return {"correct": False, "attempted": 0, "failed": 1,
                 "metrics": {}, "returncode": p.returncode}
     out["returncode"] = p.returncode
+    out["kinds"] = per_kind(p.stderr)
     return out
+
+
+def per_kind(stderr: str) -> dict[str, float]:
+    """kind -> median seconds, from a run's ``per-kind median seconds``
+    line (empty when the run printed none)."""
+    for line in stderr.splitlines():
+        _, sep, items = line.partition("per-kind median seconds: ")
+        if sep:
+            return {k: float(s) for k, s in KIND_ITEM.findall(items)}
+    return {}
 
 
 def value(run: dict, metric: str) -> float:
@@ -119,6 +136,26 @@ def table(results: dict, metrics: list[dict]) -> list[str]:
     return rows
 
 
+def kind_table(results: dict) -> list[str]:
+    """One row per (workload, request kind): the median over each side's
+    runs of the run's median seconds for that kind (lower is better)."""
+    rows = ["| workload | kind | parent s | change s | change worse by "
+            "| change better in |",
+            "|---|---|---|---|---|---|"]
+    for workload, runs in results.items():
+        kinds = sorted({k for side in runs.values() for r in side
+                        for k in r.get("kinds", {})})
+        for kind in kinds:
+            a, b = ([r.get("kinds", {}).get(kind, math.nan)
+                     for r in runs[side]] for side in ("parent", "change"))
+            ma, mb = spread(a)[0], spread(b)[0]
+            worse = (mb - ma) / ma if ma else math.nan
+            better = sum(y < x for x, y in zip(a, b))
+            rows.append(f"| {workload} | {kind} | {ma:.4g} | {mb:.4g} "
+                        f"| {worse:+.1%} | {better}/{len(a)} |")
+    return rows
+
+
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("parent", help="parent commit (any git revision)")
@@ -141,6 +178,8 @@ def main(argv: list[str] | None = None) -> int:
     finally:
         shutil.rmtree(work)
     print("\n".join(table(results, bench["end_to_end"])))
+    print()
+    print("\n".join(kind_table(results)))
     return 0
 
 
