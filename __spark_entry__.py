@@ -114,7 +114,7 @@ def _ann_ivf_sql() -> str:
     """Value oracle for the pinned-centroid IVF probe (nprobe=2 of K=8):
     centroids are the embeddings of vec_id 0..7, so nearest-centroid
     assignment (argmin of -2 v.c + ||c||^2, ties by centroid index — the
-    exact comparison assign_to_ivf codegens), the probe set (2 nearest
+    rule of the knn.nearest_centroid kernel), the probe set (2 nearest
     centroids to the query), and the exact cosine top-k inside the probed
     clusters are all recomputable in SQL."""
     lin = "-2*list_dot_product({v}, c.cv) + list_dot_product(c.cv, c.cv)"

@@ -55,18 +55,6 @@ def hashed_tokens(tokens: Column) -> Column:
     return F.transform(tokens, lambda t: token_hash63(t) % F.lit(MERSENNE_P))
 
 
-def minhash_signature(tokens: Column, n_perms: int = 16) -> Column:
-    """MinHash signature (array<bigint>, length n_perms) over a token /
-    shingle array. NULL when the array is empty (no shingles to hash).
-
-    NOTE: prefer :func:`minhash_from_hashed` on a pre-materialized
-    ``hashed_tokens`` column — inlining the hash pipeline here duplicates
-    it once per permutation (expressions share no subtrees), which bloats
-    codegen ~n_perms-fold.
-    """
-    return minhash_from_hashed(hashed_tokens(tokens), n_perms)
-
-
 def minhash_from_hashed(hs: Column, n_perms: int = 16) -> Column:
     """MinHash signature from an ``array<bigint>`` of (token_hash63 % p)."""
     sigs = [

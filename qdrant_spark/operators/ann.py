@@ -23,11 +23,13 @@ from dataclasses import dataclass
 from typing import Any, Sequence
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from qdrant_spark.functions.distances import vec_lit
-from qdrant_spark.operators.knn import knn, with_rank
+from qdrant_spark.operators.knn import (
+    arrow_vectors, knn, nearest_centroid, with_rank,
+)
 
 #: Probed-scan size (Catalyst estimate, bytes) under which the batched
 #: IVF-PQ search fuses ADC shortlist + exact rescore into one python stage
@@ -52,8 +54,8 @@ class IvfIndex:
     #: (persist_ivf / a maintenance load) rather than a computed frame —
     #: downstream layouts (quantize.compose_quant_ivf's clustered_full)
     #: only wire it as a rescore source then: filtering a computed
-    #: assignment by __cluster would re-run the whole KMeans transform /
-    #: argmin per query instead of pruning files (r13 ADVICE).
+    #: assignment by __cluster would re-run the nearest-centroid pass per
+    #: query instead of pruning files (r13 ADVICE).
     persisted: bool = False
 
 
@@ -66,9 +68,9 @@ class IvfIndex:
 #: in milliseconds). This is the faiss/reference training posture —
 #: encoded_vectors_pq.rs trains on a capped in-memory sample — and the
 #: cap (128 MiB of f64) bounds driver memory exactly like the PQ/MMR
-#: bounded collects. Assignment is unaffected either way: pre-fit
-#: centroids assign map-only via ivf_from_centroids. Above the cap the
-#: distributed MLlib fit runs as before.
+#: bounded collects. Above the cap the distributed MLlib fit runs. Either
+#: fit assigns map-only through ivf_from_centroids, so one tie rule
+#: (lowest cluster id) holds at every fit size.
 IVF_DRIVER_FIT_MAX_ELEMS = 16_000_000
 
 
@@ -160,14 +162,11 @@ def build_ivf(
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
-    feat = base.withColumn("__feat", array_to_vector(F.col(vec_col).cast("array<double>")))
-    km = KMeans(k=n_clusters, seed=seed, maxIter=max_iter, featuresCol="__feat",
-                predictionCol="__cluster")
-    fit_df = feat.sample(fit_fraction, seed=seed) if fit_fraction else feat
-    model = km.fit(fit_df)
-    assigned = model.transform(feat).drop("__feat")
-    centroids = np.array(model.clusterCenters())
-    return IvfIndex(assigned=assigned, centroids=centroids, vec_col=vec_col, id_col=id_col)
+    km = KMeans(k=n_clusters, seed=seed, maxIter=max_iter, featuresCol="__feat")
+    model = km.fit(fit_src.withColumn(
+        "__feat", array_to_vector(F.col(vec_col).cast("array<double>"))))
+    return ivf_from_centroids(base, np.array(model.clusterCenters()),
+                              vec_col=vec_col, id_col=id_col)
 
 
 def persist_ivf(index: IvfIndex, path: str) -> IvfIndex:
@@ -363,7 +362,7 @@ def build_ivf_pq(
 ) -> IvfPqIndex:
     """Build IVF (KMeans clusters) then PQ codebooks on the cluster
     residuals of a seeded sample; encode the whole corpus in one
-    Arrow-batched pass (NumPy argmin via matmul per subspace).
+    Arrow-batched pass (:func:`ivf_pq_from_codebooks`).
 
     The residual trick: ``v = centroid[c] + r`` with ``r`` small, so the
     per-subspace KMeans spends its 256 codes on a tight cloud instead of
@@ -379,63 +378,28 @@ def build_ivf_pq(
     dim = centroids.shape[1]
     if dim % n_subspaces:
         raise ValueError(f"dim {dim} not divisible by n_subspaces {n_subspaces}")
-    dsub = dim // n_subspaces
 
-    base = ivf.assigned
+    base = points.filter(F.col(vec_col).isNotNull())
     n = base.count()
     frac = min(1.0, float(sample_size) / max(n, 1))
     # sortWithinPartitions-free determinism: collect() row order depends on
     # task scheduling, and _kmeans_np's result depends on data order — sort
     # the (tiny) driver-side sample by id so codebooks are reproducible
-    # run-to-run, not just seed-to-seed
-    sel = base.select(id_col, vec_col, "__cluster")
+    # run-to-run, not just seed-to-seed. The sample is assigned here, on
+    # the driver: sampling ivf.assigned would assign every row first
+    # (Spark plans the Sample above the Python eval).
+    sel = base.select(id_col, vec_col)
     sample_rows = (
         sel.sample(frac, seed=seed).collect()
         or sel.limit(sample_size).collect()
     )
     sample_rows.sort(key=lambda r: r[0])
     V = np.array([list(r[1]) for r in sample_rows], dtype=np.float64)
-    R = V - centroids[np.array([r[2] for r in sample_rows], dtype=np.int64)]
+    R = V - centroids[nearest_centroid(V, centroids)]
     codebooks = _fit_codebooks(R, n_subspaces, n_centroids, max_iter,
                                seed)  # (M, K<=n_centroids, dsub)
-
-    enc = _pq_encoder(centroids, codebooks)
-    assigned = base.withColumn(
-        "__pq", enc(F.col(vec_col).cast("array<double>"), F.col("__cluster"))
-    )
-    return IvfPqIndex(
-        assigned=assigned, centroids=centroids, codebooks=codebooks,
-        vec_col=vec_col, id_col=id_col,
-    )
-
-
-def _pq_encoder(centroids: np.ndarray, codebooks: np.ndarray):
-    """Vectorized residual-PQ encoder (pandas_udf): per Arrow batch,
-    subtract the assigned centroid and argmin each subspace against its
-    codebook via one matmul. Shared by the initial build and the
-    incremental-ingest path (:func:`assign_to_ivf_pq`)."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    cb = codebooks
-    cb_norm2 = (cb * cb).sum(axis=2)
-    M = cb.shape[0]
-    dsub = cb.shape[2]
-    cents = centroids
-
-    def _encode(vec_s, cl_s):
-        if len(vec_s) == 0:
-            return pd.Series([], dtype=object)
-        Vb = np.array(vec_s.tolist(), dtype=np.float64)
-        Rb = Vb - cents[cl_s.to_numpy(dtype=np.int64)]
-        codes = np.empty((Rb.shape[0], M), dtype=np.int16)
-        for m in range(M):
-            sub = Rb[:, m * dsub:(m + 1) * dsub]
-            d = cb_norm2[m][None, :] - 2.0 * sub @ cb[m].T
-            codes[:, m] = d.argmin(axis=1)
-        return pd.Series(list((codes - 128).astype(np.int8)))
-
-    return pandas_udf(_encode, "array<tinyint>")
+    return ivf_pq_from_codebooks(points, centroids, codebooks,
+                                 vec_col=vec_col, id_col=id_col)
 
 
 def persist_ivf_pq(index: IvfPqIndex, path: str) -> IvfPqIndex:
@@ -606,51 +570,15 @@ def ivf_pq_search(
 
 def assign_to_ivf(index: IvfIndex, new_points: DataFrame) -> IvfIndex:
     """Incremental index maintenance: assign NEW rows to the existing
-    centroids (nearest-centroid, computed as a plan-time literal argmin —
-    no KMeans refit, no python worker) and append them to the assignment.
-    This is the ingest-time path for a live corpus: centroids stay fixed
-    between periodic rebuilds, so appends are map-only and the
-    cluster-partitioned layout keeps working (new files land in existing
-    cluster directories on the next persist).
-
-    The argmin over K centroids unrolls into a codegen'd expression:
-    squared euclid to centroid c is ||v||^2 - 2 v.c + ||c||^2; ||v||^2 is
-    shared, so the comparison needs only the linear term per cluster."""
-    vec = F.col(index.vec_col).cast("array<double>")
-    cents = index.centroids
-    # score_c = -2 v.c + ||c||^2 (minimize) — one fold per cluster, the
-    # shared ||v||^2 term cancels in the argmin
-    scores = [
-        (
-            F.aggregate(
-                F.zip_with(
-                    vec,
-                    vec_lit(cents[c]),
-                    lambda a, b: a * b,
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            * F.lit(-2.0)
-            + F.lit(float((cents[c] * cents[c]).sum()))
-        ).alias(f"__s{c}")
-        for c in range(len(cents))
-    ]
-    ranked = F.array_sort(
-        F.array(*[
-            F.struct(F.col(f"__s{c}").alias("s"),
-                     F.lit(c).cast("int").alias("c"))
-            for c in range(len(cents))
-        ])
-    )
-    assigned_new = (
-        new_points.filter(F.col(index.vec_col).isNotNull())
-        .select("*", *scores)
-        .withColumn("__cluster", F.element_at(ranked, 1)["c"])
-        .drop(*[f"__s{c}" for c in range(len(cents))])
-    )
+    centroids (:func:`ivf_from_centroids` — no KMeans refit) and append
+    them to the assignment. This is the ingest-time path for a live
+    corpus: centroids stay fixed between periodic rebuilds, so appends
+    are map-only and the cluster-partitioned layout keeps working (new
+    files land in existing cluster directories on the next persist)."""
+    fresh = ivf_from_centroids(new_points, index.centroids,
+                               vec_col=index.vec_col, id_col=index.id_col)
     cols = index.assigned.columns
-    merged = index.assigned.unionByName(assigned_new.select(*cols))
+    merged = index.assigned.unionByName(fresh.assigned.select(*cols))
     # the union is still prunable-enough to keep downstream layouts: the
     # persisted side file-prunes on __cluster and the appended side is a
     # bounded (<= stale_fraction) computed tail
@@ -669,14 +597,30 @@ def ivf_from_centroids(
     id_col: str = "id",
 ) -> IvfIndex:
     """Build an IVF assignment for ``points`` against PRE-FIT centroids —
-    no KMeans refit, one map-only argmin pass (the same codegen'd
-    expression as :func:`assign_to_ivf`). This is the 100-TB ingest
-    shape: centroids are fit once on a sample, then every corpus shard
-    assigns independently."""
-    empty = points.limit(0).withColumn("__cluster", F.lit(0).cast("int"))
-    seed = IvfIndex(assigned=empty, centroids=np.asarray(centroids),
+    no KMeans refit, one map-only pass: a scalar Arrow UDF reads only the
+    vector column and runs the one nearest-centroid kernel
+    (:func:`~qdrant_spark.operators.knn.nearest_centroid`, lowest id on
+    ties) per Arrow batch; payload columns never reach Python. This is
+    the 100-TB ingest shape: centroids are fit once on a sample, then
+    every corpus shard assigns independently. A vector whose length
+    differs from the centroids' fails the job."""
+    cents = np.asarray(centroids)
+    assigned = points.filter(F.col(vec_col).isNotNull()).withColumn(
+        "__cluster", _assign_udf(cents)(F.col(vec_col)))
+    return IvfIndex(assigned=assigned, centroids=cents,
                     vec_col=vec_col, id_col=id_col)
-    return assign_to_ivf(seed, points)
+
+
+def _assign_udf(centroids: np.ndarray, first_id: int = 0):
+    """Scalar Arrow UDF: ``first_id`` + the nearest-centroid index of
+    each vector of its one (vector) column."""
+    C = np.asarray(centroids, dtype=np.float64)
+
+    def _assign(col: pa.Array) -> pa.Array:
+        cl = nearest_centroid(arrow_vectors(col, C.shape[1]), C)
+        return pa.array(cl + first_id, type=pa.int32())
+
+    return F.arrow_udf(_assign, "int")
 
 
 def ivf_pq_from_codebooks(
@@ -688,14 +632,31 @@ def ivf_pq_from_codebooks(
     id_col: str = "id",
 ) -> IvfPqIndex:
     """IVF-PQ assignment for ``points`` against PRE-FIT centroids and
-    codebooks: argmin cluster assign + residual PQ encode, both map-only
-    — the sampled-train / full-encode split a 100-TB build uses (train
-    once on a few-million-row sample, encode every shard independently)."""
-    coarse = ivf_from_centroids(points, centroids,
-                                vec_col=vec_col, id_col=id_col)
-    enc = _pq_encoder(np.asarray(centroids), np.asarray(codebooks))
-    assigned = coarse.assigned.withColumn(
-        "__pq", enc(F.col(vec_col).cast("array<double>"), F.col("__cluster")),
+    codebooks: nearest-centroid assign + residual PQ encode
+    (:func:`quantize.pq_codes`) in ONE map-only Arrow UDF over the
+    vector column, so each vector is decoded once — the sampled-train /
+    full-encode split a 100-TB build uses (train once on a
+    few-million-row sample, encode every shard independently)."""
+    from qdrant_spark.operators.quantize import code_lists, pq_codes
+
+    C = np.asarray(centroids, dtype=np.float64)
+    cb = np.asarray(codebooks, dtype=np.float64)
+
+    def _encode(col: pa.Array) -> pa.Array:
+        V = arrow_vectors(col, C.shape[1])
+        cl = nearest_centroid(V, C)
+        codes = pq_codes(V - C[cl], cb)
+        return pa.StructArray.from_arrays(
+            [pa.array(cl, type=pa.int32()), code_lists(codes)],
+            names=["cluster", "pq"])
+
+    enc = F.arrow_udf(_encode, "cluster int, pq array<tinyint>")
+    assigned = (
+        points.filter(F.col(vec_col).isNotNull())
+        .withColumn("__enc", enc(F.col(vec_col)))
+        .withColumns({"__cluster": F.col("__enc.cluster"),
+                      "__pq": F.col("__enc.pq")})
+        .drop("__enc")
     )
     return IvfPqIndex(
         assigned=assigned, centroids=np.asarray(centroids),
@@ -704,13 +665,13 @@ def ivf_pq_from_codebooks(
 
 
 def assign_to_ivf_pq(index: IvfPqIndex, new_points: DataFrame) -> IvfPqIndex:
-    """Incremental IVF-PQ ingest: cluster-assign (frozen centroids, the
-    :func:`assign_to_ivf` argmin expression) and residual-PQ-encode
-    (frozen codebooks, the build-time Arrow encoder) NEW rows, appended
-    to the existing assignment. No KMeans or codebook refit — the
-    append is map-only, so the cluster-partitioned layout keeps pruning
-    and codebooks stay stable between periodic rebuilds (the reference
-    rebuilds quantized segments out-of-band the same way)."""
+    """Incremental IVF-PQ ingest: cluster-assign (frozen centroids) and
+    residual-PQ-encode (frozen codebooks) NEW rows in the one Arrow pass
+    of :func:`ivf_pq_from_codebooks`, appended to the existing
+    assignment. No KMeans or codebook refit — the append is map-only, so
+    the cluster-partitioned layout keeps pruning and codebooks stay
+    stable between periodic rebuilds (the reference rebuilds quantized
+    segments out-of-band the same way)."""
     fresh = ivf_pq_from_codebooks(
         new_points, index.centroids, index.codebooks,
         vec_col=index.vec_col, id_col=index.id_col,
@@ -840,8 +801,8 @@ def ivf_pq_search_batch(
     ).select(qid_col, id_col)
     # exact rescore: shortlist is tiny (Q * n_coarse rows) — broadcast it
     # onto the probed partitions, then score each (query, candidate) pair
-    # with the Arrow rowwise scorer (interpreted aggregate(zip_with) Column
-    # math on pair tables is ~60x slower — see rowwise_score_topk)
+    # with the Arrow rowwise scorer (interpreted higher-order-function
+    # Column math on pair tables is ~60x slower — see rowwise_score_topk)
     from qdrant_spark.operators.knn import rowwise_score_topk
 
     src = rescore_with if rescore_with is not None else pruned
@@ -991,9 +952,9 @@ def rebalance_ivf(
     For each cluster over ``max_cluster_size``: fit a local sub-KMeans
     (ceil(n/max) centroids) on a driver-side sample of that cluster only,
     then reassign ONLY that cluster's rows to the sub-centroids with the
-    plan-time literal argmin (map-only, no python worker, no shuffle —
-    same expression as :func:`assign_to_ivf`). Healthy clusters keep
-    their ids and rows untouched; sub-centroids take fresh ids appended
+    nearest-centroid Arrow kernel over the vector column (map-only, no
+    shuffle — the same kernel as :func:`assign_to_ivf`). Healthy clusters
+    keep their ids and rows untouched; sub-centroids take fresh ids appended
     after the existing ones, so persisted layouts only rewrite split
     directories. One pass regardless of how many clusters split.
 
@@ -1008,7 +969,6 @@ def rebalance_ivf(
     over = sorted(c for c, n in sizes.items() if n > max_cluster_size)
     if not over:
         return index
-    vec = F.col(index.vec_col).cast("array<double>")
     cents = index.centroids
     keep_ids = [c for c in range(len(cents)) if c not in set(over)]
     new_cents: list[np.ndarray] = [cents[c] for c in keep_ids]
@@ -1030,45 +990,16 @@ def rebalance_ivf(
     for c in over:
         n = sizes[c]
         k_sub = max(2, int(_math.ceil(n / max_cluster_size)))
-        rows = assigned.filter(F.col("__cluster") == c).select(index.vec_col)
+        members = assigned.filter(F.col("__cluster") == c)
+        rows = members.select(index.vec_col)
         frac = min(1.0, sample_per_split / n)
         sample = (rows.sample(frac, seed=seed) if frac < 1.0 else rows).collect()
         V = np.array([list(r[0]) for r in sample], dtype=np.float64)
         sub = _kmeans_np(V, k_sub, max_iter, rng)           # (k_sub, dim)
-        sub_ids = list(range(len(new_cents), len(new_cents) + len(sub)))
+        # sub-centroid j takes the fresh id len(new_cents) + j
+        split_parts.append(members.withColumn("__cluster", _assign_udf(
+            sub, len(new_cents))(F.col(index.vec_col))))
         new_cents.extend(sub)
-        # literal argmin over the sub-centroids only (same folding trick as
-        # assign_to_ivf: the shared ||v||^2 cancels)
-        scores = [
-            (
-                F.aggregate(
-                    F.zip_with(
-                        vec,
-                        vec_lit(sub[j]),
-                        lambda a, b: a * b,
-                    ),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                )
-                * F.lit(-2.0)
-                + F.lit(float((sub[j] * sub[j]).sum()))
-            ).alias(f"__s{j}")
-            for j in range(len(sub))
-        ]
-        ranked = F.array_sort(
-            F.array(*[
-                F.struct(F.col(f"__s{j}").alias("s"),
-                         F.lit(sub_ids[j]).cast("int").alias("c"))
-                for j in range(len(sub))
-            ])
-        )
-        part = (
-            assigned.filter(F.col("__cluster") == c)
-            .select("*", *scores)
-            .withColumn("__cluster", F.element_at(ranked, 1)["c"])
-            .drop(*[f"__s{j}" for j in range(len(sub))])
-        )
-        split_parts.append(part)
 
     out = healthy
     for p in split_parts:

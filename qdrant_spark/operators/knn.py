@@ -41,6 +41,11 @@ quantized coarse scans, the composed recommend scores). Its local cut is
 tie-exact: it keeps each query's k best rows under the final window's
 order — score direction, then id ascending — so the local-top-k-then-
 merge plan returns exactly what one global sort would, ties included.
+
+Beside the scorer sits the one nearest-centroid kernel,
+:func:`nearest_centroid` (lowest id on ties): every frozen-centroid IVF
+assignment and every PQ encode runs it in a scalar Arrow UDF over the
+vector column alone.
 """
 
 from __future__ import annotations
@@ -247,6 +252,28 @@ def score_block(M, Qm, metric: str, qnorm=None):
     return S
 
 
+def nearest_centroid(V, C):
+    """(n,) int32 index of each row of ``V``'s nearest centroid (row of
+    ``C``), squared-euclidean, lowest index on ties: the argmin of
+    ``‖c‖² − 2·v·cᵀ`` in float64 (the row's own ‖v‖² does not move it).
+    The one rule behind every frozen-centroid assignment (IVF clusters)
+    and every PQ encode (per-subspace codewords). Rows go through in
+    blocks of at most 4M scores. Raises ``ValueError`` naming both
+    dimensions when the rows and centroids differ in length."""
+    import numpy as np
+
+    C = np.asarray(C, dtype=np.float64)
+    if V.shape[1] != C.shape[1]:
+        raise ValueError(f"vectors have {V.shape[1]} dimensions but the "
+                         f"centroids have {C.shape[1]}")
+    cn = (C * C).sum(axis=1)
+    out = np.empty(V.shape[0], dtype=np.int32)
+    step = max(1, 4_000_000 // max(1, C.shape[0]))
+    for lo in range(0, V.shape[0], step):
+        out[lo:lo + step] = (cn - 2.0 * (V[lo:lo + step] @ C.T)).argmin(axis=1)
+    return out
+
+
 def arrow_matrix(col, n: int):
     """(n, d) NumPy view of the flat values of an Arrow list column with
     ``n`` rows of ``d`` values each — no per-row object conversion."""
@@ -255,6 +282,25 @@ def arrow_matrix(col, n: int):
     if isinstance(col, pa.ChunkedArray):
         col = col.combine_chunks()
     return col.flatten().to_numpy(zero_copy_only=False).reshape(n, -1)
+
+
+def arrow_vectors(col, dim: int):
+    """(n, ``dim``) float64 matrix of an Arrow column of non-null
+    vectors, for a kernel over ``dim``-wide centroids: raises
+    ``ValueError`` naming both dimensions on any row of another length
+    (a flat reshape would silently re-cut ragged rows)."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    n = len(col)
+    if n == 0:
+        return np.empty((0, dim))
+    mm = pc.min_max(pc.list_value_length(col)).as_py()
+    if mm["min"] != dim or mm["max"] != dim:
+        bad = mm["min"] if mm["min"] != dim else mm["max"]
+        raise ValueError(f"a vector has {bad} dimensions but the "
+                         f"centroids have {dim}")
+    return arrow_matrix(col, n).astype(np.float64, copy=False)
 
 
 def first_k(qi, key, ids, k: int):

@@ -22,6 +22,7 @@ from __future__ import annotations
 from typing import Any, Sequence
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -911,38 +912,26 @@ def build_maxsim_pq(
 
 
 def _mpq_encode_udf(codebooks: np.ndarray):
-    """Token-PQ-encode pandas_udf for FROZEN codebooks — shared by the
+    """Token-PQ-encode Arrow UDF for FROZEN codebooks — shared by the
     build pass and the incremental encode of new rows (encode_maxsim;
-    the multivector twin of quantize._pq_encode_udf)."""
-    from pyspark.sql.functions import pandas_udf
+    the multivector twin of quantize._pq_encode_udf): every token of the
+    batch's docs goes through one :func:`quantize.pq_codes` call, then
+    splits back into its doc."""
+    import pyarrow.compute as pc
 
-    cb = codebooks
-    cb_norm2 = (cb * cb).sum(axis=2)
-    M, _, dsub = cb.shape
+    from qdrant_spark.operators.knn import arrow_vectors
+    from qdrant_spark.operators.quantize import code_lists, pq_codes
 
-    def _encode_mv(s):
-        import pandas as pd
+    cb = np.asarray(codebooks, dtype=np.float64)
+    dim = cb.shape[0] * cb.shape[2]
 
-        if len(s) == 0:
-            return pd.Series([], dtype=object)
-        out = []
-        # flatten every doc's tokens into ONE matrix, one argmin pass
-        # per subspace for the whole Arrow batch, then split back
-        counts = [len(doc) for doc in s]
-        V = np.array([t for doc in s for t in doc], dtype=np.float64)
-        codes = np.empty((V.shape[0], M), dtype=np.int16)
-        for m in range(M):
-            sub = V[:, m * dsub:(m + 1) * dsub]
-            d = cb_norm2[m][None, :] - 2.0 * sub @ cb[m].T
-            codes[:, m] = d.argmin(axis=1)
-        codes = (codes - 128).astype(np.int8)
-        pos = 0
-        for c in counts:
-            out.append(list(codes[pos:pos + c]))
-            pos += c
-        return pd.Series(out)
+    def _encode_mv(col: pa.Array) -> pa.Array:
+        counts = pc.list_value_length(col).to_numpy(zero_copy_only=False)
+        offsets = np.concatenate([[0], np.cumsum(counts)]).astype(np.int32)
+        codes = pq_codes(arrow_vectors(pc.list_flatten(col), dim), cb)
+        return pa.ListArray.from_arrays(pa.array(offsets), code_lists(codes))
 
-    return pandas_udf(_encode_mv, "array<array<tinyint>>")
+    return F.arrow_udf(_encode_mv, "array<array<tinyint>>")
 
 
 @dataclass

@@ -295,12 +295,3 @@ def sample(
     key = id_col or df.columns[0]
     return df.orderBy(_sample_hash(F.col(key), seed), F.col(key).asc()).limit(n)
 
-
-def slice_condition(id_col: Column, total: int, index: int) -> Column:
-    """Deterministic id-space slice, ``hash(id) % total == index``
-    (``SliceCondition`` types.rs:3905-3911). Delegates to
-    :func:`qdrant_spark.filters.slice_membership` — the same predicate the
-    filter DSL compiles for ``{"slice": {"total": t, "index": i}}``."""
-    from qdrant_spark.filters import slice_membership
-
-    return slice_membership(id_col, total, index)

@@ -47,11 +47,13 @@ from typing import Any, Sequence
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from qdrant_spark.operators.knn import (
-    arrow_matrix, knn, score_block, score_order,
+    arrow_matrix, arrow_vectors, knn, nearest_centroid, score_block,
+    score_order,
 )
 
 
@@ -498,13 +500,10 @@ def build_pq(
     max_iter: int = 20,
 ) -> PqIndex:
     """Train per-subspace codebooks on a seeded driver-side sample, then
-    encode the whole corpus in one Arrow-batched pass (NumPy argmin via
-    matmul per subspace — vectorized, ingest-time-only). ``dim`` must be
-    divisible by ``n_subspaces`` (the reference pads; we require exact
-    split and let callers pick M)."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
+    encode the whole corpus in one Arrow-batched pass (:func:`pq_codes`
+    — vectorized, ingest-time-only). ``dim`` must be divisible by
+    ``n_subspaces`` (the reference pads; we require exact split and let
+    callers pick M)."""
     base = points.filter(F.col(vec_col).isNotNull())
     first = base.select(F.size(vec_col).alias("d")).first()
     if first is None:
@@ -512,7 +511,6 @@ def build_pq(
     dim = first["d"]
     if dim % n_subspaces:
         raise ValueError(f"dim {dim} not divisible by n_subspaces {n_subspaces}")
-    dsub = dim // n_subspaces
 
     n = base.count()
     frac = min(1.0, float(sample_size) / max(n, 1))
@@ -531,28 +529,38 @@ def build_pq(
 
 
 def _pq_encode_udf(codebooks: np.ndarray):
-    """ADC-encode pandas_udf for FROZEN codebooks — shared by the build
+    """ADC-encode Arrow UDF for FROZEN codebooks — shared by the build
     pass and the incremental encode of new rows (encode_quant); the PQ
     analogue of ann.assign_to_ivf_pq's frozen-codebook encode."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
+    cb = np.asarray(codebooks, dtype=np.float64)
+    dim = cb.shape[0] * cb.shape[2]
 
-    cb = codebooks
-    cb_norm2 = (cb * cb).sum(axis=2)  # (M, K)
-    M, _, dsub = cb.shape
+    def _encode(col: pa.Array) -> pa.Array:
+        return code_lists(pq_codes(arrow_vectors(col, dim), cb))
 
-    def _encode_batch(s):
-        if len(s) == 0:
-            return pd.Series([], dtype=object)
-        V = np.array(s.tolist(), dtype=np.float64)
-        codes = np.empty((V.shape[0], M), dtype=np.int16)
-        for m in range(M):
-            sub = V[:, m * dsub:(m + 1) * dsub]
-            d = cb_norm2[m][None, :] - 2.0 * sub @ cb[m].T
-            codes[:, m] = d.argmin(axis=1)
-        return pd.Series(list((codes - 128).astype(np.int8)))
+    return F.arrow_udf(_encode, "array<tinyint>")
 
-    return pandas_udf(_encode_batch, "array<tinyint>")
+
+def pq_codes(V: np.ndarray, codebooks: np.ndarray) -> np.ndarray:
+    """(n, M) int8 PQ codes of the rows of ``V``: each subspace's nearest
+    codeword (:func:`~qdrant_spark.operators.knn.nearest_centroid`),
+    shifted by -128 into int8. The one encoder of every PQ code — dense,
+    IVF residual and multivector token."""
+    M, _, dsub = codebooks.shape
+    codes = np.empty((V.shape[0], M), dtype=np.int16)
+    for m in range(M):
+        codes[:, m] = nearest_centroid(V[:, m * dsub:(m + 1) * dsub],
+                                       codebooks[m])
+    return (codes - 128).astype(np.int8)
+
+
+def code_lists(codes: np.ndarray):
+    """Arrow ``list<int8>`` array with one row per row of an (n, M)
+    code matrix (an ``array<tinyint>`` column)."""
+    n, M = codes.shape
+    return pa.ListArray.from_arrays(
+        pa.array(np.arange(0, n * M + 1, M, dtype=np.int32)),
+        pa.array(codes.reshape(-1)))
 
 
 def pq_search(

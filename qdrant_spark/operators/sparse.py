@@ -55,13 +55,6 @@ def doc_terms(
     )
 
 
-def doc_lengths(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    toks = tokenize(F.col(text_col))
-    return docs.select(F.col(id_col), F.size(toks).cast("double").alias("dl"))
-
-
 def idf_df(terms: DataFrame, n_docs: int, id_col: str = "doc_id") -> DataFrame:
     """(term, idf) with the BM25 idf convention used by the reference."""
     n = F.countDistinct(id_col).alias("nd")

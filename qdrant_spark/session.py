@@ -99,6 +99,15 @@ def _worker_imports_package() -> bool:
             and os.path.samefile(spec.origin, here))
 
 
+def _default_driver_memory() -> str:
+    """The driver heap when ``SPARK_GRAFT_DRIVER_MEM`` is unset: 40 % of
+    physical memory, capped at 48g. A fixed 48g let a test session's JVM
+    grow to the whole of a 15 GiB box without swap and die mid-run; the
+    rest of the box is left to the Python workers and the OS."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(512, min(48 << 10, int(phys * 0.4) >> 20))}m"
+
+
 def get_spark(
     app_name: str = "qdrant_spark",
     cpus: int | str | None = None,
@@ -124,7 +133,8 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         # testdata events.parquet uses TIMESTAMP(NANOS); read as epoch-nanos long
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.executorEnv.OMP_NUM_THREADS", "1")
         .config("spark.executorEnv.OPENBLAS_NUM_THREADS", "1")

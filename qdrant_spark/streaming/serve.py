@@ -19,10 +19,11 @@ API (``knn_batch``, ann.ivf_search_batch) exists at all.
 
 The ingest twin keeps the ANN index fresh while points stream in:
 ``start_ivf_upsert_stream`` cluster-assigns each micro-batch against
-FROZEN centroids (``ivf_from_centroids`` — a codegen'd argmin, map-only,
-no KMeans refit) before the upsert, so the live snapshot always carries
-``__cluster`` and ``ivf_search`` over it prunes exactly like a batch-built
-index. Centroids refit out-of-band, the same way the reference rebuilds
+FROZEN centroids (``ivf_from_centroids`` — one nearest-centroid Arrow
+kernel over the vector column, map-only, no KMeans refit) before the
+upsert, so the live snapshot always carries ``__cluster`` and
+``ivf_search`` over it prunes exactly like a batch-built index.
+Centroids refit out-of-band, the same way the reference rebuilds
 quantized/HNSW segments outside the update path.
 """
 

@@ -10,7 +10,8 @@ Usage: python scripts/check_oracle.py [sf_dir] [query ...]
 
 Each ``query`` is an ``fnmatch`` pattern over the entry names
 (``'maxsim*'`` runs every MaxSim entry); an exact name matches only
-itself.
+itself. A pattern that matches no entry fails the run (exit 1), so a
+mistyped name cannot pass by running nothing.
 """
 
 from __future__ import annotations
@@ -69,11 +70,15 @@ def main() -> int:
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
 
     qs, oracles = E.queries(), E.oracle_sql()
+    unmatched = [p for p in only
+                 if not any(fnmatch.fnmatchcase(name, p) for name in qs)]
     failed = []
+    ran = 0
     t_all = time.time()
     for name, fn in qs.items():
         if only and not any(fnmatch.fnmatchcase(name, p) for p in only):
             continue
+        ran += 1
         t0 = time.time()
         try:
             df = fn(spark, sf)
@@ -110,9 +115,12 @@ def main() -> int:
         else:
             print(f"PASS  {name}: rows={len(sr)} cols={sc} ({dt:.1f}s)")
     spark.stop()
-    print(f"\ntotal {time.time() - t_all:.1f}s")
+    print(f"\ntotal {time.time() - t_all:.1f}s, {ran} entries ran")
+    if unmatched:
+        print(f"{len(unmatched)} pattern(s) matched no entry: {unmatched}")
     if failed:
         print(f"{len(failed)} FAILED: {failed}")
+    if unmatched or failed:
         return 1
     print("ALL PASS")
     return 0

@@ -127,13 +127,40 @@ def test_filtered_search(embeddings, ivfpq):
     assert labels and all(l <= 5 for l in labels)
 
 
-def test_assign_to_ivf_matches_nearest_centroid(spark, embeddings):
-    """Incremental assignment must give every appended row its true
-    nearest centroid (numpy cross-check), and full-probe search over the
-    merged index must equal the exact scan over the merged corpus."""
-    import numpy as np
+def _nearest(V, C):
+    """NumPy reference of the one assignment rule: the argmin of
+    ‖c‖² − 2·v·cᵀ in float64, first (lowest) index on ties."""
+    V = np.asarray(V, dtype=np.float64)
+    return ((C * C).sum(axis=1)[None, :] - 2.0 * V @ C.T).argmin(axis=1)
 
-    from qdrant_spark.operators.ann import assign_to_ivf, build_ivf, ivf_search
+
+def _assigned_rows(frame):
+    """(vectors, __cluster) of an assigned frame, in vec_id order."""
+    rows = frame.select("embedding", "__cluster").orderBy("vec_id").collect()
+    return (np.array([list(r[0]) for r in rows], dtype=np.float64),
+            np.array([r[1] for r in rows]))
+
+
+def _tie_row(spark, vec_id, C, a, b):
+    """One row halfway between centroids ``a`` and ``b`` (double vector,
+    so the midpoint is not rounded to float)."""
+    return spark.createDataFrame(
+        [(vec_id, [float(x) for x in (C[a] + C[b]) / 2], 0)],
+        "vec_id long, embedding array<double>, label int")
+
+
+def test_assign_to_ivf_matches_nearest_centroid(spark, embeddings,
+                                                monkeypatch):
+    """One assignment rule on every path: the driver-side fit, the MLlib
+    fit (``IVF_DRIVER_FIT_MAX_ELEMS = 0``), the incremental append (with
+    a row equidistant from two centroids) and a rebalance split each give
+    every row the centroid of the NumPy argmin of ‖c‖² − 2·v·cᵀ, first
+    index on ties; and full-probe search over the merged index equals the
+    exact scan over the merged corpus."""
+    from qdrant_spark.operators import ann
+    from qdrant_spark.operators.ann import (
+        assign_to_ivf, build_ivf, cluster_sizes, ivf_search, rebalance_ivf,
+    )
 
     base = embeddings.where("vec_id < 400")
     newer = embeddings.where("vec_id >= 400").withColumn(
@@ -141,21 +168,33 @@ def test_assign_to_ivf_matches_nearest_centroid(spark, embeddings):
     )
     idx = build_ivf(base, n_clusters=8, vec_col="embedding", id_col="vec_id",
                     seed=3)
-    merged = assign_to_ivf(idx, newer)
-    assert merged.assigned.count() == embeddings.count()
-
-    got = {
-        r.vec_id: r["__cluster"]
-        for r in merged.assigned.where("vec_id >= 10000").collect()
+    appended = newer.unionByName(_tie_row(spark, 99_999, idx.centroids, 2, 5))
+    merged = assign_to_ivf(idx, appended)
+    assert merged.assigned.count() == embeddings.count() + 1
+    with monkeypatch.context() as m:
+        m.setattr(ann, "IVF_DRIVER_FIT_MAX_ELEMS", 0)
+        mllib = build_ivf(base, n_clusters=8, vec_col="embedding",
+                          id_col="vec_id", seed=3)
+    cases = {
+        "driver fit": (idx.assigned, idx.centroids),
+        "mllib fit": (mllib.assigned, mllib.centroids),
+        "append": (merged.assigned.where("vec_id >= 10000"), idx.centroids),
     }
-    cents = idx.centroids
-    for r in newer.collect():
-        v = np.array(r.embedding, dtype=float)
-        want = int(((cents - v) ** 2).sum(axis=1).argmin())
-        assert got[r.vec_id] == want
+    for name, (frame, C) in cases.items():
+        V, got = _assigned_rows(frame)
+        assert (got == _nearest(V, C)).all(), name
+
+    # split the one largest cluster: its rows take the fresh ids after the
+    # 7 kept clusters, by the same rule over its sub-centroids
+    sizes = sorted(r.n for r in cluster_sizes(idx).collect())
+    assert sizes[-1] > sizes[-2]
+    reb = rebalance_ivf(idx, max_cluster_size=sizes[-1] - 1, seed=1)
+    V, got = _assigned_rows(reb.assigned.where("__cluster >= 7"))
+    assert len(got) == sizes[-1]
+    assert (got == 7 + _nearest(V, reb.centroids[7:])).all()
 
     q = list(embeddings.limit(1).collect()[0]["embedding"])
-    union = base.unionByName(newer)
+    union = base.unionByName(appended)
     exact = [
         r.vec_id
         for r in knn(union, q, metric="cosine", k=10, vec_col="embedding",
@@ -312,18 +351,50 @@ def test_rebalance_ivf_noop_when_balanced(spark):
 def test_ivf_pq_from_codebooks_matches_build(spark, embeddings, ivfpq):
     """Sampled-train / full-encode split: encoding a corpus against the
     build's frozen centroids+codebooks must reproduce the build's own
-    cluster ids and PQ codes exactly (same argmin, same encoder)."""
+    cluster ids and PQ codes exactly (same argmin, same encoder); every
+    row, one equidistant from two centroids included, takes the NumPy
+    nearest centroid and ``quantize.pq_codes`` of its residual."""
     from qdrant_spark.operators.ann import ivf_pq_from_codebooks
+    from qdrant_spark.operators.quantize import pq_codes
 
+    C = ivfpq.centroids
     re_enc = ivf_pq_from_codebooks(
-        embeddings, ivfpq.centroids, ivfpq.codebooks,
-        vec_col="embedding", id_col="vec_id",
+        embeddings.unionByName(_tie_row(spark, 99_999, C, 1, 6)),
+        C, ivfpq.codebooks, vec_col="embedding", id_col="vec_id",
     )
     want = {r["vec_id"]: (r["__cluster"], list(r["__pq"]))
             for r in ivfpq.assigned.collect()}
-    got = {r["vec_id"]: (r["__cluster"], list(r["__pq"]))
-           for r in re_enc.assigned.collect()}
+    rows = re_enc.assigned.orderBy("vec_id").collect()
+    got = {r["vec_id"]: (r["__cluster"], list(r["__pq"])) for r in rows}
+    del got[99_999]  # the tie row: not in the build
     assert got == want
+
+    V = np.array([list(r["embedding"]) for r in rows], dtype=np.float64)
+    cl = np.array([r["__cluster"] for r in rows])
+    assert (cl == _nearest(V, C)).all()
+    codes = np.array([list(r["__pq"]) for r in rows], dtype=np.int8)
+    assert np.array_equal(codes, pq_codes(V - C[cl], ivfpq.codebooks))
+
+
+def test_ivf_from_centroids_rejects_wrong_dimension(spark):
+    """A vector whose length differs from the centroids' fails the
+    assignment with both dimensions named — it is not put in cluster 0.
+    Well-formed rows assign, a row exactly halfway between the two
+    centroids to the lower id."""
+    from qdrant_spark.operators.ann import ivf_from_centroids
+
+    C = np.array([[0.0, 0.0, 0.0], [10.0, 10.0, 10.0]])
+    schema = "id long, vec array<double>"
+    ok = spark.createDataFrame([(1, [9.0, 9.0, 9.0]), (2, [5.0, 5.0, 5.0])],
+                               schema)
+    got = {r.id: r["__cluster"]
+           for r in ivf_from_centroids(ok, C).assigned.collect()}
+    assert got == {1: 1, 2: 0}
+    for vec in ([9.0, 9.0], [9.0, 9.0, 9.0, 9.0]):
+        bad = spark.createDataFrame([(3, vec)], schema)
+        with pytest.raises(Exception, match=f"a vector has {len(vec)} "
+                           "dimensions but the centroids have 3"):
+            ivf_from_centroids(bad, C).assigned.collect()
 
 
 def test_assign_to_ivf_pq_appends_and_searches(spark, embeddings, ivfpq):

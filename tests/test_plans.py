@@ -6,6 +6,8 @@ join, a top-k that became a global sort) fails CI, not a 100 TB run.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -281,19 +283,27 @@ def test_ivf_pq_coarse_reads_only_code_columns(embeddings, tmp_path):
     assert reads and all("embedding" not in l for l in reads)
 
 
-def test_incremental_ivf_assignment_is_map_only(embeddings):
-    """assign_to_ivf is the live-ingest path: nearest-centroid must be a
-    codegen'd literal argmin — no shuffle, no python workers."""
-    from qdrant_spark.operators.ann import assign_to_ivf, build_ivf
+def test_incremental_ivf_assignment_is_map_only(embeddings, tmp_path):
+    """assign_to_ivf is the live-ingest path: appending to a persisted
+    index is map-only (no shuffle), and the nearest-centroid kernel is
+    ONE Arrow eval fed only the vector column — payload columns never
+    cross into Python."""
+    from qdrant_spark.operators.ann import (
+        assign_to_ivf, build_ivf, persist_ivf,
+    )
 
-    idx = build_ivf(embeddings.where("vec_id < 100"), n_clusters=4,
-                    vec_col="embedding", id_col="vec_id", seed=3)
+    idx = persist_ivf(
+        build_ivf(embeddings.where("vec_id < 100"), n_clusters=4,
+                  vec_col="embedding", id_col="vec_id", seed=3),
+        str(tmp_path / "ivf"))
     newer = embeddings.where("vec_id >= 100")
     merged = assign_to_ivf(idx, newer)
-    # plan of just the newly-assigned branch
-    new_branch = merged.assigned.where("vec_id >= 100")
-    plan = _plan(new_branch, "simple")
-    assert "EvalPython" not in plan
+    plan = _plan(merged.assigned, "simple")
+    assert "Exchange" not in plan
+    evals = [l for l in plan.splitlines() if "EvalPython" in l]
+    assert len(evals) == 1
+    assert re.search(r"ArrowEvalPython \[\w+\(embedding#\d+\)#\d+\]",
+                     evals[0]), evals[0]
 
 
 def test_repetition_signals_zero_exchange(spark):

@@ -140,3 +140,19 @@ def test_local_df_propagates_other_errors(spark, monkeypatch):
     monkeypatch.setattr(spark, "createDataFrame", broken)
     with pytest.raises(RuntimeError, match="boom"):
         local_df(spark, [(1, 2.0)], "id long, x double")
+
+
+@pytest.mark.parametrize("gib, want", [
+    (15, "6144m"),    # a 15 GiB box: 40 %
+    (256, "49152m"),  # capped at 48g
+    (1, "512m"),      # never under 512m
+])
+def test_default_driver_memory_sized_from_box(monkeypatch, gib, want):
+    """Without ``SPARK_GRAFT_DRIVER_MEM`` the driver heap is 40 % of
+    physical memory, capped at 48g — not a fixed 48g that outgrows a
+    small box."""
+    from qdrant_spark import session
+
+    pages = {"SC_PAGE_SIZE": 4096, "SC_PHYS_PAGES": gib * (1 << 30) // 4096}
+    monkeypatch.setattr(session.os, "sysconf", pages.__getitem__)
+    assert session._default_driver_memory() == want
