@@ -43,7 +43,7 @@ import os
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -55,7 +55,7 @@ from qdrant_spark.catalog import (
 from qdrant_spark.filters import apply_filter
 from qdrant_spark.operators import mutate as M
 from qdrant_spark.operators import points as P
-from qdrant_spark.query import QueryPlanner
+from qdrant_spark.query import QueryPlanner, _Hits
 from qdrant_spark.schema import VectorConfig
 from qdrant_spark.session import local_df
 
@@ -1149,14 +1149,11 @@ class QdrantSparkClient:
             cols = [c for c in cols if c in set(with_payload)]
         return {c: row[c] for c in cols if c in row and row[c] is not None}
 
-    def _rows_as_dicts(self, df: DataFrame) -> list[dict]:
-        """The frame's rows as dicts; a driver-side result frame
-        (``_qs_local_rows``, e.g. a fused query's hits) is read without a
-        collect."""
-        local = getattr(df, "_qs_local_rows", None)
-        rows = df.collect() if local is None \
-            else [Row(*df.columns)(*r) for r in local]
-        return [r.asDict(recursive=True) for r in rows]
+    def _rows_as_dicts(self, res: DataFrame | _Hits) -> list[dict]:
+        """The rows of a frame, or of a plan's driver-side hits
+        (:class:`~qdrant_spark.query._Hits`, read without a job), as
+        dicts."""
+        return [r.asDict(recursive=True) for r in res.collect()]
 
     def _needed_cols(self, col: _Collection,
                      with_payload: bool | list[str] | dict,
@@ -1791,7 +1788,8 @@ class QdrantSparkClient:
             payload=self._payload_out(col, r, with_payload),
             vector=self._vector_out(col, r, with_vectors))
 
-    def _hydrate(self, col: _Collection, scored: DataFrame, need: list[str],
+    def _hydrate(self, col: _Collection, scored: DataFrame | _Hits,
+                 need: list[str],
                  *, with_payload: bool | list[str] | dict,
                  with_vectors: bool | list[str],
                  direction: bool | None = None,
@@ -1878,7 +1876,7 @@ class QdrantSparkClient:
             # through it would leak other shards' points — shard-scoped
             # requests stay exact over the routed partition directories
             planner.indexes = {}
-        scored = planner.plan(req)
+        scored = planner._plan(req)
         out = self._hydrate(col, scored, need, with_payload=with_payload,
                             with_vectors=with_vectors,
                             direction=planner.last_plan_direction,
@@ -1941,7 +1939,7 @@ class QdrantSparkClient:
         need = self._hydration_cols(col, [(with_payload, with_vectors)],
                                     extra=(group_by,))
         planner.carry = self._carry(need)
-        rows = self._rows_as_dicts(planner.plan(req))
+        rows = self._rows_as_dicts(planner._plan(req))
         lookup = self._lookup(col, rows, need)
         if lookup is not None:  # the group field of every hit, by id
             rows = [dict(r, **{group_by: lookup.get(r["id"], {}).get(group_by)})
@@ -1984,7 +1982,7 @@ class QdrantSparkClient:
             check_strict_mode({}, cfg,
                               indexed_fields=self._indexed_fields(col.name),
                               batch=requests)
-        from qdrant_spark.query import query_batch
+        from qdrant_spark.query import _plan_batch
 
         norm = []
         for r in requests:
@@ -1999,8 +1997,6 @@ class QdrantSparkClient:
             self._check_strict(col.name, n)
             self._check_dims(col, n, col.vec_col(""))
             norm.append(n)
-        registry = {n: cc.df for n, cc in self._colls.items()
-                    if cc.df is not None}
         selections = [(r.get("with_payload", True),
                        r.get("with_vector", r.get("with_vectors", False)))
                       for r in requests]
@@ -2009,14 +2005,9 @@ class QdrantSparkClient:
         # assembled from the one collected union, each in its own plan
         # order and payload selection
         need = self._hydration_cols(col, selections)
-        tagged = query_batch(col.df, norm, id_col="id",
-                             vec_col=col.vec_col(""),
-                             metric=col.metric_for(None),
-                             collections=registry,
-                             metrics=col.metrics_map(),
-                             indexes=col.indexes_map(),
-                             carry=list(self._carry(need)))
-        rows = self._rows_as_dicts(tagged)
+        planner = self._planner(col, None)
+        planner.carry = self._carry(need)
+        rows = self._rows_as_dicts(_plan_batch(planner, norm))
         lookup = self._lookup(col, rows, need)
         by_idx: dict[int, list] = {}
         for r in rows:

@@ -48,11 +48,11 @@ from pyspark.sql import functions as F
 DEFAULT_LIMIT = 10  # collection_query.rs:51
 MAX_DEPTH = 64
 
-#: Corpus-size cutoff (Catalyst plan stats) below which sibling-leg fusion
-#: is NOT worth it: the fused path adds ~2 fixed job round-trips (batched
-#: leaf job + local-relation fusion job), which only pay off once one
-#: SAVED corpus scan costs more than that. Measured on local[32]: a 2k-row
-#: cached corpus is ~1.3s WORSE fused (fixed overhead, nothing saved); a
+#: Corpus-size cutoff (Catalyst plan stats) below which exact dense
+#: fusion (query_batch requests and prefetch siblings) is NOT worth it:
+#: the fused path adds fixed job round-trips, which only pay off once
+#: one SAVED corpus scan costs more than that. Measured on local[32]: a
+#: 2k-row cached corpus is ~1.3s WORSE fused (fixed overhead, nothing saved); a
 #: 512k-row parquet corpus saves a full ~1s scan per extra leg. NOTE the
 #: stat is COMPRESSED scan bytes for file sources (parquet compresses
 #: float vectors 2-6x), so the cutoff sits well below the raw-bytes
@@ -98,6 +98,32 @@ class _Route(NamedTuple):
     vec_col: str
     handles: tuple
     target: Any
+
+
+class _Hits(NamedTuple):
+    """A bounded finish held on the driver: ``rows`` of ``schema`` (id and
+    score first, then any carried columns), best first in the score
+    direction ``larger`` (True = score desc, False = score asc, None = a
+    batch of several requests), ties id asc. Fused batch groups, fusion
+    roots and query_batch's all-local collapse return one; it becomes a
+    DataFrame only through :func:`_local_result_df`, where a caller needs
+    a frame."""
+
+    schema: Any
+    rows: list
+    larger: bool | None
+
+    @property
+    def columns(self) -> list[str]:
+        return self.schema.fieldNames()
+
+    def collect(self) -> list:
+        """The rows as :class:`~pyspark.sql.Row` s, as a frame's
+        ``collect()`` returns them, without a job."""
+        from pyspark.sql import Row
+
+        row = Row(*self.columns)
+        return [row(*r) for r in self.rows]
 
 
 def _crossover_ok(handle, default: int, corpus: DataFrame) -> bool:
@@ -149,12 +175,14 @@ class QueryPlanner:
       MaxSim leaves run coarse-over-token-codes + exact rescore.
 
     ``fuse_min_bytes`` (default :data:`FUSE_MIN_BYTES`) is the corpus
-    size from which sibling exact dense prefetch leaves share one scan
-    (:meth:`_fused_leaves`). Every fusion root finishes on the driver
-    (:meth:`_fuse_root`). Between plans a caller sets :attr:`carry` and
-    :attr:`emit_rank` and reads :attr:`last_plan_info`,
-    :attr:`last_plan_direction` and :attr:`last_plan_rank_col`; each is
-    documented where ``__init__`` sets it. A planner holds no Spark
+    size from which exact dense requests sharing a filter share one scan
+    (:meth:`_fused_leaves`); query_batch requests and prefetch siblings
+    group through the same :func:`_fuse_batch`. Every fusion root
+    finishes on the driver (:meth:`_fuse_root`). Between plans a caller
+    sets :attr:`carry` and :attr:`emit_rank` and reads
+    :attr:`last_plan_info`, :attr:`last_plan_direction` and
+    :attr:`last_plan_rank_col`; each is documented where ``__init__``
+    sets it. A planner holds no Spark
     resources, so there is nothing to release after a plan."""
 
     def __init__(self, points: DataFrame, *, id_col: str = "id",
@@ -193,10 +221,10 @@ class QueryPlanner:
         self._vec_cache: dict[tuple, list] = {}
         self.full_scan_threshold = full_scan_threshold
         self._index_totals: dict[str, int] = {}
-        #: diagnostics from the last plan(): how many sibling prefetch
-        #: groups were fused into a single shared scan (see _plan_children)
-        #: and whether the fusion root read every leg without a collect
-        #: (``driver_fused_root``, see _fuse_root)
+        #: diagnostics from the last plan(): how many exact dense groups
+        #: and legs shared one scan, the other batch groups' counters
+        #: (see _BATCH_GROUPS) and whether the fusion root read every leg
+        #: without a collect (``driver_fused_root``, see _fuse_root)
         self.last_plan_info: dict[str, int] = {"fused_groups": 0,
                                                "fused_legs": 0,
                                                "driver_fused_root": 0}
@@ -279,6 +307,18 @@ class QueryPlanner:
     def plan(self, request: dict[str, Any]) -> DataFrame:
         """Returns (id, score) best-first, limited — followed by the
         :attr:`carry` columns when the root's route carries them."""
+        return self._frame(self._plan(request))
+
+    def _frame(self, res: DataFrame | _Hits) -> DataFrame:
+        """A plan result as a DataFrame: driver-side hits become one
+        local frame (:func:`_local_result_df`)."""
+        if isinstance(res, DataFrame):
+            return res
+        return _local_result_df(self.points.sparkSession, res)
+
+    def _plan(self, request: dict[str, Any]) -> DataFrame | _Hits:
+        """:meth:`plan` without the final conversion: a bounded finish
+        stays driver-side hits, which the client reads directly."""
         self._vec_cache = self._batch_resolve_ids(request)
         # Exclude all same-collection referenced point ids (root and
         # nested) by merging a must_not/has_id into the ROOT filter —
@@ -293,7 +333,7 @@ class QueryPlanner:
             request["filter"] = merge_filters(
                 {"must_not": [{"has_id": sorted(self._self_refs, key=str)}]},
                 request.get("filter"))
-        # reset ONCE per plan; _plan_children accumulates (+=) so the
+        # reset ONCE per plan; the batch groups accumulate (+=) so the
         # diagnostics cover every prefetch level of a nested tree, not
         # just the innermost one (r5 ADVICE)
         self.last_plan_info = {"fused_groups": 0, "fused_legs": 0,
@@ -360,7 +400,7 @@ class QueryPlanner:
     # -- internals ----------------------------------------------------------
 
     def _node(self, req: dict[str, Any], depth: int,
-              carry: tuple[str, ...] = ()) -> DataFrame:
+              carry: tuple[str, ...] = ()) -> DataFrame | _Hits:
         """The plan of one request node; ``carry`` (see :attr:`carry`)
         reaches the node's top-k where its route can hold the columns."""
         if depth > MAX_DEPTH:
@@ -452,19 +492,19 @@ class QueryPlanner:
                     else "asc") == "desc"
         return None  # mmr / sample: order exists only in the plan
 
-    # -- shared-scan prefetch fusion ----------------------------------------
+    # -- shared-scan batch groups -------------------------------------------
     #
-    # Sibling prefetch leaves that share (source, filter, vector column)
-    # would each run a full corpus scan; the reference batches exactly
-    # these into one leaf-search pass (PlannedQuery merges prefetches into
-    # a single batch, lib/shard/src/query/planned_query.rs:17-60). The
-    # Spark analogue: ONE block-matmul kernel scan over the shared
-    # filtered corpus (every leg scored against each Arrow batch in one
-    # BLAS call) whose per-partition candidates merge on the driver, then
-    # the tiny per-leg top-k result set (<= legs * (limit+offset) rows) is
-    # split into per-child frames. The split materializes the batch
-    # result (a bounded collect, same class as _batch_resolve_ids) so the
-    # fused scan runs exactly once, as one Spark job.
+    # Sibling leaves that share a route and vector column would each run
+    # a full corpus scan; the reference batches exactly these into one
+    # leaf-search pass (PlannedQuery merges prefetches into a single
+    # batch, lib/shard/src/query/planned_query.rs:17-60). query_batch
+    # requests and prefetch siblings group through ONE grouper
+    # (_fuse_batch): each group runs one scan per route kind (exact dense:
+    # one block-matmul kernel scan of the shared filtered corpus) whose
+    # per-partition candidates merge on the driver, and each leg's
+    # bounded top-k stays there as driver-side hits (_Hits) in the
+    # direction of its scores, for the fusion root or the batch collapse
+    # to read without another job.
 
     @staticmethod
     def _leaf_exact(req: dict[str, Any]) -> bool:
@@ -628,20 +668,6 @@ class QueryPlanner:
             return None
         return rt
 
-    def _fusable_leaf(self, req: dict[str, Any]) -> tuple | None:
-        """(vec_col, filter key) when this request's route is the exact
-        dense scan, so it can share one scan with its siblings, else
-        None. Index-routed leaves keep their own plan: fusing would
-        silently upgrade approximate legs to exact ones, and change
-        VALUES for rescore=false quantized requests."""
-        rt = self._batch_route(req)
-        if rt is None or rt.kind != "dense":
-            return None
-        import json
-
-        return (rt.vec_col,
-                json.dumps(req.get("filter"), sort_keys=True, default=str))
-
     def _fusion_worthwhile(self) -> bool:
         """Size-dispatch: fusing only pays once one saved corpus scan
         outweighs the fused path's fixed job overhead (FUSE_MIN_BYTES)."""
@@ -653,52 +679,34 @@ class QueryPlanner:
 
     def _plan_children(self, children: list[dict], depth: int,
                        carry: tuple[str, ...] = ()) -> tuple[list, list]:
-        """Each child's plan and the direction its scores are ordered in
-        (see :meth:`_direction_of`): sibling exact dense leaves that
-        share a scan fuse (:meth:`_fused_leaves`), the rest plan alone."""
-        from qdrant_spark.operators.knn import larger_is_better
-
-        groups: dict[tuple, list[int]] = {}
-        if self._fusion_worthwhile():
-            for i, c in enumerate(children):
-                key = self._fusable_leaf(c)
-                if key is not None:
-                    groups.setdefault(key, []).append(i)
-        out: list[DataFrame | None] = [None] * len(children)
-        orders: list[bool | None] = [None] * len(children)
-        fused_groups = fused_legs = 0
-        for key, idxs in groups.items():
-            if len(idxs) < 2:
-                continue
-            legs = self._fused_leaves(children, idxs, key[0])
-            if legs is None:
-                continue
-            for i, df in zip(idxs, legs):
-                out[i] = df
-                orders[i] = larger_is_better(self.metric_for(key[0]))
-            fused_groups += 1
-            fused_legs += len(idxs)
-        self.last_plan_info["fused_groups"] += fused_groups
-        self.last_plan_info["fused_legs"] += fused_legs
+        """Each child's result and the direction its scores are ordered
+        in: siblings that share a batchable route answer as one group
+        (:func:`_fuse_batch`, the grouper query_batch uses) in the
+        direction their group ran, the rest plan alone (see
+        :meth:`_direction_of`)."""
+        out: list = [None] * len(children)
+        _fuse_batch(self, children, out)
+        orders: list[bool | None] = []
         for i, c in enumerate(children):
             if out[i] is None:
                 out[i] = self._node(c, depth + 1, carry)
-                orders[i] = self.last_plan_direction
+                orders.append(self.last_plan_direction)
+            else:
+                orders.append(out[i].larger)
         return out, orders
 
     def _fused_leaves(self, requests: list[dict], idxs: list[int],
-                      vec_col: str, as_rows: bool = False) -> list | None:
+                      vec_col: str) -> list[_Hits] | None:
         """The exact dense legs ``requests[i]`` for ``i`` in ``idxs``,
         sharing (vector column, filter), as ONE Spark job: the
         block-matmul kernel (``knn._matmul_knn``) scores every leg per
         Arrow batch, :func:`~qdrant_spark.operators.knn.collect_topk`
         merges the per-partition candidates on the driver, and each leg
-        is sliced out of the query-major result. Returns one local result
-        per leg (``_RowsLeg`` with ``as_rows``), best first in the
-        metric's direction. Returns None when the legs' combined top-k
-        exceeds :data:`FUSED_COLLECT_MAX`: the caller then plans each leg
-        alone. Raises ValueError when the legs' query vectors differ in
-        dimension."""
+        is sliced out of the query-major result. Returns each leg's
+        hits, best first in the metric's direction. Returns None when the
+        legs' combined top-k exceeds :data:`FUSED_COLLECT_MAX`: the
+        caller then plans each leg alone. Raises ValueError when the
+        legs' query vectors differ in dimension."""
         import numpy as np
 
         from qdrant_spark.filters import apply_filter
@@ -709,7 +717,6 @@ class QueryPlanner:
         k = max(_leg_k(r) for r in reqs)
         if len(reqs) * k > FUSED_COLLECT_MAX:
             return None
-        spark = self.points.sparkSession
         metric = self.metric_for(vec_col)
         targets = [[float(x) for x in
                     self._resolve_vector_input(r["query"]["nearest"], r)]
@@ -733,12 +740,8 @@ class QueryPlanner:
         hits = _split_hits(collect_topk(res, FUSED_COLLECT_MAX),
                            range(len(reqs)))
         schema = self._hit_schema()
-        # query_batch collapses all-local legs into ONE frame (as_rows
-        # skips the per-leg createDataFrame roundtrip entirely); a fusion
-        # root reads the local frames' rows without a job
-        return [_RowsLeg(schema, kept) if as_rows
-                else _local_result_df(spark, kept, schema)
-                for kept in (_leg_hits(r, h, lb) for r, h in zip(reqs, hits))]
+        return [_Hits(schema, _leg_hits(r, h, lb), lb)
+                for r, h in zip(reqs, hits)]
 
     # -- VectorInput id resolution ------------------------------------------
 
@@ -1130,23 +1133,23 @@ class QueryPlanner:
             return out
         raise ValueError(f"unsupported leaf query: {query!r}")
 
-    def _fuse_root(self, fusion: str, children: list[DataFrame],
+    def _fuse_root(self, fusion: str, children: list,
                    directions: list[bool | None], limit: int,
-                   carry: tuple[str, ...] = ()) -> DataFrame:
+                   carry: tuple[str, ...] = ()) -> _Hits:
         """RRF / DBSF of a fusion root, finished on the driver, as
         qdrant fuses each prefetch's globally merged list at collection
         level (RescoreStages, planned_query.rs:62-101). Every leg is a
-        bounded top-k: a leg that is already local (a fused leaf, a
-        nested fusion root) gives its rows (``_qs_local_rows``), any
-        other leg is collected, several as overlapped jobs from a small
-        thread pool. Each leg ranks best first in the direction its
-        scores are ordered in (``directions``, from :meth:`_plan_children`;
-        score desc for a leg ordered only in its plan, MMR or sample),
-        ties id asc — what :func:`~qdrant_spark.operators.fusion.rrf` /
-        ``dbsf`` compute with ``orders`` — and ``dbsf_hits`` negates
-        smaller-is-better scores. The result is local and carries
-        ``carry`` when every leg did; ``driver_fused_root`` is 1 when no
-        leg was collected."""
+        bounded top-k: a leg that is already driver-side hits (a batch
+        group's leg, a nested fusion root) gives its rows, any other leg
+        is collected, several as overlapped jobs from a small thread
+        pool. Each leg ranks best first in the direction its scores are
+        ordered in (``directions``, from :meth:`_plan_children`; score
+        desc for a leg ordered only in its plan, MMR or sample), ties id
+        asc — what :func:`~qdrant_spark.operators.fusion.rrf` / ``dbsf``
+        compute with ``orders`` — and ``dbsf_hits`` negates
+        smaller-is-better scores. The result is driver-side hits, score
+        desc, carrying ``carry`` when every leg did; ``driver_fused_root``
+        is 1 when no leg was collected."""
         from concurrent.futures import ThreadPoolExecutor
 
         from pyspark import inheritable_thread_target
@@ -1159,7 +1162,7 @@ class QueryPlanner:
         orders = [d is not False for d in directions]
         carried = [bool(carry) and set(carry) <= set(c.columns)
                    for c in children]
-        rows = [getattr(c, "_qs_local_rows", None) for c in children]
+        rows = [c.rows if isinstance(c, _Hits) else None for c in children]
         todo = [i for i, r in enumerate(rows) if r is None]
 
         def collect(i: int) -> list:
@@ -1188,13 +1191,15 @@ class QueryPlanner:
             fused = [(i, sc, *by_id[i]) for i, sc in fused]
             schema = T.StructType(schema.fields + [
                 self.points.schema[c] for c in carry])
-        return _local_result_df(spark, fused, schema)
+        return _Hits(schema, fused, True)
 
-    def _rescore(self, query: Any, children: list[DataFrame],
+    def _rescore(self, query: Any, children: list,
                  req: dict[str, Any], limit: int,
                  depth: int = 0, carry: tuple[str, ...] = ()) -> DataFrame:
         """A nearest / formula / mmr / order_by root over its children's
-        candidates; fusion roots finish in :meth:`_fuse_root`."""
+        candidates, joined as frames; fusion roots finish in
+        :meth:`_fuse_root`."""
+        children = [self._frame(c) for c in children]
         # merge children candidate ids (dedup), then re-score
         merged = children[0].select(self.id_col)
         for c in children[1:]:
@@ -1325,15 +1330,13 @@ def _emit_legs(planner: "QueryPlanner", requests: list[dict[str, Any]],
                hits: dict[int, list], outs: list,
                larger: dict[int, bool] | None = None) -> None:
     """Per-request finish of a fused batch group (:func:`_leg_hits`) into
-    a local frame, in the direction of the returned scores
+    driver-side hits, in the direction of the returned scores
     (``larger[i]``; default larger-better, as for sparse dot and
     MaxSim)."""
-    spark = planner.points.sparkSession
     schema = planner._hit_schema()
     for i, h in hits.items():
         lg = True if larger is None else larger[i]
-        outs[i] = _local_result_df(spark, _leg_hits(requests[i], h, lg),
-                                   schema)
+        outs[i] = _Hits(schema, _leg_hits(requests[i], h, lg), lg)
 
 
 def _fuse_dense(planner: "QueryPlanner", requests: list[dict[str, Any]],
@@ -1344,7 +1347,7 @@ def _fuse_dense(planner: "QueryPlanner", requests: list[dict[str, Any]],
     reference's batch dispatch special-cases exactly this, dispatch.rs
     batch path / the PlannedQuery leaf merge). Declines over
     :data:`FUSED_COLLECT_MAX`."""
-    legs = planner._fused_leaves(requests, idxs, vc, as_rows=True)
+    legs = planner._fused_leaves(requests, idxs, vc)
     if legs is None:
         return False
     for i, leg in zip(idxs, legs):
@@ -1496,33 +1499,35 @@ def _fuse_maxsim(planner: "QueryPlanner", requests: list[dict[str, Any]],
     return True
 
 
-class _RowsLeg(NamedTuple):
-    """A batch leg held as driver-side rows instead of a DataFrame —
-    produced by ``_fused_leaves(as_rows=True)`` so query_batch's
-    all-local fast path never pays the per-leg createDataFrame."""
+def _local_result_df(spark, hits: _Hits) -> DataFrame:
+    """Driver-side hits as ONE single-partition DataFrame — the only
+    place they become a frame: the public plan / query_batch boundary
+    and :meth:`QueryPlanner._rescore`'s joins. Rows go through the Arrow
+    local relation (:func:`~qdrant_spark.session.local_df`'s path), so a
+    collect of the frame runs no job; rows holding a NaN (Arrow's pandas
+    conversion would turn it into NULL) and shapes Arrow rejects take a
+    one-slice RDD instead, and an Arrow frame that is not local (Arrow
+    off, or over the local-relation size threshold) is coalesced to one
+    slice. ``spark.createDataFrame(list)`` would cut defaultParallelism
+    slices: a 64-request batch unioned ~2048 near-empty tasks, ~10 s of
+    scheduler overhead on the batched-composed bench line."""
+    import pandas as pd
+    import pyarrow as pa
 
-    schema: Any
-    rows: list
+    from qdrant_spark.session import has_nan
 
-
-def _local_result_df(spark, rows: list, schema) -> DataFrame:
-    """A ≤limit-row local result as a SINGLE-partition DataFrame.
-    ``spark.createDataFrame(list)`` defaults to defaultParallelism
-    slices, so a 64-request batch unioned ~2048 near-empty tasks —
-    ~10s of pure scheduler overhead on the batched-composed bench line
-    before this. The driver-side rows ride along on the DataFrame
-    (``_qs_local_rows``) so query_batch can collapse an all-local batch
-    into ONE local frame instead of a 64-way union (r12: the union's 64
-    one-row tasks plus 64 createDataFrame roundtrips measured ~1.4s of
-    the default fused batch's 2.9s)."""
-    from qdrant_spark.session import local_df
-
-    df = local_df(spark, rows, schema)
-    if not df.isLocal():  # arrow-rejected shape: keep the 1-slice RDD
-        df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 1),
-                                   schema)
-    df._qs_local_rows = [tuple(r) for r in rows]
-    return df
+    rows = [tuple(r) for r in hits.rows]
+    if not has_nan(rows):
+        try:
+            df = spark.createDataFrame(
+                pd.DataFrame(rows, columns=hits.columns, dtype=object),
+                schema=hits.schema)
+        except (pa.ArrowException, TypeError, ValueError):
+            pass
+        else:
+            return df if df.isLocal() else df.coalesce(1)
+    return spark.createDataFrame(spark.sparkContext.parallelize(rows, 1),
+                                 hits.schema)
 
 
 def _quant_params(req: dict[str, Any],
@@ -1734,12 +1739,14 @@ _BATCH_GROUPS = {
 
 def _fuse_batch(planner: "QueryPlanner", requests: list[dict[str, Any]],
                 outs: list) -> None:
-    """Fill ``outs`` for every group of >=2 requests that share a
-    batchable route (:meth:`QueryPlanner._batch_route`) and vector column
-    — exact dense legs also share a filter, and group only when fusion
-    pays (:meth:`QueryPlanner._fusion_worthwhile`) — through the kind's
-    fused batch function, value-identical per request to planning each
-    alone. A function that declines (its collect would exceed
+    """Fill ``outs`` with driver-side hits (:class:`_Hits`) for every
+    group of >=2 requests — query_batch requests or one node's prefetch
+    siblings — that share a batchable route
+    (:meth:`QueryPlanner._batch_route`) and vector column — exact dense
+    legs also share a filter, and group only when fusion pays
+    (:meth:`QueryPlanner._fusion_worthwhile`) — through the kind's fused
+    batch function, value-identical per request to planning each alone.
+    A function that declines (its collect would exceed
     :data:`FUSED_COLLECT_MAX`) leaves its requests to per-request plans."""
     import json
 
@@ -1782,21 +1789,24 @@ def query_batch(
 
     Requests may differ arbitrarily (prefetch trees, filters, fusion), so
     each compiles to its own sub-plan — EXCEPT single-leaf nearest
-    requests that share a route and vector column (:func:`_fuse_batch`):
-    exact dense legs sharing a filter run ONE corpus scan through the
-    block-matmul kernel, as ONE Spark job whose per-partition top-k
-    candidates merge on the driver (the reference's batch dispatch
-    special-cases exactly this, dispatch.rs batch path / the PlannedQuery
-    leaf merge; its coordinator merges per-segment top-k the same way);
-    unfiltered legs on an indexed sparse column, a quantized or composed
-    dense column, or a multivector column share one scan per route kind,
-    the dense quantized ones with the same driver merge. The legs of one
-    fused dense group must share a query dimension (ValueError names the
+    requests that share a route and vector column (:func:`_fuse_batch`,
+    the grouper prefetch siblings use too): exact dense legs sharing a
+    filter run ONE corpus scan through the block-matmul kernel, as ONE
+    Spark job whose per-partition top-k candidates merge on the driver
+    (the reference's batch dispatch special-cases exactly this,
+    dispatch.rs batch path / the PlannedQuery leaf merge; its
+    coordinator merges per-segment top-k the same way); unfiltered legs
+    on an indexed sparse column, a quantized or composed dense column,
+    or a multivector column share one scan per route kind, the dense
+    quantized ones with the same driver merge. The legs of one fused
+    dense group must share a query dimension (ValueError names the
     request otherwise).
     Requests carrying a ``shard_key`` selector route to their shard's
     partition directories before planning. Per-request
     limit/offset/score_threshold are preserved; the batched leg results
-    are value-identical to planning each request alone.
+    are value-identical to planning each request alone. When every
+    request's result is driver-side hits (:class:`_Hits`), the batch is
+    one local frame; otherwise the per-request frames are unioned.
 
     ``indexes`` is the :class:`QueryPlanner` mapping; ``ivf_index``
     registers one more IVF index on its own vector column.
@@ -1806,8 +1816,6 @@ def query_batch(
     the result holds them after (request_idx, id, score), so one collect
     answers the batch; when any leg cannot (a fused group, an indexed
     route), the result is (request_idx, id, score) for every request."""
-    from functools import reduce
-
     if ivf_index is not None:
         indexes = {**(indexes or {}), ivf_index.vec_col: [
             ivf_index, *(indexes or {}).get(ivf_index.vec_col, [])]}
@@ -1817,8 +1825,21 @@ def query_batch(
         metrics=metrics, indexes=indexes,
     )
     planner.carry = tuple(carry or ())
+    return planner._frame(_plan_batch(planner, requests))
+
+
+def _plan_batch(planner: QueryPlanner,
+                requests: list[dict[str, Any]]) -> DataFrame | _Hits:
+    """:func:`query_batch` on a built planner, without the final
+    conversion: an all-local batch stays driver-side hits (request_idx,
+    id, score, carried columns), which the client reads directly."""
+    from functools import reduce
+
+    from pyspark.sql import types as T
+
     if not requests:
         raise ValueError("empty request batch")
+    points, id_col, carry = planner.points, planner.id_col, planner.carry
 
     # avg_vector recommends whose examples are all literal dense vectors
     # reduce to plain nearest requests BEFORE grouping, so they join the
@@ -1848,56 +1869,33 @@ def query_batch(
                 from qdrant_spark.operators.sharding import select_shards
 
                 sub = {k: v for k, v in req.items() if k != "shard_key"}
-                saved = (planner.points, planner.indexes)
+                saved = planner.indexes
                 planner.points = select_shards(
                     points, req["shard_key"], col="shard_key")
                 planner.indexes = {}
                 try:
-                    outs[i] = planner.plan(sub)
+                    outs[i] = planner._plan(sub)
                 finally:
-                    planner.points, planner.indexes = saved
+                    planner.points, planner.indexes = points, saved
             else:
-                outs[i] = planner.plan(req)
-    spark = planner.points.sparkSession
-    if carry:
-        cols = [None if isinstance(o, _RowsLeg) else set(o.columns)
+                outs[i] = planner._plan(req)
+    if carry and not all(set(carry) <= set(o.columns) for o in outs):
+        # one leg cannot carry: every leg answers (id, score)
+        outs = [_Hits(T.StructType(o.schema.fields[:2]),
+                      [r[:2] for r in o.rows], o.larger)
+                if isinstance(o, _Hits) else o.select(id_col, "score")
                 for o in outs]
-        if not all(c is not None and set(carry) <= c for c in cols):
-            outs = [o.select(id_col, "score")
-                    if c is not None and set(carry) <= c else o
-                    for o, c in zip(outs, cols)]
-
-    def _leg_local(o):
-        """(column names, schema, rows) when the leg is driver-local."""
-        if isinstance(o, _RowsLeg):
-            return (tuple(f.name for f in o.schema.fields), o.schema,
-                    o.rows)
-        rows = getattr(o, "_qs_local_rows", None)
-        if rows is None:
-            return None
-        return (tuple(o.columns), o.schema, rows)
-
-    locals_ = [_leg_local(o) for o in outs]
-    if all(loc is not None for loc in locals_) \
-            and len({loc[0] for loc in locals_}) == 1:
-        # every leg is a bounded driver-side result with one shared
-        # schema: emit ONE single-partition local frame instead of a
-        # per-leg createDataFrame + N-way union (r12: the union's 64
-        # one-row tasks + 64 createDataFrame roundtrips measured ~1.4s
-        # of the 64-request fused batch's 2.9s)
-        from pyspark.sql import types as T
-
-        base_schema = locals_[0][1]
-        schema = T.StructType(
-            [T.StructField("request_idx", T.LongType())]
-            + list(base_schema.fields))
-        data = [(i, *tuple(r)) for i, loc in enumerate(locals_)
-                for r in loc[2]]
-        return _local_result_df(spark, data, schema)
-    tagged = [(df if not isinstance(df, _RowsLeg)
-               else _local_result_df(spark, df.rows, df.schema))
-              for df in outs]
-    tagged = [df.withColumn("request_idx", F.lit(i))
-              for i, df in enumerate(tagged)]
+    if all(isinstance(o, _Hits) for o in outs) \
+            and len({tuple(o.columns) for o in outs}) == 1:
+        # every leg is driver-side hits with one shared schema: ONE
+        # local result instead of a per-leg frame + N-way union (r12:
+        # the union's 64 one-row tasks + 64 createDataFrame roundtrips
+        # measured ~1.4s of the 64-request fused batch's 2.9s)
+        schema = T.StructType([T.StructField("request_idx", T.LongType())]
+                              + list(outs[0].schema.fields))
+        return _Hits(schema, [(i, *r) for i, o in enumerate(outs)
+                              for r in o.rows], None)
+    tagged = [planner._frame(o).withColumn("request_idx", F.lit(i))
+              for i, o in enumerate(outs)]
     return reduce(lambda a, b: a.unionByName(b), tagged) \
         .select("request_idx", *(c for c in tagged[0].columns if c != "request_idx"))

@@ -27,6 +27,22 @@ import pyarrow as pa
 from pyspark.sql import SparkSession
 
 
+def has_nan(v) -> bool:
+    """Whether a float NaN sits anywhere in ``v`` (rows, arrays, map
+    cells). Arrow's from_pandas turns float NaN into NULL while the JVM
+    path keeps it, so driver-local rows holding one skip the Arrow
+    path."""
+    import math
+
+    if isinstance(v, float):
+        return math.isnan(v)
+    if isinstance(v, (list, tuple)):
+        return any(has_nan(x) for x in v)
+    if isinstance(v, dict):
+        return any(has_nan(x) for kv in v.items() for x in kv)
+    return False
+
+
 def local_df(spark: SparkSession, data, schema):
     """Driver-local rows → DataFrame through the Arrow LOCAL RELATION
     path instead of a pickled python RDD.
@@ -44,31 +60,13 @@ def local_df(spark: SparkSession, data, schema):
     plain ``createDataFrame`` for rows holding a NaN and for shapes the
     Arrow conversion rejects (nested maps with mixed key types, exotic
     objects); any other error propagates."""
-    import math
-
     import pandas as pd
     from pyspark.sql import types as T
 
     rows = ([tuple(r) for r in data]
             if not isinstance(data, pd.DataFrame) else None)
-    if rows is not None:
-        # Arrow's from_pandas turns float NaN into NULL; the JVM
-        # path keeps it as NaN. Preserve the caller's semantics by
-        # falling back when any scalar/array element is NaN.
-        def _has_nan(v) -> bool:
-            if isinstance(v, float):
-                return math.isnan(v)
-            if isinstance(v, (list, tuple)):
-                return any(_has_nan(x) for x in v)
-            if isinstance(v, dict):
-                # MapType cells (e.g. replayed one-shot schemas):
-                # a NaN value inside the map must also fall back
-                return any(_has_nan(x)
-                           for kv in v.items() for x in kv)
-            return False
-
-        if any(_has_nan(v) for r in rows for v in r):
-            return spark.createDataFrame(data, schema)
+    if rows is not None and has_nan(rows):
+        return spark.createDataFrame(data, schema)
     st = (T._parse_datatype_string(schema)
           if isinstance(schema, str) else schema)
     try:

@@ -579,6 +579,9 @@ class TestAliasesIndexesStrict:
         res = c.query_points("fts", query=[1.0, 0.0], query_filter=flt,
                              limit=10)
         assert [p.id for p in res.points] == [1]
+        (res,) = c.query_batch_points(
+            "fts", [{"query": [1.0, 0.0], "filter": flt, "limit": 10}])
+        assert [p.id for p in res.points] == [1]
         # facet under the same text filter honors the declared params too
         # (r8 ADVICE: facet() must pre-apply text_params like count())
         c.set_payload("fts", payload={"lang": "en"}, points=[1, 2])
@@ -1182,9 +1185,11 @@ def test_search_params_reach_planner(spark, monkeypatch):
     c.create_collection("sp", vectors_config={"size": 2, "distance": "Dot"})
     c.upsert("sp", [{"id": i, "vector": [float(i), 1.0]} for i in range(4)])
     captured = {}
-    orig = QueryPlanner.plan
+    # the client plans through the planner's internal entry, which keeps
+    # driver-side hits as rows
+    orig = QueryPlanner._plan
     monkeypatch.setattr(
-        QueryPlanner, "plan",
+        QueryPlanner, "_plan",
         lambda self, req: captured.update(req) or orig(self, req))
     c.query_points("sp", query=[1.0, 0.0], limit=2,
                    search_params={"exact": True})

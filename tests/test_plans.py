@@ -395,6 +395,34 @@ def test_local_df_nan_in_map_falls_back(spark):
     assert v != v  # NaN preserved, not NULL
 
 
+def test_local_result_df_builds_one_frame(spark, monkeypatch):
+    """Driver-side hits become ONE frame with at most one isLocal()
+    check: a local relation, or one slice when a score is NaN (which
+    stays NaN, not NULL)."""
+    from pyspark.sql import types as T
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    import qdrant_spark.query as Q
+
+    calls = []
+    is_local, create = DataFrame.isLocal, type(spark).createDataFrame
+    monkeypatch.setattr(DataFrame, "isLocal",
+                        lambda self: calls.append("isLocal") or is_local(self))
+    monkeypatch.setattr(type(spark), "createDataFrame",
+                        lambda self, *a, **k: calls.append("frame")
+                        or create(self, *a, **k))
+    schema = T.StructType([T.StructField("id", T.LongType()),
+                           T.StructField("score", T.DoubleType())])
+    for rows in ([(1, 0.5), (2, 0.25)], [(1, float("nan")), (2, 0.25)]):
+        calls.clear()
+        df = Q._local_result_df(spark, Q._Hits(schema, rows, True))
+        assert calls.count("frame") == 1 and calls.count("isLocal") <= 1
+        nan = rows[0][1] != rows[0][1]
+        assert df.rdd.getNumPartitions() == 1 if nan else is_local(df)
+        got = [(r["id"], r["score"]) for r in df.collect()]
+        assert got[1] == (2, 0.25) and (got[0][1] != got[0][1]) == nan
+
+
 def test_fused_dense_batch_is_one_job(spark, embeddings, tmp_path,
                                       monkeypatch):
     """A fused dense query_batch runs exactly ONE Spark job: the Arrow
@@ -485,6 +513,13 @@ def mix_client(spark):
 
 
 _Q8 = [0.3, -0.1, 0.8, 0.2, -0.5, 0.4, 0.1, -0.2]
+_HYBRID = {"prefetch": [
+    {"query": _Q8, "limit": 10},
+    {"query": {"indices": [1, 5, 9], "values": [0.5, 0.3, 0.2]},
+     "using": "text", "limit": 10}], "query": {"fusion": "rrf"}, "limit": 5}
+#: two fused dense requests (below) and one RRF hybrid in one batch
+_MIXED_BATCH = [{"query": _Q8, "limit": 3}, {"query": _Q8[::-1], "limit": 3},
+                _HYBRID]
 _READS = {
     "query_points": lambda c: c.query_points("jobs", query=_Q8, limit=5),
     "filtered": lambda c: c.query_points(
@@ -496,18 +531,27 @@ _READS = {
     "batch": lambda c: c.query_batch_points(
         "jobs", [{"query": _Q8, "limit": 3},
                  {"query": _Q8[::-1], "limit": 3}]),
-    "hybrid": lambda c: c.query_points(
-        "jobs", prefetch=[
-            {"query": _Q8, "limit": 10},
-            {"query": {"indices": [1, 5, 9], "values": [0.5, 0.3, 0.2]},
-             "using": "text", "limit": 10}],
-        query={"fusion": "rrf"}, limit=5),
+    "hybrid": lambda c: c.query_points("jobs", **_HYBRID),
+    "batch_mixed": lambda c: _fused(c.query_batch_points, "jobs",
+                                    _MIXED_BATCH),
 }
+
+
+def _fused(fn, *a, min_bytes: int = 0):
+    """``fn(*a)`` with exact dense fusion on from ``min_bytes`` of corpus
+    (the module default the client's planners read)."""
+    import qdrant_spark.query as Q
+
+    old, Q.FUSE_MIN_BYTES = Q.FUSE_MIN_BYTES, min_bytes
+    try:
+        return fn(*a)
+    finally:
+        Q.FUSE_MIN_BYTES = old
 
 
 @pytest.mark.parametrize("kind,jobs", [
     ("query_points", 1), ("filtered", 1), ("groups", 1), ("batch", 1),
-    ("hybrid", 2)])
+    ("hybrid", 2), ("batch_mixed", 3)])
 def test_client_read_job_count(spark, mix_client, kind, jobs):
     """Each exact client read kind runs its pinned number of Spark jobs,
     all under the caller's job group: the hydration columns ride through
@@ -526,6 +570,71 @@ def test_client_read_job_count(spark, mix_client, kind, jobs):
     assert out
     assert len(sc.statusTracker().getJobIdsForGroup(group)) == jobs
     assert not set(sc.statusTracker().getJobIdsForGroup(None)) - ungrouped
+
+
+@pytest.mark.parametrize("kind,frames", [
+    ("quant_batch", 1), ("rrf_plan", 1), ("client_hybrid", 0),
+    ("dense_batch", 1)])
+def test_local_frames_per_read(embeddings, mix_client, monkeypatch, kind,
+                               frames):
+    """Driver-side hits become a DataFrame once per read, where the
+    public API returns one, and never for a client read: a 16-request
+    quantized batch, an RRF root over three fused dense legs and a
+    16-request fused dense batch each build one local frame, the
+    client's RRF hybrid none."""
+    import qdrant_spark.query as Q
+
+    qs = [list(r["embedding"]) for r in embeddings.limit(16).collect()]
+    reqs = [{"query": {"nearest": q}, "limit": 5} for q in qs]
+    kw = dict(id_col="vec_id", vec_col="embedding")
+    if kind == "quant_batch":
+        from qdrant_spark.operators.quantize import build_quant
+
+        h = build_quant(embeddings, {"scalar": {"full_scan_threshold": 0}},
+                        vec_col="embedding", id_col="vec_id")
+
+        def read():
+            return Q.query_batch(embeddings, reqs,
+                                 indexes={"embedding": [h]}, **kw).collect()
+    elif kind == "dense_batch":
+        def read():
+            return Q.query_batch(embeddings, reqs, fuse_min_bytes=0,
+                                 **kw).collect()
+    elif kind == "rrf_plan":
+        pl = Q.QueryPlanner(embeddings, id_col="vec_id",
+                            default_vec_col="embedding", fuse_min_bytes=0)
+
+        def read():
+            return pl.plan({"prefetch": reqs[:3], "query": {"fusion": "rrf"},
+                            "limit": 5}).collect()
+    else:
+        def read():
+            return _READS["hybrid"](mix_client).points
+    built = []
+    conv = Q._local_result_df
+
+    def spy(*a, **k):
+        built.append(kind)
+        return conv(*a, **k)
+
+    monkeypatch.setattr(Q, "_local_result_df", spy)
+    out = read()
+    assert len(out) == (80 if kind.endswith("batch") else 5)
+    assert len(built) == frames
+
+
+def test_client_mixed_fused_batch_matches_unfused(mix_client):
+    """A batch of two fused dense requests and one RRF hybrid answers as
+    the same batch with fusion off: ids, scores and payloads."""
+    def points(resps):
+        return [[(p.id, round(p.score, 9), p.payload) for p in r.points]
+                for r in resps]
+
+    got = points(_READS["batch_mixed"](mix_client))
+    want = points(_fused(mix_client.query_batch_points, "jobs", _MIXED_BATCH,
+                         min_bytes=1 << 62))
+    assert [len(r) for r in got] == [3, 3, 5]
+    assert got == want
 
 
 def test_client_query_points_plan_has_no_exchange(mix_client, monkeypatch):

@@ -618,11 +618,25 @@ def test_client_update_collection_quantization(spark):
     assert c._coll("qu").quant == {}  # mismatch drops the built codes
 
 
+def _rrf_of_legs_alone(planner, req):
+    """(id, score rounded to 9 places) of ``fusion.rrf`` over each of the
+    request's prefetch legs planned alone, each in its own direction."""
+    from qdrant_spark.operators.fusion import rrf
+
+    legs, orders = [], []
+    for leg in req["prefetch"]:
+        legs.append(planner.plan(leg))
+        orders.append(planner.last_plan_direction)
+    out = rrf(legs, orders=orders, id_col=planner.id_col, limit=req["limit"])
+    return [(r[planner.id_col], round(r["score"], 9)) for r in out.collect()]
+
+
 def test_quant_leaves_not_fused(embeddings):
-    """Sibling dense legs on a quant-registered column keep their own
-    coarse+rescore plans instead of being fused into one exact shared
-    scan (the same opt-out IVF-routed leaves have — fusing would bypass
-    the declared plan and change values for rescore=false requests)."""
+    """Sibling dense legs on a quant-registered column never join the
+    exact shared scan (fusing would bypass the declared plan and change
+    values for rescore=false requests): they share ONE coarse code scan
+    through the batch grouper, and the fused root equals RRF over each
+    leg planned alone."""
     from qdrant_spark.query import QueryPlanner
 
     h = build_quant(embeddings, {"scalar": {"full_scan_threshold": 0}}, vec_col="embedding",
@@ -637,15 +651,42 @@ def test_quant_leaves_not_fused(embeddings):
                       default_vec_col="embedding",
                       fuse_min_bytes=0,  # force fusion-eligible size
                       indexes={"embedding": [h]})
-    out = pl.plan(req)
-    assert out.count() > 0
+    got = [(r["vec_id"], round(r["score"], 9)) for r in pl.plan(req).collect()]
     assert pl.last_plan_info["fused_legs"] == 0
-    assert pl.last_plan_info.get("quant_leaves") == 2
+    assert pl.last_plan_info.get("quant_batch_groups") == 1
+    assert got and got == _rrf_of_legs_alone(pl, req)
     # same request without quant fuses (sanity that the gate is the cause)
     pl2 = QueryPlanner(embeddings, id_col="vec_id",
                        default_vec_col="embedding", fuse_min_bytes=0)
     pl2.plan(req).count()
     assert pl2.last_plan_info["fused_legs"] == 2
+
+
+@pytest.mark.parametrize("metric", ["cosine", "euclid"])
+def test_quant_prefetch_siblings_share_one_group(embeddings, metric):
+    """An RRF root over two scalar-quantized legs groups them through the
+    grouper query_batch uses: one coarse code scan, no exact dense group,
+    and the fused hits equal RRF over each leg planned alone. On euclid
+    the legs rank smaller-is-better, so a wrong leg direction shows."""
+    from qdrant_spark.query import QueryPlanner
+
+    h = build_quant(embeddings, {"scalar": {"full_scan_threshold": 0}},
+                    vec_col="embedding", id_col="vec_id")
+    rows = embeddings.limit(2).collect()
+    q1, q2 = (list(r["embedding"]) for r in rows)
+    req = {"prefetch": [
+        {"query": {"nearest": q1}, "limit": 15},
+        {"query": {"nearest": q2}, "limit": 20, "offset": 2},
+    ], "query": {"fusion": "rrf"}, "limit": 10}
+    pl = QueryPlanner(embeddings, id_col="vec_id",
+                      default_vec_col="embedding", metric=metric,
+                      indexes={"embedding": [h]})
+    got = [(r["vec_id"], round(r["score"], 9)) for r in pl.plan(req).collect()]
+    assert pl.last_plan_info.get("quant_batch_groups") == 1
+    assert pl.last_plan_info["fused_legs"] == 0
+    assert pl.last_plan_info["driver_fused_root"] == 1
+    assert len(got) == 10
+    assert got == _rrf_of_legs_alone(pl, req)
 
 
 def test_query_batch_groups_quant_through_codes(embeddings):
