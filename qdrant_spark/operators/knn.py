@@ -19,21 +19,25 @@ Spark shapes:
   points scores every query against each Arrow batch with one BLAS
   matmul (NumPy, float64), cuts each query's top k per batch and
   finishes once per partition, so at most partitions*Q*k candidate rows
-  leave the map side. Spark's array higher-order functions are
-  interpreted (no whole-stage codegen), so this beats the pure-Column
-  plan ~50x on the N*Q hot path — this is the 100-TB plan. The
-  candidates reach one of two finishes:
+  leave the map side. Within a task the cut runs against each query's
+  running k-th score (REPOSE's bound): after a query's first block, a
+  later block needs one mask, not a partition. Spark's array
+  higher-order functions are interpreted (no whole-stage codegen), so
+  this beats the pure-Column plan ~50x on the N*Q hot path — this is
+  the 100-TB plan. The candidates reach one of two finishes:
 
-  * *ranked* (the lazy DataFrame every consumer gets): the candidates
-    shuffle by query into the final exact window (:func:`ranked`);
+  * *ranked* (the DataFrame every consumer gets): the candidates
+    shuffle by query into the final exact window (:func:`ranked`). The
+    frame is a :class:`~qdrant_spark.session.LazyFrame`: the window is
+    built on first use, not when the kernel's plan is;
   * *collected* (:func:`collect_topk`, for callers that collect the
     top-k anyway — the fused batch groups of ``query.query_batch``):
     one job pulls the candidates with ``toArrow()`` and the driver
     merges them with the tie-exact :func:`first_k`, as qdrant's
     coordinator merges each segment's local top-k. No shuffle, no
-    window, no second job. It runs while partitions*Q*k stays within
-    the caller's driver budget; above it the ranked finish runs and is
-    collected.
+    window, no second job, and the window is never built. It runs while
+    partitions*Q*k stays within the caller's driver budget; above it the
+    ranked finish is built, runs and is collected.
 
 The same kernel serves every Arrow scorer (IVF cluster blocks, IVF-PQ
 ADC shortlists, single and batch MaxSim, MaxSim pair rescores,
@@ -59,6 +63,7 @@ from pyspark.sql.window import Window
 
 from qdrant_spark.filters import apply_filter
 from qdrant_spark.functions.distances import larger_is_better
+from qdrant_spark.session import LazyFrame
 
 
 def score_order(metric: str, score_col: str = "score", id_col: str = "id") -> list[Column]:
@@ -284,23 +289,34 @@ def arrow_matrix(col, n: int):
     return col.flatten().to_numpy(zero_copy_only=False).reshape(n, -1)
 
 
+def _width_mismatch(col, dim: int):
+    """A row length other than ``dim`` in an Arrow column of non-null
+    vectors (the shortest or the longest), or None when every row has
+    ``dim`` values."""
+    import pyarrow.compute as pc
+
+    if len(col) == 0:
+        return None
+    mm = pc.min_max(pc.list_value_length(col)).as_py()
+    if mm["min"] != dim or mm["max"] != dim:
+        return mm["min"] if mm["min"] != dim else mm["max"]
+    return None
+
+
 def arrow_vectors(col, dim: int):
     """(n, ``dim``) float64 matrix of an Arrow column of non-null
     vectors, for a kernel over ``dim``-wide centroids: raises
     ``ValueError`` naming both dimensions on any row of another length
     (a flat reshape would silently re-cut ragged rows)."""
     import numpy as np
-    import pyarrow.compute as pc
 
-    n = len(col)
-    if n == 0:
-        return np.empty((0, dim))
-    mm = pc.min_max(pc.list_value_length(col)).as_py()
-    if mm["min"] != dim or mm["max"] != dim:
-        bad = mm["min"] if mm["min"] != dim else mm["max"]
+    bad = _width_mismatch(col, dim)
+    if bad is not None:
         raise ValueError(f"a vector has {bad} dimensions but the "
                          f"centroids have {dim}")
-    return arrow_matrix(col, n).astype(np.float64, copy=False)
+    if len(col) == 0:
+        return np.empty((0, dim))
+    return arrow_matrix(col, len(col)).astype(np.float64, copy=False)
 
 
 def first_k(qi, key, ids, k: int):
@@ -334,10 +350,14 @@ def topk_cut(key, ids, k: int):
     row's k-th key; every column at or under it (ties included, and every
     column of a row whose k-th key is NaN) is a candidate; ``first_k``
     orders that small superset. ``ids`` is (n,) shared by all rows or
-    (q, n) per row. Returns (row, column, id) arrays, query-major."""
+    (q, n) per row. Returns (row, column, id) arrays, query-major; empty
+    for ``k = 0``."""
     import numpy as np
 
     kk = min(k, key.shape[1])
+    if kk <= 0:
+        none = np.empty(0, dtype=np.intp)
+        return none, none, np.empty(0, dtype=ids.dtype)
     if kk < key.shape[1]:
         thr = np.partition(key, kk - 1, axis=1)[:, kk - 1:kk]
         qi, cols = np.nonzero((key <= thr) | np.isnan(thr))
@@ -346,6 +366,34 @@ def topk_cut(key, ids, k: int):
     cid = ids[cols] if ids.ndim == 1 else ids[qi, cols]
     keep = first_k(qi, key[qi, cols], cid, kk)
     return qi[keep], cols[keep], cid[keep]
+
+
+def running_cut(key, ids, thr, k: int):
+    """:func:`topk_cut` of a later block of a task that already holds
+    each query row's k-th key so far, ``thr`` ((q,), NaN where unknown).
+    A row with a known key keeps every column at or under it — ties
+    included, their ids decide them in the merge — as an unordered
+    superset of its cut: one mask instead of a partition. No column
+    above it can enter the row's top k, so the merge (:func:`first_k`)
+    stays exact. Rows without a known key, and rows whose mask keeps
+    more than an eighth of the block (ordering them would cost more than
+    a partition), go through :func:`topk_cut`. Same arguments and
+    return shape as :func:`topk_cut`, but not ordered or cut to k."""
+    import numpy as np
+
+    known = ~np.isnan(thr)
+    if k <= 0 or not known.any():
+        return topk_cut(key, ids, k)
+    qi, cols = np.nonzero(key <= thr[:, None])
+    cut = ~known | (np.bincount(qi, minlength=len(thr))
+                    > max(k, key.shape[1] >> 3))
+    if cut.any():
+        rows = np.flatnonzero(cut)
+        keep = ~cut[qi]
+        cq, cc, _ = topk_cut(key[rows], ids if ids.ndim == 1 else ids[rows], k)
+        qi = np.concatenate([qi[keep], rows[cq]])
+        cols = np.concatenate([cols[keep], cc])
+    return qi, cols, ids[cols] if ids.ndim == 1 else ids[qi, cols]
 
 
 def ranked(scored: DataFrame, metric: str, k: int, *, qid_col: str,
@@ -362,14 +410,20 @@ def topk_kernel(blocks, *, k: int, bigger_better: bool, qids, qid_col: str,
 
     ``blocks(batch)`` yields ``(query indices, ids, (q, n) scores)``
     blocks for one Arrow batch — one for the whole batch (block matmul)
-    or one per cluster (IVF). Each block goes through :func:`topk_cut`;
-    the candidates are finished once per partition (:func:`first_k`), so
-    a partition emits at most Q × k (qid, id, score) rows. ``qids[i]`` is
-    the output qid of query index ``i``. ``dedup_ids``: the scan holds
+    or one per cluster (IVF). A task keeps each query's running top k
+    and its k-th key, REPOSE's running bound inside one task: a query's
+    first block goes through :func:`topk_cut`, a later one through
+    :func:`running_cut` (one mask against the k-th key), and
+    :func:`first_k` re-finishes the running set whenever the new
+    candidates outnumber it, and once at the end. So a partition emits
+    at most Q × k (qid, id, score) rows, exactly the top k one global
+    sort would keep (score direction, id ascending). ``qids[i]`` is the
+    output qid of query index ``i``. ``dedup_ids``: the scan holds
     identical-scoring copies of a row (an invlist layout); one copy per
     (query, id) survives inside a block before the cut (two copies must
     not take two of a query's k slots) and across batches before the
-    finish."""
+    finish, so every block is cut by :func:`topk_cut` and finished once
+    per partition."""
     import numpy as np
 
     qid_arr = np.asarray(qids)
@@ -377,30 +431,47 @@ def topk_kernel(blocks, *, k: int, bigger_better: bool, qids, qid_col: str,
     def run(batches: Iterator) -> Iterator:
         import pyarrow as pa
 
+        thr = np.full(len(qid_arr), np.nan)  # k-th key so far, per query
         acc_q, acc_i, acc_s = [], [], []
+        held = pending = 0  # rows of the running set / added since
+
+        def finish():
+            qi, ids, scores = (np.concatenate(a) for a in (acc_q, acc_i, acc_s))
+            if dedup_ids:
+                o = np.lexsort((ids, qi))
+                qi, ids, scores = qi[o], ids[o], scores[o]
+                first = np.r_[True, (qi[1:] != qi[:-1]) | (ids[1:] != ids[:-1])]
+                qi, ids, scores = qi[first], ids[first], scores[first]
+            keep = first_k(qi, -scores if bigger_better else scores, ids, k)
+            return qi[keep], ids[keep], scores[keep]
+
         for batch in batches:
             if batch.num_rows == 0:
                 continue
             for qidx, ids, S in blocks(batch):
+                key = -S if bigger_better else S
                 if dedup_ids:
                     _, first = np.unique(ids, return_index=True)
-                    ids, S = ids[first], S[:, first]
-                qi, cols, cid = topk_cut(-S if bigger_better else S, ids, k)
+                    ids, key, S = ids[first], key[:, first], S[:, first]
+                    qi, cols, cid = topk_cut(key, ids, k)
+                else:
+                    qi, cols, cid = running_cut(key, ids, thr[qidx], k)
                 acc_q.append(qidx[qi])
                 acc_i.append(cid)
                 acc_s.append(S[qi, cols])
+                pending += len(qi)
+                if not dedup_ids and pending >= max(held, 1):
+                    qi, ids, scores = finish()
+                    acc_q, acc_i, acc_s = [qi], [ids], [scores]
+                    held, pending = len(qi), 0
+                    kth = _group_pos(qi) == k - 1
+                    thr[qi[kth]] = -scores[kth] if bigger_better else scores[kth]
         if not acc_q:
             return
-        qi, ids, scores = (np.concatenate(a) for a in (acc_q, acc_i, acc_s))
-        if dedup_ids:
-            o = np.lexsort((ids, qi))
-            qi, ids, scores = qi[o], ids[o], scores[o]
-            first = np.r_[True, (qi[1:] != qi[:-1]) | (ids[1:] != ids[:-1])]
-            qi, ids, scores = qi[first], ids[first], scores[first]
-        keep = first_k(qi, -scores if bigger_better else scores, ids, k)
+        qi, ids, scores = finish()
         yield pa.RecordBatch.from_arrays(
-            [pa.array(qid_arr[qi[keep]]), pa.array(ids[keep]),
-             pa.array(scores[keep], type=pa.float64())],
+            [pa.array(qid_arr[qi]), pa.array(ids),
+             pa.array(scores, type=pa.float64())],
             names=[qid_col, id_col, "score"],
         )
 
@@ -427,10 +498,14 @@ def arrow_topk(
     top-k sort instead (``TakeOrderedAndProject``, no shuffle): its <= k
     (qid, id, score) rows best-first, without ``rank`` (callers that read
     it add it with :func:`with_rank`). With ``dedup_ids``, copies from
-    different partitions meet and collapse before the finish. The
-    candidate frame rides along on the result for :func:`collect_topk`,
-    which destroys ``broadcast`` (the query set the blocks read) once it
-    has collected."""
+    different partitions meet and collapse before the finish.
+
+    The result is a :class:`~qdrant_spark.session.LazyFrame`: the finish
+    (window or top-k sort) is built on first use, so a caller that only
+    runs :func:`collect_topk` within its budget never builds it. The
+    candidate frame rides along as its ``_qs_topk`` for
+    :func:`collect_topk`, which destroys ``broadcast`` (the query set the
+    blocks read) once it has collected."""
     out_schema = T.StructType([
         T.StructField(qid_col, qid_type),
         T.StructField(id_col, sel.schema[id_col].dataType),
@@ -444,29 +519,32 @@ def arrow_topk(
         scored = scored.dropDuplicates([qid_col, id_col])
     if score_threshold is not None:
         scored = scored.filter(_threshold_cond(metric, score_threshold))
-    if len(qids) == 1:
-        out = scored.orderBy(*score_order(metric, id_col=id_col)).limit(k)
-    else:
-        out = ranked(scored, metric, k, qid_col=qid_col, id_col=id_col)
-    out._qs_topk = _Candidates(scored, metric, k, len(qids), broadcast,
-                               qid_col, id_col)
-    return out
+
+    def finish() -> DataFrame:
+        if len(qids) == 1:
+            return scored.orderBy(*score_order(metric, id_col=id_col)).limit(k)
+        return ranked(scored, metric, k, qid_col=qid_col, id_col=id_col)
+
+    return LazyFrame(scored.sparkSession, finish, topk=_Candidates(
+        scored, metric, k, len(qids), broadcast, qid_col, id_col))
 
 
 def with_rank(topk: DataFrame) -> DataFrame:
     """An :func:`arrow_topk` result with ``rank`` 1..k per query, for
     callers that read it: the one-query finish carries none, so it gains
     a ``row_number`` window (the limit's single-partition output already
-    satisfies it, so it costs no exchange). The candidates ride along for
-    :func:`collect_topk`."""
+    satisfies it, so it costs no exchange), built on first use like the
+    finish. The candidates ride along for :func:`collect_topk`."""
     c: _Candidates = topk._qs_topk
     if c.nq != 1:
         return topk
-    w = Window.partitionBy(c.qid_col).orderBy(
-        *score_order(c.metric, id_col=c.id_col))
-    out = topk.withColumn("rank", F.row_number().over(w))
-    out._qs_topk = c
-    return out
+
+    def finish() -> DataFrame:
+        w = Window.partitionBy(c.qid_col).orderBy(
+            *score_order(c.metric, id_col=c.id_col))
+        return topk.withColumn("rank", F.row_number().over(w))
+
+    return LazyFrame(topk.sparkSession, finish, topk=c)
 
 
 class _Candidates(NamedTuple):
@@ -499,9 +577,10 @@ def collect_topk(topk: DataFrame, max_rows: int):
     the driver budget (partitions × Q × k <= ``max_rows``), ONE job pulls
     them with ``toArrow()`` and the driver merges each query's top k with
     the tie-exact :func:`first_k` (score direction, then id ascending) —
-    no shuffle, no window, no second job. Above the budget ``topk``
-    itself runs and is collected (the one-query finish arrives sorted, so
-    its rank is the row's position). Either way
+    no shuffle, no window, no second job, and ``topk``'s own finish is
+    never built. Above the budget ``topk`` itself is built, runs and is
+    collected (the one-query finish arrives sorted, so its rank is the
+    row's position). Either way
     returns query-major NumPy arrays (qid, id, score, rank), equal to
     collecting ``topk`` and sorting by (qid, rank), and destroys the
     query broadcast."""
@@ -548,7 +627,13 @@ def _matmul_knn(
     (P, D) matrix — no per-row object conversion.
 
     ``q_data=(qids, Q)`` supplies the query set directly (single-query
-    dispatch, pre-collected batches) instead of collecting ``queries``."""
+    dispatch, pre-collected batches) instead of collecting ``queries``.
+
+    Rows without a vector drop out in the kernel, which also checks the
+    vectors' width against the queries': a row of another width fails
+    the task with ``ValueError`` naming both dimensions, instead of a
+    flat reshape silently re-cutting ragged rows. Packed storage
+    (``vec_decode``) goes to its decode hook as it is."""
     import numpy as np
 
     if q_data is not None:
@@ -567,25 +652,31 @@ def _matmul_knn(
     bq = pts.sparkSession.sparkContext.broadcast(Q)
     qnorm = np.linalg.norm(Q, axis=1) if metric == "cosine" else None
     qall = np.arange(len(qids))
+    dim = Q.shape[1]
 
     def blocks(batch):
-        n = batch.num_rows
         if vec_decode is not None:
             # packed storage (binary f16/u8 columns): decode hook
             # yields the (n, dim) float64 matrix
-            M = vec_decode(batch.column(1), n)
+            M = vec_decode(batch.column(1), batch.num_rows)
         else:
-            M = arrow_matrix(batch.column(1), n).astype(np.float64, copy=False)
+            if batch.column(1).null_count:
+                batch = batch.filter(batch.column(1).is_valid())
+                if batch.num_rows == 0:
+                    return
+            bad = _width_mismatch(batch.column(1), dim)
+            if bad is not None:
+                raise ValueError(f"query vector has {dim} dimensions but "
+                                 f"{vec_col} vectors have {bad}")
+            M = arrow_matrix(batch.column(1), batch.num_rows) \
+                .astype(np.float64, copy=False)
         ids = batch.column(0).to_numpy(zero_copy_only=False)
         yield qall, ids, score_block(M, bq.value, metric, qnorm=qnorm)
 
-    sel = pts.select(id_col, vec_col)
-    if vec_decode is None:
-        sel = sel.filter(dim_guard(vec_col, Q.shape[1]))
     return arrow_topk(
-        sel, blocks, metric=metric, k=k, qids=qids, qid_type=qid_type,
-        qid_col=qid_col, id_col=id_col, score_threshold=score_threshold,
-        broadcast=bq,
+        pts.select(id_col, vec_col), blocks, metric=metric, k=k, qids=qids,
+        qid_type=qid_type, qid_col=qid_col, id_col=id_col,
+        score_threshold=score_threshold, broadcast=bq,
     )
 
 

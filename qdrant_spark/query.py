@@ -69,7 +69,8 @@ FUSE_MIN_BYTES = 32 << 20
 #: are <= 2.4 MB of Arrow, and the merge (one lexsort plus a few
 #: same-length NumPy arrays) stays under ~10 MB, far below a driver heap.
 #: The number is that budget, not a measured memory limit; no benchmark
-#: workload reaches the ranked side (bulk_knn: 8 x 64 x 10 = 5 120 rows).
+#: workload reaches the ranked side (bulk_knn: its 8 files pack into 4
+#: scan partitions, 4 x 64 x 10 = 2 560 candidate rows).
 FUSED_COLLECT_MAX = 100_000
 
 #: Candidate oversampling of a grouped query: it plans the top
@@ -105,9 +106,10 @@ class _Hits(NamedTuple):
     score first, then any carried columns), best first in the score
     direction ``larger`` (True = score desc, False = score asc, None = a
     batch of several requests), ties id asc. Fused batch groups, fusion
-    roots and query_batch's all-local collapse return one; it becomes a
-    DataFrame only through :func:`_local_result_df`, where a caller needs
-    a frame."""
+    roots and query_batch's all-local collapse return one. At the public
+    boundary it is the rows of a lazy frame (:meth:`QueryPlanner._frame`);
+    it becomes a JVM frame only through :func:`_local_result_df`, where
+    a caller uses the frame for more than its rows."""
 
     schema: Any
     rows: list
@@ -306,15 +308,24 @@ class QueryPlanner:
 
     def plan(self, request: dict[str, Any]) -> DataFrame:
         """Returns (id, score) best-first, limited — followed by the
-        :attr:`carry` columns when the root's route carries them."""
+        :attr:`carry` columns when the root's route carries them. A
+        bounded finish held on the driver comes back as a lazy frame
+        over its rows (:meth:`_frame`)."""
         return self._frame(self._plan(request))
 
     def _frame(self, res: DataFrame | _Hits) -> DataFrame:
-        """A plan result as a DataFrame: driver-side hits become one
-        local frame (:func:`_local_result_df`)."""
+        """A plan result as a DataFrame. Driver-side hits become a
+        :class:`~qdrant_spark.session.LazyFrame` over them: ``collect()``
+        returns the hits' rows and ``schema`` / ``columns`` are theirs,
+        with no py4j round trip; any other use builds the one local
+        frame (:func:`_local_result_df`) on first use, once."""
         if isinstance(res, DataFrame):
             return res
-        return _local_result_df(self.points.sparkSession, res)
+        from qdrant_spark.session import LazyFrame
+
+        spark = self.points.sparkSession
+        return LazyFrame(spark, lambda: _local_result_df(spark, res),
+                         schema=res.schema, rows=res.collect)
 
     def _plan(self, request: dict[str, Any]) -> DataFrame | _Hits:
         """:meth:`plan` without the final conversion: a bounded finish
@@ -1501,8 +1512,10 @@ def _fuse_maxsim(planner: "QueryPlanner", requests: list[dict[str, Any]],
 
 def _local_result_df(spark, hits: _Hits) -> DataFrame:
     """Driver-side hits as ONE single-partition DataFrame — the only
-    place they become a frame: the public plan / query_batch boundary
-    and :meth:`QueryPlanner._rescore`'s joins. Rows go through the Arrow
+    place they become a JVM frame: on first non-collect use of the lazy
+    frame the public plan / query_batch / universal_query boundary
+    returns (:meth:`QueryPlanner._frame`), which :meth:`QueryPlanner.
+    _rescore`'s joins are too. Rows go through the Arrow
     local relation (:func:`~qdrant_spark.session.local_df`'s path), so a
     collect of the frame runs no job; rows holding a NaN (Arrow's pandas
     conversion would turn it into NULL) and shapes Arrow rejects take a
@@ -1562,14 +1575,16 @@ def _finish_quant_group(planner, requests, idxs, outs, qh, metric,
     coarse top-k frame (``coarse``, qid = request index) through the
     kernel's collected finish, keep each request's top coarse-width
     candidates, rescore the rescore=True requests' candidates with ONE
-    pair-scored job, and finish each request (:func:`_emit_legs`) in the
+    pair-scored job whose scores merge on the driver (no window), and
+    finish each request (:func:`_emit_legs`) in the
     direction of its returned scores — binary coarse scores
     (rescore=False) are the ±1-dot estimate, larger-better whatever the
     metric, the single-request leaf's rule."""
+    import numpy as np
     from pyspark.sql import types as T
 
     from qdrant_spark.operators.knn import (
-        collect_topk, larger_is_better, rowwise_score_topk,
+        collect_topk, first_k, larger_is_better, rowwise_score_topk,
     )
 
     idx = qh.index
@@ -1597,15 +1612,25 @@ def _finish_quant_group(planner, requests, idxs, outs, qh, metric,
         joined = (full.select(idx.id_col, idx.vec_col)
                   .join(F.broadcast(pairs), idx.id_col)
                   .join(F.broadcast(qdf), "__qid"))
-        scored = rowwise_score_topk(
-            joined, metric=metric, k=max(ks[i] for i in need_rescore),
-            qid_col="__qid", id_col=idx.id_col, vec_col=idx.vec_col,
-            qvec_col="__qvec")
+        # every pair's exact score (no window: the pairs are within the
+        # group's collect budget), each request's top k merged here
+        rows = rowwise_score_topk(
+            joined, metric=metric, k=None, qid_col="__qid",
+            id_col=idx.id_col, vec_col=idx.vec_col,
+            qvec_col="__qvec").collect()
+        qid = np.asarray([r[0] for r in rows], dtype=np.int64)
+        ids = np.asarray([r[1] for r in rows])
+        score = np.asarray([r[2] for r in rows], dtype=np.float64)
+        # Spark's descending sort ranks a NaN score first; the merge
+        # keeps that order
+        key = (np.where(np.isnan(score), -np.inf, -score)
+               if larger_is_better(metric) else score)
+        keep = first_k(qid, key, ids, max(ks[i] for i in need_rescore))
         for i in need_rescore:
             by_req[i] = []
-        for r in sorted(scored.collect(),
-                        key=lambda r: (r["__qid"], r["rank"])):
-            by_req[r["__qid"]].append((r[idx.id_col], float(r["score"])))
+        for q, h, sc in zip(qid[keep].tolist(), ids[keep].tolist(),
+                            score[keep].tolist()):
+            by_req[q].append((h, sc))
     larger = larger_is_better(metric)
     _emit_legs(planner, requests, by_req, outs, larger={
         i: larger or (not rescores[i] and qh.kind == "binary")
@@ -1806,7 +1831,9 @@ def query_batch(
     limit/offset/score_threshold are preserved; the batched leg results
     are value-identical to planning each request alone. When every
     request's result is driver-side hits (:class:`_Hits`), the batch is
-    one local frame; otherwise the per-request frames are unioned.
+    one lazy frame over them (:meth:`QueryPlanner._frame`: its
+    ``collect()`` reads the hits, any other use builds one local frame);
+    otherwise the per-request frames are unioned.
 
     ``indexes`` is the :class:`QueryPlanner` mapping; ``ivf_index``
     registers one more IVF index on its own vector column.

@@ -22,9 +22,11 @@ package (an ``extra_conf`` entry overrides either choice).
 from __future__ import annotations
 
 import os
+from typing import Any, Callable
 
 import pyarrow as pa
 from pyspark.sql import SparkSession
+from pyspark.sql.classic.dataframe import DataFrame
 
 
 def has_nan(v) -> bool:
@@ -78,6 +80,48 @@ def local_df(spark: SparkSession, data, schema):
     if not df.isLocal():  # threshold exceeded / arrow off: no win
         return spark.createDataFrame(data, schema)
     return df
+
+
+class LazyFrame(DataFrame):
+    """A DataFrame whose JVM plan is built on first use: the first
+    transformation or action that reaches the JVM calls ``build()`` —
+    once — and runs on the frame it returns. Every py4j round trip of
+    building a plan that nothing runs is saved.
+
+    ``schema``, when given, answers ``schema`` / ``columns`` without a
+    build; ``rows``, when given, answers ``collect()`` without one (a
+    result already on the driver). ``_qs_topk`` holds the map-side
+    candidates of a :func:`~qdrant_spark.operators.knn.arrow_topk`
+    result (None on any other frame)."""
+
+    _qs_topk: Any = None
+
+    def __new__(cls, *args, **kwargs):
+        return object.__new__(cls)
+
+    def __init__(self, session: SparkSession, build: Callable[[], DataFrame],
+                 *, schema: Any = None,
+                 rows: Callable[[], list] | None = None,
+                 topk: Any = None):
+        self._session = session
+        self._sc = session.sparkContext
+        self.is_cached = False
+        self._support_repr_html = False
+        self._qs_build, self._qs_jdf = build, None
+        self._qs_rows, self._qs_topk = rows, topk
+        if schema is not None:
+            self.__dict__["schema"] = schema  # DataFrame.schema's cache slot
+
+    @property
+    def _jdf(self):
+        if self._qs_jdf is None:
+            self._qs_jdf = self._qs_build()._jdf
+        return self._qs_jdf
+
+    def collect(self) -> list:
+        if self._qs_rows is not None:
+            return self._qs_rows()
+        return super().collect()
 
 
 def _worker_imports_package() -> bool:

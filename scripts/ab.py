@@ -2,7 +2,7 @@
 the working tree, in alternating runs.
 
 Usage:
-    python3 scripts/ab.py PARENT [--workload W ...] [--seeds N]
+    python3 scripts/ab.py PARENT [--workload W ...] [--seeds N] [--trace]
 
 Exports ``PARENT`` with ``git archive`` and the working tree (every
 tracked file plus every untracked file that ``.gitignore`` does not
@@ -25,6 +25,12 @@ each side. Under them it prints one row per request kind from the
 ``per-kind median seconds`` line each run writes to stderr: the median
 over the runs of each side's per-run median, so a mixed workload shows
 which kind of request moved.
+
+With ``--trace`` every run gets ``--trace 1`` instead, and the table has
+one row per ``per_layer`` metric of ``BENCHMARK.json`` that either side
+reported, in the same form: layer evidence from the same pairs. A traced
+run times its requests under the tracer, so end-to-end claims come from
+untraced runs.
 
 Run no other Spark job while it runs: every run is timed.
 """
@@ -71,10 +77,11 @@ def export_worktree(dest: str) -> None:
         shutil.copy2(src, os.path.join(dest, rel))
 
 
-def run_once(side_dir: str, bench: dict, workload: str, seed: int) -> dict:
+def run_once(side_dir: str, bench: dict, workload: str, seed: int,
+             trace: bool = False) -> dict:
     """One benchmark run: its final JSON line, or a failed record."""
     cmd = [*bench["command"], "--workload", workload, "--seed", str(seed),
-           "--seconds", str(bench["run_seconds"]), "--trace", "0"]
+           "--seconds", str(bench["run_seconds"]), "--trace", str(int(trace))]
     p = subprocess.run(cmd, cwd=side_dir, capture_output=True, text=True)
     lines = p.stdout.strip().splitlines()
     try:
@@ -126,6 +133,8 @@ def table(results: dict, metrics: list[dict]) -> list[str]:
             name, lower = m["name"], m["better"] == "lower"
             a = [value(r, name) for r in runs["parent"]]
             b = [value(r, name) for r in runs["change"]]
+            if all(math.isnan(x) for x in a + b):
+                continue  # a metric this workload does not report
             (ma, sa), (mb, sb) = spread(a), spread(b)
             worse = ((mb - ma) if lower else (ma - mb)) / ma if ma else math.nan
             better = sum((y < x) if lower else (y > x) for x, y in zip(a, b))
@@ -163,6 +172,8 @@ def main(argv: list[str] | None = None) -> int:
                     help="workload name, repeatable (default: all in "
                          "BENCHMARK.json)")
     ap.add_argument("--seeds", type=int, default=10)
+    ap.add_argument("--trace", action="store_true",
+                    help="traced runs; one row per per_layer metric")
     args = ap.parse_args(argv)
 
     with open(os.path.join(REPO, "BENCHMARK.json")) as f:
@@ -174,30 +185,32 @@ def main(argv: list[str] | None = None) -> int:
     try:
         export_commit(args.parent, dirs["parent"])
         export_worktree(dirs["change"])
-        results = run_pairs(dirs, bench, workloads, args.seeds)
+        results = run_pairs(dirs, bench, workloads, args.seeds, args.trace)
     finally:
         shutil.rmtree(work)
-    print("\n".join(table(results, bench["end_to_end"])))
+    metrics = bench["per_layer"] if args.trace else bench["end_to_end"]
+    print("\n".join(table(results, metrics)))
     print()
     print("\n".join(kind_table(results)))
     return 0
 
 
 def run_pairs(dirs: dict, bench: dict, workloads: list[str],
-              seeds: int) -> dict:
+              seeds: int, trace: bool = False) -> dict:
     """workload -> side -> the runs of seeds 1..N, alternating sides."""
+    shown = [] if trace else bench["end_to_end"]  # on the progress line
     results: dict = {}
     for workload in workloads:
         runs = results.setdefault(workload, {"parent": [], "change": []})
         for seed in range(1, seeds + 1):
             order = ("parent", "change") if seed % 2 else ("change", "parent")
             for side in order:
-                r = run_once(dirs[side], bench, workload, seed)
+                r = run_once(dirs[side], bench, workload, seed, trace)
                 runs[side].append(r)
                 print(f"[ab] {workload} seed {seed} {side}: "
-                      + ", ".join(f"{m['name']}={value(r, m['name']):.4g}"
-                                  for m in bench["end_to_end"])
-                      + f", failed={r['failed']}", file=sys.stderr,
+                      + "".join(f"{m['name']}={value(r, m['name']):.4g}, "
+                                for m in shown)
+                      + f"failed={r['failed']}", file=sys.stderr,
                       flush=True)
     return results
 

@@ -11,6 +11,7 @@ when partitions x legs x k exceeds the driver budget.
 from __future__ import annotations
 
 import os
+import re
 
 import pytest
 
@@ -208,3 +209,53 @@ def test_fused_dense_wrong_dimension_raises(split_emb):
     with pytest.raises(Exception, match=r"63 dimensions.*vec vectors have 64"):
         Q.query_batch(split_emb, reqs, id_col="id", vec_col="vec",
                       fuse_min_bytes=0).collect()
+
+
+def test_fused_zero_limit_batch_matches_per_request_plans(split_emb):
+    """A fused dense batch of ``limit: 0`` requests returns what each
+    request planned alone returns: no hits (the kernel's cut of k = 0
+    keeps nothing instead of failing)."""
+    qs = [list(r["vec"]) for r in split_emb.limit(3).collect()]
+    reqs = [{"query": {"nearest": q}, "limit": 0} for q in qs]
+    kw = dict(id_col="id", vec_col="vec", fuse_min_bytes=0)
+    want = [Q.query_batch(split_emb, [dict(r)], **kw).collect() for r in reqs]
+    assert want == [[], [], []]
+    assert Q.query_batch(split_emb, reqs, **kw).collect() == []
+    assert K.knn(split_emb, qs[0], k=0, arrow_dispatch_bytes=0).collect() == []
+
+
+@pytest.mark.parametrize("kind", ["dense", "quant", "maxsim"])
+def test_within_budget_batch_builds_no_window(split_emb, spy, monkeypatch,
+                                              kind):
+    """A fused dense, quantized or exact MaxSim batch within the driver
+    budget never builds the ranked window (knn.ranked): the kernel's
+    candidates merge on the driver. The dense scan carries no width
+    filter; the kernel checks widths."""
+    from pyspark.sql import functions as F
+
+    calls = []
+    orig = K.ranked
+    monkeypatch.setattr(K, "ranked",
+                        lambda *a, **k: calls.append(1) or orig(*a, **k))
+    qs = [list(r["vec"]) for r in split_emb.orderBy("id").limit(3).collect()]
+    kw = dict(id_col="id", fuse_min_bytes=0)
+    if kind == "maxsim":
+        points = split_emb.select("id", F.transform(
+            F.sequence(F.lit(0), F.lit(7)),
+            lambda i: F.slice("vec", i * 8 + 1, 8)).alias("mv"))
+        qs = [[q[t * 8:(t + 1) * 8] for t in range(8)] for q in qs]
+        kw.update(vec_col="mv", metric="dot")
+        counter = "maxsim_batch_groups"
+    else:
+        points = split_emb
+        kw.update(vec_col="vec", indexes=_indexes(points, kind))
+        counter = COUNTERS[kind]
+    reqs = [{"query": {"nearest": q}, "limit": K_LIMIT} for q in qs]
+    rows = Q.query_batch(points, reqs, **kw).collect()
+    assert len(rows) == 3 * K_LIMIT
+    assert spy["planner"].last_plan_info.get(counter) == 1
+    assert calls == []
+    if kind == "dense":
+        (plan,) = spy["plans"]
+        assert not re.search(r"\bFilter\b", plan)
+        assert "dimensions" not in plan

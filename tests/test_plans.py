@@ -577,11 +577,12 @@ def test_client_read_job_count(spark, mix_client, kind, jobs):
     ("dense_batch", 1)])
 def test_local_frames_per_read(embeddings, mix_client, monkeypatch, kind,
                                frames):
-    """Driver-side hits become a DataFrame once per read, where the
-    public API returns one, and never for a client read: a 16-request
-    quantized batch, an RRF root over three fused dense legs and a
-    16-request fused dense batch each build one local frame, the
-    client's RRF hybrid none."""
+    """Driver-side hits become a DataFrame only where a caller uses the
+    public result as a frame, and then once: a 16-request quantized
+    batch, an RRF root over three fused dense legs and a 16-request fused
+    dense batch build no local frame when they are collected, and one
+    when the same result is then counted and joined (``frames``); the
+    client's RRF hybrid builds none."""
     import qdrant_spark.query as Q
 
     qs = [list(r["embedding"]) for r in embeddings.limit(16).collect()]
@@ -595,21 +596,20 @@ def test_local_frames_per_read(embeddings, mix_client, monkeypatch, kind,
 
         def read():
             return Q.query_batch(embeddings, reqs,
-                                 indexes={"embedding": [h]}, **kw).collect()
+                                 indexes={"embedding": [h]}, **kw)
     elif kind == "dense_batch":
         def read():
-            return Q.query_batch(embeddings, reqs, fuse_min_bytes=0,
-                                 **kw).collect()
+            return Q.query_batch(embeddings, reqs, fuse_min_bytes=0, **kw)
     elif kind == "rrf_plan":
         pl = Q.QueryPlanner(embeddings, id_col="vec_id",
                             default_vec_col="embedding", fuse_min_bytes=0)
 
         def read():
             return pl.plan({"prefetch": reqs[:3], "query": {"fusion": "rrf"},
-                            "limit": 5}).collect()
+                            "limit": 5})
     else:
         def read():
-            return _READS["hybrid"](mix_client).points
+            return _READS["hybrid"](mix_client)
     built = []
     conv = Q._local_result_df
 
@@ -618,9 +618,94 @@ def test_local_frames_per_read(embeddings, mix_client, monkeypatch, kind,
         return conv(*a, **k)
 
     monkeypatch.setattr(Q, "_local_result_df", spy)
-    out = read()
+    res = read()
+    out = res.points if kind == "client_hybrid" else res.collect()
     assert len(out) == (80 if kind.endswith("batch") else 5)
+    assert built == []
+    if kind != "client_hybrid":
+        assert res.count() == len(out)
+        assert res.join(embeddings, "vec_id").count() == len(out)
     assert len(built) == frames
+
+
+def test_lazy_result_matches_local_frame(spark):
+    """The public lazy result over driver-side hits answers collect(),
+    toArrow(), count() and its schema as the frame _local_result_df
+    builds does: a NaN score, carried payload columns and an empty
+    result included."""
+    from pyspark.sql import DataFrame
+    from pyspark.sql import types as T
+
+    import qdrant_spark.query as Q
+
+    pl = Q.QueryPlanner(spark.range(1))
+    schema = T.StructType([
+        T.StructField("id", T.LongType()),
+        T.StructField("score", T.DoubleType()),
+        T.StructField("cat", T.StringType()),
+        T.StructField("tags", T.ArrayType(T.StringType()))])
+    for rows in ([(3, 0.5, "a", ["x"]), (1, float("nan"), None, []),
+                  (2, 0.25, "b", None)],
+                 [(3, 0.5, "a", ["x", "y"]), (2, 0.25, "b", ["z"])],
+                 []):
+        hits = Q._Hits(schema, rows, True)
+        lazy, built = pl._frame(hits), Q._local_result_df(spark, hits)
+        assert isinstance(lazy, DataFrame)
+        assert lazy.schema == built.schema
+        assert lazy.columns == built.columns
+        got, want = lazy.collect(), built.collect()
+        assert [list(r.__fields__) for r in got] \
+            == [list(r.__fields__) for r in want]
+        assert repr(got) == repr(want)  # NaN equals NaN only as text
+        got, want = lazy.toArrow(), built.toArrow()
+        assert got.schema == want.schema
+        assert repr(got.to_pylist()) == repr(want.to_pylist())
+        assert lazy.count() == built.count() == len(rows)
+
+
+#: py4j round trips of the 16-request fused dense batch below: 78 when
+#: pinned, plus a margin (301 while the batch still built its top-k
+#: window, its scan's width filter and its result frame)
+PY4J_FUSED_DENSE_BATCH = 90
+
+
+def test_fused_dense_batch_py4j_calls(embeddings, monkeypatch):
+    """The driver floor of a 16-request fused dense
+    ``query_batch(...).collect()``: its py4j round trips stay under a
+    pin, so plan objects nothing runs cannot creep back. The batch
+    builds no top-k window and no result frame; its collect() reads the
+    driver's hits. py4j's garbage-collection notices are not counted:
+    they follow Python's collector, not the read."""
+    import py4j.clientserver
+    import py4j.java_gateway
+    from py4j import protocol
+
+    import qdrant_spark.query as Q
+
+    qs = [list(r["embedding"]) for r in embeddings.limit(16).collect()]
+    reqs = [{"query": {"nearest": q}, "limit": 5} for q in qs]
+
+    def read():
+        return Q.query_batch(embeddings, reqs, id_col="vec_id",
+                             vec_col="embedding", fuse_min_bytes=0).collect()
+
+    read()  # warm: first-use caches of the session stay out of the count
+    gc_note = protocol.MEMORY_COMMAND_NAME + protocol.MEMORY_DEL_SUBCOMMAND_NAME
+    calls = []
+
+    def counted(orig):
+        def send(self, command, *a, **k):
+            if not command.startswith(gc_note):
+                calls.append(1)
+            return orig(self, command, *a, **k)
+        return send
+
+    for owner in (py4j.clientserver.ClientServerConnection,
+                  py4j.java_gateway.GatewayConnection):
+        monkeypatch.setattr(owner, "send_command",
+                            counted(owner.send_command))
+    assert len(read()) == 80
+    assert len(calls) <= PY4J_FUSED_DENSE_BATCH
 
 
 def test_client_mixed_fused_batch_matches_unfused(mix_client):
